@@ -289,9 +289,7 @@ def x21b_bm25_ln_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lex_base(
-    spark: SparkSession, sf_dir: str, persist_dl: bool = False
-) -> tuple[DataFrame, DataFrame]:
+def _lex_base(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Shared lexical-ranker inputs: the per-doc lengths
     ``(doc_id, dl)`` and the persisted matched postings
     ``(doc_id, dl, term, tf)``. The fusion queries (x62/x74/x76) run
@@ -315,10 +313,8 @@ def _lex_base(
     the degenerate NULL-text document exactly like the old
     ``docs.select(doc_id, dl)`` did (w NULL → one NULL-term row with
     dl NULL). Row sets of both returned frames are IDENTICAL to r13's.
-
-    ``persist_dl`` is retained for call-site documentation (fusion
-    callers pass True) but both shapes now share the single persisted
-    base — the dl frame itself is never separately materialized."""
+    Both frames share the single persisted base — the dl frame itself
+    is never separately materialized."""
     terms_in = "x IN (" + ", ".join(f"'{t}'" for t in _QUERY_TERMS) + ")"
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -583,7 +579,7 @@ def x62_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer e6 (1000000 DIV (60 + rank)) — no float ever enters.
     Docs ranked by only one list keep rank 0 in the other column and
     contribute a single term, the standard union semantics."""
-    base = _lex_base(spark, sf_dir, persist_dl=True)  # one tokenization, both arms
+    base = _lex_base(spark, sf_dir)  # one tokenization, both arms
     rank_w = Window.orderBy(F.desc("score_e9"), F.asc("doc_id"))
     bm = (
         _bm25_scored(spark, sf_dir, base)
@@ -743,7 +739,7 @@ def x74_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = _lex_base(spark, sf_dir, persist_dl=True)  # one tokenization, both arms
+    base = _lex_base(spark, sf_dir)  # one tokenization, both arms
     rank_w = Window.orderBy(F.desc("score_e9"), F.asc("doc_id"))
     bm_top = scoped_persist(
         _bm25_scored(spark, sf_dir, base)
@@ -984,7 +980,7 @@ def x76_cross_encoder_rerank(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    base = _lex_base(spark, sf_dir, persist_dl=True)  # one tokenization, both arms
+    base = _lex_base(spark, sf_dir)  # one tokenization, both arms
     rank_w = Window.orderBy(F.desc("score_e9"), F.asc("doc_id"))
     bm_top = (
         _bm25_scored(spark, sf_dir, base)

@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from acero_delta_lake_streaming_spark.catalog import load_table
+from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
 
 # --- portable cosine fragments (Spark SQL / DuckDB) ------------------------
 
@@ -1050,8 +1051,6 @@ def x3e_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dequantized coarse scores are bit-identical across engines, the
     stage-1 survivor SET matches exactly, and the exact re-rank is the
     same sequential-fold cosine as x3/x3b."""
-    from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
-
     emb = load_table(spark, sf_dir, "embeddings")
     # int8 codes (x22's SQ8 convention); the float array is dropped here
     # and only reappears in the final re-rank
@@ -1251,8 +1250,6 @@ def x3f_ivf_sq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic decimal-exact k-means, the int8 codes are IEEE
     doubles identical in DuckDB, so the survivor SET matches exactly
     and the final cosine is the sequential-fold construction."""
-    from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
-
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = scoped_persist(
         emb.select(
@@ -2129,8 +2126,6 @@ def x45_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast |labels|-row frame; the stats join back is another
     broadcast — the corpus never shuffles, and the distance frame is
     scope-persisted so the two passes (stats, flag) share one scan."""
-    from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
-
     emb = load_table(spark, sf_dir, "embeddings")
     elems = emb.select("label", F.posexplode("embedding").alias("dim", "x"))
     cents = (
@@ -2249,7 +2244,6 @@ def x52_quantizer_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
 
     stored = _ivf_centroids(emb.filter("vec_id % 2 = 0"))
     # keep=("embedding",) replaces the old .join(emb, "vec_id") 1:1
@@ -2491,8 +2485,6 @@ def x69_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule); the margin needs only the top-2 per source doc — a bounded
     window over candidate groups, no global sort; at 100 TB both
     language sides stream through the same bucketed exchange."""
-    from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     # the planted union is consumed three times (bucketing, the lang
@@ -2760,8 +2752,6 @@ def x59_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     effectively free. Certificate: the full contingency-derived table
     (cell sizes, label diversity, majority labels, purity) in exact
     integer basis points."""
-    from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
-
     emb = load_table(spark, sf_dir, "embeddings")
     assign, _probes = _ivf_coarse(emb)
     # assign carries label inline (r14 join elimination — the old
@@ -2880,8 +2870,6 @@ def x64_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (5-row query broadcast; the documented exact baseline, not the
     scale path — x3d/x3f are); the full-dim list scope-persists and
     every truncated list probes it."""
-    from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
-
     emb = load_table(spark, sf_dir, "embeddings")
 
     def topk(d: int | None) -> DataFrame:
@@ -3030,8 +3018,6 @@ def x3i_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(beam x degree x hops) walked rows — independent of corpus
     size, the property that makes graph-traversal ANN the latency
     king; embeddings ride id-keyed joins only."""
-    from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
-
     emb = load_table(spark, sf_dir, "embeddings")
     scored = scoped_persist(
         emb.select(

@@ -5,8 +5,11 @@ The reference fetches 5 BBC feeds with feedparser inside the ingest loop
 fetch, dedup state, and storage in one function. Here the fetcher is a
 thin edge process: parse RSS XML (stdlib ElementTree — feedparser is not
 in this environment, and the fields the reference consumes are plain RSS
-2.0 items) into NEWS_SCHEMA rows and drop them as parquet batch files;
-the checkpointed streaming ingest (ingest.py) picks them up with
+2.0 items) into NEWS_SCHEMA rows and drop them as one parquet batch file
+per poll, built as an Arrow table and written by pyarrow on the driver —
+no Spark job runs at the edge, as the reference builds one Arrow table
+per feed (collector.py:122-131). Spark starts at the file source: the
+checkpointed streaming ingest (ingest.py) picks the files up with
 exactly-once semantics. Polling frequency, retries, and backfill are then
 operational concerns of the edge, not correctness concerns of the engine.
 
@@ -25,11 +28,19 @@ import os
 import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from acero_delta_lake_streaming_spark.schemas import NEWS_SCHEMA
 
 _MEDIA_NS = "{http://search.yahoo.com/mrss/}"
+
+#: NEWS_SCHEMA as Arrow: published_time is timestamp[us, tz=UTC] and the
+#: not-null flags carry over, so the drop files read back through
+#: NEWS_SCHEMA exactly as a Spark-written batch does.
+_NEWS_ARROW_SCHEMA = to_arrow_schema(NEWS_SCHEMA)
 
 #: the reference's feed set (collector.py:28-34) — public BBC endpoints;
 #: used only when an operator explicitly fetches (never in tests).
@@ -79,30 +90,6 @@ def parse_rss(xml_text: str, rss_id: str) -> list[dict]:
     return rows
 
 
-def feed_batch_df(
-    spark: SparkSession, documents: list[tuple[str, str]]
-) -> DataFrame:
-    """Parse (rss_id, xml) documents into one NEWS_SCHEMA DataFrame."""
-    rows = []
-    for rss_id, xml_text in documents:
-        rows.extend(parse_rss(xml_text, rss_id))
-    return spark.createDataFrame(
-        [
-            (
-                r["title"],
-                r["published_time"],
-                r["description"],
-                r["link"],
-                r["id"],
-                r["thumbnail_url"],
-                r["category"],
-            )
-            for r in rows
-        ],
-        NEWS_SCHEMA,
-    )
-
-
 def fetch_feeds(feeds: dict[str, str] | None = None, timeout: int = 20):
     """Network edge: fetch each feed URL and yield (rss_id, xml). Not
     exercised in tests — this container has no network; the parser is."""
@@ -119,16 +106,27 @@ def drop_feed_batch(
     drop_dir: str,
     batch_name: str,
 ) -> int:
-    """Parse feeds and drop one parquet batch file for the streaming
-    ingest; returns the row count."""
-    from acero_delta_lake_streaming_spark.streaming.queries import (
-        write_single_parquet,
-    )
-
-    df = feed_batch_df(spark, documents)
+    """Parse (rss_id, xml) documents and drop them as one parquet batch
+    file ``<batch_name>.parquet`` for the streaming ingest; returns the
+    row count. The file is written by pyarrow under a hidden name (the
+    leading ``.`` keeps it out of the file source and the ``*.parquet``
+    glob) and renamed into place, so the ingest never sees a partial
+    batch. Naive ``published_time`` values are UTC wall time and Arrow
+    stores them as such, whatever the driver's local zone. ``spark`` is
+    unused; it is kept for callers."""
+    rows = [
+        row for rss_id, xml_text in documents for row in parse_rss(xml_text, rss_id)
+    ]
+    table = pa.Table.from_pylist(rows, schema=_NEWS_ARROW_SCHEMA)
     os.makedirs(drop_dir, exist_ok=True)
-    write_single_parquet(df, os.path.join(drop_dir, f"{batch_name}.parquet"))
-    return df.count()
+    tmp = os.path.join(drop_dir, f".{batch_name}.parquet.tmp")
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(drop_dir, f"{batch_name}.parquet"))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return len(rows)
 
 
 def drop_feed_batch_files(

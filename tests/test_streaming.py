@@ -266,6 +266,163 @@ def test_polling_orchestrator_two_cycles_no_duplicates(spark, tmp_path):
     assert len([f for f in os.listdir(drop) if f.endswith(".parquet")]) == 2
 
 
+def _rss(items: list[dict]) -> str:
+    """One RSS 2.0 document; each item dict maps child tag → text, with
+    ``thumbnail`` as the media:thumbnail url. A missing key omits the
+    element."""
+    from xml.sax.saxutils import escape, quoteattr
+
+    def item(it):
+        body = "".join(
+            f"<{k}>{escape(v)}</{k}>" for k, v in it.items() if k != "thumbnail"
+        )
+        if "thumbnail" in it:
+            body += f"<media:thumbnail url={quoteattr(it['thumbnail'])}/>"
+        return f"<item>{body}</item>"
+
+    return (
+        '<rss version="2.0" xmlns:media="http://search.yahoo.com/mrss/">'
+        f"<channel><title>t</title>{''.join(map(item, items))}</channel></rss>"
+    )
+
+
+def _read_drop(spark, path):
+    """A drop read back the way the ingest reads it, with the timestamp
+    as its UTC instant so no session or driver zone enters the compare."""
+    from acero_delta_lake_streaming_spark.schemas import NEWS_SCHEMA
+
+    df = spark.read.schema(NEWS_SCHEMA).parquet(path)
+    return df.withColumn("published_time", F.unix_micros("published_time"))
+
+
+def test_feed_drop_stores_utc_instant_under_non_utc_tz(spark, tmp_path):
+    """An RFC-822 GMT pubDate lands as the same UTC instant whatever the
+    driver's local zone: under TZ=America/New_York a zone-naive
+    conversion would store it 5 h late."""
+    import time
+
+    from acero_delta_lake_streaming_spark.streaming.feeds import drop_feed_batch
+
+    doc = _rss(
+        [{"title": "t", "guid": "g1", "pubDate": "Mon, 04 Mar 2024 10:00:00 GMT"}]
+    )
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        n = drop_feed_batch(spark, [("news", doc)], str(tmp_path), "b0")
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert n == 1
+    (row,) = spark.read.parquet(str(tmp_path / "b0.parquet")).select(
+        F.unix_millis("published_time").alias("ms")
+    ).collect()
+    assert row.ms == 1709546400000  # 2024-03-04T10:00:00Z
+
+
+def test_feed_drop_edges_agree(spark, tmp_path):
+    """The driver edge (``drop_feed_batch``) and its distributed twin
+    (``drop_feed_batch_files``) drop the same rows for the same feeds,
+    NULLs for a missing thumbnail / description / pubDate included."""
+    from acero_delta_lake_streaming_spark.streaming.feeds import (
+        drop_feed_batch,
+        drop_feed_batch_files,
+    )
+
+    documents = [
+        (
+            "business",
+            _rss(
+                [
+                    {
+                        "title": "full",
+                        "description": "d1",
+                        "link": "http://x/1",
+                        "guid": "g1",
+                        "pubDate": "Mon, 04 Mar 2024 10:00:00 GMT",
+                        "thumbnail": "http://x/1.jpg",
+                    },
+                    {
+                        "title": "no thumbnail",
+                        "description": "d2",
+                        "link": "http://x/2",
+                        "guid": "g2",
+                        "pubDate": "Tue, 05 Mar 2024 23:30:15 +0100",
+                    },
+                ]
+            ),
+        ),
+        (
+            "health",
+            _rss(
+                [
+                    {"title": "no description", "guid": "g3",
+                     "pubDate": "Wed, 06 Mar 2024 00:00:01 GMT"},
+                    {"title": "no date", "link": "http://x/4"},
+                ]
+            ),
+        ),
+    ]
+    xml_dir = tmp_path / "xml"
+    xml_dir.mkdir()
+    for rss_id, doc in documents:
+        (xml_dir / f"{rss_id}.xml").write_text(doc)
+    drop_a, drop_b = str(tmp_path / "a"), str(tmp_path / "b")
+    assert drop_feed_batch(spark, documents, drop_a, "b0") == 4
+    drop_feed_batch_files(spark, str(xml_dir), drop_b, "b0")
+
+    a = _read_drop(spark, os.path.join(drop_a, "b0.parquet"))
+    b = _read_drop(spark, os.path.join(drop_b, "b0.parquet"))
+    rows_a = sorted(a.collect(), key=lambda r: r.id)
+    assert rows_a == sorted(b.collect(), key=lambda r: r.id)
+    by_id = {r.id: r for r in rows_a}
+    assert by_id["g1"].published_time == 1709546400000000
+    assert by_id["g1"].thumbnail_url == "http://x/1.jpg"
+    assert by_id["g2"].thumbnail_url is None
+    assert by_id["g3"].description is None
+    assert by_id["http://x/4"].published_time is None  # guid falls back to link
+
+
+def test_feed_drop_contract(spark, tmp_path):
+    """Each drop adds exactly one ``<batch>.parquet`` and leaves no temp
+    or staging entry behind; a poll with zero items still drops a
+    readable zero-row file, and the next ingest commits nothing (ST3)."""
+    import pyarrow.parquet as pq
+
+    from acero_delta_lake_streaming_spark.streaming.feeds import drop_feed_batch
+    from acero_delta_lake_streaming_spark.streaming.ingest import run_news_ingest
+
+    drop, tables, cp = (
+        str(tmp_path / "drop"),
+        str(tmp_path / "tables"),
+        str(tmp_path / "cp"),
+    )
+    items = [{"title": "alpha", "description": "d", "guid": "g1"}]
+    assert drop_feed_batch(spark, [("news", _rss(items))], drop, "poll_0") == 1
+    assert os.listdir(drop) == ["poll_0.parquet"]
+    run_news_ingest(spark, drop, tables, cp)
+    medallion = [
+        os.path.join(tables, t)
+        for t in ("raw", "curated", "quarantine", "actors")
+        if deltalite.table_exists(os.path.join(tables, t))
+    ]
+    assert os.path.join(tables, "raw") in medallion
+    versions = [deltalite.latest_version(t) for t in medallion]
+
+    assert drop_feed_batch(spark, [("news", _rss([]))], drop, "poll_1") == 0
+    assert sorted(os.listdir(drop)) == ["poll_0.parquet", "poll_1.parquet"]
+    empty = os.path.join(drop, "poll_1.parquet")
+    assert pq.read_table(empty).num_rows == 0
+    assert _read_drop(spark, empty).count() == 0
+    run_news_ingest(spark, drop, tables, cp)
+    assert [deltalite.latest_version(t) for t in medallion] == versions
+    assert deltalite.read(spark, os.path.join(tables, "raw")).count() == 1
+
+
 def test_stream_stream_interval_join(spark, tmp_path):
     """ST7: purchases joined to same-user clicks in the preceding hour,
     across micro-batches — a click buffered in epoch 0 must match a

@@ -64,14 +64,16 @@ def main() -> int:
             bad += 1
             # Set differences, not positional zip pairs (ADVICE r13):
             # zip truncates on unequal counts and one inserted row
-            # misaligns every later pair.
+            # misaligns every later pair. key=repr keeps the sort total
+            # should rows ever be raw tuples (None is unorderable).
             sa, sb = set(a), set(b)
-            only_spark = sorted(sa - sb)[:3]
-            only_oracle = sorted(sb - sa)[:3]
-            print(
-                f"MISMATCH {name}: {len(spdf)} vs {len(opdf)} rows; "
-                f"spark-only={only_spark} oracle-only={only_oracle}"
-            )
+            only_spark = sorted(sa - sb, key=repr)[:3]
+            only_oracle = sorted(sb - sa, key=repr)[:3]
+            if only_spark or only_oracle:
+                detail = f"spark-only={only_spark} oracle-only={only_oracle}"
+            else:
+                detail = "same distinct rows; they differ only in duplicate counts"
+            print(f"MISMATCH {name}: {len(spdf)} vs {len(opdf)} rows; {detail}")
         else:
             print(f"MATCH {name} ({len(spdf)} rows)")
     return 1 if bad else 0
