@@ -791,14 +791,18 @@ def x74_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast the ENTIRE embeddings table (fixture scale) or shuffled
     # the corpus arrays on vec_id (100 TB). Pre-filtering emb to the
     # ≤2·TOPK pool ids with a broadcast left-semi join keeps the fetch
-    # id-keyed: the corpus streams map-side, only survivors build.
+    # id-keyed: the corpus streams map-side, only survivors build. The
+    # ≤2·TOPK survivors are then the broadcast (right) side of the pool
+    # LEFT join — hinted, since no size statistic bounds them.
     emb_pool = emb.join(
         F.broadcast(pool.select("doc_id")),
         emb.vec_id == F.col("doc_id"),
         "left_semi",
     )
     dense = (
-        pool.join(emb_pool, pool.doc_id == emb_pool.vec_id, "left")
+        pool.join(
+            F.broadcast(emb_pool), pool.doc_id == emb_pool.vec_id, "left"
+        )
         .crossJoin(F.broadcast(prf))
         .select(
             "doc_id",

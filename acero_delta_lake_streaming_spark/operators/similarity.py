@@ -442,6 +442,14 @@ def _sqdist_duck(a: str, b: str) -> str:
     )
 
 
+def _refuse_cid(vectors: DataFrame) -> None:
+    if "cid" in vectors.columns:
+        raise ValueError(
+            "IVF assignment emits its own cid column; drop or rename "
+            "the input's cid first"
+        )
+
+
 def _ivf_coarse(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(final_assign, probes): the deterministic k-means coarse
     quantizer SHARED by x3d and x3f — the Spark twin of the oracle's
@@ -461,12 +469,14 @@ def _ivf_coarse(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     BEFORE joining the scalar assignment, so no array crosses a
     hash-partitioned exchange even in training (x3f's plan guard
     walks every ShuffleExchange to pin this). ``corpus`` must carry
-    (vec_id, embedding, ...)."""
+    (vec_id, embedding, ...) and no ``cid`` column (ValueError, as in
+    :func:`_ivf_assign`)."""
     # final_assign carries every corpus column next to cid (r14 join
     # elimination — see _ivf_assign's ``keep``): x3d/x59 consumed the
     # narrow (vec_id, cid) frame by joining it straight back to the
     # corpus on vec_id; consumers that only need (vec_id, cid) — x3f's
     # candidate list, x37's ranking — prune the payload columns out.
+    _refuse_cid(corpus)  # before training, not after it
     centroids = _ivf_centroids(corpus)
     final_assign = _ivf_assign(
         corpus,
@@ -514,7 +524,11 @@ def _ivf_assign(
     arrays included) for a 1:1 re-attach. The assignment is a pure map
     stage, so passing the columns THROUGH it is free and the join
     disappears; unused kept columns prune out of downstream plans.
-    Default () keeps the narrow contract (st18 writes it to a table)."""
+    Default () keeps the narrow contract (st18 writes it to a table).
+    A ``vectors`` frame that already has a ``cid`` column is refused:
+    the output would carry two ``cid`` columns and every later
+    reference to it would be ambiguous."""
+    _refuse_cid(vectors)
     cents_row = centroids.groupBy().agg(
         F.array_sort(F.collect_list(F.struct("cid", "carr"))).alias(
             "cents"

@@ -1,11 +1,12 @@
-"""Real Delta Lake *format* compatibility — read (and append to) tables
-whose transaction log is an actual ``_delta_log`` directory, without
-``delta-spark`` on the classpath.
+"""Real Delta Lake *format* storage — read and write tables whose
+transaction log is an actual ``_delta_log`` directory, without
+``delta-spark`` on the classpath. It is the engine's one table format:
+the streaming medallion, every foreachBatch sink and every storage
+query commit through it.
 
 The reference stores its medallion tables in Delta format
-(collector.py:219-226 writes with ``mode='append'`` through delta-rs);
-``deltalite`` reproduces those semantics but its commit log is its own.
-This module closes the interop gap for the dominant cases:
+(collector.py:219-226 writes with ``mode='append'`` through delta-rs),
+so every table here stays readable by delta-rs / delta-spark:
 
 * ``read_delta``      — snapshot (or time-travel) scan of a Delta table
   by replaying the JSON commit log, optionally starting from the last
@@ -14,13 +15,19 @@ This module closes the interop gap for the dominant cases:
   silently returning wrong rows.
 * ``append_delta``    — append-only writer producing a log delta-spark /
   delta-rs can read back (protocol 1/2, JSON actions, URL-encoded
-  relative paths).
+  relative paths); ``merge_delta``, ``delete_delta``,
+  ``overwrite_delta`` and ``optimize_delta`` are its copy-on-write
+  siblings.
+* ``txn=(app_id, epoch)`` on ``append_delta``, ``merge_delta`` and
+  ``overwrite_delta`` — the exactly-once key of a foreachBatch sink:
+  Delta's ``txn`` action rides in the commit, so data and stream
+  progress publish atomically and a replayed epoch no-ops.
 
 Driver-side work is strictly O(|log|) metadata — the data path is an
 ordinary distributed parquet scan with the log-derived file list, so
 filters and column pruning push down exactly as on raw parquet. On a
-real object store the ``rename`` publish becomes a conditional put —
-the same substitution deltalite documents.
+real object store the ``os.link`` publish becomes a conditional put —
+how Delta/Iceberg commit services work.
 
 Scope (documented, checked, raised-on): unpartitioned and hive-layout
 partitioned tables; deletion vectors on both (the ``deletionVectors``
@@ -73,6 +80,17 @@ class DeltaCorruptLogError(RuntimeError):
 
 class ConcurrentDeltaCommitError(RuntimeError):
     """A concurrent writer claimed the target commit version."""
+
+
+class SchemaMismatchError(ValueError):
+    """A write's column types conflict with the table schema."""
+
+
+class ChangeDataUnavailableError(RuntimeError):
+    """A data-changing commit in the requested range captured no change
+    data (a merge/delete/overwrite ran without ``change_data=True``):
+    row-level changes cannot be reconstructed for it, mirroring Delta's
+    CDF-not-enabled error."""
 
 
 def _log_dir(table: str) -> str:
@@ -1570,10 +1588,11 @@ def streaming_sink(
     """``foreachBatch`` function writing a stream into a REAL Delta
     table exactly-once: each epoch appends with ``txn=(app_id,
     epoch)``, so a crash-replayed micro-batch no-ops instead of
-    double-appending — the interop twin of the deltalite medallion
-    sink, for pipelines whose downstream readers are delta-rs /
-    delta-spark. ``partition_by`` lands the stream in hive layout
-    (fixed at table creation, like any append). Usage::
+    double-appending — the generic form of the medallion sink
+    (``streaming.ingest.medallion_writer``), for pipelines whose
+    downstream readers are delta-rs / delta-spark. ``partition_by``
+    lands the stream in hive layout (fixed at table creation, like any
+    append). Usage::
 
         stream.writeStream.foreachBatch(
             delta_compat.streaming_sink(path, "my-app",
@@ -1801,6 +1820,47 @@ def _identity_merge_source(
     )
 
 
+def merge_schemas(
+    table_schema: T.StructType, df_schema: T.StructType
+) -> T.StructType:
+    """Delta-style additive schema evolution: the merged schema keeps
+    every table column (original order) and appends the incoming
+    frame's NEW columns as nullable. A column present in both with a
+    different type is a hard error — silent type coercion is how lakes
+    corrupt; Delta rejects it too."""
+    existing = {f.name: f for f in table_schema.fields}
+    out = list(table_schema.fields)
+    for f in df_schema.fields:
+        prev = existing.get(f.name)
+        if prev is None:
+            out.append(T.StructField(f.name, f.dataType, nullable=True))
+        elif prev.dataType != f.dataType:
+            raise SchemaMismatchError(
+                f"type conflict on {f.name}: table={prev.dataType} "
+                f"df={f.dataType}"
+            )
+    return T.StructType(out)
+
+
+def _txn_actions(
+    table: str, txn: tuple[str, int] | None
+) -> list[dict] | None:
+    """Delta's exactly-once handshake for a commit keyed ``txn=(app_id,
+    epoch)``, shared by every verb that takes one: None when the log
+    already holds a ``txn`` action for this app at >= epoch (the caller
+    no-ops and returns -1 — a replayed epoch after a crash), else the
+    actions the commit must carry so data and progress publish
+    atomically (the ``txn`` action; nothing without a key)."""
+    if txn is None:
+        return []
+    if last_txn_version(table, txn[0]) >= txn[1]:
+        return None
+    return [
+        {"txn": {"appId": txn[0], "version": txn[1],
+                 "lastUpdated": int(time.time() * 1000)}}
+    ]
+
+
 def append_delta(
     df: DataFrame,
     table: str,
@@ -1865,7 +1925,8 @@ def append_delta(
     clustering and hive partitioning are mutually exclusive) and
     additionally refuses on an EXISTING table, where the ALTER verb is
     the correct surface."""
-    if txn is not None and last_txn_version(table, txn[0]) >= txn[1]:
+    txn_actions = _txn_actions(table, txn)
+    if txn_actions is None:
         return -1
     partition_by = list(partition_by or [])
     os.makedirs(_log_dir(table), exist_ok=True)
@@ -2035,10 +2096,6 @@ def append_delta(
                     "merge_schema append must carry every existing column "
                     f"(missing {sorted(table_cols - df_cols)})"
                 )
-            from acero_delta_lake_streaming_spark.storage.deltalite import (
-                merge_schemas,
-            )
-
             evolved_schema_json = merge_schemas(
                 table_schema, df.schema
             ).json()
@@ -2075,10 +2132,6 @@ def append_delta(
             mapped_schema_json = evolved_schema_json
         else:
             # same column set: still refuse silent type drift
-            from acero_delta_lake_streaming_spark.storage.deltalite import (
-                merge_schemas,
-            )
-
             merge_schemas(table_schema, df.schema)
         # CHECK constraints gate every append (one scan of the BATCH,
         # not the table — the add-time full scan happened once in
@@ -2214,11 +2267,7 @@ def append_delta(
                 }
             }
         )
-    if txn is not None:
-        actions.append(
-            {"txn": {"appId": txn[0], "version": txn[1],
-                     "lastUpdated": int(time.time() * 1000)}}
-        )
+    actions.extend(txn_actions)
     actions.extend(adds)
     _op_params: dict = {"mode": "Append"}
     if cluster_by is not None:
@@ -3066,8 +3115,8 @@ def _prev_in_commit_ts(table: str, version: int) -> int | None:
 def _publish_commit(table: str, version: int, actions: list[dict]) -> None:
     """Atomic claim of the version slot: os.link fails iff the commit
     file already exists (rename would silently overwrite a concurrent
-    writer's commit — a lost update). Same protocol as deltalite's
-    _publish; on an object store this is the conditional put.
+    writer's commit — a lost update). On an object store this is the
+    conditional put.
 
     On tables writing IN-COMMIT TIMESTAMPS the chain is stamped here:
     ``max(now, prev_ict + 1)`` into this commit's commitInfo —
@@ -4061,6 +4110,69 @@ def _compact_files(
     return removes, adds
 
 
+_Z_BITS = 12  # bucket resolution per dimension (4096 cells/dim)
+
+
+def _interleave_expr(cols: list[str]) -> str:
+    """SQL expression interleaving the low ``_Z_BITS`` bits of the given
+    integer bucket columns into one z-value (bit i of dim d lands at
+    position i*ndims + d) — pure JVM integer ops, codegen-friendly."""
+    n = len(cols)
+    terms = [
+        f"shiftleft(shiftright({c}, {i}) & 1, {i * n + d})"
+        for i in range(_Z_BITS)
+        for d, c in enumerate(cols)
+    ]
+    return " + ".join(terms)
+
+
+def _zorder(
+    spark: SparkSession,
+    df: DataFrame,
+    cols: list[str],
+    target_partitions: int,
+) -> DataFrame:
+    """True multi-dimension Z-order clustering: each dimension is
+    normalized to a 12-bit bucket rank by min/max (ONE tiny aggregate,
+    broadcast back — no global sort, unlike an ntile ranking, so the
+    normalization itself scales), the per-dimension bits interleave
+    into a z-value, and files are range-partitioned + sorted on it.
+    Locality in z implies locality in EVERY dimension, so recorded
+    min/max stats are tight on all z-ordered columns at once — a
+    skipping read prunes on any of them, where a lexicographic sort
+    only prunes on its leading column."""
+    import pyspark.sql.functions as F
+
+    bounds = df.agg(
+        *[F.min(c).cast("double").alias(f"__lo_{c}") for c in cols],
+        *[F.max(c).cast("double").alias(f"__hi_{c}") for c in cols],
+    ).withColumn("__jk", F.lit(1))
+    z_input = df.withColumn("__jk", F.lit(1)).join(F.broadcast(bounds), "__jk")
+    cells = (1 << _Z_BITS) - 1
+    bucket_cols = []
+    for c in cols:
+        b = f"__zb_{c}"
+        z_input = z_input.withColumn(
+            b,
+            F.least(
+                F.lit(cells),
+                F.floor(
+                    (F.col(c).cast("double") - F.col(f"__lo_{c}"))
+                    / F.expr(f"nullif(__hi_{c} - __lo_{c}, 0.0)")
+                    * (cells + 1)
+                ).cast("int"),
+            ),
+        ).fillna({b: 0})
+        bucket_cols.append(b)
+    z_input = z_input.withColumn("__z", F.expr(_interleave_expr(bucket_cols)))
+    return (
+        z_input.repartitionByRange(target_partitions, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__jk", "__z", *bucket_cols, *[f"__lo_{c}" for c in cols],
+              *[f"__hi_{c}" for c in cols])
+    )
+
+
 def optimize_delta(
     spark: SparkSession,
     table: str,
@@ -4244,15 +4356,12 @@ def optimize_delta(
     cluster = None
     if zorder_by:
         # OPTIMIZE ZORDER BY: same commit shape, but the rewrite lays
-        # rows out along the interleaved-bit z-curve (deltalite's
-        # _zorder transform — engine-agnostic DataFrame → DataFrame),
-        # so the footer stats each compacted add records are tight on
-        # EVERY clustered dimension and read_delta(skip=...) prunes on
-        # any of them.
-        from acero_delta_lake_streaming_spark.storage.deltalite import (
-            _zorder,
-        )
-
+        # rows out along the interleaved-bit z-curve (``_zorder`` — an
+        # engine-agnostic DataFrame → DataFrame transform), so the
+        # footer stats each compacted add records are tight on EVERY
+        # clustered dimension and read_delta(skip=...) prunes on any of
+        # them.
+        #
         # clustering keys arrive as LOGICAL names; a mapped table's
         # rewrite frame carries PHYSICAL ones — translate through the
         # same binding the rewrite read itself uses (id mode: the live
@@ -4369,13 +4478,13 @@ def merge_delta(
     source: DataFrame,
     key_cols: list[str],
     change_data: bool = False,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """Copy-on-write MERGE (upsert) into a real-format Delta table:
     source rows REPLACE same-key target rows, unmatched source rows
-    INSERT — the semantics of ``deltalite.upsert`` (and of
-    ``MERGE ... WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
-    INSERT *``), published as one remove+add commit delta-rs/delta-spark
-    can read back.
+    INSERT — the semantics of ``MERGE ... WHEN MATCHED THEN UPDATE
+    SET * WHEN NOT MATCHED THEN INSERT *``, published as one remove+add
+    commit delta-rs/delta-spark can read back.
 
     File-level copy-on-write, delta-spark's low-shuffle-merge contract:
     only data files that actually CONTAIN a matched key are rewritten
@@ -4388,9 +4497,17 @@ def merge_delta(
     staging write, removes carry each touched file's partition values
     from its directory name, and a matched row whose source carries new
     partition values simply lands in the new directory (partition-key
-    change is a remove+add like any other row move)."""
+    change is a remove+add like any other row move).
+
+    ``txn=(app_id, epoch)`` is ``append_delta``'s exactly-once key: a
+    replayed epoch returns -1 without merging, otherwise the ``txn``
+    action rides in the MERGE commit (the streaming CDC sink,
+    ``streaming.ingest.cdc_upsert_writer``)."""
     import pyspark.sql.functions as F
 
+    txn_actions = _txn_actions(table, txn)
+    if txn_actions is None:
+        return -1
     snap = snapshot(table)
     # identity_ok: MERGE maintains identity columns correctly below —
     # matched rows KEEP the target's minted value, unmatched rows take
@@ -4579,7 +4696,7 @@ def merge_delta(
                 }
             }
         ]
-    actions = cdc_actions + meta_actions + removes + adds + [
+    actions = cdc_actions + meta_actions + txn_actions + removes + adds + [
         {
             "commitInfo": {
                 "timestamp": int(time.time() * 1000),
@@ -5663,6 +5780,7 @@ def overwrite_delta(
     df: DataFrame,
     table: str,
     change_data: bool = False,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """Atomic FULL-TABLE overwrite — delta-spark's plain
     ``write.mode("overwrite")`` (the re-materialize-the-gold-table
@@ -5682,9 +5800,17 @@ def overwrite_delta(
     ``change_data=True`` captures the overwrite for the CDF: the old
     LIVE rows (via the ordinary snapshot scan — DV-subtracted, mapped,
     partition-recovered as appropriate) as ``delete`` preimages and
-    the batch as ``insert`` rows."""
+    the batch as ``insert`` rows.
+
+    ``txn=(app_id, epoch)`` is ``append_delta``'s exactly-once key: a
+    replayed epoch returns -1 without writing, otherwise the ``txn``
+    action rides in the overwrite commit (the complete-mode streaming
+    sink, ``streaming.ingest.run_windowed_stream``)."""
     import pyspark.sql.functions as F
 
+    txn_actions = _txn_actions(table, txn)
+    if txn_actions is None:
+        return -1
     snap = snapshot(table)
     _check_writer_protocol(snap, "WRITE (overwrite)", removes_data=True)
     change_data = change_data or _cdf_obligated(snap)
@@ -5707,10 +5833,6 @@ def overwrite_delta(
             f"match table schema {sorted(table_cols)} (schema change "
             "on overwrite requires overwrite_schema_delta)"
         )
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
-        merge_schemas,
-    )
-
     merge_schemas(full, df.schema)  # refuse silent type drift
     _enforce_constraints(df, _row_write_checks(snap))
     _enforce_generated(df, table_generated_columns(snap))
@@ -5753,7 +5875,7 @@ def overwrite_delta(
         }
         for f in snap["files"]
     ]
-    actions = cdc_actions + removes + adds + [
+    actions = cdc_actions + txn_actions + removes + adds + [
         {
             "commitInfo": {
                 "timestamp": now_ms,
@@ -5841,10 +5963,6 @@ def replace_where_delta(
             f"replaceWhere batch schema {sorted(df.columns)} does not "
             f"match table schema {sorted(table_cols)}"
         )
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
-        merge_schemas,
-    )
-
     merge_schemas(full, df.schema)  # refuse silent type drift
     _enforce_constraints(df, _row_write_checks(snap))
     _enforce_generated(df, table_generated_columns(snap))
@@ -6147,10 +6265,6 @@ def dynamic_overwrite_delta(
             f"dynamic overwrite batch schema {sorted(df.columns)} does "
             f"not match table schema {sorted(table_cols)}"
         )
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
-        merge_schemas,
-    )
-
     merge_schemas(full, df.schema)  # refuse silent type drift
     _enforce_constraints(df, _row_write_checks(snap))
     _enforce_generated(df, table_generated_columns(snap))
@@ -6908,14 +7022,10 @@ def read_delta_changes(
     append-style commit (adds with ``dataChange:true``, no data-changing
     removes) synthesizes inserts from its data files; a commit that
     removed data without captured change files raises
-    :class:`deltalite.ChangeDataUnavailableError`. Commits whose actions
+    :class:`ChangeDataUnavailableError`. Commits whose actions
     are all ``dataChange:false`` (OPTIMIZE) contribute nothing, exactly
     like Delta's CDF."""
     import pyspark.sql.functions as F
-
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
-        ChangeDataUnavailableError,
-    )
 
     if not is_delta_table(table):
         raise DeltaCorruptLogError(f"{table} has no {_LOG_DIR} directory")
@@ -7099,8 +7209,7 @@ def follow_delta_changes(
     interval_s: float = 30.0,
     sleep_fn=None,
 ) -> int:
-    """CDC follower over a REAL-format Delta log — the delta_compat
-    twin of ``deltalite.follow_changes``: poll the commit log, hand
+    """CDC follower over a Delta log: poll the commit log, hand
     each batch of newly committed versions to ``apply_fn(changes_df,
     from_v, to_v)`` exactly once in commit order, return the cursor
     (next unapplied version). Ranges holding only metadata /
@@ -7108,10 +7217,6 @@ def follow_delta_changes(
     cursor without an apply — a follower must skip those, not error,
     or it wedges behind every compaction."""
     import time as _time
-
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
-        ChangeDataUnavailableError,
-    )
 
     sleep_fn = sleep_fn or _time.sleep
     cursor = start_version

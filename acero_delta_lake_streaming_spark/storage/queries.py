@@ -1,6 +1,6 @@
-"""Registry queries exercising the deltalite storage layer (S3/S4/S5).
+"""Registry queries exercising the Delta storage layer (``delta_compat``).
 
-Each query materializes a small deltalite table from fixture data inside
+Each query materializes a small Delta table from fixture data inside
 a scratch dir keyed by the sf_dir (rebuilt from scratch per call so the
 result is a pure function of the fixtures), then queries it back through
 the transactional read path. The oracle recomputes the same result
@@ -26,7 +26,7 @@ from acero_delta_lake_streaming_spark.functions.extract import (
     flatten_actors,
 )
 from acero_delta_lake_streaming_spark.plans.cache import scoped_persist
-from acero_delta_lake_streaming_spark.storage import deltalite
+from acero_delta_lake_streaming_spark.storage import delta_compat
 
 # Keyed by PID so concurrent sessions (external driver + a local
 # pytest/bench run on the same sf_dir) never share commit logs or race
@@ -56,10 +56,10 @@ def s3_delta_append_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet scan exactly as on the raw fixture."""
     table = _scratch(sf_dir, "s3_orders")
     orders = load_table(spark, sf_dir, "orders")
-    deltalite.write(orders.filter("o_orderstatus = 'F'"), table, "append")
-    deltalite.write(orders.filter("o_orderstatus = 'O'"), table, "append")
+    delta_compat.append_delta(orders.filter("o_orderstatus = 'F'"), table)
+    delta_compat.append_delta(orders.filter("o_orderstatus = 'O'"), table)
     return (
-        deltalite.read(spark, table)
+        delta_compat.read_delta(spark, table)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -82,12 +82,12 @@ def s3b_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = _scratch(sf_dir, "s3b_orders")
     orders = load_table(spark, sf_dir, "orders")
     for status in ("F", "O", "P"):
-        deltalite.write(
-            orders.filter(orders.o_orderstatus == status),
-            table,
-            stats_cols=["o_orderstatus"],
+        delta_compat.append_delta(
+            orders.filter(orders.o_orderstatus == status), table
         )
-    pruned = deltalite.read(spark, table, skip=("o_orderstatus", "F", "F"))
+    pruned = delta_compat.read_delta(
+        spark, table, skip=("o_orderstatus", "F", "F")
+    )
     return (
         pruned.filter("o_orderstatus = 'F'")
         .groupBy("o_orderpriority")
@@ -116,11 +116,11 @@ def s4_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = _scratch(sf_dir, "s4_orders")
     orders = load_table(spark, sf_dir, "orders")
     for prio in ("1-URGENT", "3-MEDIUM", "5-LOW"):
-        deltalite.write(
-            orders.filter(F.col("o_orderpriority") == prio), table, "append"
+        delta_compat.append_delta(
+            orders.filter(F.col("o_orderpriority") == prio), table
         )
     return (
-        deltalite.read(spark, table, version=1)
+        delta_compat.read_delta(spark, table, version=1)
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -139,31 +139,33 @@ _S4_SQL = (
 
 def s5_medallion_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's three-table fan-out (collector.py:228-245) as one
-    batch pipeline over deltalite: raw = ingested rows, curated =
+    batch pipeline over Delta: raw = ingested rows, curated =
     extraction output with quarantine dropped, actors = flattened actor
     rows. Returns the actors rollup read back from storage."""
     base = _scratch(sf_dir, "s5")
     docs = load_table(spark, sf_dir, "documents")
 
     raw = docs.select("doc_id", "text", "lang", "source")
-    deltalite.write(raw, os.path.join(base, "raw"), "append")
+    delta_compat.append_delta(raw, os.path.join(base, "raw"))
 
     # curated and actors are separate write actions off the same
     # extraction — persist so the mapInPandas stage (the LLM calls, in
     # production) runs once, mirroring streaming/ingest.py's writer.
     extracted = scoped_persist(
-        extract_events(deltalite.read(spark, os.path.join(base, "raw")))
+        extract_events(
+            delta_compat.read_delta(spark, os.path.join(base, "raw"))
+        )
     )
     curated = extracted.filter(F.col("event").isNotNull()).select(
         "doc_id", F.col("event.category").alias("category")
     )
-    deltalite.write(curated, os.path.join(base, "curated"), "append")
+    delta_compat.append_delta(curated, os.path.join(base, "curated"))
 
     actors = flatten_actors(extracted)
-    deltalite.write(actors, os.path.join(base, "actors"), "append")
+    delta_compat.append_delta(actors, os.path.join(base, "actors"))
 
     return (
-        deltalite.read(spark, os.path.join(base, "actors"))
+        delta_compat.read_delta(spark, os.path.join(base, "actors"))
         .groupBy("category", "is_main_actor")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -190,8 +192,8 @@ def s6_cached_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (the plan is pinned at cache time)."""
     table = _scratch(sf_dir, "s6_orders")
     orders = load_table(spark, sf_dir, "orders")
-    deltalite.write(orders, table, "append")
-    cached = scoped_persist(deltalite.read(spark, table))
+    delta_compat.append_delta(orders, table)
+    cached = scoped_persist(delta_compat.read_delta(spark, table))
     counts = cached.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
     totals = cached.groupBy("o_orderstatus").agg(
         F.round(F.sum("o_totalprice"), 2).alias("total")
@@ -215,7 +217,7 @@ def s7_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    deltalite.write(orders, table, "append")
+    delta_compat.append_delta(orders, table)
     # The bump is an ADDITION, not a ×1.1-and-round: a 2-dp price times
     # 1.1 lands exactly on .005 rounding ties, which Spark (HALF_UP) and
     # DuckDB break differently — per-row round of computed doubles is a
@@ -228,9 +230,9 @@ def s7_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", F.col("o_orderkey") + F.lit(100000000)
         )
     )
-    deltalite.upsert(spark, changes, table, ["o_orderkey"])
+    delta_compat.merge_delta(spark, table, changes, ["o_orderkey"])
     return (
-        deltalite.read(spark, table)
+        delta_compat.read_delta(spark, table)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -273,8 +275,6 @@ def s8_delta_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the log-derived file list end to end; the union of the version-0
     time-travel slice and the latest-minus-v0 delta proves snapshot
     isolation across versions."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s8_orders_delta")
     orders = load_table(spark, sf_dir, "orders")
     delta_compat.append_delta(orders.filter("o_orderstatus = 'F'"), table)
@@ -325,13 +325,13 @@ def s9_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    deltalite.write(orders.filter("o_orderkey % 2 = 0"), table)
-    deltalite.write(orders.filter("o_orderkey % 2 = 1"), table)
-    deltalite.compact(
+    delta_compat.append_delta(orders.filter("o_orderkey % 2 = 0"), table)
+    delta_compat.append_delta(orders.filter("o_orderkey % 2 = 1"), table)
+    delta_compat.optimize_delta(
         spark, table, target_partitions=8,
         zorder_by=["o_custkey", "o_totalprice"],
     )
-    pruned = deltalite.read(
+    pruned = delta_compat.read_delta(
         spark, table, skip=("o_totalprice", 0.0, 50000.0)
     )
     return (
@@ -361,12 +361,10 @@ def s10_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     table as two append commits (even/odd keys → multiple data files),
     merge in a changed 'P' slice (price +1000) plus brand-new rows, and
     aggregate the merged snapshot read back through the log-replay
-    reader. Same upsert semantics as deltalite's s7, now producing a
+    reader. Same upsert semantics as s7 over a two-commit seed, a
     remove+add commit delta-rs/delta-spark can consume; only files
     containing a matched key are rewritten (pinned by
     tests/test_delta_compat.py). Oracle recomputes the merge by hand."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s10_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -411,8 +409,6 @@ def s10b_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a matched key keep their files untouched (copy-on-write is
     file-granular, so partition pruning bounds the rewrite). End state
     equals s7/s10 — the storage layout must not change the answer."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s10b_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -470,7 +466,7 @@ def s11_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    deltalite.write(orders.filter("o_orderkey % 3 != 0"), table, "append")
+    delta_compat.append_delta(orders.filter("o_orderkey % 3 != 0"), table)
     v1 = orders.filter("o_orderstatus <> 'P'").withColumn(
         "o_totalprice",
         # +500.0 is an exact-addition change; a ×-and-round bump lands
@@ -480,11 +476,11 @@ def s11_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ELSE o_totalprice END"
         ),
     )
-    deltalite.write(v1, table, "overwrite")
-    a = deltalite.read(spark, table, version=0).select(
+    delta_compat.overwrite_delta(spark, v1, table)
+    a = delta_compat.read_delta(spark, table, version=0).select(
         F.col("o_orderkey").alias("ka"), F.col("o_totalprice").alias("pa")
     )
-    b = deltalite.read(spark, table).select(
+    b = delta_compat.read_delta(spark, table).select(
         F.col("o_orderkey").alias("kb"), F.col("o_totalprice").alias("pb")
     )
     j = a.join(b, a.ka == b.kb, "full_outer").select(
@@ -556,19 +552,19 @@ def s12_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    deltalite.write(orders.filter("o_orderkey % 2 = 0"), table, "append")
+    delta_compat.append_delta(orders.filter("o_orderkey % 2 = 0"), table)
     updates = orders.filter(
         "o_orderkey % 2 = 0 AND o_orderstatus = 'P'"
     ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
     inserts = orders.filter("o_orderkey % 2 = 1 AND o_orderstatus = 'O'")
-    deltalite.upsert(
+    delta_compat.merge_delta(
         spark,
-        updates.unionByName(inserts),
         table,
+        updates.unionByName(inserts),
         ["o_orderkey"],
         change_data=True,
     )
-    changes = deltalite.read_changes(spark, table, from_version=1)
+    changes = delta_compat.read_delta_changes(spark, table, from_version=1)
     return changes.groupBy("_change_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("o_orderkey").cast("bigint").alias("key_sum"),
@@ -608,23 +604,25 @@ def s12b_incremental_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    deltalite.write(orders.filter("o_orderkey % 2 = 0"), table, "append")
+    delta_compat.append_delta(orders.filter("o_orderkey % 2 = 0"), table)
     bump_p = orders.filter(
         "o_orderkey % 2 = 0 AND o_orderstatus = 'P'"
     ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-    deltalite.upsert(spark, bump_p, table, ["o_orderkey"], change_data=True)
+    delta_compat.merge_delta(
+        spark, table, bump_p, ["o_orderkey"], change_data=True
+    )
     bump_f = orders.filter(
         "o_orderkey % 2 = 0 AND o_orderstatus = 'F'"
     ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(200.0))
     inserts = orders.filter("o_orderkey % 2 = 1 AND o_orderstatus = 'O'")
-    deltalite.upsert(
+    delta_compat.merge_delta(
         spark,
-        bump_f.unionByName(inserts),
         table,
+        bump_f.unionByName(inserts),
         ["o_orderkey"],
         change_data=True,
     )
-    changes = deltalite.read_changes(spark, table, 1, 2)
+    changes = delta_compat.read_delta_changes(spark, table, 1, 2)
     return changes.groupBy("_commit_version", "_change_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.expr(
@@ -667,8 +665,6 @@ def s13_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     files containing a matched key rewrite; pinned in
     tests/test_delta_compat.py) and the CDF read is O(|deleted rows|).
     Oracle replays the erasure from the fixtures."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s13_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -730,8 +726,6 @@ def s14_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore). Per (part, status) accounting; the oracle replays the
     timelines from the fixtures. O(|file-set diff|) restore — no data
     file read or written."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s14_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -794,8 +788,6 @@ def s15_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     thirds for the cost of a JSON parse. Row-level filter still applied
     (skipping is an optimization, never the predicate); pruning itself
     is pinned in tests/test_delta_compat.py via ``inputFiles()``."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s15_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
@@ -837,14 +829,11 @@ def s16_zorder_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrites them along the z-curve (dataChange:false — streams see no
     new data, time travel keeps the old layout), and the read then
     prunes files on the TRAILING dimension through the log's per-add
-    stats — the multi-dimension clustering property on the protocol
-    format, exactly deltalite's s9 but producing a `_delta_log` any
-    Delta client replays. The exact row filter rides on the pruned
+    stats — s9's recipe, emitting exact cents instead of a rounded
+    total. The exact row filter rides on the pruned
     scan (skipping is a superset guarantee), so the result equals the
     plain SQL filter regardless of layout; the pruning itself is
     pinned by inputFiles() in tests/test_delta_compat.py."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s16_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
@@ -898,8 +887,6 @@ def s17_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream consumer must not be able to tell which deletion
     strategy ran. Zero-rewrite and bitmap round-trip contracts are
     pinned in tests/test_delta_compat.py."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s17_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -957,8 +944,6 @@ def s17b_dv_delete_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned-DV deletes must be indistinguishable downstream.
     Lifecycle (repeat delete, OPTIMIZE purge per partition, vacuum,
     restore) is pinned in tests/test_delta_compat.py."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s17b_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1012,8 +997,6 @@ def s18_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows read through the clone's log, 'source' = still exactly the
     seed (isolation — the fork never writes back). Oracle replays both
     populations from the fixtures."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     src = _scratch(sf_dir, "s18_src")
     dst = _scratch(sf_dir, "s18_clone")
     shutil.rmtree(dst, ignore_errors=True)  # clone_delta wants no log
@@ -1070,8 +1053,6 @@ def s19_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     poisoned batch accounted from the source expression. At 100 TB
     the per-append cost is one scan of the BATCH; the one full-table
     scan happens at ADD CONSTRAINT time, exactly like delta-spark."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s19_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1140,8 +1121,6 @@ def s20_column_mapping_writes(spark: SparkSession, sf_dir: str) -> DataFrame:
     version serves. The oracle replays both populations from the
     fixtures — column mapping must be invisible to the VALUES a reader
     gets, at every version."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s20_orders_mapped")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
@@ -1216,8 +1195,6 @@ def s20b_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-travels to the post-upgrade version where the original
     priorities are still served. Metadata verbs at 100 TB: the drop and
     the re-add each touch O(|schema|) bytes of log, never a data file."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s20b_orders_dropcol")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
@@ -1279,8 +1256,6 @@ def s21_v2_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     part ``at_ck`` pins TIME TRAVEL to the checkpointed version. The
     oracle recomputes both populations from the fixtures: checkpoint
     format must be invisible to every value a reader sees."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s21_orders_v2ck")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1340,16 +1315,16 @@ def dq3_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    deltalite.write(orders.filter("o_orderkey % 2 = 0"), table, "append")
+    delta_compat.append_delta(orders.filter("o_orderkey % 2 = 0"), table)
     bump_p = orders.filter(
         "o_orderkey % 2 = 0 AND o_orderstatus = 'P'"
     ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
     inserts = orders.filter("o_orderkey % 2 = 1 AND o_orderstatus = 'O'")
-    deltalite.upsert(
-        spark, bump_p.unionByName(inserts), table, ["o_orderkey"]
+    delta_compat.merge_delta(
+        spark, table, bump_p.unionByName(inserts), ["o_orderkey"]
     )
     doomed = orders.filter("o_orderkey % 10 = 0").select("o_orderkey")
-    deltalite.delete_keys(spark, doomed, table, ["o_orderkey"])
+    delta_compat.delete_delta(spark, table, doomed, ["o_orderkey"])
 
     cents = "CAST(CAST(o_totalprice AS DECIMAL(18,6)) * 100 AS BIGINT)"
 
@@ -1363,8 +1338,8 @@ def dq3_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return wide.select(F.lit(tag).alias("version"), "*")
 
-    v0 = prof(deltalite.read(spark, table, version=0), "v0")
-    latest = prof(deltalite.read(spark, table), "latest")
+    v0 = prof(delta_compat.read_delta(spark, table, version=0), "v0")
+    latest = prof(delta_compat.read_delta(spark, table), "latest")
     return v0.unionByName(latest)
 
 
@@ -1396,32 +1371,16 @@ _DQ3_SQL = (
 )
 
 
-def st10_cdf_follower(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST10 — the CDC follower driven end to end through the entry
-    surface (VERDICT r4 item 7): a source deltalite table takes three
-    commits (seed append, captured price-bump MERGE, captured row-level
-    DELETE), and ``follow_changes`` feeds each batch to a consumer that
-    maintains a DOWNSTREAM deltalite mart by applying postimages+inserts
-    as upserts and delete preimages as deletes — per version, in commit
-    order, exactly once (the follower loop's pinned contract). The
-    returned aggregate reads the MART, so the hash gate certifies the
-    whole replication chain: capture → feed → apply → downstream state.
-    Each applied batch is O(|changed rows|); the mart never re-scans
-    the source."""
-    src = _scratch(sf_dir, "st10_src")
-    mart = _scratch(sf_dir, "st10_mart")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    deltalite.write(orders.filter("o_orderkey % 2 = 0"), src, "append")
-    bump_p = orders.filter(
-        "o_orderkey % 2 = 0 AND o_orderstatus = 'P'"
-    ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-    deltalite.upsert(spark, bump_p, src, ["o_orderkey"], change_data=True)
-    doomed = orders.filter("o_orderkey % 10 = 0").select("o_orderkey")
-    deltalite.delete_keys(
-        spark, doomed, src, ["o_orderkey"], change_data=True
-    )
+def _replicate_into_mart(
+    spark: SparkSession, src: str, mart: str
+) -> DataFrame:
+    """The CDC consumer st10 and st15 share: ``follow_delta_changes``
+    feeds each source version's changes to an apply step that
+    maintains a DOWNSTREAM mart — postimages + inserts as MERGEs,
+    delete preimages as DELETEs — per version, in commit order, exactly
+    once. Returns the rollup read from the MART, so the hash gate
+    certifies the whole chain: capture → feed → apply → downstream
+    state."""
 
     def apply_batch(changes: DataFrame, from_v: int, to_v: int) -> None:
         for ver in range(from_v, to_v + 1):
@@ -1429,21 +1388,21 @@ def st10_cdf_follower(spark: SparkSession, sf_dir: str) -> DataFrame:
             ups = batch.filter(
                 F.col("_change_type").isin("insert", "update_postimage")
             ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-            dels = batch.filter(
-                F.col("_change_type") == "delete"
-            ).select("o_orderkey")
+            dels = batch.filter(F.col("_change_type") == "delete").select(
+                "o_orderkey"
+            )
             # isEmpty guards skip no-op commits (a delete-only version
             # has no upserts and vice versa) — same pattern as
             # streaming_sink's empty-epoch no-op.
             if not ups.isEmpty():
-                if not deltalite.table_exists(mart):
-                    deltalite.write(ups, mart, "append")
+                if not delta_compat.is_delta_table(mart):
+                    delta_compat.append_delta(ups, mart)
                 else:
-                    deltalite.upsert(spark, ups, mart, ["o_orderkey"])
-            if deltalite.table_exists(mart) and not dels.isEmpty():
-                deltalite.delete_keys(spark, dels, mart, ["o_orderkey"])
+                    delta_compat.merge_delta(spark, mart, ups, ["o_orderkey"])
+            if delta_compat.is_delta_table(mart) and not dels.isEmpty():
+                delta_compat.delete_delta(spark, mart, dels, ["o_orderkey"])
 
-    deltalite.follow_changes(
+    delta_compat.follow_delta_changes(
         spark,
         src,
         apply_batch,
@@ -1452,7 +1411,7 @@ def st10_cdf_follower(spark: SparkSession, sf_dir: str) -> DataFrame:
         sleep_fn=lambda _s: None,
     )
     return (
-        deltalite.read(spark, mart)
+        delta_compat.read_delta(spark, mart)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1463,6 +1422,33 @@ def st10_cdf_follower(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cents"),
         )
     )
+
+
+def st10_cdf_follower(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ST10 — the CDC follower driven end to end through the entry
+    surface (VERDICT r4 item 7): a source Delta table takes three
+    commits (seed append, captured price-bump MERGE, captured row-level
+    DELETE), and ``_replicate_into_mart`` applies each version's
+    changes to a DOWNSTREAM Delta mart exactly once, in commit order
+    (the follower loop's pinned contract). Each applied batch is
+    O(|changed rows|); the mart never re-scans the source."""
+    src = _scratch(sf_dir, "st10_src")
+    mart = _scratch(sf_dir, "st10_mart")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    delta_compat.append_delta(orders.filter("o_orderkey % 2 = 0"), src)
+    bump_p = orders.filter(
+        "o_orderkey % 2 = 0 AND o_orderstatus = 'P'"
+    ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
+    delta_compat.merge_delta(
+        spark, src, bump_p, ["o_orderkey"], change_data=True
+    )
+    doomed = orders.filter("o_orderkey % 10 = 0").select("o_orderkey")
+    delta_compat.delete_delta(
+        spark, src, doomed, ["o_orderkey"], change_data=True
+    )
+    return _replicate_into_mart(spark, src, mart)
 
 
 _ST10_SQL = (
@@ -1503,10 +1489,10 @@ def st12_incremental_agg_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    deltalite.write(orders.filter("o_orderkey % 2 = 0"), table, "append")
+    delta_compat.append_delta(orders.filter("o_orderkey % 2 = 0"), table)
     cents = "CAST(CAST(o_totalprice AS DECIMAL(18,6)) * 100 AS BIGINT)"
     base = (
-        deltalite.read(spark, table, version=0)
+        delta_compat.read_delta(spark, table, version=0)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n0"),
@@ -1517,20 +1503,22 @@ def st12_incremental_agg_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey % 2 = 0 AND o_orderstatus = 'P'"
     ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
     inserts = orders.filter("o_orderkey % 2 = 1 AND o_orderstatus = 'O'")
-    deltalite.upsert(
+    delta_compat.merge_delta(
         spark,
-        bump_p.unionByName(inserts),
         table,
+        bump_p.unionByName(inserts),
         ["o_orderkey"],
         change_data=True,
     )
     doomed = orders.filter("o_orderkey % 10 = 0").select("o_orderkey")
-    deltalite.delete_keys(spark, doomed, table, ["o_orderkey"], change_data=True)
+    delta_compat.delete_delta(
+        spark, table, doomed, ["o_orderkey"], change_data=True
+    )
     sign = F.when(
         F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
     delta = (
-        deltalite.read_changes(spark, table, 1, 2)
+        delta_compat.read_delta_changes(spark, table, 1, 2)
         .withColumn("sign", sign)
         .groupBy("o_orderstatus")
         .agg(
@@ -1570,18 +1558,13 @@ _ST12_SQL = (
 
 
 def st15_delta_cdf_follower(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST15 — the CDC follower over the REAL Delta format (st10's twin
-    with a `_delta_log` source): the source takes a seed append, a
-    captured price-bump MERGE, an OPTIMIZE (dataChange:false — the
-    follower must skip it, not wedge), and a captured row-level DELETE;
-    ``follow_delta_changes`` applies each version's feed into a
-    downstream deltalite mart exactly once, in commit order. The hash
-    gate certifies the full real-format replication chain: protocol
-    cdc actions → changes reader → follower → downstream state. Same
-    mutation recipe as st10, so the oracle is shared — a consumer must
-    not be able to tell which log format fed it."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
+    """ST15 — st10's CDC follower with an OPTIMIZE in the source
+    history: a seed append, a captured price-bump MERGE, an OPTIMIZE
+    (dataChange:false — the follower must skip it, not wedge), and a
+    captured row-level DELETE, replicated into a downstream mart by
+    ``_replicate_into_mart``. Same mutation recipe as st10, so the
+    oracle is shared — a consumer must not be able to tell whether
+    the source was compacted."""
     src = _scratch(sf_dir, "st15_src")
     mart = _scratch(sf_dir, "st15_mart")
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1599,48 +1582,11 @@ def st15_delta_cdf_follower(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_compat.delete_delta(
         spark, src, doomed, ["o_orderkey"], change_data=True
     )
-
-    def apply_batch(changes: DataFrame, from_v: int, to_v: int) -> None:
-        for ver in range(from_v, to_v + 1):
-            batch = changes.filter(F.col("_commit_version") == ver)
-            ups = batch.filter(
-                F.col("_change_type").isin("insert", "update_postimage")
-            ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-            dels = batch.filter(F.col("_change_type") == "delete").select(
-                "o_orderkey"
-            )
-            if not ups.isEmpty():
-                if not deltalite.table_exists(mart):
-                    deltalite.write(ups, mart, "append")
-                else:
-                    deltalite.upsert(spark, ups, mart, ["o_orderkey"])
-            if deltalite.table_exists(mart) and not dels.isEmpty():
-                deltalite.delete_keys(spark, dels, mart, ["o_orderkey"])
-
-    delta_compat.follow_delta_changes(
-        spark,
-        src,
-        apply_batch,
-        start_version=0,
-        max_cycles=1,
-        sleep_fn=lambda _s: None,
-    )
-    return (
-        deltalite.read(spark, mart)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("o_orderkey").cast("bigint").alias("key_sum"),
-            F.expr(
-                "CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) * 100 "
-                "AS BIGINT)"
-            ).alias("cents"),
-        )
-    )
+    return _replicate_into_mart(spark, src, mart)
 
 
 # deliberately identical to _ST10_SQL: a CDC consumer must not be able
-# to tell whether deltalite or the real _delta_log format fed it
+# to tell whether the source was compacted
 _ST15_SQL = _ST10_SQL
 
 
@@ -1660,8 +1606,6 @@ def st24_delta_append_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``(app_id, epoch)``), proven by the hash gate: one double-admitted
     batch doubles a group's count. Oracle replays the version-ordered
     union of the three appended slices."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     src = _scratch(sf_dir, "st24_src")
     sink_t = _scratch(sf_dir, "st24_sink")
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1715,8 +1659,6 @@ def st24b_partitioned_append_stream(
     full-history replay must no-op per epoch. The hash gate certifies
     the values survived two hive round-trips (source dirs → stream →
     sink dirs)."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     src = _scratch(sf_dir, "st24b_src")
     sink_t = _scratch(sf_dir, "st24b_sink")
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1780,8 +1722,6 @@ def st25_streaming_shard_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     content md5 over the sorted per-doc fingerprints) — the oracle
     replays the assignment over the appended slices, so a double-
     admitted batch or a mis-sharded row flips the hash."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     src = _scratch(sf_dir, "st25_src")
     sink_t = _scratch(sf_dir, "st25_sink")
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1847,8 +1787,6 @@ def s46_row_lineage_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays the classes from the fixture predicates — an
     id broken anywhere (backfill, merge rewrite, DV re-add) moves a
     row between classes and flips the hash."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s46_orders_lineage")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -1928,8 +1866,6 @@ def s47_cdf_obligation(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|changed rows|) end to end — capture files and the CDF read
     never touch unchanged data, the property check is one
     configuration lookup on the commit path."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s47_orders_cdf")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1999,8 +1935,6 @@ def s45_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot) and a full checkpoint (O(live files) to write): compact
     the tail once, every subsequent replay reads one file for it.
     Oracle replays the three slices minus the deleted keys."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s45_orders_compacted")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2049,8 +1983,6 @@ def s49_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     knowledge. Pruning + domain persistence + refusals are pinned in
     tests/test_delta_compat.py; the exact row filter rides the pruned
     scan, so the result equals the plain filter regardless of layout."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s49_orders_clustered")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
@@ -2102,8 +2034,6 @@ def s49b_cluster_by_create(spark: SparkSession, sf_dir: str) -> DataFrame:
     unknown cols) shared with s49 and pinned in
     tests/test_delta_compat.py. Reference anchor: the Delta ACID
     surface (collector.py:219-226) via delta-spark's writer."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s49b_orders_cluster_create")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
@@ -2158,8 +2088,6 @@ def s48_version_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     refusal is pinned in tests/test_delta_compat.py. Reference anchor:
     the Delta ACID surface (collector.py:219-226) via delta-spark's
     writer."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s48_orders_crc")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2242,11 +2170,11 @@ def st26_streaming_quantile_mart(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    deltalite.write(orders.filter("o_orderkey % 2 = 0"), table, "append")
+    delta_compat.append_delta(orders.filter("o_orderkey % 2 = 0"), table)
     cents = "CAST(CAST(o_totalprice AS DECIMAL(18,6)) * 100 AS BIGINT)"
     binned = f"({cents}) DIV {_ST26_BIN_W}"
     base = (
-        deltalite.read(spark, table, version=0)
+        delta_compat.read_delta(spark, table, version=0)
         .groupBy("o_orderstatus", F.expr(binned).alias("bin"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt0"))
     )
@@ -2254,22 +2182,22 @@ def st26_streaming_quantile_mart(
         "o_orderkey % 2 = 0 AND o_orderstatus = 'P'"
     ).withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
     inserts = orders.filter("o_orderkey % 2 = 1 AND o_orderstatus = 'O'")
-    deltalite.upsert(
+    delta_compat.merge_delta(
         spark,
-        bump_p.unionByName(inserts),
         table,
+        bump_p.unionByName(inserts),
         ["o_orderkey"],
         change_data=True,
     )
     doomed = orders.filter("o_orderkey % 10 = 0").select("o_orderkey")
-    deltalite.delete_keys(
-        spark, doomed, table, ["o_orderkey"], change_data=True
+    delta_compat.delete_delta(
+        spark, table, doomed, ["o_orderkey"], change_data=True
     )
     sign = F.when(
         F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
     delta = (
-        deltalite.read_changes(spark, table, 1, 2)
+        delta_compat.read_delta_changes(spark, table, 1, 2)
         .withColumn("sign", sign)
         .groupBy("o_orderstatus", F.expr(binned).alias("bin"))
         .agg(F.sum("sign").cast("bigint").alias("dcnt"))
@@ -2435,8 +2363,6 @@ def s42_variant_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON string column would re-tokenize per access. The oracle
     recomputes from the base columns — the round-trip through the
     variant binary must be value-invisible."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s42_variant")
     docs = load_table(spark, sf_dir, "documents")
     rows = docs.select(
@@ -2493,8 +2419,6 @@ def s43_collated_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     collation were dropped anywhere in the round trip, the mangled
     cases would split into separate groups and the counts would
     flip."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s43_collated")
     docs = load_table(spark, sf_dir, "documents")
     rows = docs.select(
@@ -2544,8 +2468,6 @@ def s44_iceberg_compat_writes(spark: SparkSession, sf_dir: str) -> DataFrame:
     obligations (stats-complete adds, no merge-on-read erasure)
     enforced at the writer instead of discovered at the foreign
     reader. Oracle replays seed + append − delete from the fixture."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s44_orders_iceberg")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2599,8 +2521,6 @@ def s22_mapped_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows). Mapping must be invisible to every value — the oracle
     replays the sequence from the fixtures with no idea mapping
     exists."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s22_orders_mapped_cow")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2689,8 +2609,6 @@ def s23_dv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind the merge commit), per (part, status). The oracle replays
     delete-then-merge on the fixtures with no idea which deletion
     strategy ran — that indistinguishability IS the contract."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s23_orders_dv_merge")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2761,8 +2679,6 @@ def s24_id_mode_writes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same three-part shape as s22 (mapping must be invisible downstream):
     'remaining' snapshot, 'merged' postimage+insert CDF rows, 'deleted'
     CDF preimages, per (part, status)."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s24_orders_id_mode")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2860,8 +2776,6 @@ def s25_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be invisible to values) plus one 'row_ids' bookkeeping row —
     n = live file count, key_sum = rowIdHighWaterMark, cents = the
     compacted file's baseRowId."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s25_orders_row_tracking")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2946,8 +2860,6 @@ def s26_clone_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed — a rewrite that leaked into the source flips this part's
     hash), and 'clone_v0' (time travel to the clone's creation — the
     external references must still resolve after the rewrites)."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     src = _scratch(sf_dir, "s26_orders_clone_src")
     dst = _scratch(sf_dir, "s26_orders_clone_dst")
     orders = load_table(spark, sf_dir, "orders").select(
@@ -3022,8 +2934,6 @@ def s27_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     travel. Cents use floor(price*100) — floor is the one
     double→integer path both engines share bit-for-bit (CAST rounds in
     DuckDB, truncates in Spark)."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s27_orders_widen")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3105,8 +3015,6 @@ def s28_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     live set, NOT the raw files — a DV-deleted row must not resurface),
     'cdf_insert' = the capture's inserts (= the batch). The oracle
     replays the sequence storage-blind."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s28_orders_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3206,8 +3114,6 @@ def s29_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     range accounting, which contiguity makes exact: per batch-part
     (n, min_id, max_id, id_sum). A lost metaData update, a re-minted
     range, or an overlap with the explicit ids flips it."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s29_orders_identity")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3287,8 +3193,6 @@ def s30_mapped_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE on the renamed partition key. Certificate: latest grouped by
     the renamed column + time travel to v0 under the ORIGINAL schema;
     the oracle replays the sequence storage-blind."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s30_orders_mapped_part")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3376,8 +3280,6 @@ def st20_mapped_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends under the new logical schema. Certificate: the final table
     grouped by the renamed partition column must equal plain ``orders``
     — the storage machinery must be invisible."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "st20_stream_mapped")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3436,8 +3338,6 @@ def s31_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DV-subtracted live set, old files must still resolve),
     'cdf_delete' (the capture's preimages — must equal the LIVE set,
     an erased row must not resurface), 'cdf_insert' (= the batch)."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s31_orders_overwrite")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3507,8 +3407,6 @@ def s32_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     erased row must not resurface), 'cdf_insert' (= the batch). A
     derived-partition-set bug (touching 'O', or missing 'P') flips
     the 'latest' accounting; oracle replays storage-blind."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s32_orders_dynover")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3576,8 +3474,6 @@ def s33_overwrite_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the OLD schema from that version's metaData — the
     log-anchored schema rule), and the two must agree number-for-
     number: the migration itself is the oracle-checkable claim."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s33_orders_gold")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3639,8 +3535,6 @@ def s34_row_id_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the certificate exact: (key, row_id, row_commit_version) for every
     surviving row. A backfill that misses a file, an OPTIMIZE that
     remaps one id, or a resurrected DV row flips the hash."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s34_orders_rowids")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -3683,7 +3577,6 @@ def s35_generated_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
     from acero_delta_lake_streaming_spark.functions.timeutil import (
         day_between,
     )
-    from acero_delta_lake_streaming_spark.storage import delta_compat
 
     table = _scratch(sf_dir, "s35_events_daily")
     ev = load_table(spark, sf_dir, "events").select(
@@ -3826,8 +3719,6 @@ def s36_identity_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     all; this is the delta-spark identity-column contract
     (GENERATED ALWAYS AS IDENTITY + MERGE) on the engine's own
     real-format writer."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s36_orders_identity_merge")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -3906,8 +3797,6 @@ def s37_mapped_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_commit_version, cents) for every surviving row. An id remapped
     by the mapped rewrite, a backfill miss, or an update that minted a
     fresh id flips the hash."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s37_orders_mapped_rowids")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -3992,8 +3881,6 @@ def s39_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, wrong value, full batches overwritten) the partition flips
     and the hash fails. At 100 TB the ALTER is O(|schema|) metadata
     and the fill is a per-batch projection — no scan, no rewrite."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s39_cd_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -4055,8 +3942,6 @@ def s38_domain_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata commit: O(1) regardless of data size, the reason the
     domain channel beats re-writing table properties or an external
     metastore for per-pipeline state."""
-    from acero_delta_lake_streaming_spark.storage import delta_compat
-
     table = _scratch(sf_dir, "s38_dm_delta")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"

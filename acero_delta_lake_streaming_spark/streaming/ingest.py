@@ -13,9 +13,11 @@ and its README admits the loop needs an external orchestrator
   a re-run processes only unseen batches.
 * **ST2 exactly-once dedup** — ``dropDuplicates("doc_id")`` holds the
   seen-id state inside the checkpointed query (watermark-bounded in
-  production), and the sink write is an **idempotent deltalite commit
-  keyed (app_id, epoch)**: state and data publish atomically together,
-  which is precisely the fix for the ledger-before-write bug.
+  production), and the sink write is an **idempotent Delta commit
+  keyed (app_id, epoch)** — the ``txn`` action rides in the same commit
+  as the data (``delta_compat``), so state and data publish atomically
+  together, which is precisely the fix for the ledger-before-write
+  bug.
 * **ST3 empty batches** — a no-op micro-batch commits nothing and
   crashes nothing (the reference raises EOFError, collector.py:91-93).
 * **ST6 per-epoch semantics** — one ``foreachBatch`` epoch writes the
@@ -44,7 +46,7 @@ from acero_delta_lake_streaming_spark.functions.extract import (
     extract_events,
     flatten_actors,
 )
-from acero_delta_lake_streaming_spark.storage import deltalite
+from acero_delta_lake_streaming_spark.storage import delta_compat
 
 #: file-drop batch schema for document-shaped ingest (fixture-driven
 #: stand-in for NEWS_SCHEMA feeds; readStream requires an explicit schema).
@@ -71,18 +73,19 @@ def medallion_writer(
     Each table commit is idempotent on (app_id-table, epoch): if the epoch
     is replayed after a crash, already-committed tables no-op and missing
     ones complete — per-table exactly-once without cross-table 2PC (the
-    'hard part' called out in SURVEY §7)."""
+    'hard part' called out in SURVEY §7). Commits go through the
+    ``delta_compat.append_delta`` module attribute, so a tracer that
+    wraps it sees every medallion write."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():  # ST3: empty micro-batch is a clean no-op
             return
         batch_df.persist()
         try:
-            deltalite.write(
+            delta_compat.append_delta(
                 batch_df,
                 os.path.join(base_dir, "raw"),
-                app_id=f"{app_id}-raw",
-                epoch=epoch_id,
+                txn=(f"{app_id}-raw", epoch_id),
             )
             extracted = extract_events(
                 batch_df, id_col=id_col, text_col=text_col, provider=provider
@@ -92,11 +95,10 @@ def medallion_writer(
                 curated = extracted.filter(F.col("event").isNotNull()).select(
                     id_col, F.col("event.category").alias("category")
                 )
-                deltalite.write(
+                delta_compat.append_delta(
                     curated,
                     os.path.join(base_dir, "curated"),
-                    app_id=f"{app_id}-curated",
-                    epoch=epoch_id,
+                    txn=(f"{app_id}-curated", epoch_id),
                 )
                 # UD3: failed extractions are routed, not dropped — the
                 # quarantine table keeps (id, raw payload) for replay or
@@ -104,18 +106,16 @@ def medallion_writer(
                 quarantined = extracted.filter(F.col("event").isNull()).select(
                     id_col, "raw_response"
                 )
-                deltalite.write(
+                delta_compat.append_delta(
                     quarantined,
                     os.path.join(base_dir, "quarantine"),
-                    app_id=f"{app_id}-quarantine",
-                    epoch=epoch_id,
+                    txn=(f"{app_id}-quarantine", epoch_id),
                 )
                 if with_actors:
-                    deltalite.write(
+                    delta_compat.append_delta(
                         flatten_actors(extracted, id_col=id_col),
                         os.path.join(base_dir, "actors"),
-                        app_id=f"{app_id}-actors",
-                        epoch=epoch_id,
+                        txn=(f"{app_id}-actors", epoch_id),
                     )
             finally:
                 extracted.unpersist()
@@ -160,25 +160,24 @@ def run_ingest(
 
 
 def cdc_upsert_writer(table: str, key_cols: list[str], app_id: str = "cdc"):
-    """foreachBatch sink that MERGEs each micro-batch into a deltalite
-    table (latest row per key wins) — the streaming CDC pattern: an
-    update arriving in a later epoch replaces the stored row instead of
+    """foreachBatch sink that MERGEs each micro-batch into a Delta table
+    (latest row per key wins) — the streaming CDC pattern: an update
+    arriving in a later epoch replaces the stored row instead of
     appending a duplicate. Epoch idempotence rides on the same
-    (app_id, epoch) commit key as the append sink, so a replayed epoch
-    re-merges into a no-op commit check."""
-    from acero_delta_lake_streaming_spark.storage.deltalite import upsert
+    ``txn=(app_id, epoch)`` commit key as the append sink (the first
+    epoch creates the table with an append), so a replayed epoch
+    no-ops."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        upsert(
-            batch_df.sparkSession,
-            batch_df,
-            table,
-            key_cols,
-            app_id=app_id,
-            epoch=epoch_id,
-        )
+        txn = (app_id, epoch_id)
+        if not delta_compat.is_delta_table(table):
+            delta_compat.append_delta(batch_df, table, txn=txn)
+        else:
+            delta_compat.merge_delta(
+                batch_df.sparkSession, table, batch_df, key_cols, txn=txn
+            )
 
     return write_batch
 
@@ -258,16 +257,23 @@ def run_windowed_stream(
     watermark: str = "1 hour",
     app_id: str = "windowed-events",
 ) -> None:
-    """Drain ``drop_dir`` through the windowed aggregation into a
-    deltalite table. Update-mode foreachBatch: each epoch overwrites the
-    changed windows' table (complete snapshot at fixture scale; at 100 TB
-    switch to append mode so only watermark-finalized windows emit)."""
+    """Drain ``drop_dir`` through the windowed aggregation into a Delta
+    table. Complete-mode foreachBatch: each epoch overwrites the table
+    with the full window snapshot (the first epoch creates it), keyed
+    ``txn=(app_id, epoch)`` so a replayed epoch no-ops (fixture scale;
+    at 100 TB switch to append mode so only watermark-finalized windows
+    emit)."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(batch_df, out_table, mode="overwrite",
-                        app_id=app_id, epoch=epoch_id)
+        txn = (app_id, epoch_id)
+        if not delta_compat.is_delta_table(out_table):
+            delta_compat.append_delta(batch_df, out_table, txn=txn)
+        else:
+            delta_compat.overwrite_delta(
+                batch_df.sparkSession, batch_df, out_table, txn=txn
+            )
 
     events = spark.readStream.schema(EVENT_BATCH_SCHEMA).parquet(
         os.path.join(drop_dir, "*.parquet")
@@ -325,7 +331,7 @@ def run_session_stream(
     app_id: str = "session-events",
 ) -> None:
     """Drain ``drop_dir`` through the streaming session aggregation into
-    a deltalite table, APPEND mode — Spark's only supported sink mode
+    a Delta table, APPEND mode — Spark's only supported sink mode
     for session-window streaming aggregations, and the honest one: a
     session row emits exactly ONCE, after the watermark passes its end
     + gap and the state store evicts it (st5's emit-once contract).
@@ -333,14 +339,14 @@ def run_session_stream(
     nothing — a caller that needs everything flushed advances the
     watermark past the data (e.g. a far-future sentinel event, as
     st11 does). Each epoch's emitted sessions land as one idempotent
-    deltalite append commit; at 100 TB state holds only open sessions
+    Delta append commit; at 100 TB state holds only open sessions
     inside the watermark horizon."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(batch_df, out_table, mode="append",
-                        app_id=app_id, epoch=epoch_id)
+        delta_compat.append_delta(batch_df, out_table,
+                                  txn=(app_id, epoch_id))
 
     events = spark.readStream.schema(EVENT_BATCH_SCHEMA).parquet(
         os.path.join(drop_dir, "*.parquet")

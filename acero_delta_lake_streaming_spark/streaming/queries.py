@@ -3,7 +3,7 @@
 Each query replays fixture data as file-drop batches through an
 ``availableNow`` Structured Streaming run — checkpoint, dedup state,
 foreachBatch, idempotent sink commits — then returns a batch DataFrame
-over the resulting deltalite table. The oracle recomputes the expected
+over the resulting Delta table. The oracle recomputes the expected
 end state straight from the fixtures, so what's verified is the whole
 streaming path: ingestion → dedup → epoch commits → transactional read.
 """
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from acero_delta_lake_streaming_spark.catalog import load_table
 from acero_delta_lake_streaming_spark.functions.extract import _CAT_CASE, _OK_PRED
-from acero_delta_lake_streaming_spark.storage import deltalite
+from acero_delta_lake_streaming_spark.storage import delta_compat
 from acero_delta_lake_streaming_spark.storage.queries import _scratch
 from acero_delta_lake_streaming_spark.streaming.ingest import (
     run_ingest,
@@ -68,7 +68,7 @@ def st1_medallion_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_single_parquet(b, os.path.join(drop, f"batch{i}.parquet"))
     run_ingest(spark, drop, tables, cp, with_actors=False)
     return (
-        deltalite.read(spark, os.path.join(tables, "curated"))
+        delta_compat.read_delta(spark, os.path.join(tables, "curated"))
         .groupBy("category")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -102,7 +102,7 @@ def st4_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     write_single_parquet(events, os.path.join(drop, "batch0.parquet"))
     run_windowed_stream(spark, drop, out, cp)
-    return deltalite.read(spark, out)
+    return delta_compat.read_delta(spark, out)
 
 
 _ST4_SQL = (
@@ -201,8 +201,10 @@ def s1_feed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     _write_feed_files(spark, sf_dir, xml_dir)
     drop_feed_batch_files(spark, xml_dir, drop, "batch0")
     run_news_ingest(spark, drop, tables, cp)
-    raw = deltalite.read(spark, os.path.join(tables, "raw"))
-    ok_ids = deltalite.read(spark, os.path.join(tables, "curated")).select("id")
+    raw = delta_compat.read_delta(spark, os.path.join(tables, "raw"))
+    ok_ids = delta_compat.read_delta(
+        spark, os.path.join(tables, "curated")
+    ).select("id")
     return (
         raw.join(ok_ids.withColumn("is_ok", F.lit(1)), "id", "left")
         .groupBy("category")
@@ -262,11 +264,10 @@ def st2_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(
+        delta_compat.append_delta(
             batch_df.withColumn("epoch", F.lit(epoch_id)),
             out,
-            app_id="st2",
-            epoch=epoch_id,
+            txn=("st2", epoch_id),
         )
 
     stream = spark.readStream.schema(EVENT_BATCH_SCHEMA).parquet(
@@ -282,7 +283,7 @@ def st2_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    emissions = deltalite.read(spark, out)
+    emissions = delta_compat.read_delta(spark, out)
     w = Window.partitionBy("user_id").orderBy(F.desc("epoch"))
     return (
         emissions.withColumn("rk", F.row_number().over(w))
@@ -335,7 +336,7 @@ def st7_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(batch_df, out, app_id="st7", epoch=epoch_id)
+        delta_compat.append_delta(batch_df, out, txn=("st7", epoch_id))
 
     stream = (
         spark.readStream.schema(EVENT_BATCH_SCHEMA)
@@ -352,7 +353,7 @@ def st7_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    pairs = deltalite.read(spark, out)
+    pairs = delta_compat.read_delta(spark, out)
     return pairs.select(
         "p_event_id",
         "user_id",
@@ -430,7 +431,7 @@ def st13_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(batch_df, out, app_id="st13", epoch=epoch_id)
+        delta_compat.append_delta(batch_df, out, txn=("st13", epoch_id))
 
     stream = (
         spark.readStream.schema(EVENT_BATCH_SCHEMA)
@@ -447,7 +448,7 @@ def st13_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    pairs = deltalite.read(spark, out).filter("p_event_id >= 0")
+    pairs = delta_compat.read_delta(spark, out).filter("p_event_id >= 0")
     return pairs.select(
         "p_event_id",
         "user_id",
@@ -526,7 +527,7 @@ def st16_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(batch_df, out, app_id="st16", epoch=epoch_id)
+        delta_compat.append_delta(batch_df, out, txn=("st16", epoch_id))
 
     stream = (
         spark.readStream.schema(EVENT_BATCH_SCHEMA)
@@ -543,7 +544,7 @@ def st16_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    pairs = deltalite.read(spark, out).filter(
+    pairs = delta_compat.read_delta(spark, out).filter(
         "coalesce(p_event_id, 0) >= 0 AND coalesce(c_event_id, 0) >= 0"
     )
     return pairs.select(
@@ -616,8 +617,8 @@ def st14_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(
-            batch_df.drop("ts"), out, app_id="st14", epoch=epoch_id
+        delta_compat.append_delta(
+            batch_df.drop("ts"), out, txn=("st14", epoch_id),
         )
 
     stream = (
@@ -637,7 +638,7 @@ def st14_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     return (
-        deltalite.read(spark, out)
+        delta_compat.read_delta(spark, out)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -703,7 +704,7 @@ def st8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "c_mktsegment")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        deltalite.write(agg, out, app_id="st8", epoch=epoch_id)
+        delta_compat.append_delta(agg, out, txn=("st8", epoch_id))
 
     stream = (
         spark.readStream.schema(EVENT_BATCH_SCHEMA)
@@ -720,7 +721,7 @@ def st8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
 
     return (
-        deltalite.read(spark, out)
+        delta_compat.read_delta(spark, out)
         .groupBy("event_type", "c_mktsegment")
         .agg(F.sum("n").cast("bigint").alias("n_events"))
     )
@@ -837,7 +838,7 @@ def st23_streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").alias("cents"),
             )
         )
-        deltalite.write(agg, out, app_id="st23", epoch=epoch_id)
+        delta_compat.append_delta(agg, out, txn=("st23", epoch_id))
 
     stream = (
         spark.readStream.schema(EVENT_BATCH_SCHEMA)
@@ -853,7 +854,7 @@ def st23_streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     return (
-        deltalite.read(spark, out)
+        delta_compat.read_delta(spark, out)
         .groupBy("state")
         .agg(
             F.sum("n").cast("bigint").alias("n_purchases"),
@@ -893,7 +894,7 @@ _ST23_SQL = (
 def st11_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST11 — sessionization as a STREAM: the events fixture replays
     through ``run_session_stream`` (session_window + watermark →
-    append-mode foreachBatch → idempotent deltalite append), and the table
+    append-mode foreachBatch → idempotent Delta append), and the table
     read back must equal x6's BATCH sessionization of the same data —
     the streaming/batch unification Spark promises for session windows,
     certified by the same gaps-and-islands oracle. Append mode emits a
@@ -923,7 +924,7 @@ def st11_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_single_parquet(sentinel, os.path.join(drop, "batch1.parquet"))
     run_session_stream(spark, drop, out, cp)
     return (
-        deltalite.read(spark, out)
+        delta_compat.read_delta(spark, out)
         .filter("user_id >= 0")
         .select("user_id", "start_ms", "end_ms", "n_events", "sum_value")
     )
@@ -983,11 +984,10 @@ def st9_streaming_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(
+        delta_compat.append_delta(
             batch_df.withColumn("epoch", F.lit(epoch_id)),
             out,
-            app_id="st9",
-            epoch=epoch_id,
+            txn=("st9", epoch_id),
         )
 
     stream = (
@@ -1008,7 +1008,7 @@ def st9_streaming_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    emissions = deltalite.read(spark, out)
+    emissions = delta_compat.read_delta(spark, out)
     w = Window.partitionBy("event_type").orderBy(F.desc("epoch"))
     return (
         emissions.withColumn("rk", F.row_number().over(w))
@@ -1054,7 +1054,7 @@ def st17_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the hash. At scale the per-batch band recompute is the
     materialized band index x30 documents (the nightly probe is
     O(|batch| + probed buckets)); what the stream adds is exactly-once
-    corpus evolution, which the deltalite txn ledger provides."""
+    corpus evolution, which the Delta ``txn`` handshake provides."""
     from acero_delta_lake_streaming_spark.operators.dedup import (
         _JACCARD_THRESHOLD,
         _band_rows,
@@ -1115,12 +1115,14 @@ def st17_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_single_parquet(e1, f1)
     os.utime(f0, (1_000_000,) * 2)
     os.utime(f1, (2_000_000,) * 2)
-    deltalite.write(docs, corpus_tbl, app_id="st17-seed", epoch=0)
+    delta_compat.append_delta(docs, corpus_tbl, txn=("st17-seed", 0))
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        corpus = deltalite.read(spark, corpus_tbl).select("doc_id", "text")
+        corpus = delta_compat.read_delta(spark, corpus_tbl).select(
+            "doc_id", "text"
+        )
         union = corpus.unionByName(batch_df)
         sh = union.transform(_shingle_rows).persist()
         try:
@@ -1171,8 +1173,8 @@ def st17_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .distinct()
             )
             novel = batch_df.join(dups, "doc_id", "left_anti")
-            deltalite.write(
-                novel, corpus_tbl, app_id="st17", epoch=epoch_id
+            delta_compat.append_delta(
+                novel, corpus_tbl, txn=("st17", epoch_id),
             )
         finally:
             sh.unpersist()
@@ -1191,7 +1193,7 @@ def st17_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     return (
-        deltalite.read(spark, corpus_tbl)
+        delta_compat.read_delta(spark, corpus_tbl)
         .crossJoin(F.broadcast(off))
         .groupBy(
             F.expr("CAST(doc_id DIV o AS INT)").alias("bucket")
@@ -1247,7 +1249,7 @@ def st18_streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes SCALING.md's claim real that x3d/x3f's k-means training is
     INGEST-TIME state at production. The quantizer is trained ONCE on
     the seed embeddings corpus (``_ivf_centroids`` — the exact frame
-    x3d's in-bench training produces) and STORED as a deltalite table;
+    x3d's in-bench training produces) and STORED as a Delta table;
     the seed corpus's assignment lands as epoch 0 of an assignment
     table. Then two micro-batches of genuinely new vectors arrive as
     file drops — epoch 0: dimension-REVERSED copies of the %5=2 slice
@@ -1283,12 +1285,12 @@ def st18_streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     off = emb.agg((F.max("vec_id") + 1).cast("bigint").alias("o"))
 
     # train once; the stored table IS the quantizer state
-    deltalite.write(
-        _ivf_centroids(emb), cent_tbl, app_id="st18-train", epoch=0
+    delta_compat.append_delta(
+        _ivf_centroids(emb), cent_tbl, txn=("st18-train", 0),
     )
-    stored = deltalite.read(spark, cent_tbl).select("cid", "carr")
-    deltalite.write(
-        _ivf_assign(emb, stored), assign_tbl, app_id="st18-seed", epoch=0
+    stored = delta_compat.read_delta(spark, cent_tbl).select("cid", "carr")
+    delta_compat.append_delta(
+        _ivf_assign(emb, stored), assign_tbl, txn=("st18-seed", 0),
     )
 
     e0 = emb.filter("vec_id % 5 = 2").crossJoin(F.broadcast(off)).select(
@@ -1309,12 +1311,11 @@ def st18_streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        cents = deltalite.read(spark, cent_tbl).select("cid", "carr")
-        deltalite.write(
+        cents = delta_compat.read_delta(spark, cent_tbl).select("cid", "carr")
+        delta_compat.append_delta(
             _ivf_assign(batch_df, cents),
             assign_tbl,
-            app_id="st18",
-            epoch=epoch_id,
+            txn=("st18", epoch_id),
         )
 
     stream = (
@@ -1331,7 +1332,7 @@ def st18_streaming_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     return (
-        deltalite.read(spark, assign_tbl)
+        delta_compat.read_delta(spark, assign_tbl)
         .crossJoin(F.broadcast(off))
         .groupBy(
             F.expr("CAST(vec_id DIV o AS INT)").alias("bucket"),
@@ -1523,7 +1524,7 @@ def st27_streaming_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def refresh_hubs(epoch: int) -> None:
         hubs = (
-            graph_of(deltalite.read(spark, edge_tbl))
+            graph_of(delta_compat.read_delta(spark, edge_tbl))
             .groupBy("dst")
             .agg(F.count(F.lit(1)).alias("indeg"))
             .orderBy(F.desc("indeg"), F.asc("dst"))
@@ -1533,20 +1534,20 @@ def st27_streaming_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("dst").alias("vec_id"),
             )
         )
-        deltalite.write(hubs, hub_tbl, app_id="st27-hubs", epoch=epoch)
+        delta_compat.append_delta(hubs, hub_tbl, txn=("st27-hubs", epoch))
 
     # seed: mint the geometry ONCE, build the seed graph, first hubs
     geom = emb.agg(F.count(F.lit(1)).alias("cnt")).select(
         F.expr(_PPT_SPARK).alias("ppt")
     )
-    deltalite.write(geom, geom_tbl, app_id="st27-geom", epoch=0)
-    ppt = deltalite.read(spark, geom_tbl)
+    delta_compat.append_delta(geom, geom_tbl, txn=("st27-geom", 0))
+    ppt = delta_compat.read_delta(spark, geom_tbl)
     bk0 = _sign_buckets_ppt(spark, emb, ppt)
-    deltalite.write(
-        pair_edges(bk0, bk0, emb), edge_tbl, app_id="st27-seed", epoch=0
+    delta_compat.append_delta(
+        pair_edges(bk0, bk0, emb), edge_tbl, txn=("st27-seed", 0),
     )
-    deltalite.write(bk0, bk_tbl, app_id="st27-seed", epoch=0)
-    deltalite.write(emb, emb_tbl, app_id="st27-seed", epoch=0)
+    delta_compat.append_delta(bk0, bk_tbl, txn=("st27-seed", 0))
+    delta_compat.append_delta(emb, emb_tbl, txn=("st27-seed", 0))
     refresh_hubs(0)
 
     e0 = emb.filter("vec_id % 5 = 2").crossJoin(F.broadcast(off)).select(
@@ -1568,17 +1569,19 @@ def st27_streaming_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_df.isEmpty():
             return
         bk_new = _sign_buckets_ppt(
-            spark, batch_df, deltalite.read(spark, geom_tbl)
+            spark, batch_df, delta_compat.read_delta(spark, geom_tbl)
         )
-        bk_state = deltalite.read(spark, bk_tbl)  # pinned pre-append
-        emb_state = deltalite.read(spark, emb_tbl).unionByName(batch_df)
+        bk_state = delta_compat.read_delta(spark, bk_tbl)  # pinned pre-append
+        emb_state = delta_compat.read_delta(spark, emb_tbl).unionByName(
+            batch_df
+        )
         edges = pair_edges(
             bk_new, bk_state.unionByName(bk_new), emb_state
         )
-        deltalite.write(edges, edge_tbl, app_id="st27", epoch=epoch_id)
-        deltalite.write(bk_new, bk_tbl, app_id="st27-bk", epoch=epoch_id)
-        deltalite.write(
-            batch_df, emb_tbl, app_id="st27-emb", epoch=epoch_id
+        delta_compat.append_delta(edges, edge_tbl, txn=("st27", epoch_id))
+        delta_compat.append_delta(bk_new, bk_tbl, txn=("st27-bk", epoch_id))
+        delta_compat.append_delta(
+            batch_df, emb_tbl, txn=("st27-emb", epoch_id),
         )
         refresh_hubs(epoch_id + 1)
 
@@ -1598,14 +1601,14 @@ def st27_streaming_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # certificate: walk the MAINTAINED state (latest hub refresh)
     scored = scoped_persist(
-        deltalite.read(spark, emb_tbl).select(
+        delta_compat.read_delta(spark, emb_tbl).select(
             "vec_id",
             "embedding",
             F.expr(_norm_spark("embedding")).alias("nrm"),
         )
     )
-    graph = scoped_persist(graph_of(deltalite.read(spark, edge_tbl)))
-    hubs_all = deltalite.read(spark, hub_tbl)
+    graph = scoped_persist(graph_of(delta_compat.read_delta(spark, edge_tbl)))
+    hubs_all = delta_compat.read_delta(spark, hub_tbl)
     mx = hubs_all.agg(F.max("hub_epoch").alias("mx"))
     hubs = hubs_all.join(
         F.broadcast(mx), F.col("hub_epoch") == F.col("mx")
@@ -1683,9 +1686,9 @@ def st19_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(
+        delta_compat.append_delta(
             cms_sketch(batch_df, "user_id"), out,
-            app_id="st19", epoch=epoch_id,
+            txn=("st19", epoch_id),
         )
 
     stream = (
@@ -1702,7 +1705,7 @@ def st19_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     merged = (
-        deltalite.read(spark, out)
+        delta_compat.read_delta(spark, out)
         .groupBy("j", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -1785,12 +1788,12 @@ def st21_streaming_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     seed = _intra(docs.filter("doc_id % 3 = 0"))
-    deltalite.write(
+    delta_compat.append_delta(
         seed.select("doc_id", "source"), sink_tbl,
-        app_id="st21-seed", epoch=0,
+        txn=("st21-seed", 0),
     )
-    deltalite.write(
-        seed.select("h"), ledger_tbl, app_id="st21-seed-ledger", epoch=0
+    delta_compat.append_delta(
+        seed.select("h"), ledger_tbl, txn=("st21-seed-ledger", 0),
     )
 
     redeliver0 = docs.filter("doc_id % 3 = 0").crossJoin(
@@ -1813,15 +1816,15 @@ def st21_streaming_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        known = deltalite.read(spark, ledger_tbl).select("h")
+        known = delta_compat.read_delta(spark, ledger_tbl).select("h")
         novel = _intra(batch_df).join(known, "h", "left_anti")
-        deltalite.write(
+        delta_compat.append_delta(
             novel.select("doc_id", "source"), sink_tbl,
-            app_id="st21", epoch=epoch_id,
+            txn=("st21", epoch_id),
         )
-        deltalite.write(
+        delta_compat.append_delta(
             novel.select("h"), ledger_tbl,
-            app_id="st21-ledger", epoch=epoch_id,
+            txn=("st21-ledger", epoch_id),
         )
 
     stream = (
@@ -1842,7 +1845,7 @@ def st21_streaming_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id LONG, source STRING, text STRING"
     ).parquet(f0), 0)
     return (
-        deltalite.read(spark, sink_tbl)
+        delta_compat.read_delta(spark, sink_tbl)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_kept"),
@@ -1947,9 +1950,9 @@ def st22_streaming_quality_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        deltalite.write(
+        delta_compat.append_delta(
             quality_row(batch_df, epoch_id), mart,
-            app_id="st22", epoch=epoch_id,
+            txn=("st22", epoch_id),
         )
 
     stream = (
@@ -1974,7 +1977,7 @@ def st22_streaming_quality_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(os.path.join(drop, "b0.parquet")),
         0,
     )
-    return deltalite.read(spark, mart).select(
+    return delta_compat.read_delta(spark, mart).select(
         "epoch", "n_rows", "n_neg_value", "n_unknown_type", "n_null_props"
     )
 

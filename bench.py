@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -275,36 +276,26 @@ HEADLINE = [
 ]
 
 
-# Query names the round-13 driver record (BENCH_r13.json) emitted —
-# protected alongside the current verification window so the emitted
-# per-query subset stays comparable across window rotations (VERDICT
-# r13 item 3). Names absent from the registry are ignored.
-_PREV_EMITTED = [
-    "q3_shipping_priority", "q7_nation_trade", "flagship_breakdown",
-    "x2_minhash_near_dup", "x3b_ann_lsh", "x12_repetition_quality",
-    "dq1_column_profile", "q16_supplier_variety",
-    "q21_sole_supplier_orders", "x14_semdedup", "dq1b_approx_profile",
-    "x21_bm25_topk", "w9_gap_fill", "x3e_quantized_ann",
-    "x21b_bm25_ln_topk", "x3d_ivf_topk", "a14_sampled_percentiles",
-    "x26_unigram_surprise", "j4_bloom_prefilter_join", "x27_hll_distinct",
-    "x28_graph_pagerank", "x30_incremental_neardup", "w13_stickiness",
-    "s19_check_constraints", "st15_delta_cdf_follower",
-    "x67_histogram_quantiles", "dq10_key_uniqueness", "x69_bitext_mining",
-    "x70_hard_negatives", "s46_row_lineage_diff", "x74_late_interaction",
-    "x5h_jpeg_decode", "s49b_cluster_by_create",
-    "x76_cross_encoder_rerank", "st27_streaming_graph_ann",
-    "x5i_progressive_jpeg_decode", "x77_learned_sparse", "x3f_ivf_sq_ann",
-    "x34_substring_dedup", "x36_bigram_surprise",
-    "x37_cluster_balanced_sample", "x38_dsir_importance", "s23_dv_merge",
-    "x34b_substring_trim", "x39_cluster_topics", "x3h_pq_ann",
-    "x43_coverage_select", "s31_overwrite", "x46_boilerplate_grams",
-    "x47_ann_recall_audit", "x48_semantic_decontam", "x52_quantizer_drift",
-    "x55_novelty_curve", "x56_readability", "x57_source_overlap",
-    "x59_cluster_purity", "dq8_benford_audit", "x60_containment_pairs",
-    "x60b_corpus_containment", "x61_ql_topk", "x62_hybrid_rrf",
-    "st23_streaming_scd2_enrich", "x63_sketch_overlap",
-    "x64_matryoshka_recall", "dq9_reconciliation", "x65_lsh_sweep",
-]
+def _prev_emitted(
+    root: str = os.path.dirname(os.path.abspath(__file__)),
+) -> set:
+    """Query names the newest round record emitted: ``parsed.queries``
+    of the highest-numbered ``BENCH_r<N>.json`` in ``root`` (numeric N;
+    ``BENCH_r<N>_c8.json``-style variants are not round records).
+    Protected alongside the current verification window so the emitted
+    per-query subset stays comparable across window rotations (VERDICT
+    r13 item 3). Names absent from the registry are ignored; no record,
+    or one whose bench line did not parse, protects nothing."""
+    records = [
+        (int(m.group(1)), name)
+        for name in os.listdir(root)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))
+    ]
+    if not records:
+        return set()
+    with open(os.path.join(root, max(records)[1])) as fh:
+        parsed = json.load(fh).get("parsed") or {}
+    return set(parsed.get("queries") or {})
 
 
 def _cpu_model() -> str:
@@ -544,10 +535,11 @@ def main() -> int:
     # window rotation shrank the driver's round-over-round common set to
     # 40 because each round's emitted map protected only ITS window.
     # Additionally protect every name the PREVIOUS round's driver record
-    # emitted (BENCH_r13.json), so consecutive rounds always share their
-    # emitted subsets; if both sets together still overflow the budget,
-    # the fastest protected entries drop last (same tiered sort below).
-    protected |= set(_PREV_EMITTED)
+    # emitted (the newest BENCH_r<N>.json), so consecutive rounds always
+    # share their emitted subsets; if both sets together still overflow
+    # the budget, the fastest protected entries drop last (same tiered
+    # sort below).
+    protected |= _prev_emitted()
 
     def _line() -> str:
         payload = {

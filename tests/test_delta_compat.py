@@ -838,7 +838,7 @@ def test_merge_delta_cdc_refusals(spark, tmp_path):
     """Uncaptured data-changing merges refuse CDF reads loudly."""
     import pytest
 
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
+    from acero_delta_lake_streaming_spark.storage.delta_compat import (
         ChangeDataUnavailableError,
     )
 
@@ -1178,7 +1178,7 @@ def test_restore_delta_is_metadata_only_and_keeps_history(spark, tmp_path):
         for a in actions
     )
     # uncaptured restore is a data-changing commit without change files
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
+    from acero_delta_lake_streaming_spark.storage.delta_compat import (
         ChangeDataUnavailableError,
     )
 
@@ -1710,7 +1710,7 @@ def test_dv_cow_paths_are_dv_aware(spark, tmp_path):
 def test_dv_uncaptured_changes_refused(spark, tmp_path):
     """A DV delete without change_data is a data-changing commit with no
     cdc actions: the CDF reader must refuse it, never synthesize."""
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
+    from acero_delta_lake_streaming_spark.storage.delta_compat import (
         ChangeDataUnavailableError,
     )
 
@@ -2040,7 +2040,7 @@ def test_schema_drift_refused_without_flag(spark, tmp_path):
 
 
 def test_schema_type_change_refused(spark, tmp_path):
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
+    from acero_delta_lake_streaming_spark.storage.delta_compat import (
         SchemaMismatchError,
     )
     import pyspark.sql.functions as F
@@ -5407,7 +5407,7 @@ def test_replace_where_cdf_subtracts_dvs(spark, tmp_path):
 
 
 def test_replace_where_uncaptured_overwrite_refuses_cdf_read(spark, tmp_path):
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
+    from acero_delta_lake_streaming_spark.storage.delta_compat import (
         ChangeDataUnavailableError,
     )
 
@@ -7197,7 +7197,7 @@ def test_set_table_properties_cdf_lifecycle(spark, tmp_path):
     delta-spark's semantics). Managed properties refuse."""
     import pyspark.sql.functions as F
 
-    from acero_delta_lake_streaming_spark.storage.deltalite import (
+    from acero_delta_lake_streaming_spark.storage.delta_compat import (
         ChangeDataUnavailableError,
     )
 
@@ -7251,3 +7251,201 @@ def test_set_table_properties_cdf_lifecycle(spark, tmp_path):
     # non-delta bookkeeping properties just merge into configuration
     dc.set_table_properties(table, {"team.owner": "pipeline"})
     assert dc.snapshot(table)["configuration"]["team.owner"] == "pipeline"
+
+
+# --------------------------------------------------------------------------
+# Commit atomicity, concurrency, txn-keyed verbs and the CDC follower
+# --------------------------------------------------------------------------
+
+
+def test_uncommitted_data_files_are_invisible(spark, tmp_path):
+    """Data written without a published commit must be invisible — a
+    writer that crashed after its data write but before the commit
+    loses at most its own uncommitted work, never acknowledged data."""
+    table = str(tmp_path / "crash")
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    dc.append_delta(df, table)
+    crashed = spark.createDataFrame([(99, "crash")], "id long, v string")
+    for orphan in ("_staging_crashed", "part-orphan"):
+        crashed.write.parquet(os.path.join(table, orphan))
+    assert [r.id for r in dc.read_delta(spark, table).collect()] == [1]
+
+
+def test_concurrent_appends_all_commit(spark, tmp_path):
+    """Four threads appending at once: optimistic concurrency lands all
+    four commits at distinct versions with no lost rows."""
+    import threading
+
+    table = str(tmp_path / "concurrent")
+    dc.append_delta(spark.createDataFrame([(0,)], "id long"), table)
+    errors = []
+
+    def worker(i):
+        try:
+            dc.append_delta(
+                spark.createDataFrame([(100 + i,)], "id long"), table
+            )
+        except Exception as e:  # pragma: no cover
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert not errors
+    assert dc._list_commit_versions(table) == [0, 1, 2, 3, 4]
+    got = sorted(r.id for r in dc.read_delta(spark, table).collect())
+    assert got == [0, 100, 101, 102, 103]
+
+
+def test_merge_delta_txn_replay_and_race_abort(spark, tmp_path, monkeypatch):
+    """MERGE keyed ``txn=(app_id, epoch)``: a replayed epoch returns -1
+    and leaves the table alone. A commit landing between the merge
+    snapshot and its publish aborts the merge — a MERGE must never
+    clobber a concurrent commit or rebase past it."""
+    table = str(tmp_path / "merge_txn")
+    ddl = "id long, v string"
+    dc.append_delta(spark.createDataFrame([(1, "a")], ddl), table)
+    src = spark.createDataFrame([(1, "A")], ddl)
+    assert dc.merge_delta(spark, table, src, ["id"], txn=("m", 5)) == 1
+    replay = spark.createDataFrame([(1, "XXX")], ddl)
+    assert dc.merge_delta(spark, table, replay, ["id"], txn=("m", 5)) == -1
+    assert dc.merge_delta(spark, table, replay, ["id"], txn=("m", 4)) == -1
+    assert {r.v for r in dc.read_delta(spark, table).collect()} == {"A"}
+    assert dc._list_commit_versions(table) == [0, 1]
+    with open(os.path.join(table, "_delta_log", f"{1:020d}.json")) as f:
+        txns = [json.loads(ln)["txn"] for ln in f if '"txn"' in ln]
+    assert [(t["appId"], t["version"]) for t in txns] == [("m", 5)]
+
+    orig = dc._publish_commit
+    raced = {"done": False}
+
+    def race(table_, version, actions):
+        if not raced["done"]:
+            raced["done"] = True
+            orig(table_, version, [{"commitInfo": {"operation": "WRITE"}}])
+        orig(table_, version, actions)
+
+    monkeypatch.setattr(dc, "_publish_commit", race)
+    with pytest.raises(dc.ConcurrentDeltaCommitError):
+        dc.merge_delta(
+            spark, table,
+            spark.createDataFrame([(2, "b")], ddl), ["id"],
+        )
+
+
+def test_overwrite_delta_txn_replay_is_noop(spark, tmp_path):
+    """Full-table overwrite keyed ``txn=(app_id, epoch)``: the commit
+    carries the txn action, and a replayed (or older) epoch returns -1
+    without touching the table."""
+    table = str(tmp_path / "overwrite_txn")
+    ddl = "id long, v string"
+    dc.append_delta(spark.createDataFrame([(1, "a")], ddl), table)
+    v = dc.overwrite_delta(
+        spark, spark.createDataFrame([(2, "b")], ddl), table, txn=("w", 3)
+    )
+    assert v == 1 and dc.last_txn_version(table, "w") == 3
+    for epoch in (3, 2):
+        assert dc.overwrite_delta(
+            spark, spark.createDataFrame([(9, "z")], ddl), table,
+            txn=("w", epoch),
+        ) == -1
+    assert [r.id for r in dc.read_delta(spark, table).collect()] == [2]
+    assert dc._list_commit_versions(table) == [0, 1]
+
+
+def test_zorder_beats_lexicographic_on_trailing_dim(spark, tmp_path):
+    """Same data, laid out two ways: range-sorted on (x, y) by the
+    writer vs OPTIMIZE ZORDER BY (x, y). The z-ordered layout prunes
+    strictly more files for a trailing-dimension (y) point read."""
+    rows = [(x, y, 0) for x in range(32) for y in range(32)]
+    df = spark.createDataFrame(rows, "x int, y int, payload int")
+    lex_table = str(tmp_path / "lex")
+    z_table = str(tmp_path / "z")
+    dc.append_delta(
+        df.repartitionByRange(16, "x", "y").sortWithinPartitions("x", "y"),
+        lex_table,
+    )
+    dc.append_delta(df, z_table)
+    dc.optimize_delta(
+        spark, z_table, target_partitions=16, zorder_by=["x", "y"]
+    )
+
+    def kept_fraction(table):
+        n_all = len(dc.snapshot(table)["files"])
+        kept = dc.read_delta(spark, table, skip=("y", 3, 3)).inputFiles()
+        assert n_all >= 8
+        return len(kept) / n_all
+
+    lex_frac, z_frac = kept_fraction(lex_table), kept_fraction(z_table)
+    assert z_frac < lex_frac, (
+        f"z-order kept {z_frac:.2f} of files on trailing dim, "
+        f"lexicographic kept {lex_frac:.2f}"
+    )
+    # x leads, so the lexicographic layout prunes nothing on y
+    assert lex_frac == 1.0
+
+
+def test_follow_delta_changes_applies_each_version_once(spark, tmp_path):
+    """CDC follower: two polls around an intervening captured MERGE —
+    every version applied exactly once, in order, and the resumed
+    cursor re-applies nothing."""
+    table = str(tmp_path / "follow")
+    ddl = "id long, v string"
+    dc.append_delta(spark.createDataFrame([(1, "a"), (2, "b")], ddl), table)
+    dc.merge_delta(
+        spark, table, spark.createDataFrame([(2, "B2")], ddl), ["id"],
+        change_data=True,
+    )
+    applied = []
+
+    def apply_fn(changes, from_v, to_v):
+        applied.append((from_v, to_v, sorted(
+            (r.id, r._change_type) for r in changes.collect()
+        )))
+
+    cursor = dc.follow_delta_changes(
+        spark, table, apply_fn, max_cycles=1, sleep_fn=lambda s: None
+    )
+    assert cursor == 2
+    assert applied[0][:2] == (0, 1)
+    assert (1, "insert") in applied[0][2]
+    assert (2, "update_preimage") in applied[0][2]
+
+    # a new captured merge lands; resuming from the cursor applies ONLY it
+    dc.merge_delta(
+        spark, table, spark.createDataFrame([(9, "new")], ddl), ["id"],
+        change_data=True,
+    )
+    cursor2 = dc.follow_delta_changes(
+        spark, table, apply_fn, start_version=cursor, max_cycles=2,
+        sleep_fn=lambda s: None,
+    )
+    assert cursor2 == 3
+    assert applied[-1] == (2, 2, [(9, "insert")])
+    assert len(applied) == 2  # nothing re-applied on the idle cycle
+
+
+def test_cdf_skips_optimize_commits(spark, tmp_path):
+    """OPTIMIZE publishes dataChange:false: a CDF read over a range
+    containing it skips it (no rows, no error), and a follower whose
+    new range holds only the OPTIMIZE advances its cursor without an
+    apply."""
+    table = str(tmp_path / "cdf_opt")
+    ddl = "id long, v string"
+    dc.append_delta(spark.createDataFrame([(1, "a"), (2, "b")], ddl), table)
+    dc.append_delta(spark.createDataFrame([(3, "c")], ddl), table)
+    assert dc.optimize_delta(spark, table, target_partitions=1) == 2
+    got = {
+        (r._commit_version, r.id, r._change_type)
+        for r in dc.read_delta_changes(spark, table, 0).collect()
+    }
+    assert got == {(0, 1, "insert"), (0, 2, "insert"), (1, 3, "insert")}
+    applied = []
+    cursor = dc.follow_delta_changes(
+        spark, table, lambda c, lo, hi: applied.append((lo, hi)),
+        start_version=2, max_cycles=1, sleep_fn=lambda _s: None,
+    )
+    assert cursor == 3 and applied == []

@@ -1,4 +1,7 @@
-"""ACID / time-travel / idempotence contract tests for deltalite
+"""Table-format contract tests on the Delta writer (``storage/delta_compat``):
+append/read, time travel, overwrite, schema enforcement and evolution,
+exactly-once epochs, compaction and data skipping, optimistic
+concurrency, MERGE / DELETE with change data, VACUUM and RESTORE
 (SURVEY.md §2.1 S3-S5, §2.8 ST2 exactly-once).
 """
 
@@ -8,7 +11,7 @@ import os
 
 import pytest
 
-from acero_delta_lake_streaming_spark.storage import deltalite
+from acero_delta_lake_streaming_spark.storage import delta_compat as dc
 
 
 @pytest.fixture()
@@ -20,134 +23,113 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "id bigint, v string")
 
 
+def _files(table, version=None):
+    return set(dc.snapshot(table, version)["files"])
+
+
+def _kept(spark, table, skip):
+    """Files a skipping read still scans (pruning happens before Spark
+    opens any footer)."""
+    return dc.read_delta(spark, table, skip=skip).inputFiles()
+
+
 def test_append_read_roundtrip(spark, table):
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]), table)
-    deltalite.write(_df(spark, [(3, "c")]), table)
-    got = sorted((r.id, r.v) for r in deltalite.read(spark, table).collect())
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b")]), table)
+    dc.append_delta(_df(spark, [(3, "c")]), table)
+    got = sorted((r.id, r.v) for r in dc.read_delta(spark, table).collect())
     assert got == [(1, "a"), (2, "b"), (3, "c")]
-    assert deltalite.latest_version(table) == 1
+    assert dc._list_commit_versions(table)[-1] == 1
 
 
 def test_time_travel_versions(spark, table):
     for i in range(3):
-        deltalite.write(_df(spark, [(i, str(i))]), table)
+        dc.append_delta(_df(spark, [(i, str(i))]), table)
     for v in range(3):
-        got = sorted(r.id for r in deltalite.read(spark, table, version=v).collect())
+        got = sorted(
+            r.id for r in dc.read_delta(spark, table, version=v).collect()
+        )
         assert got == list(range(v + 1))
 
 
 def test_overwrite_resets(spark, table):
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]), table)
-    deltalite.write(_df(spark, [(9, "z")]), table, mode="overwrite")
-    assert [r.id for r in deltalite.read(spark, table).collect()] == [9]
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b")]), table)
+    dc.overwrite_delta(spark, _df(spark, [(9, "z")]), table)
+    assert [r.id for r in dc.read_delta(spark, table).collect()] == [9]
     # pre-overwrite snapshot still readable (time travel across overwrite)
-    assert sorted(r.id for r in deltalite.read(spark, table, version=0).collect()) == [1, 2]
+    assert sorted(
+        r.id for r in dc.read_delta(spark, table, version=0).collect()
+    ) == [1, 2]
 
 
 def test_schema_enforcement(spark, table):
-    deltalite.write(_df(spark, [(1, "a")]), table)
+    dc.append_delta(_df(spark, [(1, "a")]), table)
     drifted = spark.createDataFrame([(1, 2.0)], "id bigint, v double")
-    with pytest.raises(deltalite.SchemaMismatchError):
-        deltalite.write(drifted, table)
-    # overwrite may change schema
-    deltalite.write(drifted, table, mode="overwrite")
-    assert deltalite.read(spark, table).schema["v"].dataType.simpleString() == "double"
+    with pytest.raises(dc.SchemaMismatchError):
+        dc.append_delta(drifted, table)
+    # a plain overwrite keeps the schema fixed; overwriteSchema changes it
+    with pytest.raises(dc.SchemaMismatchError):
+        dc.overwrite_delta(spark, drifted, table)
+    dc.overwrite_schema_delta(spark, drifted, table)
+    got = dc.read_delta(spark, table)
+    assert got.schema["v"].dataType.simpleString() == "double"
 
 
 def test_idempotent_epoch_commit(spark, table):
     """The ST2 fix: replaying the same (app_id, epoch) must be a no-op —
     no duplicates after a simulated foreachBatch retry."""
-    v0 = deltalite.write(_df(spark, [(1, "a")]), table, app_id="job", epoch=0)
+    v0 = dc.append_delta(_df(spark, [(1, "a")]), table, txn=("job", 0))
     assert v0 == 0
-    replay = deltalite.write(_df(spark, [(1, "a")]), table, app_id="job", epoch=0)
-    assert replay is None
-    assert deltalite.read(spark, table).count() == 1
-    v1 = deltalite.write(_df(spark, [(2, "b")]), table, app_id="job", epoch=1)
+    replay = dc.append_delta(_df(spark, [(1, "a")]), table, txn=("job", 0))
+    assert replay == -1
+    assert dc.read_delta(spark, table).count() == 1
+    v1 = dc.append_delta(_df(spark, [(2, "b")]), table, txn=("job", 1))
     assert v1 == 1
-    assert deltalite.read(spark, table).count() == 2
-
-
-def test_crash_before_commit_invisible(spark, table):
-    """Data written without a published commit must be invisible — the
-    inverse of the reference's state-before-write bug: a crash loses at
-    most the uncommitted work, never acknowledged data."""
-    deltalite.write(_df(spark, [(1, "a")]), table)
-    # simulate a writer that crashed after the data write, before commit
-    orphan_dir = os.path.join(table, "data", "commit-orphan")
-    _df(spark, [(99, "crash")]).write.parquet(orphan_dir)
-    assert [r.id for r in deltalite.read(spark, table).collect()] == [1]
-
-
-def test_concurrent_writers_all_commit(spark, table):
-    """Four threads appending simultaneously: optimistic concurrency
-    must land all four commits at distinct versions with no lost data."""
-    import threading
-
-    deltalite.write(_df(spark, [(0, "seed")]), table)
-    errors = []
-
-    def worker(i):
-        try:
-            deltalite.write(_df(spark, [(100 + i, f"w{i}")]), table)
-        except Exception as e:  # pragma: no cover
-            errors.append(e)
-
-    threads = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors
-    versions = [c.version for c in deltalite.history(table)]
-    assert versions == sorted(set(versions)) and len(versions) == 5
-    got = sorted(r.id for r in deltalite.read(spark, table).collect())
-    assert got == [0, 100, 101, 102, 103]
+    assert dc.read_delta(spark, table).count() == 2
+    assert dc.last_txn_version(table, "job") == 1
 
 
 def test_compaction_preserves_data_and_history(spark, table):
-    """OPTIMIZE analog: N small commits → 1 compact file set with
-    identical data; pre-compaction versions stay readable."""
+    """OPTIMIZE: N small commits → 1 compact file set with identical
+    data; pre-compaction versions stay readable."""
     for i in range(5):
-        deltalite.write(_df(spark, [(i, str(i))]), table)
-    before = sorted(r.id for r in deltalite.read(spark, table).collect())
-    files_before, _ = deltalite.snapshot_files(table)
-    v = deltalite.compact(spark, table)
-    after = sorted(r.id for r in deltalite.read(spark, table).collect())
-    files_after, _ = deltalite.snapshot_files(table)
+        dc.append_delta(_df(spark, [(i, str(i))]), table)
+    before = sorted(r.id for r in dc.read_delta(spark, table).collect())
+    files_before = _files(table)
+    v = dc.optimize_delta(spark, table)
+    after = sorted(r.id for r in dc.read_delta(spark, table).collect())
+    files_after = _files(table)
     assert after == before
     assert len(files_after) < len(files_before)
-    assert deltalite.history(table)[-1].version == v
+    assert dc._list_commit_versions(table)[-1] == v
     # time travel to a pre-compaction version still resolves old files
     assert sorted(
-        r.id for r in deltalite.read(spark, table, version=2).collect()
+        r.id for r in dc.read_delta(spark, table, version=2).collect()
     ) == [0, 1, 2]
 
 
 def test_sorted_compaction_enables_skipping(spark, table):
-    """OPTIMIZE ZORDER-lite: interleaved appends give every file the
-    full value range (skipping prunes nothing); sort-clustered
-    compaction makes ranges disjoint, so a point read prunes to a
-    strict subset of files while returning identical rows."""
+    """Interleaved appends give every file the full value range
+    (skipping prunes nothing); clustered compaction makes ranges
+    disjoint, so a point read prunes to a strict subset of files while
+    returning identical rows."""
     # two appends, each covering the FULL id range (interleaved)
-    deltalite.write(
-        _df(spark, [(i, str(i)) for i in range(0, 100, 2)]), table
+    dc.append_delta(
+        _df(spark, [(i, str(i)) for i in range(0, 100, 2)]).coalesce(1), table
     )
-    deltalite.write(
-        _df(spark, [(i, str(i)) for i in range(1, 100, 2)]), table
+    dc.append_delta(
+        _df(spark, [(i, str(i)) for i in range(1, 100, 2)]).coalesce(1), table
     )
-    unsorted_kept, _ = deltalite.snapshot_files(table, skip=("id", 7, 7))
-    all_before, _ = deltalite.snapshot_files(table)
-    # appends recorded no id stats -> conservatively keep everything
-    assert len(unsorted_kept) == len(all_before)
+    all_before = _files(table)
+    assert len(_kept(spark, table, ("id", 7, 7))) == len(all_before)
 
-    deltalite.compact(spark, table, target_partitions=4, sort_by=["id"])
-    all_after, _ = deltalite.snapshot_files(table)
-    kept, _ = deltalite.snapshot_files(table, skip=("id", 7, 7))
+    dc.optimize_delta(spark, table, target_partitions=4, zorder_by=["id"])
+    all_after = _files(table)
+    kept = _kept(spark, table, ("id", 7, 7))
     assert len(all_after) >= 2
     assert len(kept) < len(all_after), "disjoint ranges must prune"
     rows = sorted(
         r.id
-        for r in deltalite.read(spark, table, skip=("id", 7, 7))
+        for r in dc.read_delta(spark, table, skip=("id", 7, 7))
         .filter("id = 7")
         .collect()
     )
@@ -155,188 +137,143 @@ def test_sorted_compaction_enables_skipping(spark, table):
 
 
 def test_data_skipping_prunes_files(spark, sf_dir, table):
-    """Commit-recorded footer stats prune whole files on read (Delta
-    data-skipping analog): a status-sliced table reads only the matching
-    slice's files, and results equal the unpruned filter."""
+    """Add-action footer stats prune whole files on read (Delta data
+    skipping): a status-sliced table reads only the matching slice's
+    files, and results equal the unpruned filter."""
     from acero_delta_lake_streaming_spark.catalog import load_table
 
     orders = load_table(spark, sf_dir, "orders")
     for status in ("F", "O", "P"):
-        deltalite.write(
-            orders.filter(orders.o_orderstatus == status),
-            table,
-            stats_cols=["o_orderstatus", "o_totalprice"],
+        dc.append_delta(
+            orders.filter(orders.o_orderstatus == status).coalesce(1), table
         )
-    all_files, _ = deltalite.snapshot_files(table)
-    f_files, _ = deltalite.snapshot_files(table, skip=("o_orderstatus", "F", "F"))
+    all_files = _files(table)
+    f_files = _kept(spark, table, ("o_orderstatus", "F", "F"))
     assert len(f_files) < len(all_files)
-    pruned = deltalite.read(spark, table, skip=("o_orderstatus", "F", "F"))
+    pruned = dc.read_delta(spark, table, skip=("o_orderstatus", "F", "F"))
     expected = orders.filter("o_orderstatus = 'F'").count()
     # skipping is a superset guarantee: exact filter still applied on top
     assert pruned.filter("o_orderstatus = 'F'").count() == expected
     # numeric range skip: a range beyond the data prunes everything
-    none_files, _ = deltalite.snapshot_files(
-        table, skip=("o_totalprice", 10**12, 10**13)
-    )
-    assert none_files == []
+    assert _kept(spark, table, ("o_totalprice", 10**12, 10**13)) == []
 
 
 def test_version_conflict_retries(spark, table):
     """A claimed version file forces the writer to the next version
     (optimistic concurrency) instead of clobbering or failing."""
-    deltalite.write(_df(spark, [(1, "a")]), table)
-    # adversarially claim version 1 with an empty-file commit
-    deltalite._publish(
-        table,
-        deltalite.Commit(
-            version=1,
-            action="append",
-            files=(),
-            schema_json=_df(spark, [(1, "a")]).schema.json(),
-        ),
-    )
-    v = deltalite.write(_df(spark, [(2, "b")]), table)
+    dc.append_delta(_df(spark, [(1, "a")]), table)
+    # adversarially claim version 1 with a commit that adds no file
+    dc._publish_commit(table, 1, [{"commitInfo": {"operation": "WRITE"}}])
+    v = dc.append_delta(_df(spark, [(2, "b")]), table)
     assert v == 2
-    assert sorted(r.id for r in deltalite.read(spark, table).collect()) == [1, 2]
+    assert sorted(r.id for r in dc.read_delta(spark, table).collect()) == [1, 2]
 
 
 def test_upsert_merge_semantics(spark, table):
     """MERGE: matched keys replaced, unmatched inserted, one commit;
     time travel still sees the pre-merge rows."""
-    deltalite.write(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), table)
-    v = deltalite.upsert(
-        spark, _df(spark, [(2, "B2"), (9, "new")]), table, ["id"]
-    )
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), table)
+    v = dc.merge_delta(spark, table, _df(spark, [(2, "B2"), (9, "new")]), ["id"])
     assert v == 1
-    now = {r.id: r.v for r in deltalite.read(spark, table).collect()}
+    now = {r.id: r.v for r in dc.read_delta(spark, table).collect()}
     assert now == {1: "a", 2: "B2", 3: "c", 9: "new"}
-    before = {r.id: r.v for r in deltalite.read(spark, table, version=0).collect()}
+    before = {
+        r.id: r.v for r in dc.read_delta(spark, table, version=0).collect()
+    }
     assert before == {1: "a", 2: "b", 3: "c"}
 
 
 def test_upsert_rewrites_only_affected_files(spark, table):
     """Copy-on-write granularity: a commit's files without matched keys
     are carried into the new snapshot by reference, not rewritten."""
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), table)
-    deltalite.write(_df(spark, [(3, "c"), (4, "d")]).coalesce(1), table)
-    files_before, _ = deltalite.snapshot_files(table)
-    deltalite.upsert(spark, _df(spark, [(4, "D2")]), table, ["id"])
-    files_after, _ = deltalite.snapshot_files(table)
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), table)
+    dc.append_delta(_df(spark, [(3, "c"), (4, "d")]).coalesce(1), table)
+    files_before = _files(table)
+    dc.merge_delta(spark, table, _df(spark, [(4, "D2")]), ["id"])
+    files_after = _files(table)
     # the commit holding ids 1-2 is untouched; the 3-4 file was replaced
-    untouched = set(files_before) & set(files_after)
+    untouched = files_before & files_after
     assert len(untouched) == 1
-    assert {r.id: r.v for r in deltalite.read(spark, table).collect()} == {
+    assert {r.id: r.v for r in dc.read_delta(spark, table).collect()} == {
         1: "a", 2: "b", 3: "c", 4: "D2"
     }
-
-
-def test_upsert_idempotent_epoch_and_conflict(spark, table, monkeypatch):
-    deltalite.write(_df(spark, [(1, "a")]), table)
-    v = deltalite.upsert(
-        spark, _df(spark, [(1, "A")]), table, ["id"], app_id="m", epoch=5
-    )
-    assert v == 1
-    # replaying the same epoch is a no-op
-    assert (
-        deltalite.upsert(
-            spark, _df(spark, [(1, "XXX")]), table, ["id"], app_id="m", epoch=5
-        )
-        is None
-    )
-    assert {r.v for r in deltalite.read(spark, table).collect()} == {"A"}
-
-    # A commit landing BETWEEN the merge snapshot and its publish must
-    # abort the merge (serializable-by-abort), never be clobbered. The
-    # race is injected by stealing the version right before publish.
-    orig_publish = deltalite._publish
-    raced = {"done": False}
-
-    def race(table_, commit):
-        if not raced["done"]:
-            raced["done"] = True
-            orig_publish(
-                table_,
-                deltalite.Commit(
-                    version=commit.version,
-                    action="append",
-                    files=(),
-                    schema_json=commit.schema_json,
-                ),
-            )
-        orig_publish(table_, commit)
-
-    monkeypatch.setattr(deltalite, "_publish", race)
-    with pytest.raises(deltalite.ConcurrentCommitError):
-        deltalite.upsert(spark, _df(spark, [(2, "b")]), table, ["id"])
 
 
 def test_vacuum_retention(spark, table):
     """VACUUM deletes files only older snapshots reference; the current
     snapshot survives, time travel beyond retention breaks (the Delta
     trade), keep_versions widens the window, orphans are collected."""
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]), table)
-    deltalite.compact(spark, table)  # v1 overwrite: v0 files now old
-    # orphan from a crashed writer: data dir with no commit
-    orphan_dir = os.path.join(table, "data", "commit-orphan")
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b")]), table)
+    dc.optimize_delta(spark, table)  # v1 rewrite: v0 files now old
+    # orphan from a crashed writer: a data file with no commit
+    orphan_dir = os.path.join(table, "commit-orphan")
     os.makedirs(orphan_dir)
     with open(os.path.join(orphan_dir, "part-0.parquet"), "w") as fh:
         fh.write("junk")
 
     # a fresh orphan inside the safety window is NOT deleted
-    assert deltalite.vacuum(table, keep_versions=0, min_age_s=3600) == []
-    deleted = deltalite.vacuum(table, keep_versions=0)
+    assert dc.vacuum_delta(table, keep_versions=0, min_age_s=3600) == []
+    deleted = dc.vacuum_delta(table, keep_versions=0)
     assert deleted, "v0 files and the orphan should be collected"
     assert any("orphan" in d for d in deleted)
 
     # current snapshot intact
-    assert {r.id for r in deltalite.read(spark, table).collect()} == {1, 2}
+    assert {r.id for r in dc.read_delta(spark, table).collect()} == {1, 2}
     # vacuumed version unreadable (files gone, commit remains as history)
-    import py4j.protocol
-
     with pytest.raises(Exception):
-        deltalite.read(spark, table, version=0).collect()
+        dc.read_delta(spark, table, version=0).collect()
     # keep_versions=1 would have kept v0: rebuild and check
     table2 = table + "_2"
-    deltalite.write(_df(spark, [(1, "a")]), table2)
-    deltalite.compact(spark, table2)
-    assert deltalite.vacuum(table2, keep_versions=1) == []
-    assert {r.id for r in deltalite.read(spark, table2, version=0).collect()} == {1}
+    dc.append_delta(_df(spark, [(1, "a")]), table2)
+    dc.optimize_delta(spark, table2)
+    assert dc.vacuum_delta(table2, keep_versions=1) == []
+    assert {
+        r.id for r in dc.read_delta(spark, table2, version=0).collect()
+    } == {1}
 
 
 def test_schema_evolution_adds_nullable_column(spark, table):
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]), table)
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b")]), table)
     widened = spark.createDataFrame(
         [(3, "c", 9.5)], "id bigint, v string, score double"
     )
-    with pytest.raises(deltalite.SchemaMismatchError):
-        deltalite.write(widened, table)  # strict by default
-    deltalite.write(widened, table, merge_schema=True)
-    got = deltalite.read(spark, table)
+    with pytest.raises(dc.DeltaProtocolError):
+        dc.append_delta(widened, table)  # strict by default
+    dc.append_delta(widened, table, merge_schema=True)
+    got = dc.read_delta(spark, table)
     assert [f.name for f in got.schema.fields] == ["id", "v", "score"]
     rows = {r.id: r.score for r in got.collect()}
     # pre-evolution files null-fill the new column; no data rewrite
     assert rows == {1: None, 2: None, 3: 9.5}
     # time travel to the pre-evolution version keeps the OLD schema
-    old = deltalite.read(spark, table, version=0)
+    old = dc.read_delta(spark, table, version=0)
     assert [f.name for f in old.schema.fields] == ["id", "v"]
 
 
 def test_schema_evolution_missing_column_null_fills(spark, table):
-    deltalite.write(
-        spark.createDataFrame([(1, "a", 1.0)], "id bigint, v string, score double"),
+    """An append may omit a column only when the table declares its
+    default (Delta's allowColumnDefaults); a NULL default null-fills.
+    Evolution never drops a column, so an undeclared omission refuses."""
+    dc.append_delta(
+        spark.createDataFrame(
+            [(1, "a", 1.0)], "id bigint, v string, score double"
+        ),
         table,
     )
     narrow = spark.createDataFrame([(2, "b")], "id bigint, v string")
-    deltalite.write(narrow, table, merge_schema=True)
-    rows = {r.id: r.score for r in deltalite.read(spark, table).collect()}
+    with pytest.raises(dc.DeltaProtocolError, match="missing"):
+        dc.append_delta(narrow, table, merge_schema=True)
+    dc.add_column_default(table, "score", "CAST(NULL AS DOUBLE)")
+    dc.append_delta(narrow, table)
+    rows = {r.id: r.score for r in dc.read_delta(spark, table).collect()}
     assert rows == {1: 1.0, 2: None}
 
 
 def test_schema_evolution_rejects_type_change(spark, table):
-    deltalite.write(_df(spark, [(1, "a")]), table)
+    dc.append_delta(_df(spark, [(1, "a")]), table)
     conflicted = spark.createDataFrame([(1, 2)], "id bigint, v bigint")
-    with pytest.raises(deltalite.SchemaMismatchError):
-        deltalite.write(conflicted, table, merge_schema=True)
+    with pytest.raises(dc.SchemaMismatchError):
+        dc.append_delta(conflicted, table, merge_schema=True)
 
 
 def test_zorder_compaction_prunes_on_both_dimensions(spark, table):
@@ -345,72 +282,44 @@ def test_zorder_compaction_prunes_on_both_dimensions(spark, table):
     column — trailing-column stats stay full-range in every file)."""
     rows = [(x, y, x * 100 + y) for x in range(32) for y in range(32)]
     df = spark.createDataFrame(rows, "x int, y int, payload int")
-    deltalite.write(df, table)
+    dc.append_delta(df, table)
 
-    deltalite.compact(spark, table, target_partitions=16, zorder_by=["x", "y"])
-    all_files, _ = deltalite.snapshot_files(table)
+    dc.optimize_delta(spark, table, target_partitions=16, zorder_by=["x", "y"])
+    all_files = _files(table)
     assert len(all_files) >= 8
-    kept_x, _ = deltalite.snapshot_files(table, skip=("x", 3, 3))
-    kept_y, _ = deltalite.snapshot_files(table, skip=("y", 3, 3))
+    kept_x = _kept(spark, table, ("x", 3, 3))
+    kept_y = _kept(spark, table, ("y", 3, 3))
     assert len(kept_x) < len(all_files), "must prune on x"
     assert len(kept_y) < len(all_files), "must prune on y"
 
     # data survives the rewrite bit-for-bit
     got = sorted(
-        (r.x, r.y, r.payload) for r in deltalite.read(spark, table).collect()
+        (r.x, r.y, r.payload) for r in dc.read_delta(spark, table).collect()
     )
     assert got == sorted(rows)
     # and the pruned read still returns exactly the right rows
     slice_y = sorted(
         r.payload
-        for r in deltalite.read(spark, table, skip=("y", 3, 3))
+        for r in dc.read_delta(spark, table, skip=("y", 3, 3))
         .filter("y = 3")
         .collect()
     )
     assert slice_y == [x * 100 + 3 for x in range(32)]
 
 
-def test_zorder_beats_lexicographic_on_trailing_dim(spark, table):
-    """The measurable advantage: same data, sort_by=[x,y] vs
-    zorder_by=[x,y] — the z-ordered layout prunes strictly more files
-    for a trailing-dimension (y) point read."""
-    rows = [(x, y, 0) for x in range(32) for y in range(32)]
-    df = spark.createDataFrame(rows, "x int, y int, payload int")
-
-    lex_table, z_table = table + "_lex", table + "_z"
-    deltalite.write(df, lex_table)
-    deltalite.compact(
-        spark, lex_table, target_partitions=16, sort_by=["x", "y"],
-        stats_cols=["x", "y"],
-    )
-    deltalite.write(df, z_table)
-    deltalite.compact(spark, z_table, target_partitions=16, zorder_by=["x", "y"])
-
-    lex_all, _ = deltalite.snapshot_files(lex_table)
-    z_all, _ = deltalite.snapshot_files(z_table)
-    lex_kept, _ = deltalite.snapshot_files(lex_table, skip=("y", 3, 3))
-    z_kept, _ = deltalite.snapshot_files(z_table, skip=("y", 3, 3))
-    lex_frac = len(lex_kept) / len(lex_all)
-    z_frac = len(z_kept) / len(z_all)
-    assert z_frac < lex_frac, (
-        f"z-order kept {z_frac:.2f} of files on trailing dim, "
-        f"lexicographic kept {lex_frac:.2f}"
-    )
-
-
 def test_change_feed_captures_merge_row_changes(spark, table):
-    """CDF: an upsert with change_data=True records preimage+postimage
+    """CDF: a merge with change_data=True records preimage+postimage
     for replaced keys and insert for new keys; append commits
     synthesize inserts with no capture."""
-    deltalite.write(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), table)
-    deltalite.upsert(
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), table)
+    dc.merge_delta(
         spark,
-        _df(spark, [(2, "B2"), (9, "new")]),
         table,
+        _df(spark, [(2, "B2"), (9, "new")]),
         ["id"],
         change_data=True,
     )
-    ch = deltalite.read_changes(spark, table, from_version=1).collect()
+    ch = dc.read_delta_changes(spark, table, from_version=1).collect()
     got = {(r._change_type, r.id, r.v) for r in ch}
     assert got == {
         ("update_preimage", 2, "b"),
@@ -420,10 +329,8 @@ def test_change_feed_captures_merge_row_changes(spark, table):
     assert all(r._commit_version == 1 for r in ch)
 
     # full-range read includes the seed append as synthesized inserts
-    full = deltalite.read_changes(spark, table, from_version=0).collect()
-    inserts_v0 = {
-        (r.id, r.v) for r in full if r._commit_version == 0
-    }
+    full = dc.read_delta_changes(spark, table, from_version=0).collect()
+    inserts_v0 = {(r.id, r.v) for r in full if r._commit_version == 0}
     assert inserts_v0 == {(1, "a"), (2, "b"), (3, "c")}
     assert all(
         r._change_type == "insert" for r in full if r._commit_version == 0
@@ -431,138 +338,56 @@ def test_change_feed_captures_merge_row_changes(spark, table):
 
 
 def test_change_feed_unavailable_without_capture(spark, table):
-    """An overwrite commit written without capture must refuse CDF
+    """A data-changing rewrite written without capture must refuse CDF
     reads loudly, never silently return a partial feed."""
-    import pytest
-
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]), table)
-    deltalite.upsert(spark, _df(spark, [(2, "B2")]), table, ["id"])
-    with pytest.raises(deltalite.ChangeDataUnavailableError):
-        deltalite.read_changes(spark, table, from_version=1).collect()
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b")]), table)
+    dc.merge_delta(spark, table, _df(spark, [(2, "B2")]), ["id"])
+    with pytest.raises(dc.ChangeDataUnavailableError):
+        dc.read_delta_changes(spark, table, from_version=1).collect()
     # but a range excluding the uncaptured commit still works
-    ok = deltalite.read_changes(spark, table, 0, 0).collect()
+    ok = dc.read_delta_changes(spark, table, 0, 0).collect()
     assert {r.id for r in ok} == {1, 2}
-
-
-def test_follow_changes_applies_each_version_once(spark, table):
-    """CDC follower: two polls around an intervening captured MERGE —
-    every version applied exactly once, in order, and the resumed
-    cursor re-applies nothing."""
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]), table)
-    deltalite.upsert(
-        spark, _df(spark, [(2, "B2")]), table, ["id"], change_data=True
-    )
-
-    applied = []
-
-    def apply_fn(changes, from_v, to_v):
-        applied.append(
-            (from_v, to_v, sorted((r.id, r._change_type) for r in changes.collect()))
-        )
-
-    cursor = deltalite.follow_changes(
-        spark, table, apply_fn, max_cycles=1, sleep_fn=lambda s: None
-    )
-    assert cursor == 2
-    assert applied[0][0] == 0 and applied[0][1] == 1
-    flat = applied[0][2]
-    assert (1, "insert") in flat and (2, "update_preimage") in flat
-
-    # a new captured merge lands; resuming from the cursor applies ONLY it
-    deltalite.upsert(
-        spark, _df(spark, [(9, "new")]), table, ["id"], change_data=True
-    )
-    cursor2 = deltalite.follow_changes(
-        spark,
-        table,
-        apply_fn,
-        start_version=cursor,
-        max_cycles=2,
-        sleep_fn=lambda s: None,
-    )
-    assert cursor2 == 3
-    assert applied[-1][:2] == (2, 2)
-    assert applied[-1][2] == [(9, "insert")]
-    # exactly two applications total — nothing re-applied on the idle cycle
-    assert len(applied) == 2
-
-
-def test_cdf_skips_compaction_commits(spark, table):
-    """compact() publishes data_change=False; a CDF read over a range
-    containing the compaction skips it (no rows, no error) and a
-    follower advances past it — Delta's dataChange:false contract."""
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]), table)
-    deltalite.write(_df(spark, [(3, "c")]), table)
-    deltalite.compact(spark, table, target_partitions=1)  # v2
-    ch = deltalite.read_changes(spark, table, from_version=0).collect()
-    got = {(r._commit_version, r.id, r._change_type) for r in ch}
-    assert got == {
-        (0, 1, "insert"),
-        (0, 2, "insert"),
-        (1, 3, "insert"),
-    }
-    # follower consumes through the compaction without erroring
-    applied = []
-    cursor = deltalite.follow_changes(
-        spark,
-        table,
-        lambda c, lo, hi: applied.append((lo, hi, c.count())),
-        start_version=2,
-        max_cycles=1,
-        sleep_fn=lambda _s: None,
-    )
-    assert cursor == 3 and applied == [(2, 2, 0)]
 
 
 def test_delete_keys_copy_on_write_and_cdf(spark, table):
     """Row-level DELETE: matched rows gone in one commit, untouched
     files carried by reference, time travel intact, and delete-typed
     preimages captured for the CDF."""
-    deltalite.write(_df(spark, [(1, "a"), (2, "b")]), table)
-    deltalite.write(_df(spark, [(3, "c"), (4, "d")]), table)
-    files_before, _ = deltalite.snapshot_files(table)
-    v = deltalite.delete_keys(
+    dc.append_delta(_df(spark, [(1, "a"), (2, "b")]).coalesce(1), table)
+    dc.append_delta(_df(spark, [(3, "c"), (4, "d")]).coalesce(1), table)
+    files_before = _files(table)
+    v = dc.delete_delta(
         spark,
-        spark.createDataFrame([(2,)], "id long"),
         table,
+        spark.createDataFrame([(2,)], "id long"),
         ["id"],
         change_data=True,
     )
     assert v == 2
-    now = {r.id: r.v for r in deltalite.read(spark, table).collect()}
+    now = {r.id: r.v for r in dc.read_delta(spark, table).collect()}
     assert now == {1: "a", 3: "c", 4: "d"}
-    files_after, _ = deltalite.snapshot_files(table)
-    kept = set(files_before) & set(files_after)
+    kept = files_before & _files(table)
     assert kept, "the untouched file must carry over by reference"
-    old = {r.id for r in deltalite.read(spark, table, version=1).collect()}
+    old = {r.id for r in dc.read_delta(spark, table, version=1).collect()}
     assert old == {1, 2, 3, 4}
-    ch = deltalite.read_changes(spark, table, 2, 2).collect()
+    ch = dc.read_delta_changes(spark, table, 2, 2).collect()
     assert {(r._change_type, r.id, r.v) for r in ch} == {("delete", 2, "b")}
 
 
-def test_restore_is_metadata_only_and_keeps_history(spark, tmp_path):
-    """deltalite RESTORE: latest state equals the target version's, no
-    data file is written, the pre-restore timeline stays reachable, and
-    a vacuumed-away target refuses loudly without publishing."""
-    table = str(tmp_path / "dl_restore")
-    deltalite.write(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b")], "id long, v string"
-        ).coalesce(1),
-        table,
-        "append",
-        stats_cols=["id"],
+def test_restore_is_metadata_only_and_keeps_history(spark, table):
+    """RESTORE: latest state equals the target version's, no data file
+    is written, the pre-restore timeline stays reachable, restored adds
+    keep their stats, and a vacuumed-away target refuses loudly
+    without publishing."""
+    ddl = "id long, v string"
+    dc.append_delta(
+        spark.createDataFrame([(1, "a"), (2, "b")], ddl).coalesce(1), table
     )
-    deltalite.write(
-        spark.createDataFrame(
-            [(3, "c"), (4, "d")], "id long, v string"
-        ).coalesce(1),
-        table,
-        "append",
-        stats_cols=["id"],
+    dc.append_delta(
+        spark.createDataFrame([(3, "c"), (4, "d")], ddl).coalesce(1), table
     )
-    pre_v = deltalite.delete_keys(
-        spark, spark.createDataFrame([(2,)], "id long"), table, ["id"]
+    pre_v = dc.delete_delta(
+        spark, table, spark.createDataFrame([(2,)], "id long"), ["id"]
     )
 
     def data_files():
@@ -574,26 +399,20 @@ def test_restore_is_metadata_only_and_keeps_history(spark, tmp_path):
         }
 
     on_disk = data_files()
-    v1_files, _ = deltalite.snapshot_files(table, 1)
-    v = deltalite.restore(table, 1)
+    v1_files = _files(table, 1)
+    v = dc.restore_delta(spark, table, to_version=1)
     assert v == pre_v + 1
     assert data_files() == on_disk  # metadata-only
-    now_files, _ = deltalite.snapshot_files(table)
-    assert set(now_files) == set(v1_files)
-    now = {r.id: r.v for r in deltalite.read(spark, table).collect()}
+    now_files = _files(table)
+    assert now_files == v1_files
+    now = {r.id: r.v for r in dc.read_delta(spark, table).collect()}
     assert now == {1: "a", 2: "b", 3: "c", 4: "d"}
-    mid = {
-        r.id for r in deltalite.read(spark, table, version=pre_v).collect()
-    }
+    mid = {r.id for r in dc.read_delta(spark, table, version=pre_v).collect()}
     assert mid == {1, 3, 4}
     # restored stats survive: a skipping read still prunes
-    pruned, _ = deltalite.snapshot_files(table, skip=("id", 3, 4))
-    assert len(pruned) < len(now_files)
-    # vacuum away the old rewrite, then restore to the erased state is
-    # still fine — but restore to a version whose files were GC'd fails
-    deltalite.vacuum(table, keep_versions=0)
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError, match="vacuum"):
-        deltalite.restore(table, 2)
-    assert deltalite.latest_version(table) == v  # nothing published
+    assert len(_kept(spark, table, ("id", 3, 4))) < len(now_files)
+    # restore to a version whose files VACUUM deleted fails, unpublished
+    dc.vacuum_delta(table, keep_versions=0)
+    with pytest.raises(dc.DeltaProtocolError, match="VACUUM"):
+        dc.restore_delta(spark, table, to_version=2)
+    assert dc._list_commit_versions(table)[-1] == v  # nothing published

@@ -136,10 +136,10 @@ def test_no_collect_in_query_paths():
     """Static guard: no module reachable from queries() materializes
     data to the driver (collect/toPandas) — the s1 feed build, formerly
     the one sanctioned exception, is now a distributed applyInPandas
-    write. The storage engines (deltalite, delta_compat) each hold
-    metadata-only collects — touched-file discovery for copy-on-write
-    MERGE/DELETE, one row per data file, what any Delta client's commit
-    planner does — and those are allowlisted line-by-line: every
+    write. The storage engine (delta_compat) holds metadata-only
+    collects — touched-file discovery for copy-on-write MERGE/DELETE,
+    one row per data file, what any Delta client's commit planner
+    does — and those are allowlisted line-by-line: every
     ``.collect()`` there must carry a METADATA marker comment; any new
     unmarked collect fails the guard."""
     import inspect
@@ -174,13 +174,12 @@ def test_no_collect_in_query_paths():
         assert ".collect()" not in src, mod.__name__
         assert ".toPandas()" not in src, mod.__name__
 
-    from acero_delta_lake_streaming_spark.storage import delta_compat, deltalite
+    from acero_delta_lake_streaming_spark.storage import delta_compat
 
-    for mod in (deltalite, delta_compat):
-        for ln, line in enumerate(inspect.getsource(mod).splitlines(), 1):
-            if ".collect()" in line:
-                assert "METADATA" in line, f"{mod.__name__}:{ln}: {line}"
-            assert ".toPandas()" not in line, f"{mod.__name__}:{ln}"
+    for ln, line in enumerate(inspect.getsource(delta_compat).splitlines(), 1):
+        if ".collect()" in line:
+            assert "METADATA" in line, f"delta_compat:{ln}: {line}"
+        assert ".toPandas()" not in line, f"delta_compat:{ln}"
 
 
 def test_scd2_single_exchange(spark, sf_dir):

@@ -265,3 +265,29 @@ def test_two_stage_ann_recall_floor(spark, sf_dir):
         len(t & got[q]) / len(t) for q, t in exact.items()
     ]
     assert sum(recalls) / len(recalls) >= 0.2, recalls
+
+
+def test_ivf_refuses_corpus_with_cid(spark):
+    """The IVF assignment emits its own cid column; a corpus that
+    already carries one is refused up front instead of yielding two
+    ambiguous cid columns."""
+    import pytest
+
+    from acero_delta_lake_streaming_spark.operators.similarity import (
+        _ivf_assign,
+        _ivf_coarse,
+    )
+
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0], 7), (1, [0.0, 1.0], 8)],
+        "vec_id long, embedding array<float>, cid int",
+    )
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "cid int, carr array<double>"
+    )
+    with pytest.raises(ValueError, match="cid"):
+        _ivf_coarse(corpus)
+    with pytest.raises(ValueError, match="cid"):
+        _ivf_assign(corpus, centroids, keep=("embedding",))
+    narrow = _ivf_assign(corpus.drop("cid"), centroids, keep=("embedding",))
+    assert narrow.columns == ["vec_id", "cid", "embedding"]

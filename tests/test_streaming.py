@@ -11,7 +11,7 @@ import os
 import pyspark.sql.functions as F
 
 from acero_delta_lake_streaming_spark.catalog import load_table
-from acero_delta_lake_streaming_spark.storage import deltalite
+from acero_delta_lake_streaming_spark.storage import delta_compat
 from acero_delta_lake_streaming_spark.streaming.ingest import (
     EVENT_BATCH_SCHEMA,
     medallion_writer,
@@ -41,24 +41,24 @@ def test_incremental_ingest_dedup_and_empty_runs(spark, sf_dir, tmp_path):
     write_single_parquet(b0, os.path.join(drop, "b0.parquet"))
     run_ingest(spark, drop, tables, cp, with_actors=False)
     curated = os.path.join(tables, "curated")
-    n0 = deltalite.read(spark, curated).count()
+    n0 = delta_compat.read_delta(spark, curated).count()
     assert n0 > 0
 
     # ST3: re-run with nothing new — a clean no-op, tables unchanged
     run_ingest(spark, drop, tables, cp, with_actors=False)
-    assert deltalite.read(spark, curated).count() == n0
+    assert delta_compat.read_delta(spark, curated).count() == n0
 
     # ST1+ST2: second drop replays half of b0's ids plus new ones; the
     # checkpointed dedup state must keep exactly one row per doc_id
     b1 = docs.filter((F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 4 == 0))
     write_single_parquet(b1, os.path.join(drop, "b1.parquet"))
     run_ingest(spark, drop, tables, cp, with_actors=False)
-    raw = deltalite.read(spark, os.path.join(tables, "raw"))
+    raw = delta_compat.read_delta(spark, os.path.join(tables, "raw"))
     assert raw.count() == raw.select("doc_id").distinct().count()
-    ok_docs = deltalite.read(spark, curated)
+    ok_docs = delta_compat.read_delta(spark, curated)
     assert ok_docs.count() == ok_docs.select("doc_id").distinct().count()
     # UD3: every ingested doc is either curated or quarantined — no drops
-    quarantined = deltalite.read(spark, os.path.join(tables, "quarantine"))
+    quarantined = delta_compat.read_delta(spark, os.path.join(tables, "quarantine"))
     assert ok_docs.count() + quarantined.count() == raw.count()
 
 
@@ -70,14 +70,14 @@ def test_epoch_replay_is_exactly_once(spark, sf_dir, tmp_path):
     writer = medallion_writer(base, app_id="m1")
     writer(batch, 0)
     counts = {
-        t: deltalite.read(spark, os.path.join(base, t)).count()
+        t: delta_compat.read_delta(spark, os.path.join(base, t)).count()
         for t in ("raw", "curated", "actors")
     }
     writer(batch, 0)  # replayed epoch
     for t, n in counts.items():
-        assert deltalite.read(spark, os.path.join(base, t)).count() == n, t
+        assert delta_compat.read_delta(spark, os.path.join(base, t)).count() == n, t
     writer(batch.limit(10), 1)  # a genuinely new epoch still lands
-    assert deltalite.read(spark, os.path.join(base, "raw")).count() == counts["raw"] + 10
+    assert delta_compat.read_delta(spark, os.path.join(base, "raw")).count() == counts["raw"] + 10
 
 
 def test_partial_epoch_completes_without_duplicates(spark, sf_dir, tmp_path):
@@ -86,12 +86,14 @@ def test_partial_epoch_completes_without_duplicates(spark, sf_dir, tmp_path):
     base = str(tmp_path / "tables")
     batch = _docs(spark, sf_dir).limit(40)
     # simulate the partial epoch: only the raw commit landed
-    deltalite.write(batch, os.path.join(base, "raw"), app_id="m2-raw", epoch=0)
-    n_raw = deltalite.read(spark, os.path.join(base, "raw")).count()
+    delta_compat.append_delta(
+        batch, os.path.join(base, "raw"), txn=("m2-raw", 0)
+    )
+    n_raw = delta_compat.read_delta(spark, os.path.join(base, "raw")).count()
     medallion_writer(base, app_id="m2")(batch, 0)  # the retry
-    assert deltalite.read(spark, os.path.join(base, "raw")).count() == n_raw
-    assert deltalite.table_exists(os.path.join(base, "curated"))
-    assert deltalite.table_exists(os.path.join(base, "actors"))
+    assert delta_compat.read_delta(spark, os.path.join(base, "raw")).count() == n_raw
+    assert delta_compat.is_delta_table(os.path.join(base, "curated"))
+    assert delta_compat.is_delta_table(os.path.join(base, "actors"))
 
 
 def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
@@ -259,7 +261,7 @@ def test_polling_orchestrator_two_cycles_no_duplicates(spark, tmp_path):
     assert cycles == 2
     assert sleeps == [7.0]  # between the two cycles only
 
-    raw = deltalite.read(spark, os.path.join(tables, "raw"))
+    raw = delta_compat.read_delta(spark, os.path.join(tables, "raw"))
     ids = sorted(r.id for r in raw.select("id").collect())
     assert ids == ["g1", "g2", "g3"]  # re-served g1/g2 not re-committed
     # two drop files landed and neither overwrote the other
@@ -408,10 +410,10 @@ def test_feed_drop_contract(spark, tmp_path):
     medallion = [
         os.path.join(tables, t)
         for t in ("raw", "curated", "quarantine", "actors")
-        if deltalite.table_exists(os.path.join(tables, t))
+        if delta_compat.is_delta_table(os.path.join(tables, t))
     ]
     assert os.path.join(tables, "raw") in medallion
-    versions = [deltalite.latest_version(t) for t in medallion]
+    versions = [delta_compat._list_commit_versions(t)[-1] for t in medallion]
 
     assert drop_feed_batch(spark, [("news", _rss([]))], drop, "poll_1") == 0
     assert sorted(os.listdir(drop)) == ["poll_0.parquet", "poll_1.parquet"]
@@ -419,8 +421,10 @@ def test_feed_drop_contract(spark, tmp_path):
     assert pq.read_table(empty).num_rows == 0
     assert _read_drop(spark, empty).count() == 0
     run_news_ingest(spark, drop, tables, cp)
-    assert [deltalite.latest_version(t) for t in medallion] == versions
-    assert deltalite.read(spark, os.path.join(tables, "raw")).count() == 1
+    assert [
+        delta_compat._list_commit_versions(t)[-1] for t in medallion
+    ] == versions
+    assert delta_compat.read_delta(spark, os.path.join(tables, "raw")).count() == 1
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -572,8 +576,85 @@ def test_streaming_cdc_upsert(spark, tmp_path):
     )
     q.awaitTermination()
 
-    got = {r.event_id: r.value for r in deltalite.read(spark, out).collect()}
+    got = {r.event_id: r.value for r in delta_compat.read_delta(spark, out).collect()}
     assert got == {1: 99.0, 2: 2.0, 3: 3.0}
+
+
+def test_cdc_upsert_epoch_replay_is_exactly_once(spark, tmp_path):
+    """The MERGE sink carries the (app_id, epoch) key on its commit: a
+    replayed epoch — on the creating append or on a later merge —
+    publishes no new version and leaves the rows untouched, even when
+    the replayed batch differs."""
+    from acero_delta_lake_streaming_spark.streaming.ingest import (
+        cdc_upsert_writer,
+    )
+
+    out = str(tmp_path / "out")
+    t0 = _ts_ns(2024, 1, 1)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, EVENT_BATCH_SCHEMA)
+
+    def state():
+        return (
+            delta_compat._list_commit_versions(out)[-1],
+            {r.event_id: r.value
+             for r in delta_compat.read_delta(spark, out).collect()},
+        )
+
+    write_batch = cdc_upsert_writer(out, ["event_id"], app_id="cdc-replay")
+    write_batch(batch([(1, t0, 7, "click", 1.0)]), 0)
+    after0 = state()
+    write_batch(batch([(1, t0, 7, "click", 5.0)]), 0)  # replayed create
+    assert state() == after0
+
+    write_batch(
+        batch([(1, t0, 7, "click", 99.0), (2, t0, 8, "view", 2.0)]), 1
+    )
+    after1 = state()
+    assert after1[1] == {1: 99.0, 2: 2.0} and after1[0] == after0[0] + 1
+    write_batch(batch([(1, t0, 7, "click", -1.0)]), 1)  # replayed merge
+    assert state() == after1
+    assert delta_compat.last_txn_version(out, "cdc-replay") == 1
+
+
+def test_windowed_overwrite_epoch_replay_is_exactly_once(spark, tmp_path):
+    """run_windowed_stream's overwrite sink carries the (app_id, epoch)
+    key too: dropping the checkpoint's last batch commit makes Spark
+    re-run that epoch (a crash after the sink, before the checkpoint
+    commit), and the replayed overwrite publishes no new version."""
+    from acero_delta_lake_streaming_spark.streaming.ingest import (
+        run_windowed_stream,
+    )
+
+    drop, out, cp = (
+        str(tmp_path / "drop"),
+        str(tmp_path / "out"),
+        str(tmp_path / "cp"),
+    )
+    os.makedirs(drop)
+    t0 = _ts_ns(2024, 1, 1)
+    day = 86400 * 1_000_000_000
+    for i, rows in enumerate(
+        [[(1, t0, 7, "click", 1.0)], [(2, t0 + day, 8, "click", 2.0)]]
+    ):
+        write_single_parquet(
+            spark.createDataFrame(rows, EVENT_BATCH_SCHEMA),
+            os.path.join(drop, f"b{i}.parquet"),
+        )
+        run_windowed_stream(spark, drop, out, cp)  # epoch i
+    versions = delta_compat._list_commit_versions(out)
+    assert versions == [0, 1]  # create by append, then one overwrite
+    rows = sorted(delta_compat.read_delta(spark, out).collect())
+    assert len(rows) == 2
+
+    for name in ("1", ".1.crc"):  # the batch commit and its checksum
+        os.remove(os.path.join(cp, "commits", name))
+    run_windowed_stream(spark, drop, out, cp)  # Spark replays epoch 1
+    assert os.path.exists(os.path.join(cp, "commits", "1"))
+    assert delta_compat._list_commit_versions(out) == versions
+    assert sorted(delta_compat.read_delta(spark, out).collect()) == rows
+    assert delta_compat.last_txn_version(out, "windowed-events") == 1
 
 
 def test_dedup_within_watermark_bounds_state(spark, tmp_path):
@@ -646,7 +727,7 @@ def test_streaming_ema_state_carries_across_epochs(spark, sf_dir):
     # NEXT call); epoch continuity is visible in its per-epoch rows
     key = sf_dir.strip("/").replace("/", "_")
     out = os.path.join(_SCRATCH_ROOT, key, "st9", "out")
-    emissions = deltalite.read(spark, out).collect()
+    emissions = delta_compat.read_delta(spark, out).collect()
     epochs = {r.epoch for r in emissions}
     assert epochs == {0, 1}, epochs
     for r in emissions:
@@ -680,7 +761,7 @@ def test_run_session_stream_incremental_emit_once(spark, tmp_path):
     """run_session_stream (st11's engine): append mode emits a session
     only after the watermark finalizes it — the first drain holds every
     in-horizon session in state, a sentinel drop flushes them exactly
-    once into the deltalite sink, and a third drain with no new files
+    once into the Delta sink, and a third drain with no new files
     is a clean no-op (checkpoint + idempotent epoch commits)."""
     from acero_delta_lake_streaming_spark.streaming.ingest import (
         run_session_stream,
@@ -710,7 +791,7 @@ def test_run_session_stream_incremental_emit_once(spark, tmp_path):
     # emitted; both t0+9h sessions are still open in state
     assert {
         (r.user_id, r.n_events, r.sum_value)
-        for r in deltalite.read(spark, out).collect()
+        for r in delta_compat.read_delta(spark, out).collect()
     } == {(7, 2, 3.0)}
     sentinel = [(5, t0 + 1000 * h, -1, "sentinel", 0.0)]
     write_single_parquet(
@@ -720,12 +801,12 @@ def test_run_session_stream_incremental_emit_once(spark, tmp_path):
     run_session_stream(spark, drop, out, cp)
     got = {
         (r.user_id, r.n_events, r.sum_value)
-        for r in deltalite.read(spark, out).filter("user_id >= 0").collect()
+        for r in delta_compat.read_delta(spark, out).filter("user_id >= 0").collect()
     }
     assert got == {(7, 2, 3.0), (7, 1, 3.0), (8, 1, 4.0)}  # noqa: E501 — first session from drain 1, open ones flushed by the sentinel
     # no new files -> no new rows (emit exactly once)
     run_session_stream(spark, drop, out, cp)
-    assert deltalite.read(spark, out).filter("user_id >= 0").count() == 3
+    assert delta_compat.read_delta(spark, out).filter("user_id >= 0").count() == 3
 
 
 def test_stream_stream_full_outer_join(spark, tmp_path):
@@ -827,7 +908,7 @@ def test_st27_graph_state_maintained_exactly_once(spark, sf_dir):
     edge_tbl = os.path.join(base, "edges")
     hub_tbl = os.path.join(base, "hubs")
 
-    und = deltalite.read(spark, edge_tbl)
+    und = delta_compat.read_delta(spark, edge_tbl)
     n_edges = und.count()
     assert und.select("src", "dst").distinct().count() == n_edges
     assert und.filter("src >= dst").count() == 0  # normalized pairs
@@ -842,7 +923,7 @@ def test_st27_graph_state_maintained_exactly_once(spark, sf_dir):
     # for the cap to be doing work at this scale
     assert wdeg.filter(F.col("count") > _X3I_DEG).count() > 0
 
-    hubs = deltalite.read(spark, hub_tbl)
+    hubs = delta_compat.read_delta(spark, hub_tbl)
     epochs = sorted(
         r.hub_epoch for r in hubs.select("hub_epoch").distinct().collect()
     )
@@ -852,9 +933,9 @@ def test_st27_graph_state_maintained_exactly_once(spark, sf_dir):
     )
 
     # a replayed epoch is refused by the ledger (exactly-once)
-    assert deltalite.has_committed(edge_tbl, "st27", 1)
-    v_before = deltalite.latest_version(edge_tbl)
-    deltalite.write(
-        und.limit(1), edge_tbl, app_id="st27", epoch=1
-    )
-    assert deltalite.latest_version(edge_tbl) == v_before
+    assert delta_compat.last_txn_version(edge_tbl, "st27") >= 1
+    v_before = delta_compat._list_commit_versions(edge_tbl)[-1]
+    assert delta_compat.append_delta(
+        und.limit(1), edge_tbl, txn=("st27", 1)
+    ) == -1
+    assert delta_compat._list_commit_versions(edge_tbl)[-1] == v_before
