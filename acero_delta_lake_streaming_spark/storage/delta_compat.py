@@ -23,9 +23,15 @@ so every table here stays readable by delta-rs / delta-spark:
   Delta's ``txn`` action rides in the commit, so data and stream
   progress publish atomically and a replayed epoch no-ops.
 
-Driver-side work is strictly O(|log|) metadata — the data path is an
-ordinary distributed parquet scan with the log-derived file list, so
-filters and column pruning push down exactly as on raw parquet. On a
+Driver-side work is metadata: ``snapshot`` replays the newest
+checkpoint plus the JSON commits after it (a compacted range standing
+in for the commits it covers), and ``_apply_action`` is the one fold
+that turns those actions into table state — live files, protocol,
+metaData, domains and the ``txn`` ledger. Every consumer (the txn
+handshake, the checkpoint writer, the per-commit checksum) reads that
+state instead of re-reading the log. The data path is an ordinary
+distributed parquet scan with the log-derived file list, so filters
+and column pruning push down exactly as on raw parquet. On a
 real object store the ``os.link`` publish becomes a conditional put —
 how Delta/Iceberg commit services work.
 
@@ -593,51 +599,51 @@ def _check_writer_protocol(
             )
 
 
+def _log_actions(path: str) -> list[dict]:
+    """Actions of one newline-JSON log file (a commit, a compacted
+    range or a JSON checkpoint manifest), in file order — the one
+    JSON-lines reader of the log."""
+    with open(path) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
 def _apply_action(state: dict, action: dict) -> None:
+    """Fold one log action into replay state: the ONLY place log
+    actions become table state. Commits, compacted ranges and
+    (normalised) checkpoint rows all replay through here. Each live
+    file keeps its whole ``add`` action (stats, size, DV, rowTracking
+    and partition values travel together); protocol and metaData are
+    kept whole; ``txn`` keeps the highest version per appId."""
     if "protocol" in action:
         _check_protocol(action)
         state["protocol"] = action["protocol"]
     elif "metaData" in action:
         md = action["metaData"]
-        fmt = md.get("format", {}).get("provider", "parquet")
+        fmt = (md.get("format") or {}).get("provider", "parquet")
         if fmt != "parquet":
             raise DeltaProtocolError(f"unsupported format provider {fmt!r}")
-        state["schema"] = md["schemaString"]
-        state["partition_cols"] = md.get("partitionColumns") or []
-        state["configuration"] = md.get("configuration") or {}
-        state["meta_id"] = md.get("id")
+        state["metadata"] = md
     elif "add" in action:
-        add = action["add"]
-        path = unquote(add["path"])
-        state["files"][path] = add.get("stats")
-        state["sizes"][path] = add.get("size")
-        dv = add.get("deletionVector")
-        if dv:
-            state["dvs"][path] = dv
-        else:
-            state["dvs"].pop(path, None)  # re-add without DV clears it
-        if add.get("baseRowId") is not None:
-            state["row_meta"][path] = {
-                "baseRowId": int(add["baseRowId"]),
-                "defaultRowCommitVersion": add.get(
-                    "defaultRowCommitVersion"
-                ),
-            }
-        else:
-            state["row_meta"].pop(path, None)
+        # a re-add replaces the whole descriptor (a re-add without a DV
+        # clears the file's DV)
+        state["adds"][unquote(action["add"]["path"])] = action["add"]
     elif "remove" in action:
-        path = unquote(action["remove"]["path"])
-        state["files"].pop(path, None)
-        state["sizes"].pop(path, None)
-        state["dvs"].pop(path, None)
-        state["row_meta"].pop(path, None)
+        state["adds"].pop(unquote(action["remove"]["path"]), None)
     elif "domainMetadata" in action:
         dm = action["domainMetadata"]
         if dm.get("removed"):
             state["domains"].pop(dm.get("domain"), None)
         elif dm.get("domain"):
             state["domains"][dm["domain"]] = dm.get("configuration")
-    # txn / commitInfo / cdc actions carry no scan state
+    elif "txn" in action:
+        # version 0 is a legitimate epoch and a null version reads as
+        # -1 (never a falsy `or`)
+        tv = action["txn"].get("version")
+        t = dict(action["txn"], version=-1 if tv is None else int(tv))
+        prev = state["txns"].get(t.get("appId"))
+        if prev is None or t["version"] >= prev["version"]:
+            state["txns"][t.get("appId")] = t
+    # commitInfo / cdc / sidecar actions carry no table state
 
 
 def _checkpoint_rows(path: str) -> list[dict]:
@@ -645,13 +651,7 @@ def _checkpoint_rows(path: str) -> list[dict]:
     manifests/sidecars) or newline-JSON (V2 manifests delta-kernel
     writes)."""
     if path.endswith(".json"):
-        rows = []
-        with open(path) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    rows.append(json.loads(line))
-        return rows
+        return _log_actions(path)
     import pyarrow.parquet as pq
 
     return pq.read_table(path).to_pylist()
@@ -662,9 +662,7 @@ def _checkpoint_action_rows(table: str, version: int) -> list[dict]:
     single-file / multi-part union, with V2 ``sidecar`` references
     expanded (each names a parquet file of file actions under
     ``_delta_log/_sidecars/``; a missing sidecar REFUSES — silently
-    dropping one would resurrect removed state). Shared by snapshot
-    replay and the checkpoint writer's seed path so the expansion and
-    its refusal cannot drift."""
+    dropping one would resurrect removed state)."""
     rows: list[dict] = []
     for path in _checkpoint_files(table, version):
         rows.extend(_checkpoint_rows(path))
@@ -687,52 +685,25 @@ def _replay_checkpoint(table: str, version: int, state: dict) -> None:
     replay is their union, order-free because a checkpoint is
     net-of-log), or a V2-spec manifest whose ``sidecar`` actions
     reference the add/remove payload files under
-    ``_delta_log/_sidecars/``. The checkpoint is metadata (KBs-MBs);
-    pyarrow reads it driver-side, the same altitude as the JSON log
-    itself."""
-    rows = _checkpoint_action_rows(table, version)
-    for row in rows:
-        if row.get("protocol"):
-            _check_protocol({"protocol": row["protocol"]})
-            # pyarrow renders absent optional fields as None; drop them
-            # so the stored protocol matches the JSON-log shape
-            state["protocol"] = {
-                k: v for k, v in row["protocol"].items() if v is not None
-            }
-    # A checkpoint is already net-of-log: removes appear only as
-    # tombstones, so metaData + adds alone define the snapshot state.
-    for row in rows:
-        md = row.get("metaData")
-        if md and md.get("schemaString"):
-            state["schema"] = md["schemaString"]
-            state["partition_cols"] = md.get("partitionColumns") or []
-            cfg = md.get("configuration")
-            # checkpoint configuration may be a map-type column
-            # (list of (k, v) pairs from pyarrow) or a plain dict
-            if isinstance(cfg, list):
-                cfg = dict(cfg)
-            state["configuration"] = cfg or {}
-            state["meta_id"] = md.get("id")
-        add = row.get("add")
-        if add and add.get("path"):
-            path = unquote(add["path"])
-            state["files"][path] = add.get("stats")
-            state["sizes"][path] = add.get("size")
-            dv = add.get("deletionVector")
-            if dv and dv.get("storageType"):
-                state["dvs"][path] = dv
-            if add.get("baseRowId") is not None:
-                state["row_meta"][path] = {
-                    "baseRowId": int(add["baseRowId"]),
-                    "defaultRowCommitVersion": add.get(
-                        "defaultRowCommitVersion"
-                    ),
-                }
-        dm = row.get("domainMetadata")
-        if dm and dm.get("domain"):
-            # checkpoints carry only LIVE domains (removed ones are
-            # dropped at write time, matching net-of-log adds)
-            state["domains"][dm["domain"]] = dm.get("configuration")
+    ``_delta_log/_sidecars/``. Rows are only normalised to the JSON-log
+    shape here; :func:`_apply_action` folds them. The checkpoint is
+    metadata (KBs-MBs); pyarrow reads it driver-side, the same altitude
+    as the JSON log itself."""
+    for row in _checkpoint_action_rows(table, version):
+        for kind, body in row.items():
+            # a parquet row carries every action column, all but one
+            # null; removes are tombstones (a checkpoint is net-of-log)
+            if not isinstance(body, dict) or kind == "remove":
+                continue
+            # pyarrow renders absent optional fields as None and maps
+            # as (key, value) lists
+            body = {k: v for k, v in body.items() if v is not None}
+            for key in ("configuration", "partitionValues"):
+                if isinstance(body.get(key), list):
+                    body[key] = dict(body[key])
+            if not (body.get("deletionVector") or {}).get("storageType"):
+                body.pop("deletionVector", None)  # all-None struct
+            _apply_action(state, {kind: body})
 
 
 def _commit_timestamp_ms(table: str, version: int) -> int:
@@ -743,17 +714,12 @@ def _commit_timestamp_ms(table: str, version: int) -> int:
     ``commitInfo.timestamp``, else the commit file's modification
     time — exactly delta-spark's fallback order."""
     try:
-        with open(_commit_path(table, version)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                ci = action.get("commitInfo")
-                if ci and ci.get("inCommitTimestamp") is not None:
-                    return int(ci["inCommitTimestamp"])
-                if ci and ci.get("timestamp") is not None:
-                    return int(ci["timestamp"])
+        for action in _log_actions(_commit_path(table, version)):
+            ci = action.get("commitInfo")
+            if ci and ci.get("inCommitTimestamp") is not None:
+                return int(ci["inCommitTimestamp"])
+            if ci and ci.get("timestamp") is not None:
+                return int(ci["timestamp"])
     except FileNotFoundError:
         pass
     return int(os.path.getmtime(_commit_path(table, version)) * 1000)
@@ -782,9 +748,13 @@ def snapshot(
     """Resolve the file list + schema for a Delta table snapshot.
 
     Returns ``{"files": [abs paths], "schema": StructType-json-str,
-    "partition_cols": [...], "version": int}``. ``timestamp_ms``
+    "partition_cols": [...], "version": int, ...}`` plus the per-file
+    and table-level state documented inline below. ``timestamp_ms``
     resolves to a version via :func:`resolve_timestamp` (mutually
-    exclusive with ``version``).
+    exclusive with ``version``). Replay is the newest checkpoint at or
+    below the target plus the JSON tail (compacted ranges standing in
+    for the commits they cover), every action folded by
+    :func:`_apply_action`.
     """
     if not is_delta_table(table):
         raise DeltaCorruptLogError(f"{table} has no {_LOG_DIR} directory")
@@ -795,18 +765,8 @@ def snapshot(
     versions = _list_commit_versions(table)
     if version is not None:
         versions = [v for v in versions if v <= version]
-    state: dict = {
-        "files": {},
-        "sizes": {},
-        "dvs": {},
-        "schema": None,
-        "partition_cols": [],
-        "configuration": {},
-        "meta_id": None,
-        "protocol": None,
-        "domains": {},
-        "row_meta": {},
-    }
+    state: dict = {"adds": {}, "protocol": None, "metadata": None,
+                   "domains": {}, "txns": {}}
     # log compaction files (spec: <x>.<y>.compacted.json) may stand in
     # for reading the range's individual commits; a range crossing the
     # requested version is unusable (its tail would over-apply)
@@ -863,11 +823,8 @@ def snapshot(
     tail = max(tail_candidates) if tail_candidates else None
 
     def _apply_file(path: str) -> None:
-        with open(path) as f:
-            for line in f:
-                line = line.strip()
-                if line:
-                    _apply_action(state, json.loads(line))
+        for action in _log_actions(path):
+            _apply_action(state, action)
 
     v = start
     while tail is not None and v <= tail:
@@ -886,43 +843,53 @@ def snapshot(
                 f"commit log gap: expected {v:020d}.json, found none "
                 "(and no compacted range covers it)"
             )
-    if state["schema"] is None:
+    md = state["metadata"]
+    if md is None:
         raise DeltaCorruptLogError("no metaData action found in log")
-    _check_type_changes(state["schema"])
+    _check_type_changes(md["schemaString"])
     resolved = tail if tail is not None else (
         ckpt if ckpt is not None else -1
     )
-    _validate_crc(table, resolved, state)
-    return {
-        "files": [os.path.join(table, p) for p in state["files"]],
-        "schema": state["schema"],
-        "partition_cols": state["partition_cols"],
+    adds = {os.path.join(table, p): a for p, a in state["adds"].items()}
+    snap = {
+        "files": list(adds),
+        "schema": md["schemaString"],
+        "partition_cols": md.get("partitionColumns") or [],
         "version": resolved,
         # per-file data-skipping stats (raw protocol JSON string or None)
-        "file_stats": {
-            os.path.join(table, p): s for p, s in state["files"].items()
-        },
+        "file_stats": {f: a.get("stats") for f, a in adds.items()},
         # per-file add.size (VERSION.checksum's tableSizeBytes basis)
-        "file_sizes": {
-            os.path.join(table, p): s for p, s in state["sizes"].items()
-        },
+        "file_sizes": {f: a.get("size") for f, a in adds.items()},
         # per-file deletionVector descriptors (absent key = no DV)
         "file_dvs": {
-            os.path.join(table, p): d for p, d in state["dvs"].items()
+            f: a["deletionVector"]
+            for f, a in adds.items()
+            if a.get("deletionVector")
         },
         # table properties from metaData (column mapping mode lives here)
-        "configuration": state["configuration"],
-        "meta_id": state["meta_id"],
+        "configuration": md.get("configuration") or {},
+        "meta_id": md.get("id"),
         # latest protocol action (writer gating reads writerFeatures)
         "protocol": state["protocol"] or {},
         # live domainMetadata state (rowTracking's high-water mark)
         "domain_metadata": state["domains"],
         # per-file rowTracking assignment (baseRowId, dcv) for re-adds
         "file_row_meta": {
-            os.path.join(table, p): m
-            for p, m in state["row_meta"].items()
+            f: {
+                "baseRowId": int(a["baseRowId"]),
+                "defaultRowCommitVersion": a.get("defaultRowCommitVersion"),
+            }
+            for f, a in adds.items()
+            if a.get("baseRowId") is not None
         },
+        # appId -> its highest txn action (the exactly-once handshake)
+        "txns": state["txns"],
+        # whole add / metaData actions (what a checkpoint serialises)
+        "adds": adds,
+        "metadata": md,
     }
+    _validate_crc(table, snap)
+    return snap
 
 
 def _mapping_mode(snap: dict) -> str:
@@ -1611,40 +1578,36 @@ def streaming_sink(
     return write_batch
 
 
+def _latest_snapshot(table: str) -> dict | None:
+    """``snapshot(table)``, or None for a table that does not exist yet
+    (no log directory, or one holding no commit) — the create case of
+    the verbs that may create their table."""
+    try:
+        return snapshot(table)
+    except DeltaCorruptLogError:
+        if is_delta_table(table) and _list_commit_versions(table):
+            raise
+        return None
+
+
+def _txn_version(snap: dict | None, app_id: str) -> int:
+    t = None if snap is None else snap["txns"].get(app_id)
+    return -1 if t is None else t["version"]
+
+
 def last_txn_version(table: str, app_id: str) -> int:
     """Highest ``txn`` action version committed for ``app_id`` (-1 if
-    none) — Delta's exactly-once handshake for streaming sinks: a
-    restarted writer checks this before re-appending an epoch. Scans
-    the retained JSON log PLUS the newest checkpoint's ``txn`` rows
-    when the JSON no longer starts at 0 (``cleanup_log`` / a foreign
-    table's metadata retention truncated it) — without the checkpoint
-    fallback, truncating the log would amnesia the handshake and a
-    replayed epoch would double-append."""
+    none, or if ``table`` is not a Delta table) — Delta's exactly-once
+    handshake for streaming sinks: a restarted writer checks this
+    before re-appending an epoch. A lookup in the latest snapshot's
+    ``txns``: replay folds ``txn`` actions like every other action, so
+    txns carried by the newest checkpoint or a compacted range survive
+    ``cleanup_log`` truncating the JSON commits that first held them
+    (without that, truncating the log would amnesia the handshake and
+    a replayed epoch would double-append)."""
     if not is_delta_table(table):
         return -1
-    latest = -1
-    versions = _list_commit_versions(table)
-    if versions and versions[0] != 0:
-        ckpt = _checkpoint_version(table, None)
-        if ckpt is not None:
-            for path in _checkpoint_files(table, ckpt):
-                for row in _checkpoint_rows(path):
-                    t = row.get("txn")
-                    if t and t.get("appId") == app_id:
-                        # version 0 is a legitimate epoch — no falsy `or`
-                        tv = t.get("version")
-                        latest = max(latest, -1 if tv is None else int(tv))
-    for v in _list_commit_versions(table):
-        with open(_commit_path(table, v)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                txn = action.get("txn")
-                if txn and txn.get("appId") == app_id:
-                    latest = max(latest, txn.get("version", -1))
-    return latest
+    return _txn_version(_latest_snapshot(table), app_id)
 
 
 def table_column_defaults(schema_json: str) -> dict[str, str]:
@@ -1843,17 +1806,19 @@ def merge_schemas(
 
 
 def _txn_actions(
-    table: str, txn: tuple[str, int] | None
+    snap: dict | None, txn: tuple[str, int] | None
 ) -> list[dict] | None:
     """Delta's exactly-once handshake for a commit keyed ``txn=(app_id,
-    epoch)``, shared by every verb that takes one: None when the log
-    already holds a ``txn`` action for this app at >= epoch (the caller
-    no-ops and returns -1 — a replayed epoch after a crash), else the
-    actions the commit must carry so data and progress publish
-    atomically (the ``txn`` action; nothing without a key)."""
+    epoch)``, shared by every verb that takes one and read from the
+    snapshot the verb already holds (None: the table is being
+    created): None when that snapshot already holds a ``txn`` action
+    for this app at >= epoch (the caller no-ops and returns -1 — a
+    replayed epoch after a crash), else the actions the commit must
+    carry so data and progress publish atomically (the ``txn`` action;
+    nothing without a key)."""
     if txn is None:
         return []
-    if last_txn_version(table, txn[0]) >= txn[1]:
+    if _txn_version(snap, txn[0]) >= txn[1]:
         return None
     return [
         {"txn": {"appId": txn[0], "version": txn[1],
@@ -1925,13 +1890,13 @@ def append_delta(
     clustering and hive partitioning are mutually exclusive) and
     additionally refuses on an EXISTING table, where the ALTER verb is
     the correct surface."""
-    txn_actions = _txn_actions(table, txn)
+    snap0 = _latest_snapshot(table)
+    txn_actions = _txn_actions(snap0, txn)
     if txn_actions is None:
         return -1
     partition_by = list(partition_by or [])
     os.makedirs(_log_dir(table), exist_ok=True)
-    versions = _list_commit_versions(table)
-    version = (versions[-1] + 1) if versions else 0
+    version = 0 if snap0 is None else snap0["version"] + 1
     created_identity: tuple | None = None
     if identity is not None:
         if version > 0:
@@ -1987,7 +1952,6 @@ def append_delta(
     mapping_mode = "none"
     mapped_schema_json: str | None = None
     if version > 0:
-        snap0 = snapshot(table)
         _check_writer_protocol(snap0, "append", identity_ok=True)
         evolved_meta_id = snap0.get("meta_id")
         evolved_config = dict(snap0.get("configuration") or {})
@@ -2298,6 +2262,9 @@ def append_delta(
     # commit itself) refuses instead of retrying. A rowTracking table
     # re-assigns its row ids against the fresh snapshot (the winner may
     # have advanced the high-water mark — a blind replay would collide).
+    # A txn-keyed append re-runs the handshake against that snapshot: if
+    # the winner was another attempt of this same epoch, this one is a
+    # replay and no-ops (its promoted files are left for VACUUM).
     for _attempt in range(5):
         try:
             _publish_commit(table, version, actions)
@@ -2305,11 +2272,12 @@ def append_delta(
         except ConcurrentDeltaCommitError:
             if version == 0 or evolved_schema_json is not None:
                 raise  # concurrent CREATE / schema change: not commuting
-            version = _rebase_append(table, version, partition_by)
+            cur = _rebase_append(table, version, partition_by)
+            if _txn_actions(cur, txn) is None:
+                return -1
+            version = cur["version"] + 1
             actions = actions_for_retry(_strip_row_tracking(actions))
-            actions = _stamp_row_tracking(
-                snapshot(table), version, actions
-            )
+            actions = _stamp_row_tracking(cur, version, actions)
     _publish_commit(table, version, actions)  # final attempt propagates
     return version
 
@@ -2863,10 +2831,13 @@ def actions_for_retry(actions: list[dict]) -> list[dict]:
     return out
 
 
-def _rebase_append(table: str, lost_version: int, partition_by: list[str]) -> int:
-    """Find the next free commit slot after losing a version race, and
-    verify every commit that won in between commutes with a blind
-    append (no schema/partitioning/mapping change)."""
+def _rebase_append(
+    table: str, lost_version: int, partition_by: list[str]
+) -> dict:
+    """The fresh head snapshot after losing a version race (the retry
+    commits at its version + 1), once every commit that won in between
+    is verified to commute with a blind append (no schema/partitioning/
+    mapping change)."""
     pre = snapshot(table, lost_version - 1) if lost_version > 0 else None
     cur = snapshot(table)
     if pre is not None and (
@@ -2894,7 +2865,7 @@ def _rebase_append(table: str, lost_version: int, partition_by: list[str]) -> in
             "append lost its version race and the winner changed "
             "partitioning; not retryable"
         )
-    return cur["version"] + 1
+    return cur
 
 
 def _file_stats(path: str) -> str | None:
@@ -3161,29 +3132,31 @@ def _publish_commit(table: str, version: int, actions: list[dict]) -> None:
         ) from None
     finally:
         os.unlink(tmp)
+    # one replay of the published version feeds both the cadence
+    # checkpoint and the checksum
+    snap = snapshot(table, version=version)
     if version > 0 and version % _CHECKPOINT_INTERVAL == 0:
-        _write_checkpoint(table, version)
-    _write_crc(table, version)
+        _write_checkpoint(table, snap)
+    _write_crc(table, snap)
 
 
 def _crc_path(table: str, version: int) -> str:
     return os.path.join(table, "_delta_log", f"{version:020d}.crc")
 
 
-def _write_crc(table: str, version: int) -> None:
+def _write_crc(table: str, snap: dict) -> None:
     """Per-commit VERSION.checksum (``<version>.crc``, one JSON line —
     delta-spark's VersionChecksum): live table size and file count plus
     a protocol/metadata echo, written after every successful publish.
     The reference's tables carry the same file via delta-spark's writer
     (the Delta ACID surface, collector.py:219-226). Readers validate
     opportunistically (``snapshot``) and refuse loudly on mismatch —
-    the state-corruption tripwire delta-spark uses. Computation replays
-    the just-published version (checkpoint-seeded, so O(interval), not
-    O(version)); ``metadata`` is the reconstructed metaData echo (id,
-    schema, partitioning, configuration — the validated surface)."""
-    snap = snapshot(table, version=version)
-    if snap["version"] != version:  # pragma: no cover - defensive
-        return
+    the state-corruption tripwire delta-spark uses. ``snap`` is the
+    replay of the just-published version (checkpoint-seeded, so
+    O(interval), not O(version)); ``metadata`` is the reconstructed
+    metaData echo (id, schema, partitioning, configuration — the
+    validated surface)."""
+    version = snap["version"]
     sizes = [s for s in snap["file_sizes"].values() if s is not None]
     crc = {
         "tableSizeBytes": int(sum(sizes)),
@@ -3209,7 +3182,7 @@ def _write_crc(table: str, version: int) -> None:
     os.replace(tmp, _crc_path(table, version))
 
 
-def _validate_crc(table: str, version: int, state: dict) -> None:
+def _validate_crc(table: str, snap: dict) -> None:
     """Opportunistic VERSION.checksum validation: when ``<version>.crc``
     exists, the reconstructed live-set count/size and metadata id must
     agree — a mismatch means the log and the writer's recorded state
@@ -3217,7 +3190,8 @@ def _validate_crc(table: str, version: int, state: dict) -> None:
     loudly rather than serve a silently-wrong snapshot. Absent or
     unparseable checksum files never block a read (foreign tables may
     not write them)."""
-    if version is None or version < 0:
+    version = snap["version"]
+    if version < 0:
         return
     path = _crc_path(table, version)
     try:
@@ -3228,13 +3202,13 @@ def _validate_crc(table: str, version: int, state: dict) -> None:
     if not isinstance(crc, dict):
         return
     n = crc.get("numFiles")
-    if n is not None and int(n) != len(state["files"]):
+    if n is not None and int(n) != len(snap["files"]):
         raise DeltaCorruptLogError(
             f"checksum mismatch at version {version}: numFiles {n} "
-            f"!= reconstructed {len(state['files'])}"
+            f"!= reconstructed {len(snap['files'])}"
         )
     ts = crc.get("tableSizeBytes")
-    sizes = list(state["sizes"].values())
+    sizes = list(snap["file_sizes"].values())
     if ts is not None and all(s is not None for s in sizes):
         total = int(sum(sizes))
         if int(ts) != total:
@@ -3245,122 +3219,41 @@ def _validate_crc(table: str, version: int, state: dict) -> None:
     mid = (crc.get("metadata") or {}).get("id")
     if (
         mid is not None
-        and state["meta_id"] is not None
-        and mid != state["meta_id"]
+        and snap["meta_id"] is not None
+        and mid != snap["meta_id"]
     ):
         raise DeltaCorruptLogError(
             f"checksum mismatch at version {version}: metadata id "
-            f"{mid!r} != reconstructed {state['meta_id']!r}"
+            f"{mid!r} != reconstructed {snap['meta_id']!r}"
         )
 
 
-def _write_checkpoint(table: str, version: int) -> None:
-    """Write a protocol-shaped parquet checkpoint at ``version``
-    (single-file up to ``_CHECKPOINT_PART_ACTIONS`` actions,
-    delta-spark's multi-part ``{v}.checkpoint.{i}.{n}.parquet`` form
-    above) plus the ``_last_checkpoint`` pointer — the standard
-    Delta cadence delta-rs follows (the reference's collector inherits
-    it via ``deltalake``, collector.py:219-226). The checkpoint is
-    net-of-log state: protocol + metaData + one ``add`` row per LIVE
-    file + the latest ``txn`` row per appId. Replay for the state is
-    O(tail) once every ``_CHECKPOINT_INTERVAL`` commits — the state is
-    seeded from the NEWEST PRIOR CHECKPOINT when one exists, then only
-    the JSON tail replays (on a long-lived table that is the
-    difference between reading ~10 JSON files and every commit since
-    0; it is also what keeps checkpointing alive after ``cleanup_log``
-    aged the early JSON out — without the seed, the first cadence
-    checkpoint after a cleanup would crash on the missing commits).
-    Every subsequent ``snapshot()`` reads the checkpoint + the JSON
-    tail only (``_replay_checkpoint``, ``_checkpoint_version``).
-    Checkpointing is an optimization of the log, never a mutation of
-    it: retained JSON commits stay, so time travel into the retained
-    window keeps working."""
+def _write_checkpoint(table: str, snap: dict) -> None:
+    """Write a protocol-shaped parquet checkpoint of ``snap`` (a
+    :func:`snapshot` of the version to checkpoint; single-file up to
+    ``_CHECKPOINT_PART_ACTIONS`` actions, delta-spark's multi-part
+    ``{v}.checkpoint.{i}.{n}.parquet`` form above) plus the
+    ``_last_checkpoint`` pointer — the standard Delta cadence delta-rs
+    follows (the reference's collector inherits it via ``deltalake``,
+    collector.py:219-226). The checkpoint is net-of-log state, and
+    this function only serialises it: protocol + metaData + one ``add``
+    row per LIVE file + the latest ``txn`` row per appId + the live
+    domains. Because the snapshot was itself seeded from the newest
+    prior checkpoint plus the JSON tail, checkpointing stays alive
+    after ``cleanup_log`` aged the early JSON out. Every subsequent
+    ``snapshot()`` reads the checkpoint + the JSON tail only
+    (``_replay_checkpoint``, ``_checkpoint_version``). Checkpointing is
+    an optimization of the log, never a mutation of it: retained JSON
+    commits stay, so time travel into the retained window keeps
+    working."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    protocol: dict | None = None
-    meta: dict | None = None
-    adds: dict[str, dict] = {}
-    txns: dict[str, dict] = {}
-    domains: dict[str, str | None] = {}
-    start = 0
-    prior = _checkpoint_version(table, version)
-    if prior is not None and prior <= version:
-        # prior == version re-emits the same state (explicit
-        # checkpoint_delta at an already-checkpointed version after a
-        # cleanup must not crash replaying vanished commits)
-        rows = _checkpoint_action_rows(table, prior)
-        for row in rows:
-            p = row.get("protocol")
-            if p and p.get("minReaderVersion") is not None:
-                protocol = {k: v for k, v in p.items() if v is not None}
-            md = row.get("metaData")
-            if md and md.get("schemaString"):
-                cfg = md.get("configuration")
-                if isinstance(cfg, list):
-                    cfg = dict(cfg)
-                meta = dict(md, configuration=cfg or {},
-                            partitionColumns=md.get("partitionColumns")
-                            or [])
-            add = row.get("add")
-            if add and add.get("path"):
-                pv = add.get("partitionValues")
-                if isinstance(pv, list):
-                    pv = dict(pv)
-                dv = add.get("deletionVector")
-                if dv and not dv.get("storageType"):
-                    dv = None  # pyarrow all-None struct = absent
-                adds[add["path"]] = dict(
-                    add, partitionValues=pv or {}, deletionVector=dv
-                )
-            t = row.get("txn")
-            if t and t.get("appId"):
-                # normalize a null version to -1 ONCE here, so the tail
-                # loop's >= compare never meets None (and epoch 0 is
-                # never swallowed by a falsy `or`)
-                tv = t.get("version")
-                t = dict(t, version=-1 if tv is None else int(tv))
-                prev = txns.get(t["appId"])
-                if prev is None or t["version"] >= prev["version"]:
-                    txns[t["appId"]] = t
-            dm = row.get("domainMetadata")
-            if dm and dm.get("domain"):
-                domains[dm["domain"]] = dm.get("configuration")
-        start = prior + 1
-    for v in range(start, version + 1):
-        with open(_commit_path(table, v)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    protocol = action["protocol"]
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "add" in action:
-                    adds[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    adds.pop(action["remove"]["path"], None)
-                elif "txn" in action:
-                    t = action["txn"]
-                    tv = t.get("version")
-                    t = dict(t, version=-1 if tv is None else int(tv))
-                    prev = txns.get(t["appId"])
-                    if prev is None or t["version"] >= (
-                        -1 if prev.get("version") is None
-                        else prev["version"]
-                    ):
-                        txns[t["appId"]] = t
-                elif "domainMetadata" in action:
-                    dm = action["domainMetadata"]
-                    if dm.get("removed"):
-                        domains.pop(dm.get("domain"), None)
-                    elif dm.get("domain"):
-                        domains[dm["domain"]] = dm.get("configuration")
-    if protocol is None or meta is None:
+    version = snap["version"]
+    protocol, meta = snap["protocol"], snap["metadata"]
+    if not protocol:
         raise DeltaCorruptLogError(
-            f"{table}: cannot checkpoint without protocol/metaData actions"
+            f"{table}: cannot checkpoint without a protocol action"
         )
 
     pv_type = pa.map_(pa.string(), pa.string())
@@ -3468,17 +3361,17 @@ def _write_checkpoint(table: str, version: int) -> None:
             }
         },
     ]
-    for t in txns.values():
+    for t in snap["txns"].values():
         rows.append(
             {
                 "txn": {
-                    "appId": t["appId"],
-                    "version": t.get("version", 0),
+                    "appId": t.get("appId"),
+                    "version": t["version"],
                     "lastUpdated": t.get("lastUpdated"),
                 }
             }
         )
-    for dom, cfg in sorted(domains.items()):
+    for dom, cfg in sorted(snap["domain_metadata"].items()):
         # live domains only — a removed domain simply has no row, the
         # net-of-log shape adds already use
         rows.append(
@@ -3490,7 +3383,7 @@ def _write_checkpoint(table: str, version: int) -> None:
                 }
             }
         )
-    for add in adds.values():
+    for add in snap["adds"].values():
         dv = add.get("deletionVector")
         rows.append(
             {
@@ -3522,8 +3415,8 @@ def _write_checkpoint(table: str, version: int) -> None:
             }
         )
     ptr_extra: dict = {}
-    feats = set((protocol or {}).get("readerFeatures") or []) | set(
-        (protocol or {}).get("writerFeatures") or []
+    feats = set(protocol.get("readerFeatures") or []) | set(
+        protocol.get("writerFeatures") or []
     )
     if "v2Checkpoint" in feats:
         # the feature OBLIGES writers to emit the V2 form — a classic
@@ -3750,7 +3643,7 @@ def checkpoint_delta(table: str) -> int:
     checkpointed version."""
     snap = snapshot(table)
     _check_writer_protocol(snap, "checkpoint", identity_ok=True)
-    _write_checkpoint(table, snap["version"])
+    _write_checkpoint(table, snap)
     return snap["version"]
 
 
@@ -4505,10 +4398,10 @@ def merge_delta(
     ``streaming.ingest.cdc_upsert_writer``)."""
     import pyspark.sql.functions as F
 
-    txn_actions = _txn_actions(table, txn)
+    snap = snapshot(table)
+    txn_actions = _txn_actions(snap, txn)
     if txn_actions is None:
         return -1
-    snap = snapshot(table)
     # identity_ok: MERGE maintains identity columns correctly below —
     # matched rows KEEP the target's minted value, unmatched rows take
     # the next contiguous range and the high-water mark advances in
@@ -5808,10 +5701,10 @@ def overwrite_delta(
     sink, ``streaming.ingest.run_windowed_stream``)."""
     import pyspark.sql.functions as F
 
-    txn_actions = _txn_actions(table, txn)
+    snap = snapshot(table)
+    txn_actions = _txn_actions(snap, txn)
     if txn_actions is None:
         return -1
-    snap = snapshot(table)
     _check_writer_protocol(snap, "WRITE (overwrite)", removes_data=True)
     change_data = change_data or _cdf_obligated(snap)
     # rowTracking: an overwrite REPLACES rows — replaced partitions'/
@@ -7039,20 +6932,15 @@ def read_delta_changes(
         cdc_paths: list[str] = []
         add_paths: list[str] = []
         data_removes = False
-        with open(_commit_path(table, v)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "cdc" in action:
-                    cdc_paths.append(unquote(action["cdc"]["path"]))
-                elif "add" in action and action["add"].get("dataChange", True):
-                    add_paths.append(unquote(action["add"]["path"]))
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    data_removes = True
+        for action in _log_actions(_commit_path(table, v)):
+            if "cdc" in action:
+                cdc_paths.append(unquote(action["cdc"]["path"]))
+            elif "add" in action and action["add"].get("dataChange", True):
+                add_paths.append(unquote(action["add"]["path"]))
+            elif "remove" in action and action["remove"].get(
+                "dataChange", True
+            ):
+                data_removes = True
         if cdc_paths:
             # Change files of a partitioned table live in hive dirs
             # under _change_data/ and carry only the non-partition
@@ -7334,27 +7222,22 @@ def follow_delta_appends(
             for v in versions:
                 adds: list[tuple[str, int]] = []
                 changed_removes = False
-                with open(_commit_path(table, v)) as f:
-                    for line in f:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        action = json.loads(line)
-                        if "add" in action and action["add"].get(
-                            "dataChange", True
-                        ):
-                            # paths are URL-encoded in the log (spec);
-                            # hive dirs live decoded on disk
-                            adds.append(
-                                (
-                                    unquote(action["add"]["path"]),
-                                    int(action["add"].get("size", 0)),
-                                )
+                for action in _log_actions(_commit_path(table, v)):
+                    if "add" in action and action["add"].get(
+                        "dataChange", True
+                    ):
+                        # paths are URL-encoded in the log (spec); hive
+                        # dirs live decoded on disk
+                        adds.append(
+                            (
+                                unquote(action["add"]["path"]),
+                                int(action["add"].get("size", 0)),
                             )
-                        if "remove" in action and action["remove"].get(
-                            "dataChange", True
-                        ):
-                            changed_removes = True
+                        )
+                    if "remove" in action and action["remove"].get(
+                        "dataChange", True
+                    ):
+                        changed_removes = True
                 if changed_removes:
                     if on_data_change == "error":
                         raise DeltaProtocolError(
@@ -7458,8 +7341,9 @@ def vacuum_delta(
     # (a vacuum that ignores an unknown feature could delete files the
     # feature makes load-bearing); running it unconditionally is
     # correct for non-feature tables too
-    _check_writer_protocol(snapshot(table), "VACUUM", identity_ok=True)
-    latest = snapshot(table)["version"]
+    head = snapshot(table)
+    _check_writer_protocol(head, "VACUUM", identity_ok=True)
+    latest = head["version"]
     referenced: set[str] = set()
     retained_from = max(0, latest - keep_versions)
     from acero_delta_lake_streaming_spark.storage import dvcodec
@@ -7481,20 +7365,13 @@ def vacuum_delta(
         # for retained versions or this walk would delete the CDF of
         # fully-retained merge commits.
         try:
-            with open(_commit_path(table, v)) as f:
-                for line in f:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    action = json.loads(line)
-                    if "cdc" in action:
-                        referenced.add(
-                            os.path.abspath(
-                                os.path.join(
-                                    table, unquote(action["cdc"]["path"])
-                                )
-                            )
+            for action in _log_actions(_commit_path(table, v)):
+                if "cdc" in action:
+                    referenced.add(
+                        os.path.abspath(
+                            os.path.join(table, unquote(action["cdc"]["path"]))
                         )
+                    )
         except FileNotFoundError:
             continue
     now = time.time()
@@ -7553,16 +7430,9 @@ def cleanup_log(table: str, keep_versions: int = 0) -> list[str]:
             "delta.requireCheckpointProtectionBeforeVersion", 0
         )
     )
-    # newest checkpoint at or below the retention floor: versions < it
-    # are reconstructable from it, so their JSON may go
-    ckpt = None
-    for v in range(floor, -1, -1):
-        try:
-            if _checkpoint_files(table, v):
-                ckpt = v
-                break
-        except DeltaCorruptLogError:
-            continue  # incomplete part set from a crashed publish
+    # newest usable checkpoint at or below the retention floor:
+    # versions < it are reconstructable from it, so their JSON may go
+    ckpt = _checkpoint_version(table, floor)
     if ckpt is None:
         return []
     if ckpt < protect_before:
@@ -7621,27 +7491,20 @@ def compact_log_range(table: str, start: int, end: int) -> str:
     domains: dict[str, dict] = {}
     last_file: dict[str, dict] = {}
     for v in range(start, end + 1):
-        with open(_commit_path(table, v)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    proto = action
-                elif "metaData" in action:
-                    meta = action
-                elif "add" in action:
-                    last_file[unquote(action["add"]["path"])] = action
-                elif "remove" in action:
-                    last_file[unquote(action["remove"]["path"])] = action
-                elif "txn" in action:
-                    txns[action["txn"].get("appId", "")] = action
-                elif "domainMetadata" in action:
-                    domains[action["domainMetadata"].get("domain", "")] = (
-                        action
-                    )
-                # commitInfo / cdc: per-commit history, never compacted
+        for action in _log_actions(_commit_path(table, v)):
+            if "protocol" in action:
+                proto = action
+            elif "metaData" in action:
+                meta = action
+            elif "add" in action:
+                last_file[unquote(action["add"]["path"])] = action
+            elif "remove" in action:
+                last_file[unquote(action["remove"]["path"])] = action
+            elif "txn" in action:
+                txns[action["txn"].get("appId", "")] = action
+            elif "domainMetadata" in action:
+                domains[action["domainMetadata"].get("domain", "")] = action
+            # commitInfo / cdc: per-commit history, never compacted
     actions = (
         ([proto] if proto else [])
         + ([meta] if meta else [])

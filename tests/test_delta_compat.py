@@ -4032,7 +4032,10 @@ def test_txn_handshake_survives_log_cleanup(spark, tmp_path):
     """The exactly-once txn handshake must survive cleanup_log: after
     metadata retention truncates the JSON commits carrying an app's txn
     actions, last_txn_version resolves them from the checkpoint and a
-    replayed epoch stays a no-op instead of double-appending."""
+    replayed epoch stays a no-op instead of double-appending. A second
+    app's txns live in commits that compact_log_range folded into a
+    compacted range, so they reach the handshake through snapshot's
+    range substitution."""
     import pyspark.sql.functions as F
 
     table = str(tmp_path / "txn_clog")
@@ -4046,17 +4049,29 @@ def test_txn_handshake_survives_log_cleanup(spark, tmp_path):
             table, txn=("app", epoch),
         )
         epoch += 1
-    n = dc.read_delta(spark, table).count()
     last_epoch = epoch - 1
+    first_b = v + 1
+    for b_epoch in (0, 1):  # the second app's commits: v12 and v13
+        v = dc.append_delta(
+            spark.range(100 + b_epoch, 101 + b_epoch).select(
+                F.col("id").alias("k")
+            ),
+            table, txn=("app_b", b_epoch),
+        )
+    dc.compact_log_range(table, first_b, v)
+    n = dc.read_delta(spark, table).count()
     assert dc.last_txn_version(table, "app") == last_epoch
+    assert dc.last_txn_version(table, "app_b") == 1
     deleted = dc.cleanup_log(table, keep_versions=0)
     assert deleted  # the pre-checkpoint commits (with txn rows) are gone
     assert dc.last_txn_version(table, "app") == last_epoch
-    # replaying an old epoch is still a no-op
-    assert dc.append_delta(
-        spark.range(2).select(F.col("id").alias("k")),
-        table, txn=("app", 3),
-    ) == -1
+    assert dc.last_txn_version(table, "app_b") == 1
+    # replaying an old epoch of either app is still a no-op
+    for app, old_epoch in (("app", 3), ("app_b", 1), ("app_b", 0)):
+        assert dc.append_delta(
+            spark.range(2).select(F.col("id").alias("k")),
+            table, txn=(app, old_epoch),
+        ) == -1
     assert dc.read_delta(spark, table).count() == n
 
 
@@ -7334,6 +7349,77 @@ def test_merge_delta_txn_replay_and_race_abort(spark, tmp_path, monkeypatch):
             spark, table,
             spark.createDataFrame([(2, "b")], ddl), ["id"],
         )
+
+
+def test_append_txn_race_loser_is_replay_noop(spark, tmp_path, monkeypatch):
+    """Two attempts of the same epoch race for one version: the loser
+    rebases, finds the winner already committed its (app_id, epoch),
+    and no-ops with -1 like any replay — the table holds the epoch's
+    rows once and only one commit carries its txn."""
+    table = str(tmp_path / "append_txn_race")
+    ddl = "id long"
+    dc.append_delta(spark.createDataFrame([(0,)], ddl), table, txn=("app", 0))
+
+    orig = dc._publish_commit
+    raced = {"done": False}
+
+    def race(table_, version, actions):
+        if not raced["done"]:
+            raced["done"] = True
+            # the other attempt of epoch 1 claims the slot first
+            assert dc.append_delta(
+                spark.createDataFrame([(1,)], ddl), table, txn=("app", 1)
+            ) == version
+        orig(table_, version, actions)
+
+    monkeypatch.setattr(dc, "_publish_commit", race)
+    assert dc.append_delta(
+        spark.createDataFrame([(1,)], ddl), table, txn=("app", 1)
+    ) == -1
+    assert raced["done"]
+    assert sorted(r.id for r in dc.read_delta(spark, table).collect()) == [
+        0, 1,
+    ]
+    assert dc._list_commit_versions(table) == [0, 1]
+    assert dc.last_txn_version(table, "app") == 1
+
+
+def test_txn_append_commit_reads_bounded(spark, tmp_path, monkeypatch):
+    """A txn-keyed append reads a bounded number of commit files: the
+    handshake, the version and the post-publish checksum/checkpoint all
+    come from checkpoint-plus-tail replays, so the count at version 95
+    equals the count at version 15 instead of growing with the log."""
+    import re
+
+    monkeypatch.setattr(dc, "_CHECKPOINT_INTERVAL", 10)
+    table = str(tmp_path / "txn_reads")
+    ddl = "id long"
+    dc.append_delta(spark.createDataFrame([(0,)], ddl), table, txn=("app", 0))
+    commit_re = re.compile(r"\d{20}\.json$")
+    opened: list[str] = []
+
+    def counting_open(path, *args, **kwargs):
+        if commit_re.search(os.path.basename(str(path))):
+            opened.append(str(path))
+        return open(path, *args, **kwargs)
+
+    def opens_for_txn_append_at(target: int, epoch: int) -> int:
+        # metadata-only commits bring the log to target - 1 cheaply
+        for v in range(dc.snapshot(table)["version"] + 1, target):
+            dc._publish_commit(table, v, [{"commitInfo": {"operation": "WRITE"}}])
+        monkeypatch.setattr(dc, "open", counting_open, raising=False)
+        opened.clear()
+        got = dc.append_delta(
+            spark.createDataFrame([(epoch,)], ddl), table, txn=("app", epoch)
+        )
+        monkeypatch.delattr(dc, "open")
+        assert got == target
+        return len(opened)
+
+    at_15 = opens_for_txn_append_at(15, 1)
+    at_95 = opens_for_txn_append_at(95, 2)
+    assert at_15 == at_95 <= 2 * (dc._CHECKPOINT_INTERVAL + 1), (at_15, at_95)
+    assert dc.last_txn_version(table, "app") == 2
 
 
 def test_overwrite_delta_txn_replay_is_noop(spark, tmp_path):
