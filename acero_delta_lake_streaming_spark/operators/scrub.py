@@ -204,21 +204,15 @@ def _x44_dirty(cast_str: str) -> str:
 _CC_PAT = "[0-9]{16}"
 
 
-def _x44_select(cast_str: str, extract: str) -> str:
-    """The shared detection/validation/redaction projection: count
-    candidates, Luhn-validate the doc's candidate, redact only when it
-    validates. ``extract`` is the engine's regexp_extract call for
-    group 0."""
+def _x44_select(extract: str) -> str:
+    """The shared Luhn validation of a doc's candidate (1 when it
+    validates, else 0) — both engines redact only when it does.
+    ``extract`` is the engine's regexp_extract call for group 0."""
     cand = f"nullif({extract}, '')"
-    valid = (
+    return (
         f"CASE WHEN {cand} IS NOT NULL "
         f"AND ({_luhn_sum(cand, 16)}) % 10 = 0 THEN 1 ELSE 0 END"
     )
-    red = (
-        f"CASE WHEN ({valid}) = 1 THEN "
-        f"regexp_replace(dirty, '{_CC_PAT}', '[CARD]'"
-    )
-    return valid, red
 
 
 def x44_luhn_card_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,7 +225,7 @@ def x44_luhn_card_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dirty = docs.withColumn("dirty", F.expr(_x44_dirty("STRING")))
     extract = f"regexp_extract(dirty, '{_CC_PAT}', 0)"
-    valid, _ = _x44_select("STRING", extract)
+    valid = _x44_select(extract)
     redacted = (
         f"CASE WHEN ({valid}) = 1 THEN "
         f"regexp_replace(dirty, '{_CC_PAT}', '[CARD]') ELSE dirty END"
@@ -253,7 +247,7 @@ def x44_luhn_card_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _x44_sql() -> str:
     extract = f"regexp_extract(dirty, '{_CC_PAT}', 0)"
-    valid, _ = _x44_select("VARCHAR", extract)
+    valid = _x44_select(extract)
     redacted = (
         f"CASE WHEN ({valid}) = 1 THEN "
         f"regexp_replace(dirty, '{_CC_PAT}', '[CARD]', 'g') "

@@ -29,7 +29,16 @@ in for the commits it covers), and ``_apply_action`` is the one fold
 that turns those actions into table state — live files, protocol,
 metaData, domains and the ``txn`` ledger. Every consumer (the txn
 handshake, the checkpoint writer, the per-commit checksum) reads that
-state instead of re-reading the log. The data path is an ordinary
+state instead of re-reading the log.
+
+Commits have one builder, the write-side twin of that fold: a verb
+decides what changes and hands its actions to ``_commit``, which puts
+the one ``commitInfo`` FIRST (stamping in-commit timestamps) and
+publishes. ``_protocol_with`` (the table-features upgrade rule),
+``_metadata_action`` (table id, format and partitioning carried
+forward) and ``_remove_actions`` lay out the actions verbs share, and
+``_write_staged`` is the one staged data write. A new commit field is
+one edit there, never a per-verb dict. The data path is an ordinary
 distributed parquet scan with the log-derived file list, so filters
 and column pruning push down exactly as on raw parquet. On a
 real object store the ``os.link`` publish becomes a conditional put —
@@ -1203,52 +1212,15 @@ def declare_generated_column(table: str, column: str, expression: str) -> int:
             meta = dict(f.get("metadata") or {})
             meta["delta.generationExpression"] = expression
             f["metadata"] = meta
-    p = snap.get("protocol") or {}
-    w = p.get("minWriterVersion", 2)
-    feats = set(p.get("writerFeatures") or [])
-    if w < 7 and not feats:
-        feats = _legacy_writer_features(w)
-    feats |= {"generatedColumns"}
     now_ms = int(time.time() * 1000)
-    version = snap["version"] + 1
     actions = [
-        {
-            "protocol": {
-                "minReaderVersion": p.get("minReaderVersion", 1),
-                "minWriterVersion": 7,
-                **(
-                    {"readerFeatures": sorted(
-                        set(p.get("readerFeatures") or [])
-                    )}
-                    if p.get("minReaderVersion", 1) >= 3
-                    else {}
-                ),
-                "writerFeatures": sorted(feats),
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(sch),
-                "partitionColumns": snap["partition_cols"],
-                "configuration": dict(snap.get("configuration") or {}),
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "ALTER TABLE",
-                "operationParameters": {
-                    "generatedColumn": column,
-                    "expression": expression,
-                },
-            }
-        },
+        _protocol_with(snap, writer={"generatedColumns"}),
+        _metadata_action(snap, now_ms, schema=json.dumps(sch)),
     ]
-    _publish_commit(table, version, actions)
-    return version
+    return _commit(
+        table, snap["version"] + 1, actions, "ALTER TABLE",
+        {"generatedColumn": column, "expression": expression}, now_ms,
+    )
 
 
 def read_delta(
@@ -1947,13 +1919,11 @@ def append_delta(
                 "the created schema"
             )
     evolved_schema_json: str | None = None
-    evolved_meta_id: str | None = None
     evolved_config: dict | None = None
     mapping_mode = "none"
     mapped_schema_json: str | None = None
     if version > 0:
         _check_writer_protocol(snap0, "append", identity_ok=True)
-        evolved_meta_id = snap0.get("meta_id")
         evolved_config = dict(snap0.get("configuration") or {})
         mapping_mode = _mapping_mode(snap0)
         if mapping_mode not in ("none", "name", "id"):
@@ -2104,24 +2074,20 @@ def append_delta(
         # generated columns: new rows must equal their expressions
         _enforce_generated(df, table_generated_columns(snap0))
 
-    if mapping_mode != "none":
-        # the data files of a mapped table carry PHYSICAL column names
-        # (and the mapping id as parquet field id, so id-mode readers
-        # resolve too); everything above — schema checks, constraints,
-        # generated columns — ran on logical names, the user's surface.
-        # id mode additionally pins each written name to the live
-        # footers' id→name binding (drift-safe append)
-        _pof, _ids = _mapped_write_plan(snap0, mapped_schema_json)
-        df = _to_physical(
-            df, mapped_schema_json, phys_of=_pof, attach_ids=_ids
-        )
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    adds = _promote_staged(table, staging, version, partition_by, True)
+    # the data files of a mapped table carry PHYSICAL column names (and
+    # the mapping id as parquet field id, so id-mode readers resolve
+    # too); everything above — schema checks, constraints, generated
+    # columns — ran on logical names, the user's surface. id mode
+    # additionally pins each written name to the live footers' id→name
+    # binding (drift-safe append)
+    adds = _write_staged(
+        table,
+        _physical_for(snap0, df, schema_json=mapped_schema_json),
+        version,
+        partition_by,
+    )
 
+    now_ms = int(time.time() * 1000)
     actions: list[dict] = []
     if version == 0:
         create_schema = df.schema.json()
@@ -2143,62 +2109,41 @@ def append_delta(
             proto_w = 6  # identity columns: legacy writer version 6
         has_variant = _schema_has_variant(create_schema)
         has_coll = _schema_has_collations(create_schema)
-        if has_variant or has_coll:
-            # TABLE FEATURES minted from the created schema, the
-            # spec's requirement (delta-spark does the same on CREATE):
-            # variantType needs the reader-3/writer-7 pair; collations
-            # is writer-only (readers without it ignore the metadata)
-            if created_identity is not None:
-                raise DeltaProtocolError(
-                    "creating a table with identity columns plus "
-                    "variant/collated columns is not supported"
-                )
-            wfeats = (["variantType"] if has_variant else []) + (
-                ["collations"] if has_coll else []
+        if (has_variant or has_coll) and created_identity is not None:
+            raise DeltaProtocolError(
+                "creating a table with identity columns plus "
+                "variant/collated columns is not supported"
             )
-            if cluster_by is not None:
-                wfeats = sorted(
-                    set(wfeats) | {"clustering", "domainMetadata"}
-                )
-            proto: dict = {
-                "minReaderVersion": 3 if has_variant else 1,
-                "minWriterVersion": 7,
-                "writerFeatures": wfeats,
-            }
-            if has_variant:
-                proto["readerFeatures"] = ["variantType"]
-            actions.append({"protocol": proto})
-        elif cluster_by is not None:
-            # CREATE ... CLUSTER BY: born at writer 7 — legacy implied
-            # features become explicit flags (the table-features rule)
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 7,
-                        "writerFeatures": sorted(
-                            _legacy_writer_features(proto_w)
-                            | {"clustering", "domainMetadata"}
-                        ),
-                    }
-                }
-            )
-        else:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1,
-                              "minWriterVersion": proto_w}}
-            )
+        # TABLE FEATURES minted from the created schema, the spec's
+        # requirement (delta-spark does the same on CREATE):
+        # variantType needs the reader-3/writer-7 pair; collations is
+        # writer-only (readers without it ignore the metadata). A
+        # schema-feature table is born at writer 7 with nothing
+        # implied; CREATE ... CLUSTER BY alone upgrades the legacy
+        # version, whose implied features become explicit flags
+        wfeats = (["variantType"] if has_variant else []) + (
+            ["collations"] if has_coll else []
+        )
+        if cluster_by is not None:
+            wfeats += ["clustering", "domainMetadata"]
+        born: dict = {
+            "minReaderVersion": 1,
+            "minWriterVersion": 7 if has_variant or has_coll else proto_w,
+        }
         actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": create_schema,
-                    "partitionColumns": partition_by,
-                    "configuration": {},
-                    "createdTime": int(time.time() * 1000),
-                }
-            }
+            _protocol_with(
+                {"protocol": born},
+                writer=wfeats,
+                reader=["variantType"] if has_variant else (),
+            )
+            if wfeats
+            else {"protocol": born}
+        )
+        actions.append(
+            _metadata_action(
+                {"partition_cols": partition_by}, now_ms,
+                schema=create_schema, configuration={},
+            )
         )
         if cluster_by is not None:
             # creation schema carries no column mapping, so logical
@@ -2215,40 +2160,18 @@ def append_delta(
                 }
             )
     if evolved_schema_json is not None:
-        # metaData.id is the TABLE id and configuration holds the
-        # table's properties (CDF flag, appendOnly, ...) — both are
-        # stable across schema changes; wiping either would strip a
-        # foreign table's settings
         actions.append(
-            {
-                "metaData": {
-                    "id": evolved_meta_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": evolved_schema_json,
-                    "partitionColumns": partition_by,
-                    "configuration": evolved_config or {},
-                    "createdTime": int(time.time() * 1000),
-                }
-            }
+            _metadata_action(
+                snap0, now_ms, schema=evolved_schema_json,
+                configuration=evolved_config,
+            )
         )
     actions.extend(txn_actions)
     actions.extend(adds)
-    _op_params: dict = {"mode": "Append"}
+    op, op_params = "WRITE", {"mode": "Append"}
     if cluster_by is not None:
-        _op_params["clusterBy"] = json.dumps(cluster_by)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": (
-                    "CREATE TABLE AS SELECT"
-                    if cluster_by is not None
-                    else "WRITE"
-                ),
-                "operationParameters": _op_params,
-            }
-        }
-    )
+        op = "CREATE TABLE AS SELECT"
+        op_params["clusterBy"] = json.dumps(cluster_by)
     if version > 0:
         actions = _stamp_row_tracking(snap0, version, actions)
     # Optimistic-concurrency rebase for the ONE commuting case: append
@@ -2264,22 +2187,24 @@ def append_delta(
     # have advanced the high-water mark — a blind replay would collide).
     # A txn-keyed append re-runs the handshake against that snapshot: if
     # the winner was another attempt of this same epoch, this one is a
-    # replay and no-ops (its promoted files are left for VACUUM).
-    for _attempt in range(5):
+    # replay and no-ops (its promoted files are left for VACUUM). Each
+    # attempt's commitInfo is minted fresh by _commit, so a retry never
+    # carries the lost attempt's timestamps.
+    for attempt in range(6):
         try:
-            _publish_commit(table, version, actions)
-            return version
+            return _commit(table, version, actions, op, op_params)
         except ConcurrentDeltaCommitError:
-            if version == 0 or evolved_schema_json is not None:
-                raise  # concurrent CREATE / schema change: not commuting
+            if attempt == 5 or version == 0 or evolved_schema_json is not None:
+                # out of retries, or a concurrent CREATE / schema change
+                # (not commuting)
+                raise
             cur = _rebase_append(table, version, partition_by)
             if _txn_actions(cur, txn) is None:
                 return -1
             version = cur["version"] + 1
-            actions = actions_for_retry(_strip_row_tracking(actions))
-            actions = _stamp_row_tracking(cur, version, actions)
-    _publish_commit(table, version, actions)  # final attempt propagates
-    return version
+            actions = _stamp_row_tracking(
+                cur, version, _strip_row_tracking(actions)
+            )
 
 
 def _assign_mapping_ids(schema_json: str, config: dict) -> tuple[str, dict]:
@@ -2711,12 +2636,6 @@ def enable_row_tracking(table: str, enabled: bool = False) -> int:
     """
     snap = snapshot(table)
     _check_writer_protocol(snap, "enable_row_tracking")
-    p = snap.get("protocol") or {}
-    w = p.get("minWriterVersion", 2)
-    feats = set(p.get("writerFeatures") or [])
-    if w < 7 and not feats:
-        feats = _legacy_writer_features(w)
-    feats |= {"rowTracking", "domainMetadata"}
     now_ms = int(time.time() * 1000)
     cfg = dict(snap.get("configuration") or {})
     if enabled:
@@ -2730,42 +2649,8 @@ def enable_row_tracking(table: str, enabled: bool = False) -> int:
             f"_row_cv_col_{uuid.uuid4().hex[:12]}",
         )
     actions: list[dict] = [
-        {
-            "protocol": {
-                "minReaderVersion": p.get("minReaderVersion", 1),
-                "minWriterVersion": 7,
-                **(
-                    {"readerFeatures": sorted(
-                        set(p.get("readerFeatures") or [])
-                    )}
-                    if p.get("minReaderVersion", 1) >= 3
-                    else {}
-                ),
-                "writerFeatures": sorted(feats),
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap["schema"],
-                "partitionColumns": snap["partition_cols"],
-                "configuration": cfg,
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(
-                        {"delta.rowTracking": "supported",
-                         "delta.enableRowTracking": str(enabled).lower()}
-                    )
-                },
-            }
-        },
+        _protocol_with(snap, writer={"rowTracking", "domainMetadata"}),
+        _metadata_action(snap, now_ms, configuration=cfg),
     ]
     version = snap["version"] + 1
     if enabled and snap["files"]:
@@ -2798,37 +2683,19 @@ def enable_row_tracking(table: str, enabled: bool = False) -> int:
             if dvs_of.get(f):
                 add["deletionVector"] = dvs_of[f]
             backfill.append({"add": add})
-        commit_info = actions.pop()  # keep commitInfo last
-        actions = actions + backfill + [commit_info]
         actions = _stamp_row_tracking(
             dict(snap, protocol={"writerFeatures": ["rowTracking"]}),
             version,
-            actions,
+            actions + backfill,
         )
-    _publish_commit(table, version, actions)
-    return version
-
-
-def actions_for_retry(actions: list[dict]) -> list[dict]:
-    """The retried commit is the same adds with a fresh commitInfo
-    timestamp; protocol/metaData creation actions can only appear at
-    version 0, which has no concurrent writer to lose to (the log dir
-    claim is the table creation)."""
-    now_ms = int(time.time() * 1000)
-    out = []
-    for a in actions:
-        # null-valued commitInfo counts as absent here exactly as it
-        # does in _publish_commit's stamping — the same foreign-log
-        # input class must not crash one function away
-        if isinstance(a.get("commitInfo"), dict):
-            ci = dict(a["commitInfo"], timestamp=now_ms)
-            # a stale in-commit timestamp from the lost attempt could
-            # undercut the race winner's — drop it so _publish_commit
-            # re-stamps against the NEW previous commit
-            ci.pop("inCommitTimestamp", None)
-            a = {"commitInfo": ci}
-        out.append(a)
-    return out
+    return _commit(
+        table, version, actions, "SET TBLPROPERTIES",
+        {"properties": json.dumps(
+            {"delta.rowTracking": "supported",
+             "delta.enableRowTracking": str(enabled).lower()}
+        )},
+        now_ms,
+    )
 
 
 def _rebase_append(
@@ -2932,17 +2799,40 @@ def _file_stats(path: str) -> str | None:
     )
 
 
-def _promote_staged(
-    table: str,
-    staging: str,
-    version: int,
-    partition_by: list[str],
-    data_change: bool,
+def _physical_for(
+    snap: dict | None,
+    df: DataFrame,
+    extra: tuple[str, ...] = (),
+    schema_json: str | None = None,
+) -> DataFrame:
+    """``df`` as the files written into ``snap``'s table must carry it:
+    on a mapped table, the physical names and field ids of
+    :func:`_mapped_write_plan` (``schema_json`` overrides the snapshot
+    schema, e.g. an evolving append's); unchanged otherwise, and when
+    ``snap`` is None (the write creates the table)."""
+    if snap is None or _mapping_mode(snap) == "none":
+        return df
+    schema_json = schema_json or snap["schema"]
+    phys_of, attach_ids = _mapped_write_plan(snap, schema_json)
+    return _to_physical(
+        df, schema_json, extra=extra, phys_of=phys_of, attach_ids=attach_ids
+    )
+
+
+def _write_staged(
+    table: str, df: DataFrame, version: int, partition_by: list[str]
 ) -> list[dict]:
-    """Move a staged (possibly hive-partitioned) parquet write into the
-    table root and return its ``add`` actions (each carrying footer
-    ``stats`` for data skipping). Hive dir segments under staging carry
-    the partition values; the staging dir is removed."""
+    """Write ``df`` (already in physical names) to a private staging
+    directory, hive-partitioned by ``partition_by``, move the files
+    into the table root and return their ``add`` actions (each
+    carrying footer ``stats`` for data skipping, ``dataChange:true``).
+    Hive dir segments under staging carry the partition values; the
+    staging dir is removed."""
+    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(staging)
     adds = []
     for dirpath, _dirs, names in sorted(os.walk(staging)):
         rel_dir = os.path.relpath(dirpath, staging)
@@ -2969,7 +2859,7 @@ def _promote_staged(
                 "partitionValues": pvals,
                 "size": os.path.getsize(os.path.join(table, rel)),
                 "modificationTime": int(time.time() * 1000),
-                "dataChange": data_change,
+                "dataChange": True,
             }
             stats = _file_stats(os.path.join(table, rel))
             if stats is not None:
@@ -2984,10 +2874,13 @@ def _promote_staged(
 
 
 def _write_change_data(
-    table: str, changes: DataFrame, version: int, pcols: list[str]
+    table: str, snap: dict, changes: DataFrame, version: int
 ) -> list[dict]:
-    """Stage a CDF change set and promote it into ``_change_data/`` in
-    Delta's real layout: hive ``col=value/`` dirs mirroring the table's
+    """Stage a CDF change set of ``snap``'s table (logical names plus
+    ``_change_type``; mapped tables store physical names, the change
+    type literally, as delta-spark does) and promote it into
+    ``_change_data/`` in Delta's real layout: hive ``col=value/`` dirs
+    mirroring the table's
     partitioning directly under ``_change_data/`` (so the change feed
     partition-prunes exactly like the table), unique
     ``cdc-<version>-<uuid>`` filenames, one ``cdc`` action per file
@@ -2996,6 +2889,8 @@ def _write_change_data(
     moves it across partitions emits its preimage in the old directory
     and its postimage in the new one, which is exactly what a
     partition-scoped CDF consumer should see."""
+    pcols = snap["partition_cols"]
+    changes = _physical_for(snap, changes, extra=("_change_type",))
     staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
     writer = changes.write.mode("overwrite")
     if pcols:
@@ -3062,9 +2957,9 @@ def _prev_in_commit_ts(table: str, version: int) -> int | None:
     slots are claimed contiguously and cleanup_log never deletes the
     newest commit, so the previous commit is exactly ``version - 1`` —
     no directory listing on the commit path. Lines are substring-
-    prefiltered before json.loads: an append commit writes commitInfo
-    LAST, and parsing 50k add actions to find one field would put the
-    cost back."""
+    prefiltered before json.loads: this writer puts commitInfo first,
+    but older and foreign logs may put it last, and parsing 50k add
+    actions to find one field would put the cost back."""
     if version <= 0:
         return None
     try:
@@ -3083,41 +2978,139 @@ def _prev_in_commit_ts(table: str, version: int) -> int | None:
     return None
 
 
+# --------------------------------------------------------------------------
+# The commit builders: the ONLY code that lays out protocol upgrades,
+# metaData, remove and commitInfo actions. Verbs decide WHAT changes;
+# these decide how the commit carries it.
+# --------------------------------------------------------------------------
+
+
+def _protocol_with(snap: dict, writer=(), reader=()) -> dict:
+    """The table-features upgrade rule: ``snap``'s protocol plus the
+    ``writer`` (and ``reader``) features, as a protocol action. The
+    writer side moves to version 7 and every feature a legacy writer
+    version implied becomes an explicit flag, so no capability is
+    silently dropped. Asking for a reader feature moves the reader to
+    version 3, where legacy reader version 2 (column mapping) becomes
+    the explicit ``columnMapping`` feature. Otherwise the reader
+    version is kept. Versions never go down and listed features are
+    never dropped."""
+    p = snap.get("protocol") or {}
+    r = p.get("minReaderVersion", 1)
+    w = p.get("minWriterVersion", 2)
+    wf = set(p.get("writerFeatures") or []) | set(writer)
+    if w < 7:
+        wf |= _legacy_writer_features(w)
+    rf = set(p.get("readerFeatures") or []) | set(reader)
+    if reader:
+        if r == 2:
+            rf.add("columnMapping")
+        r = max(r, 3)
+    proto: dict = {"minReaderVersion": r, "minWriterVersion": 7}
+    if r >= 3:
+        proto["readerFeatures"] = sorted(rf)
+    proto["writerFeatures"] = sorted(wf)
+    return {"protocol": proto}
+
+
+def _metadata_action(
+    snap: dict,
+    ts: int,
+    schema: str | None = None,
+    configuration: dict | None = None,
+) -> dict:
+    """A metaData action for ``snap``'s table: the table id (a fresh
+    one when ``snap`` has none — a new table), the parquet format and
+    the partition columns carry forward; ``schema`` and
+    ``configuration`` replace the snapshot's when given. The id and
+    the properties are stable across schema changes — wiping either
+    would strip a table's identity and settings."""
+    return {
+        "metaData": {
+            "id": snap.get("meta_id") or str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": snap["schema"] if schema is None else schema,
+            "partitionColumns": snap["partition_cols"],
+            "configuration": (
+                dict(snap.get("configuration") or {})
+                if configuration is None
+                else configuration
+            ),
+            "createdTime": ts,
+        }
+    }
+
+
+def _remove_actions(
+    table: str,
+    files: list[str],
+    pcols: list[str] | None,
+    ts: int,
+    data_change: bool = True,
+    dvs: dict | None = None,
+) -> list[dict]:
+    """One ``remove`` per file of ``table``, keyed by the exact path
+    string its add used (``_log_path``: clone references stay
+    absolute). ``partitionValues`` come from the file's trailing hive
+    segments (empty on an unpartitioned table); ``pcols=None`` omits
+    the field (OPTIMIZE's dataChange:false removes). ``dvs`` maps a
+    file to the deletion vector its live add carries, which the remove
+    must name."""
+    out = []
+    for f in files:
+        rm: dict = {"path": _log_path(table, f), "deletionTimestamp": ts}
+        if pcols is not None:
+            rm["partitionValues"] = _file_pvals(f) if pcols else {}
+        rm["dataChange"] = data_change
+        if dvs and dvs.get(f):
+            rm["deletionVector"] = dvs[f]
+        out.append({"remove": rm})
+    return out
+
+
+def _commit(
+    table: str,
+    version: int,
+    actions: list[dict],
+    operation: str,
+    params: dict,
+    ts: int | None = None,
+    ict: int | None = None,
+) -> int:
+    """Publish ``actions`` as commit ``version`` of ``table`` behind
+    its one ``commitInfo``, which is written FIRST (the In-Commit
+    Timestamps writer requirement; delta-spark does it on every
+    table). Returns ``version``.
+
+    On tables writing IN-COMMIT TIMESTAMPS the chain is stamped here:
+    ``max(now, prev_ict + 1)`` — monotonic by construction, immune to
+    file-mtime drift, exactly the ``inCommitTimestamp`` writer-feature
+    contract. ``ict`` pre-sets the value where a commit anchors a new
+    chain (the enablement commit, a clone's version 0). The stamp is
+    taken per call, so a retry at a new version re-stamps against the
+    commit that won the race."""
+    now_ms = int(time.time() * 1000)
+    if ict is None:
+        prev_ict = _prev_in_commit_ts(table, version)
+        if prev_ict is not None:
+            ict = max(now_ms, prev_ict + 1)
+    info: dict = {
+        "timestamp": now_ms if ts is None else ts,
+        "operation": operation,
+        "operationParameters": params,
+    }
+    if ict is not None:
+        info["inCommitTimestamp"] = ict
+    _publish_commit(table, version, [{"commitInfo": info}] + actions)
+    return version
+
+
 def _publish_commit(table: str, version: int, actions: list[dict]) -> None:
     """Atomic claim of the version slot: os.link fails iff the commit
     file already exists (rename would silently overwrite a concurrent
     writer's commit — a lost update). On an object store this is the
-    conditional put.
-
-    On tables writing IN-COMMIT TIMESTAMPS the chain is stamped here:
-    ``max(now, prev_ict + 1)`` into this commit's commitInfo —
-    monotonic by construction, immune to file-mtime drift, exactly the
-    ``inCommitTimestamp`` writer-feature contract. Only the enablement
-    commit pre-sets its own value (the chain's anchor)."""
-    prev_ict = _prev_in_commit_ts(table, version)
-    if prev_ict is not None:
-        ict = max(int(time.time() * 1000), prev_ict + 1)
-        # a null-valued commitInfo (foreign logs emit them) counts as
-        # absent — stamping must neither crash on it nor rely on it
-        if any(isinstance(a.get("commitInfo"), dict) for a in actions):
-            # stamp into COPIES — mutating the caller's dicts would
-            # leave a stale (race-losing) stamp in caller-owned state
-            # if this publish fails and the actions are reused
-            actions = [
-                (
-                    {"commitInfo": dict(a["commitInfo"],
-                                        inCommitTimestamp=ict)}
-                    if isinstance(a.get("commitInfo"), dict)
-                    and a["commitInfo"].get("inCommitTimestamp") is None
-                    else a
-                )
-                for a in actions
-            ]
-        else:
-            actions = actions + [
-                {"commitInfo": {"timestamp": ict,
-                                "inCommitTimestamp": ict}}
-            ]
+    conditional put. Verbs publish through :func:`_commit`, which
+    lays out the commit."""
     tmp = _commit_path(table, version) + f".tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         f.write("\n".join(json.dumps(a) for a in actions) + "\n")
@@ -3578,60 +3571,32 @@ def enable_v2_checkpoints(table: str) -> int:
     snap = snapshot(table)
     _check_writer_protocol(snap, "enable_v2_checkpoints")
     p = snap.get("protocol") or {}
-    r = p.get("minReaderVersion", 1)
-    w = p.get("minWriterVersion", 2)
-    rf = set(p.get("readerFeatures") or [])
-    wf = set(p.get("writerFeatures") or [])
-    if "v2Checkpoint" in rf and "v2Checkpoint" in wf:
+    if "v2Checkpoint" in set(p.get("readerFeatures") or []) and (
+        "v2Checkpoint" in set(p.get("writerFeatures") or [])
+    ):
         raise DeltaProtocolError(
             "v2 checkpoints are already enabled on this table"
         )
-    if w < 7:
-        wf |= _legacy_writer_features(w)
-    if r == 2:
-        rf.add("columnMapping")
-    rf.add("v2Checkpoint")
-    wf.add("v2Checkpoint")
     now_ms = int(time.time() * 1000)
     actions = [
-        {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(rf),
-                "writerFeatures": sorted(wf),
-            }
-        },
-        {
-            # delta-spark records the policy flip alongside the feature
-            # (the spec ties v2Checkpoint to checkpointPolicy=v2)
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap["schema"],
-                "partitionColumns": snap["partition_cols"],
-                "configuration": dict(
-                    snap.get("configuration") or {},
-                    **{"delta.checkpointPolicy": "v2"},
-                ),
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "UPGRADE PROTOCOL",
-                "operationParameters": {
-                    "newProtocol": json.dumps(
-                        {"minReaderVersion": 3, "minWriterVersion": 7}
-                    )
-                },
-            }
-        },
+        _protocol_with(snap, writer={"v2Checkpoint"}, reader={"v2Checkpoint"}),
+        # delta-spark records the policy flip alongside the feature
+        # (the spec ties v2Checkpoint to checkpointPolicy=v2)
+        _metadata_action(
+            snap, now_ms,
+            configuration=dict(
+                snap.get("configuration") or {},
+                **{"delta.checkpointPolicy": "v2"},
+            ),
+        ),
     ]
-    version = snap["version"] + 1
-    _publish_commit(table, version, actions)
-    return version
+    return _commit(
+        table, snap["version"] + 1, actions, "UPGRADE PROTOCOL",
+        {"newProtocol": json.dumps(
+            {"minReaderVersion": 3, "minWriterVersion": 7}
+        )},
+        now_ms,
+    )
 
 
 def checkpoint_delta(table: str) -> int:
@@ -3672,22 +3637,6 @@ def enable_in_commit_timestamps(table: str) -> int:
         raise DeltaProtocolError(
             "in-commit timestamps are already enabled on this table"
         )
-    p = snap.get("protocol") or {}
-    r = p.get("minReaderVersion", 1)
-    w = p.get("minWriterVersion", 2)
-    wf = set(p.get("writerFeatures") or [])
-    if w < 7:
-        wf |= _legacy_writer_features(w)
-    wf.add("inCommitTimestamp")
-    proto: dict = {
-        "minReaderVersion": r,
-        "minWriterVersion": 7,
-        "writerFeatures": sorted(wf),
-    }
-    if r >= 3:
-        proto["readerFeatures"] = sorted(
-            set(p.get("readerFeatures") or [])
-        )
     version = snap["version"] + 1
     now_ms = int(time.time() * 1000)
     ict = max(now_ms, _commit_timestamp_ms(table, snap["version"]) + 1)
@@ -3695,32 +3644,14 @@ def enable_in_commit_timestamps(table: str) -> int:
     cfg["delta.inCommitTimestampEnablementVersion"] = str(version)
     cfg["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
     actions = [
-        {"protocol": proto},
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap["schema"],
-                "partitionColumns": snap["partition_cols"],
-                "configuration": cfg,
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "inCommitTimestamp": ict,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(
-                        {"delta.enableInCommitTimestamps": "true"}
-                    )
-                },
-            }
-        },
+        _protocol_with(snap, writer={"inCommitTimestamp"}),
+        _metadata_action(snap, now_ms, configuration=cfg),
     ]
-    _publish_commit(table, version, actions)
-    return version
+    return _commit(
+        table, version, actions, "SET TBLPROPERTIES",
+        {"properties": json.dumps({"delta.enableInCommitTimestamps": "true"})},
+        now_ms, ict=ict,
+    )
 
 
 #: properties whose lifecycle needs more than a metaData flip (protocol
@@ -3762,56 +3693,25 @@ def set_table_properties(table: str, properties: dict[str, str]) -> int:
     cfg = dict(snap.get("configuration") or {})
     cfg.update({str(k): str(v) for k, v in properties.items()})
     p = snap.get("protocol") or {}
-    r = p.get("minReaderVersion", 1)
-    w = p.get("minWriterVersion", 2)
     actions: list[dict] = []
     wants_cdf = (
         str(properties.get("delta.enableChangeDataFeed", "")).lower()
         == "true"
     )
-    has_cdf = w >= 4 or "changeDataFeed" in set(p.get("writerFeatures") or [])
+    has_cdf = p.get("minWriterVersion", 2) >= 4 or "changeDataFeed" in set(
+        p.get("writerFeatures") or []
+    )
     if wants_cdf and not has_cdf:
-        wf = set(p.get("writerFeatures") or [])
-        if w < 7:
-            wf |= _legacy_writer_features(w)
-        wf.add("changeDataFeed")
-        proto: dict = {
-            "minReaderVersion": r,
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(wf),
-        }
-        if r >= 3:
-            proto["readerFeatures"] = sorted(
-                set(p.get("readerFeatures") or [])
-            )
-        actions.append({"protocol": proto})
-    version = snap["version"] + 1
+        actions.append(_protocol_with(snap, writer={"changeDataFeed"}))
     now_ms = int(time.time() * 1000)
-    actions += [
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap["schema"],
-                "partitionColumns": snap["partition_cols"],
-                "configuration": cfg,
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(
-                        {str(k): str(v) for k, v in properties.items()}
-                    )
-                },
-            }
-        },
-    ]
-    _publish_commit(table, version, actions)
-    return version
+    actions.append(_metadata_action(snap, now_ms, configuration=cfg))
+    return _commit(
+        table, snap["version"] + 1, actions, "SET TBLPROPERTIES",
+        {"properties": json.dumps(
+            {str(k): str(v) for k, v in properties.items()}
+        )},
+        now_ms,
+    )
 
 
 def enable_iceberg_compat_v2(table: str) -> int:
@@ -3874,51 +3774,17 @@ def enable_iceberg_compat_v2(table: str) -> int:
                 f"stats.numRecords ({os.path.relpath(f, table)}); "
                 "OPTIMIZE to rewrite with footer stats first"
             )
-    p = snap.get("protocol") or {}
-    r = p.get("minReaderVersion", 1)
-    w = p.get("minWriterVersion", 2)
-    wf = set(p.get("writerFeatures") or [])
-    if w < 7:
-        wf |= _legacy_writer_features(w)
-    wf.add("icebergCompatV2")
-    proto: dict = {
-        "minReaderVersion": r,
-        "minWriterVersion": 7,
-        "writerFeatures": sorted(wf),
-    }
-    if r >= 3:
-        proto["readerFeatures"] = sorted(
-            set(p.get("readerFeatures") or [])
-        )
-    version = snap["version"] + 1
     now_ms = int(time.time() * 1000)
     cfg["delta.enableIcebergCompatV2"] = "true"
     actions = [
-        {"protocol": proto},
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap["schema"],
-                "partitionColumns": snap["partition_cols"],
-                "configuration": cfg,
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(
-                        {"delta.enableIcebergCompatV2": "true"}
-                    )
-                },
-            }
-        },
+        _protocol_with(snap, writer={"icebergCompatV2"}),
+        _metadata_action(snap, now_ms, configuration=cfg),
     ]
-    _publish_commit(table, version, actions)
-    return version
+    return _commit(
+        table, snap["version"] + 1, actions, "SET TBLPROPERTIES",
+        {"properties": json.dumps({"delta.enableIcebergCompatV2": "true"})},
+        now_ms,
+    )
 
 
 def _compact_files(
@@ -3990,16 +3856,9 @@ def _compact_files(
     import shutil
 
     shutil.rmtree(staging)
-    removes = [
-        {
-            "remove": {
-                "path": _log_path(table, f),
-                "deletionTimestamp": int(time.time() * 1000),
-                "dataChange": False,
-            }
-        }
-        for f in files
-    ]
+    removes = _remove_actions(
+        table, files, None, int(time.time() * 1000), data_change=False
+    )
     return removes, adds
 
 
@@ -4339,30 +4198,20 @@ def optimize_delta(
         )
         removes.extend(r)
         adds.extend(a)
-    actions = _stamp_row_tracking(snap, version, removes + adds) + [
+    return _commit(
+        table, version, _stamp_row_tracking(snap, version, removes + adds),
+        "OPTIMIZE",
         {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetSize": str(target_partitions),
-                    "zOrderBy": json.dumps(
-                        [] if cluster_by else (zorder_by or [])
-                    ),
-                    # delta-spark records clustering-driven layout under
-                    # clusterBy, not zOrderBy
-                    "clusterBy": json.dumps(cluster_by),
-                    "predicate": json.dumps(
-                        [f"{k} = {v!r}" for k, v in sorted(
-                            (where or {}).items()
-                        )]
-                    ),
-                },
-            }
-        }
-    ]
-    _publish_commit(table, version, actions)
-    return version
+            "targetSize": str(target_partitions),
+            "zOrderBy": json.dumps([] if cluster_by else (zorder_by or [])),
+            # delta-spark records clustering-driven layout under
+            # clusterBy, not zOrderBy
+            "clusterBy": json.dumps(cluster_by),
+            "predicate": json.dumps(
+                [f"{k} = {v!r}" for k, v in sorted((where or {}).items())]
+            ),
+        },
+    )
 
 
 def merge_delta(
@@ -4409,7 +4258,7 @@ def merge_delta(
     _check_writer_protocol(snap, "MERGE", removes_data=True,
                            identity_ok=True)
     change_data = change_data or _cdf_obligated(snap)
-    _refuse_cow_unsupported(snap, table, "merge_delta")
+    _refuse_cow_unsupported(snap, "merge_delta")
     rt_enabled = _rt_rewrite_gate(snap, "MERGE")
     pcols = snap["partition_cols"]
     version = snap["version"] + 1
@@ -4513,98 +4362,44 @@ def merge_delta(
                 .withColumn("_change_type", F.lit("insert"))
             )
         )
-        if _mapping_mode(snap) != "none":
-            # mapped change files carry physical names too (delta-spark
-            # does the same); _change_type stays literal
-            _pof, _ids = _mapped_write_plan(snap)
-            changes = _to_physical(
-                changes, snap["schema"], extra=("_change_type",),
-                phys_of=_pof, attach_ids=_ids,
-            )
-        cdc_actions = _write_change_data(table, changes, version, pcols)
+        cdc_actions = _write_change_data(table, snap, changes, version)
 
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
+    out_data, extra = new_data, ()
     if rt_enabled:
-        _mat_id, _mat_cv = _materialized_row_cols(snap)
+        # the materialized pair rides along by its literal (non-schema)
+        # name, also on a mapped table
+        extra = _materialized_row_cols(snap)
         out_data = new_data.select(
             *cur_cols,
-            F.col("_rid").alias(_mat_id),
-            F.col("_rcv").alias(_mat_cv),
+            F.col("_rid").alias(extra[0]),
+            F.col("_rcv").alias(extra[1]),
         )
-        if _mapping_mode(snap) != "none":
-            # rowTracking × mapping: schema columns land physical
-            # names + field ids; the materialized pair rides along by
-            # its literal (non-schema) name
-            _pof, _ids = _mapped_write_plan(snap)
-            out_data = _to_physical(
-                out_data, snap["schema"], extra=(_mat_id, _mat_cv),
-                phys_of=_pof, attach_ids=_ids,
-            )
-    elif _mapping_mode(snap) != "none":
-        _pof, _ids = _mapped_write_plan(snap)
-        out_data = _to_physical(
-            new_data, snap["schema"], phys_of=_pof, attach_ids=_ids
-        )
-    else:
-        out_data = new_data
-    writer = out_data.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(staging)
-    adds = _promote_staged(table, staging, version, pcols, True)
-
-    def _pvals(path: str) -> dict[str, str]:
-        # trailing-segment parse is root-agnostic: table-local files
-        # AND a clone's source-absolute references both resolve
-        return _file_pvals(path) if pcols else {}
-
-    removes = [
-        {
-            "remove": {
-                "path": _log_path(table, f),
-                "deletionTimestamp": int(time.time() * 1000),
-                "partitionValues": _pvals(f),
-                "dataChange": True,
-            }
-        }
-        for f in snap["files"]
-        if os.path.abspath(f) in touched_abs
-    ]
+    adds = _write_staged(
+        table, _physical_for(snap, out_data, extra=extra), version, pcols
+    )
+    now_ms = int(time.time() * 1000)
+    removes = _remove_actions(
+        table,
+        [f for f in snap["files"] if os.path.abspath(f) in touched_abs],
+        pcols, now_ms,
+    )
     meta_actions: list[dict] = []
     if evolved_schema_json is not None:
         # an advanced identity high-water mark rides this commit's
         # metaData (same-commit atomicity: a lost race re-mints);
         # table id, configuration and partitioning are untouched
         meta_actions = [
-            {
-                "metaData": {
-                    "id": snap.get("meta_id") or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": evolved_schema_json,
-                    "partitionColumns": pcols,
-                    "configuration": dict(
-                        snap.get("configuration") or {}
-                    ),
-                    "createdTime": int(time.time() * 1000),
-                }
-            }
+            _metadata_action(snap, now_ms, schema=evolved_schema_json)
         ]
-    actions = cdc_actions + meta_actions + txn_actions + removes + adds + [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "MERGE",
-                "operationParameters": {
-                    "predicate": " AND ".join(
-                        f"target.{k} = source.{k}" for k in key_cols
-                    )
-                },
-            }
-        }
-    ]
-    actions = _stamp_row_tracking(snap, version, actions)
-    _publish_commit(table, version, actions)
-    return version
+    actions = cdc_actions + meta_actions + txn_actions + removes + adds
+    return _commit(
+        table, version, _stamp_row_tracking(snap, version, actions),
+        "MERGE",
+        {"predicate": " AND ".join(
+            f"target.{k} = source.{k}" for k in key_cols
+        )},
+        now_ms,
+    )
 
 
 class DeltaConstraintViolation(RuntimeError):
@@ -4748,31 +4543,14 @@ def add_constraint(
     _enforce_constraints(
         read_delta(spark, table), {name: predicate}
     )
-    version = snap["version"] + 1
     cfg = dict(snap.get("configuration") or {})
     cfg[_CONSTRAINT_PREFIX + name] = predicate
     now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap["schema"],
-                "partitionColumns": snap["partition_cols"],
-                "configuration": cfg,
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name, "expr": predicate},
-            }
-        },
-    ]
-    _publish_commit(table, version, actions)
-    return version
+    return _commit(
+        table, snap["version"] + 1,
+        [_metadata_action(snap, now_ms, configuration=cfg)],
+        "ADD CONSTRAINT", {"name": name, "expr": predicate}, now_ms,
+    )
 
 
 def set_domain_metadata(
@@ -4808,44 +4586,23 @@ def set_domain_metadata(
         if isinstance(configuration, str)
         else json.dumps(configuration, sort_keys=True)
     )
-    p = snap.get("protocol") or {}
-    w = p.get("minWriterVersion", 2)
-    feats = set(p.get("writerFeatures") or [])
+    feats = set((snap.get("protocol") or {}).get("writerFeatures") or [])
     actions: list[dict] = []
     if "domainMetadata" not in feats:
-        base = feats if feats else (
-            _legacy_writer_features(w) if w < 7 else set()
-        )
-        proto = {
-            "minReaderVersion": p.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(base | {"domainMetadata"}),
-        }
-        if p.get("minReaderVersion", 1) >= 3:
-            proto["readerFeatures"] = sorted(
-                set(p.get("readerFeatures") or [])
-            )
-        actions.append({"protocol": proto})
-    now_ms = int(time.time() * 1000)
-    actions += [
+        actions.append(_protocol_with(snap, writer={"domainMetadata"}))
+    actions.append(
         {
             "domainMetadata": {
                 "domain": domain,
                 "configuration": cfg,
                 "removed": False,
             }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "SET DOMAIN METADATA",
-                "operationParameters": {"domain": domain},
-            }
-        },
-    ]
-    version = snap["version"] + 1
-    _publish_commit(table, version, actions)
-    return version
+        }
+    )
+    return _commit(
+        table, snap["version"] + 1, actions, "SET DOMAIN METADATA",
+        {"domain": domain},
+    )
 
 
 _CLUSTERING_DOMAIN = "delta.clustering"
@@ -4912,48 +4669,25 @@ def enable_clustering(table: str, columns: list[str]) -> int:
     cfg = json.dumps(
         {"clusteringColumns": [[phys_of.get(c, c)] for c in columns]}
     )
-    p = snap.get("protocol") or {}
-    w = p.get("minWriterVersion", 2)
-    feats = set(p.get("writerFeatures") or [])
+    feats = set((snap.get("protocol") or {}).get("writerFeatures") or [])
     actions: list[dict] = []
-    need = {"clustering", "domainMetadata"} - feats
-    if need:
-        base = feats if feats else (
-            _legacy_writer_features(w) if w < 7 else set()
+    if {"clustering", "domainMetadata"} - feats:
+        actions.append(
+            _protocol_with(snap, writer={"clustering", "domainMetadata"})
         )
-        proto = {
-            "minReaderVersion": p.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(
-                base | {"clustering", "domainMetadata"}
-            ),
-        }
-        if p.get("minReaderVersion", 1) >= 3:
-            proto["readerFeatures"] = sorted(
-                set(p.get("readerFeatures") or [])
-            )
-        actions.append({"protocol": proto})
-    actions += [
+    actions.append(
         {
             "domainMetadata": {
                 "domain": _CLUSTERING_DOMAIN,
                 "configuration": cfg,
                 "removed": False,
             }
-        },
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "CLUSTER BY",
-                "operationParameters": {
-                    "clusterBy": json.dumps(columns)
-                },
-            }
-        },
-    ]
-    version = snap["version"] + 1
-    _publish_commit(table, version, actions)
-    return version
+        }
+    )
+    return _commit(
+        table, snap["version"] + 1, actions, "CLUSTER BY",
+        {"clusterBy": json.dumps(columns)},
+    )
 
 
 def add_column_default(table: str, column: str, default_sql: str) -> int:
@@ -4989,49 +4723,16 @@ def add_column_default(table: str, column: str, default_sql: str) -> int:
     md = dict(fld.get("metadata") or {})
     md["CURRENT_DEFAULT"] = default_sql
     fld["metadata"] = md
-    p = snap.get("protocol") or {}
-    w = p.get("minWriterVersion", 2)
-    feats = set(p.get("writerFeatures") or [])
+    feats = set((snap.get("protocol") or {}).get("writerFeatures") or [])
     actions: list[dict] = []
     if "allowColumnDefaults" not in feats:
-        base = feats if feats else (
-            _legacy_writer_features(w) if w < 7 else set()
-        )
-        proto = {
-            "minReaderVersion": p.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(base | {"allowColumnDefaults"}),
-        }
-        if p.get("minReaderVersion", 1) >= 3:
-            proto["readerFeatures"] = sorted(
-                set(p.get("readerFeatures") or [])
-            )
-        actions.append({"protocol": proto})
+        actions.append(_protocol_with(snap, writer={"allowColumnDefaults"}))
     now_ms = int(time.time() * 1000)
-    actions += [
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(sch),
-                "partitionColumns": snap["partition_cols"],
-                "configuration": dict(snap.get("configuration") or {}),
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "ALTER COLUMN SET DEFAULT",
-                "operationParameters": {
-                    "column": column, "default": default_sql
-                },
-            }
-        },
-    ]
-    version = snap["version"] + 1
-    _publish_commit(table, version, actions)
-    return version
+    actions.append(_metadata_action(snap, now_ms, schema=json.dumps(sch)))
+    return _commit(
+        table, snap["version"] + 1, actions, "ALTER COLUMN SET DEFAULT",
+        {"column": column, "default": default_sql}, now_ms,
+    )
 
 
 def remove_domain_metadata(table: str, domain: str) -> int:
@@ -5052,26 +4753,17 @@ def remove_domain_metadata(table: str, domain: str) -> int:
         raise DeltaProtocolError(
             f"domain {domain!r} does not exist on this table"
         )
-    now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "domainMetadata": {
-                "domain": domain,
-                "configuration": "{}",
-                "removed": True,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "REMOVE DOMAIN METADATA",
-                "operationParameters": {"domain": domain},
-            }
-        },
-    ]
-    version = snap["version"] + 1
-    _publish_commit(table, version, actions)
-    return version
+    tombstone = {
+        "domainMetadata": {
+            "domain": domain,
+            "configuration": "{}",
+            "removed": True,
+        }
+    }
+    return _commit(
+        table, snap["version"] + 1, [tombstone], "REMOVE DOMAIN METADATA",
+        {"domain": domain},
+    )
 
 
 def enable_column_mapping(table: str, mode: str = "name") -> int:
@@ -5141,20 +4833,9 @@ def enable_column_mapping(table: str, mode: str = "name") -> int:
     actions: list[dict] = []
     if w == 7 or r == 3:
         actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(
-                        set(p.get("readerFeatures") or [])
-                        | {"columnMapping"}
-                    ),
-                    "writerFeatures": sorted(
-                        set(p.get("writerFeatures") or [])
-                        | {"columnMapping"}
-                    ),
-                }
-            }
+            _protocol_with(
+                snap, writer={"columnMapping"}, reader={"columnMapping"}
+            )
         )
     elif r < 2 or w < 5:
         # never DOWNGRADE a foreign table's protocol: a legacy table at
@@ -5170,35 +4851,17 @@ def enable_column_mapping(table: str, mode: str = "name") -> int:
             }
         )
     actions.append(
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(
-                    {"type": "struct", "fields": fields}
-                ),
-                "partitionColumns": snap["partition_cols"],
-                "configuration": cfg,
-                "createdTime": now_ms,
-            }
-        }
+        _metadata_action(
+            snap, now_ms,
+            schema=json.dumps({"type": "struct", "fields": fields}),
+            configuration=cfg,
+        )
     )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": json.dumps(
-                        {"delta.columnMapping.mode": mode}
-                    )
-                },
-            }
-        }
+    return _commit(
+        table, snap["version"] + 1, actions, "SET TBLPROPERTIES",
+        {"properties": json.dumps({"delta.columnMapping.mode": mode})},
+        now_ms,
     )
-    version = snap["version"] + 1
-    _publish_commit(table, version, actions)
-    return version
 
 
 def widen_column_type(table: str, col: str, new_type: str) -> int:
@@ -5234,52 +4897,18 @@ def widen_column_type(table: str, col: str, new_type: str) -> int:
         dict(f, type=new_type, metadata=meta) if f["name"] == col else f
         for f in sch["fields"]
     ]
-    p = snap.get("protocol") or {}
-    r, w = p.get("minReaderVersion", 1), p.get("minWriterVersion", 2)
-    rf = set(p.get("readerFeatures") or [])
-    wf = set(p.get("writerFeatures") or [])
-    if w < 7 and not wf:
-        wf = _legacy_writer_features(w)
-    if r == 2:
-        rf.add("columnMapping")
-    rf.add("typeWidening")
-    wf.add("typeWidening")
     now_ms = int(time.time() * 1000)
     actions = [
-        {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(rf),
-                "writerFeatures": sorted(wf),
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(
-                    {"type": "struct", "fields": fields}
-                ),
-                "partitionColumns": snap["partition_cols"],
-                "configuration": dict(snap.get("configuration") or {}),
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CHANGE COLUMN",
-                "operationParameters": {
-                    "column": col,
-                    "fromType": old_type,
-                    "toType": new_type,
-                },
-            }
-        },
+        _protocol_with(snap, writer={"typeWidening"}, reader={"typeWidening"}),
+        _metadata_action(
+            snap, now_ms,
+            schema=json.dumps({"type": "struct", "fields": fields}),
+        ),
     ]
-    _publish_commit(table, version, actions)
-    return version
+    return _commit(
+        table, version, actions, "CHANGE COLUMN",
+        {"column": col, "fromType": old_type, "toType": new_type}, now_ms,
+    )
 
 
 def rename_column(table: str, old: str, new: str) -> int:
@@ -5333,30 +4962,12 @@ def rename_column(table: str, old: str, new: str) -> int:
         dict(f, name=new) if f["name"] == old else f for f in sch["fields"]
     ]
     now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(
-                    {"type": "struct", "fields": fields}
-                ),
-                "partitionColumns": snap["partition_cols"],
-                "configuration": dict(snap.get("configuration") or {}),
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "RENAME COLUMN",
-                "operationParameters": {"from": old, "to": new},
-            }
-        },
-    ]
-    version = snap["version"] + 1
-    _publish_commit(table, version, actions)
-    return version
+    schema = json.dumps({"type": "struct", "fields": fields})
+    return _commit(
+        table, snap["version"] + 1,
+        [_metadata_action(snap, now_ms, schema=schema)],
+        "RENAME COLUMN", {"from": old, "to": new}, now_ms,
+    )
 
 
 def drop_column(table: str, col: str) -> int:
@@ -5417,33 +5028,15 @@ def drop_column(table: str, col: str) -> int:
             )
     fields = [f for f in sch["fields"] if f["name"] != col]
     now_ms = int(time.time() * 1000)
-    actions = [
-        {
-            "metaData": {
-                "id": snap.get("meta_id") or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(
-                    {"type": "struct", "fields": fields}
-                ),
-                "partitionColumns": snap["partition_cols"],
-                "configuration": dict(snap.get("configuration") or {}),
-                "createdTime": now_ms,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DROP COLUMNS",
-                "operationParameters": {"columns": json.dumps([col])},
-            }
-        },
-    ]
-    version = snap["version"] + 1
-    _publish_commit(table, version, actions)
-    return version
+    schema = json.dumps({"type": "struct", "fields": fields})
+    return _commit(
+        table, snap["version"] + 1,
+        [_metadata_action(snap, now_ms, schema=schema)],
+        "DROP COLUMNS", {"columns": json.dumps([col])}, now_ms,
+    )
 
 
-def _refuse_cow_unsupported(snap: dict, table: str, op: str) -> None:
+def _refuse_cow_unsupported(snap: dict, op: str) -> None:
     """Scope gate for the COW rewrite verbs (merge/delete). Since
     round 7 every supported table shape rewrites: mapped tables (name
     AND id mode), live deletion vectors, their COMBINATION
@@ -5551,7 +5144,7 @@ def delete_delta(
     _check_writer_protocol(snap, "DELETE", removes_data=True,
                             identity_ok=True)
     change_data = change_data or _cdf_obligated(snap)
-    _refuse_cow_unsupported(snap, table, "delete_delta")
+    _refuse_cow_unsupported(snap, "delete_delta")
     rt_enabled = _rt_rewrite_gate(snap, "DELETE (copy-on-write)")
     pcols = snap["partition_cols"]
     version = snap["version"] + 1
@@ -5596,76 +5189,36 @@ def delete_delta(
             .select(*cur_cols)
             .withColumn("_change_type", F.lit("delete"))
         )
-        if _mapping_mode(snap) != "none":
-            _pof, _ids = _mapped_write_plan(snap)
-            deleted = _to_physical(
-                deleted, snap["schema"], extra=("_change_type",),
-                phys_of=_pof, attach_ids=_ids,
-            )
-        cdc_actions = _write_change_data(table, deleted, version, pcols)
+        cdc_actions = _write_change_data(table, snap, deleted, version)
 
     adds: list[dict] = []
     if touched_abs:
-        staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
+        out_rows, extra = survivors, ()
         if rt_enabled:
-            _mat_id, _mat_cv = _materialized_row_cols(snap)
+            extra = _materialized_row_cols(snap)
             out_rows = survivors.select(
                 *cur_cols,
-                F.col("_rid").alias(_mat_id),
-                F.col("_rcv").alias(_mat_cv),
+                F.col("_rid").alias(extra[0]),
+                F.col("_rcv").alias(extra[1]),
             )
-            if _mapping_mode(snap) != "none":
-                _pof, _ids = _mapped_write_plan(snap)
-                out_rows = _to_physical(
-                    out_rows, snap["schema"], extra=(_mat_id, _mat_cv),
-                    phys_of=_pof, attach_ids=_ids,
-                )
-        elif _mapping_mode(snap) != "none":
-            _pof, _ids = _mapped_write_plan(snap)
-            out_rows = _to_physical(
-                survivors, snap["schema"], phys_of=_pof, attach_ids=_ids
-            )
-        else:
-            out_rows = survivors
-        writer = out_rows.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(staging)
-        adds = _promote_staged(table, staging, version, pcols, True)
-
-    def _pvals(path: str) -> dict[str, str]:
-        # trailing-segment parse is root-agnostic: table-local files
-        # AND a clone's source-absolute references both resolve
-        return _file_pvals(path) if pcols else {}
-
-    removes = [
-        {
-            "remove": {
-                "path": _log_path(table, f),
-                "deletionTimestamp": int(time.time() * 1000),
-                "partitionValues": _pvals(f),
-                "dataChange": True,
-            }
-        }
-        for f in snap["files"]
-        if os.path.abspath(f) in touched_abs
-    ]
-    actions = cdc_actions + removes + adds + [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "DELETE",
-                "operationParameters": {
-                    "predicate": " AND ".join(
-                        f"target.{k} = source.{k}" for k in key_cols
-                    )
-                },
-            }
-        }
-    ]
-    actions = _stamp_row_tracking(snap, version, actions)
-    _publish_commit(table, version, actions)
-    return version
+        adds = _write_staged(
+            table, _physical_for(snap, out_rows, extra=extra), version, pcols
+        )
+    now_ms = int(time.time() * 1000)
+    removes = _remove_actions(
+        table,
+        [f for f in snap["files"] if os.path.abspath(f) in touched_abs],
+        pcols, now_ms,
+    )
+    return _commit(
+        table, version,
+        _stamp_row_tracking(snap, version, cdc_actions + removes + adds),
+        "DELETE",
+        {"predicate": " AND ".join(
+            f"target.{k} = source.{k}" for k in key_cols
+        )},
+        now_ms,
+    )
 
 
 def overwrite_delta(
@@ -5737,49 +5290,16 @@ def overwrite_delta(
         changes = old_rows.withColumn(
             "_change_type", F.lit("delete")
         ).unionByName(df.withColumn("_change_type", F.lit("insert")))
-        if _mode != "none":
-            _pof, _ids = _mapped_write_plan(snap)
-            changes = _to_physical(
-                changes, snap["schema"], extra=("_change_type",),
-                phys_of=_pof, attach_ids=_ids,
-            )
-        cdc_actions = _write_change_data(table, changes, version, pcols)
+        cdc_actions = _write_change_data(table, snap, changes, version)
 
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
-    out_df = df
-    if _mode != "none":
-        _pof, _ids = _mapped_write_plan(snap)
-        out_df = _to_physical(df, snap["schema"], phys_of=_pof,
-                              attach_ids=_ids)
-    writer = out_df.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.parquet(staging)
-    adds = _promote_staged(table, staging, version, pcols, True)
+    adds = _write_staged(table, _physical_for(snap, df), version, pcols)
     now_ms = int(time.time() * 1000)
-    removes = [
-        {
-            "remove": {
-                "path": _log_path(table, f),
-                "deletionTimestamp": now_ms,
-                "partitionValues": _file_pvals(f) if pcols else {},
-                "dataChange": True,
-            }
-        }
-        for f in snap["files"]
-    ]
-    actions = cdc_actions + txn_actions + removes + adds + [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {"mode": "Overwrite"},
-            }
-        }
-    ]
-    actions = _stamp_row_tracking(snap, version, actions)
-    _publish_commit(table, version, actions)
-    return version
+    removes = _remove_actions(table, snap["files"], pcols, now_ms)
+    actions = cdc_actions + txn_actions + removes + adds
+    return _commit(
+        table, version, _stamp_row_tracking(snap, version, actions),
+        "WRITE", {"mode": "Overwrite"}, now_ms,
+    )
 
 
 def replace_where_delta(
@@ -5900,50 +5420,23 @@ def replace_where_delta(
         changes = old_rows.withColumn(
             "_change_type", F.lit("delete")
         ).unionByName(df.withColumn("_change_type", F.lit("insert")))
-        if _mode != "none":
-            _pof, _ids = _mapped_write_plan(snap)
-            changes = _to_physical(
-                changes, snap["schema"], extra=("_change_type",),
-                phys_of=_pof, attach_ids=_ids,
-            )
-        cdc_actions = _write_change_data(table, changes, version, pcols)
+        cdc_actions = _write_change_data(table, snap, changes, version)
 
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
-    out_df = df
-    if _mode != "none":
-        _pof, _ids = _mapped_write_plan(snap)
-        out_df = _to_physical(df, snap["schema"], phys_of=_pof,
-                              attach_ids=_ids)
-    out_df.write.mode("overwrite").partitionBy(*pcols).parquet(staging)
-    adds = _promote_staged(table, staging, version, pcols, True)
-    removes = [
+    adds = _write_staged(table, _physical_for(snap, df), version, pcols)
+    now_ms = int(time.time() * 1000)
+    removes = _remove_actions(table, matching, pcols, now_ms)
+    return _commit(
+        table, version,
+        _stamp_row_tracking(snap, version, cdc_actions + removes + adds),
+        "WRITE",
         {
-            "remove": {
-                "path": _log_path(table, f),
-                "deletionTimestamp": int(time.time() * 1000),
-                "partitionValues": _pvals(f),
-                "dataChange": True,
-            }
-        }
-        for f in matching
-    ]
-    actions = cdc_actions + removes + adds + [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "WRITE",
-                "operationParameters": {
-                    "mode": "Overwrite",
-                    "predicate": " AND ".join(
-                        f"{k} = '{v}'" for k, v in sorted(where.items())
-                    ),
-                },
-            }
-        }
-    ]
-    actions = _stamp_row_tracking(snap, version, actions)
-    _publish_commit(table, version, actions)
-    return version
+            "mode": "Overwrite",
+            "predicate": " AND ".join(
+                f"{k} = '{v}'" for k, v in sorted(where.items())
+            ),
+        },
+        now_ms,
+    )
 
 
 def overwrite_schema_delta(
@@ -6037,7 +5530,6 @@ def overwrite_schema_delta(
                 "constraint first (delta-spark refuses identically)"
             ) from exc
     version = snap["version"] + 1
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
     out_df = df
     if mode != "none":
         # physical names + field ids under the NEW binding; hive dirs
@@ -6050,50 +5542,20 @@ def overwrite_schema_delta(
             for f in json.loads(new_schema_json)["fields"]
         }
         partition_by = [_npof.get(c, c) for c in partition_by]
-    writer = out_df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    adds = _promote_staged(table, staging, version, partition_by, True)
+    adds = _write_staged(table, out_df, version, partition_by)
     now_ms = int(time.time() * 1000)
-    removes = [
-        {
-            "remove": {
-                "path": _log_path(table, f),
-                "deletionTimestamp": now_ms,
-                "partitionValues": (
-                    _file_pvals(f) if snap["partition_cols"] else {}
-                ),
-                "dataChange": True,
-            }
-        }
-        for f in snap["files"]
-    ]
-    meta = {
-        "metaData": {
-            "id": snap.get("meta_id") or str(uuid.uuid4()),
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": new_schema_json,
-            "partitionColumns": partition_by,
-            "configuration": new_cfg,
-            "createdTime": now_ms,
-        }
-    }
-    actions = [meta] + removes + adds + [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {
-                    "mode": "Overwrite",
-                    "overwriteSchema": "true",
-                },
-            }
-        }
-    ]
-    actions = _stamp_row_tracking(snap, version, actions)
-    _publish_commit(table, version, actions)
-    return version
+    removes = _remove_actions(
+        table, snap["files"], snap["partition_cols"], now_ms
+    )
+    meta = _metadata_action(
+        dict(snap, partition_cols=partition_by), now_ms,
+        schema=new_schema_json, configuration=new_cfg,
+    )
+    return _commit(
+        table, version,
+        _stamp_row_tracking(snap, version, [meta] + removes + adds),
+        "WRITE", {"mode": "Overwrite", "overwriteSchema": "true"}, now_ms,
+    )
 
 
 def dynamic_overwrite_delta(
@@ -6206,48 +5668,18 @@ def dynamic_overwrite_delta(
         changes = old_rows.withColumn(
             "_change_type", F.lit("delete")
         ).unionByName(df.withColumn("_change_type", F.lit("insert")))
-        if _mode != "none":
-            _pof, _ids = _mapped_write_plan(snap)
-            changes = _to_physical(
-                changes, snap["schema"], extra=("_change_type",),
-                phys_of=_pof, attach_ids=_ids,
-            )
-        cdc_actions = _write_change_data(table, changes, version, pcols)
+        cdc_actions = _write_change_data(table, snap, changes, version)
 
-    staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
-    out_df = df
-    if _mode != "none":
-        _pof, _ids = _mapped_write_plan(snap)
-        out_df = _to_physical(df, snap["schema"], phys_of=_pof,
-                              attach_ids=_ids)
-    out_df.write.mode("overwrite").partitionBy(*pcols).parquet(staging)
-    adds = _promote_staged(table, staging, version, pcols, True)
-    removes = [
-        {
-            "remove": {
-                "path": _log_path(table, f),
-                "deletionTimestamp": int(time.time() * 1000),
-                "partitionValues": _file_pvals(f),
-                "dataChange": True,
-            }
-        }
-        for f in matching
-    ]
-    actions = cdc_actions + removes + adds + [
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "WRITE",
-                "operationParameters": {
-                    "mode": "Overwrite",
-                    "partitionOverwriteMode": "DYNAMIC",
-                },
-            }
-        }
-    ]
-    actions = _stamp_row_tracking(snap, version, actions)
-    _publish_commit(table, version, actions)
-    return version
+    adds = _write_staged(table, _physical_for(snap, df), version, pcols)
+    now_ms = int(time.time() * 1000)
+    removes = _remove_actions(table, matching, pcols, now_ms)
+    return _commit(
+        table, version,
+        _stamp_row_tracking(snap, version, cdc_actions + removes + adds),
+        "WRITE",
+        {"mode": "Overwrite", "partitionOverwriteMode": "DYNAMIC"},
+        now_ms,
+    )
 
 
 def delete_delta_dv(
@@ -6421,15 +5853,7 @@ def delete_delta_dv(
         deleted = matched.select(
             *_pcol_cast_cols(full, pcols)
         ).withColumn("_change_type", F.lit("delete"))
-        if mode != "none":
-            # mapped change files carry physical names like every
-            # other mapped write; _change_type stays literal
-            _pof, _ids = _mapped_write_plan(snap)
-            deleted = _to_physical(
-                deleted, snap["schema"], extra=("_change_type",),
-                phys_of=_pof, attach_ids=_ids,
-            )
-        cdc_actions = _write_change_data(table, deleted, version, pcols)
+        cdc_actions = _write_change_data(table, snap, deleted, version)
 
     now_ms = int(time.time() * 1000)
     stats_uri = {
@@ -6443,19 +5867,15 @@ def delete_delta_dv(
         # AND a clone's source-absolute references identically
         return _file_pvals(rel) if pcols else {}
 
-    removes: list[dict] = []
+    removes = _remove_actions(
+        table,
+        [by_uri[uri][0] for uri in sorted(new_positions)],
+        pcols, now_ms,
+        dvs={os.path.abspath(f): d for f, d in snap["file_dvs"].items()},
+    )
     adds: list[dict] = []
     for uri in sorted(new_positions):
         abs_f, rel = by_uri[uri]
-        remove = {
-            "path": quote(rel),
-            "deletionTimestamp": now_ms,
-            "partitionValues": _pvals(rel),
-            "dataChange": True,
-        }
-        if uri in dvs_uri:
-            remove["deletionVector"] = dvs_uri[uri]
-        removes.append({"remove": remove})
         add = {
             "path": quote(rel),
             "partitionValues": _pvals(rel),
@@ -6479,52 +5899,24 @@ def delete_delta_dv(
                 "defaultRowCommitVersion"
             )
         adds.append({"add": add})
-    p = snap.get("protocol") or {}
-    # feature upgrade must MERGE with what the table already lists —
-    # clobbering would strip rowTracking/inCommitTimestamp/... from a
-    # feature-bearing table
-    proto_action = {
-        "protocol": {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": sorted(
-                set(p.get("readerFeatures") or [])
-                | {"deletionVectors"}
-            ),
-            "writerFeatures": sorted(
-                set(p.get("writerFeatures") or [])
-                | {"deletionVectors"}
-                | (
-                    _legacy_writer_features(p.get("minWriterVersion", 2))
-                    if p.get("minWriterVersion", 2) < 7
-                    and not p.get("writerFeatures")
-                    else set()
-                )
-            ),
-        }
-    }
     actions = (
-        [proto_action]
+        [_protocol_with(
+            snap, writer={"deletionVectors"}, reader={"deletionVectors"}
+        )]
         + cdc_actions
         + removes
         + _stamp_row_tracking(snap, version, adds)
-        + [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "DELETE",
-                    "operationParameters": {
-                        "predicate": " AND ".join(
-                            f"target.{k} = source.{k}" for k in key_cols
-                        ),
-                        "mode": "merge-on-read",
-                    },
-                }
-            }
-        ]
     )
-    _publish_commit(table, version, actions)
-    return version
+    return _commit(
+        table, version, actions, "DELETE",
+        {
+            "predicate": " AND ".join(
+                f"target.{k} = source.{k}" for k in key_cols
+            ),
+            "mode": "merge-on-read",
+        },
+        now_ms,
+    )
 
 
 def restore_delta(
@@ -6681,13 +6073,7 @@ def restore_delta(
         changes = frames[0]
         for fr in frames[1:]:
             changes = changes.unionByName(fr)
-        if mode != "none":
-            _pof, _ids = _mapped_write_plan(cur)
-            changes = _to_physical(
-                changes, cur["schema"], extra=("_change_type",),
-                phys_of=_pof, attach_ids=_ids,
-            )
-        cdc_actions = _write_change_data(table, changes, version, pcols)
+        cdc_actions = _write_change_data(table, cur, changes, version)
 
     now_ms = int(time.time() * 1000)
 
@@ -6717,29 +6103,19 @@ def restore_delta(
 
     # removes BEFORE adds: a path whose DV changed appears in both
     # lists, and replay must net to the re-added (target) entry
-    actions = cdc_actions + [
-        {
-            "remove": {
-                "path": quote(p),
-                "deletionTimestamp": now_ms,
-                "partitionValues": _pvals(p),
-                "dataChange": True,
-            }
-        }
-        for p in to_remove
-    ] + _stamp_row_tracking(
-        cur, version, [{"add": _restore_add(p)} for p in to_add]
-    ) + [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "RESTORE",
-                "operationParameters": {"version": to_version},
-            }
-        }
-    ]
-    _publish_commit(table, version, actions)
-    return version
+    actions = (
+        cdc_actions
+        + _remove_actions(
+            table, [os.path.join(table, p) for p in to_remove], pcols,
+            now_ms,
+        )
+        + _stamp_row_tracking(
+            cur, version, [{"add": _restore_add(p)} for p in to_add]
+        )
+    )
+    return _commit(
+        table, version, actions, "RESTORE", {"version": to_version}, now_ms
+    )
 
 
 def _has_external_files(snap: dict, table: str) -> bool:
@@ -6811,58 +6187,33 @@ def clone_delta(table: str, target: str) -> int:
     r = src_proto.get("minReaderVersion", 1)
     w = src_proto.get("minWriterVersion", 2)
     if has_dv or w == 7 or r == 3:
-        rf = set(src_proto.get("readerFeatures") or [])
-        wf = set(src_proto.get("writerFeatures") or [])
-        if w < 7:
-            wf |= _legacy_writer_features(w)
-        if r == 2:
-            rf.add("columnMapping")
-        if has_dv:
-            rf.add("deletionVectors")
-            wf.add("deletionVectors")
-        protocol = {
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(wf),
-        }
-        if rf:
-            # reader version 3 only when a reader feature is actually
-            # demanded — r=3 with an EMPTY feature list is rejected by
-            # _check_protocol (a writer-features-only source, e.g. an
-            # ICT table, must stay readable at its legacy reader level)
-            protocol["minReaderVersion"] = 3
-            protocol["readerFeatures"] = sorted(rf)
-        else:
-            protocol["minReaderVersion"] = min(r, 2)
-    elif src_proto:
-        protocol = dict(src_proto)
+        # table-features form; the reader moves to 3 only when a reader
+        # feature is actually demanded (DVs, or legacy reader 2's column
+        # mapping made explicit) — a writer-features-only source, e.g.
+        # an ICT table, must stay readable at its legacy reader level
+        dv_feat = {"deletionVectors"} if has_dv else set()
+        protocol = _protocol_with(
+            snap, writer=dv_feat,
+            reader=dv_feat | ({"columnMapping"} if r == 2 else set()),
+        )
     else:
-        protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
+        protocol = {
+            "protocol": dict(src_proto)
+            or {"minReaderVersion": 1, "minWriterVersion": 2}
+        }
     cfg = dict(snap["configuration"])
-    clone_ci: dict = {
-        "timestamp": now_ms,
-        "operation": "CLONE",
-        "operationParameters": {"source": os.path.abspath(table)},
-    }
+    ict = None
     if cfg.get("delta.enableInCommitTimestamps", "").lower() == "true":
         # the clone is a NEW table: its timestamp chain anchors HERE,
         # and the enablement bookkeeping re-points at the clone's own
         # version 0 (source-relative versions would be meaningless)
         ict = max(now_ms, _commit_timestamp_ms(table, snap["version"]) + 1)
-        clone_ci["inCommitTimestamp"] = ict
         cfg["delta.inCommitTimestampEnablementVersion"] = "0"
         cfg["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
     actions: list[dict] = [
-        {"protocol": protocol},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),  # a clone is a NEW table
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap["schema"],
-                "partitionColumns": snap["partition_cols"],
-                "configuration": cfg,
-                "createdTime": now_ms,
-            }
-        },
+        protocol,
+        # a clone is a NEW table: a fresh table id
+        _metadata_action(dict(snap, meta_id=None), now_ms, configuration=cfg),
     ]
     from acero_delta_lake_streaming_spark.storage import dvcodec
 
@@ -6895,9 +6246,10 @@ def clone_delta(table: str, target: str) -> int:
                     pathOrInlineDv=os.path.abspath(os.path.join(table, rel)),
                 )
         actions.append({"add": add})
-    actions.append({"commitInfo": clone_ci})
-    _publish_commit(target, 0, actions)
-    return 0
+    return _commit(
+        target, 0, actions, "CLONE", {"source": os.path.abspath(table)},
+        now_ms, ict=ict,
+    )
 
 
 def read_delta_changes(

@@ -159,14 +159,12 @@ def run_ingest(
     q.awaitTermination()
 
 
-def cdc_upsert_writer(table: str, key_cols: list[str], app_id: str = "cdc"):
-    """foreachBatch sink that MERGEs each micro-batch into a Delta table
-    (latest row per key wins) — the streaming CDC pattern: an update
-    arriving in a later epoch replaces the stored row instead of
-    appending a duplicate. Epoch idempotence rides on the same
-    ``txn=(app_id, epoch)`` commit key as the append sink (the first
-    epoch creates the table with an append), so a replayed epoch
-    no-ops."""
+def _keyed_epoch_sink(table: str, app_id: str, write):
+    """The epoch rule of the txn-keyed foreachBatch sinks: an empty
+    epoch writes nothing, the first non-empty one creates the table
+    with an append, and every later one runs ``write(batch_df, txn)``.
+    Each commit carries ``txn=(app_id, epoch)``, so a replayed epoch
+    no-ops whichever verb it lands in."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -175,11 +173,26 @@ def cdc_upsert_writer(table: str, key_cols: list[str], app_id: str = "cdc"):
         if not delta_compat.is_delta_table(table):
             delta_compat.append_delta(batch_df, table, txn=txn)
         else:
-            delta_compat.merge_delta(
-                batch_df.sparkSession, table, batch_df, key_cols, txn=txn
-            )
+            write(batch_df, txn)
 
     return write_batch
+
+
+def cdc_upsert_writer(table: str, key_cols: list[str], app_id: str = "cdc"):
+    """foreachBatch sink that MERGEs each micro-batch into a Delta table
+    (latest row per key wins) — the streaming CDC pattern: an update
+    arriving in a later epoch replaces the stored row instead of
+    appending a duplicate. Epoch idempotence rides on the same
+    ``txn=(app_id, epoch)`` commit key as the append sink (the first
+    epoch creates the table with an append), so a replayed epoch
+    no-ops."""
+    return _keyed_epoch_sink(
+        table,
+        app_id,
+        lambda batch_df, txn: delta_compat.merge_delta(
+            batch_df.sparkSession, table, batch_df, key_cols, txn=txn
+        ),
+    )
 
 
 def run_news_ingest(
@@ -264,17 +277,13 @@ def run_windowed_stream(
     at 100 TB switch to append mode so only watermark-finalized windows
     emit)."""
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        txn = (app_id, epoch_id)
-        if not delta_compat.is_delta_table(out_table):
-            delta_compat.append_delta(batch_df, out_table, txn=txn)
-        else:
-            delta_compat.overwrite_delta(
-                batch_df.sparkSession, batch_df, out_table, txn=txn
-            )
-
+    write_batch = _keyed_epoch_sink(
+        out_table,
+        app_id,
+        lambda batch_df, txn: delta_compat.overwrite_delta(
+            batch_df.sparkSession, batch_df, out_table, txn=txn
+        ),
+    )
     events = spark.readStream.schema(EVENT_BATCH_SCHEMA).parquet(
         os.path.join(drop_dir, "*.parquet")
     )

@@ -509,8 +509,10 @@ def test_append_round_trip_and_foreign_readability(spark, tmp_path):
     with open(os.path.join(table, "_delta_log", f"{0:020d}.json")) as f:
         actions = [json.loads(line) for line in f if line.strip()]
     kinds = [next(iter(a)) for a in actions]
-    assert kinds[0] == "protocol" and kinds[1] == "metaData"
-    meta = actions[1]["metaData"]
+    # commitInfo leads (the In-Commit Timestamps writer rule), then the
+    # creating protocol and metaData
+    assert kinds[:3] == ["commitInfo", "protocol", "metaData"]
+    meta = actions[2]["metaData"]
     assert json.loads(meta["schemaString"])["type"] == "struct"
     adds = [a["add"] for a in actions if "add" in a]
     assert adds and all(not a["path"].startswith("/") for a in adds)
@@ -5039,7 +5041,9 @@ def test_in_commit_timestamps_written_and_monotonic(spark, tmp_path):
         spark, table, timestamp_ms=icts[v1]).collect()} == set(range(4))
 
 
-def test_ict_double_enable_refused_and_retry_strips_stale(spark, tmp_path):
+def test_ict_double_enable_refused_and_retry_strips_stale(
+    spark, tmp_path, monkeypatch
+):
     import pyspark.sql.functions as F
 
     table = str(tmp_path / "ict_tbl2")
@@ -5047,11 +5051,26 @@ def test_ict_double_enable_refused_and_retry_strips_stale(spark, tmp_path):
     dc.enable_in_commit_timestamps(table)
     with pytest.raises(dc.DeltaProtocolError, match="already enabled"):
         dc.enable_in_commit_timestamps(table)
-    # actions_for_retry must drop a stale stamp so the rebased commit
-    # re-anchors against the race winner
-    acts = [{"commitInfo": {"timestamp": 1, "inCommitTimestamp": 123}}]
-    out = dc.actions_for_retry(acts)
-    assert "inCommitTimestamp" not in out[0]["commitInfo"]
+    # an append that loses its version race must not publish the lost
+    # attempt's stamp: the rebased commit re-anchors against the race
+    # winner (stamped far ahead here, so a stale stamp would undercut it)
+    future = dc._commit_timestamp_ms(table, dc.snapshot(table)["version"])
+    future += 10**9
+    orig = dc._publish_commit
+    raced = {"done": False}
+
+    def race(table_, version, actions):
+        if not raced["done"]:
+            raced["done"] = True
+            orig(table_, version, [{"commitInfo": {
+                "timestamp": future, "inCommitTimestamp": future}}])
+        orig(table_, version, actions)
+
+    monkeypatch.setattr(dc, "_publish_commit", race)
+    v = dc.append_delta(spark.range(2, 4).select(F.col("id").alias("k")),
+                        table)
+    assert raced["done"]
+    assert dc._commit_timestamp_ms(table, v) == future + 1
 
 
 def test_streaming_sink_into_mapped_table(spark, tmp_path):
@@ -7535,3 +7554,120 @@ def test_cdf_skips_optimize_commits(spark, tmp_path):
         start_version=2, max_cycles=1, sleep_fn=lambda _s: None,
     )
     assert cursor == 3 and applied == []
+
+
+def _log_commits(table):
+    """Every retained commit of ``table`` as (version, [actions])."""
+    return [
+        (v, dc._log_actions(dc._commit_path(table, v)))
+        for v in dc._list_commit_versions(table)
+    ]
+
+
+def test_commit_info_written_first_with_in_commit_timestamp(spark, tmp_path):
+    """commitInfo is the FIRST action of a commit — the In-Commit
+    Timestamps writer requirement (delta-spark writes it first on every
+    table) — and on an ICT table it carries the stamp."""
+    ddl = "k long"
+    table = str(tmp_path / "ci_first")
+    dc.append_delta(spark.createDataFrame([(0,)], ddl), table)
+    dc.enable_in_commit_timestamps(table)
+    v = dc.append_delta(spark.createDataFrame([(1,)], ddl), table)
+    with open(dc._commit_path(table, v)) as f:
+        first = json.loads(f.readline())
+    assert list(first) == ["commitInfo"]
+    assert isinstance(first["commitInfo"]["inCommitTimestamp"], int)
+    assert first["commitInfo"]["operation"] == "WRITE"
+
+
+def test_commit_layout_invariants_across_verbs(spark, tmp_path):
+    """One table through the verbs that lay out commits differently
+    (create, schema evolution, properties + a protocol upgrade, type
+    widening, constraint, row tracking with backfill, MERGE, DELETE,
+    overwrite, OPTIMIZE, RESTORE). Every commit has exactly one
+    commitInfo, written first, with an int timestamp, a str operation
+    and a dict of parameters; every metaData keeps version 0's table
+    id; every writer-7 protocol keeps what its predecessor granted —
+    the legacy writer version's implied features, or its listed ones."""
+    ddl = "k int, v string"
+    wide = "k long, v string, w double"
+    table = str(tmp_path / "layout")
+    dc.append_delta(spark.createDataFrame([(1, "a"), (2, "b")], ddl), table)
+    dc.append_delta(
+        spark.createDataFrame([(3, "c", 1.5)], "k int, v string, w double"),
+        table, merge_schema=True,
+    )
+    dc.set_table_properties(table, {"delta.enableChangeDataFeed": "true"})
+    dc.widen_column_type(table, "k", "long")
+    dc.add_constraint(spark, table, "k_pos", "k > 0")
+    dc.enable_row_tracking(table, enabled=True)
+    dc.merge_delta(
+        spark, table,
+        spark.createDataFrame([(2, "B", 2.5), (4, "d", 4.5)], wide), ["k"],
+    )
+    dc.delete_delta(spark, table, spark.createDataFrame([(1,)], "k long"),
+                    ["k"])
+    v_over = dc.overwrite_delta(
+        spark, spark.createDataFrame([(5, "e", 5.5), (6, "f", 6.5)], wide),
+        table,
+    )
+    dc.optimize_delta(spark, table)
+    v_last = dc.restore_delta(spark, table, v_over)
+    assert sorted(r.k for r in dc.read_delta(spark, table).collect()) == [5, 6]
+
+    commits = _log_commits(table)
+    assert [v for v, _ in commits] == list(range(v_last + 1))
+    table_id = None
+    proto: dict = {}
+    for v, actions in commits:
+        infos = [a["commitInfo"] for a in actions if "commitInfo" in a]
+        assert len(infos) == 1, v
+        assert "commitInfo" in actions[0], v
+        ci = infos[0]
+        assert isinstance(ci["timestamp"], int), v
+        assert isinstance(ci["operation"], str), v
+        assert isinstance(ci["operationParameters"], dict), v
+        for a in actions:
+            if "metaData" in a:
+                table_id = table_id or a["metaData"]["id"]
+                assert a["metaData"]["id"] == table_id, v
+            if "protocol" in a:
+                new = a["protocol"]
+                if new["minWriterVersion"] == 7 and proto:
+                    w = proto.get("minWriterVersion", 2)
+                    kept = (
+                        set(proto.get("writerFeatures") or [])
+                        if w == 7
+                        else dc._legacy_writer_features(w)
+                    )
+                    assert kept <= set(new["writerFeatures"]), v
+                    assert set(proto.get("readerFeatures") or []) <= set(
+                        new.get("readerFeatures") or []
+                    ), v
+                proto = new
+    assert proto["minWriterVersion"] == 7
+    assert {"changeDataFeed", "typeWidening", "rowTracking"} <= set(
+        proto["writerFeatures"]
+    )
+
+
+def test_dv_delete_on_mapped_legacy_table_keeps_column_mapping(
+    spark, tmp_path
+):
+    """A DV delete moves a column-mapped legacy table (reader 2) to
+    reader 3: the column mapping that reader version 2 implied must
+    become the explicit ``columnMapping`` reader feature, the same
+    upgrade rule every other verb applies (``_protocol_with``)."""
+    table = _fresh_kv_table(spark, tmp_path, "dv_cm_legacy")
+    dc.enable_column_mapping(table)
+    assert dc.snapshot(table)["protocol"]["minReaderVersion"] == 2
+    dc.delete_delta_dv(spark, table, spark.createDataFrame([(1,)], "k long"),
+                       ["k"])
+    proto = dc.snapshot(table)["protocol"]
+    assert proto["minReaderVersion"] == 3
+    assert {"columnMapping", "deletionVectors"} <= set(
+        proto["readerFeatures"]
+    )
+    assert sorted(r.k for r in dc.read_delta(spark, table).collect()) == [
+        0, 2, 3, 4,
+    ]

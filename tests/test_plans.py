@@ -182,6 +182,48 @@ def test_no_collect_in_query_paths():
         assert ".toPandas()" not in line, f"delta_compat:{ln}"
 
 
+def test_commit_layout_has_one_builder():
+    """Static guard: delta_compat lays out a commit in ONE place. A
+    ``commitInfo``, ``metaData`` or ``remove`` action dict is built only
+    by the commit builders (plus ``_write_checkpoint``'s checkpoint rows,
+    which serialise a snapshot rather than a commit); only
+    ``_protocol_with`` applies the legacy-writer-features upgrade rule;
+    only ``_commit`` publishes. A verb that hand-builds any of these
+    fails here — new commit fields go into the builders."""
+    import ast
+    import inspect
+
+    from acero_delta_lake_streaming_spark.storage import delta_compat
+
+    allowed = {
+        "commitInfo": {"_commit"},
+        "metaData": {"_metadata_action", "_write_checkpoint"},
+        "remove": {"_remove_actions"},
+        "_legacy_writer_features": {"_protocol_with"},
+        "_publish_commit": {"_commit"},
+    }
+    tree = ast.parse(inspect.getsource(delta_compat))
+    found: list[tuple[str, str]] = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if isinstance(node, ast.Dict):
+                for key in node.keys:
+                    if isinstance(key, ast.Constant) and key.value in (
+                        "commitInfo", "metaData", "remove"
+                    ):
+                        found.append((key.value, owner))
+            elif isinstance(node, ast.Call) and isinstance(
+                node.func, ast.Name
+            ) and node.func.id in ("_legacy_writer_features",
+                                   "_publish_commit"):
+                found.append((node.func.id, owner))
+    bad = [(what, owner) for what, owner in found
+           if owner not in allowed[what]]
+    assert not bad, f"commit layout built outside the builders: {bad}"
+    assert {o for w, o in found if w == "_publish_commit"} == {"_commit"}
+
+
 def test_scd2_single_exchange(spark, sf_dir):
     """w7's three windows and the island group-by must all reuse ONE
     user_id exchange — the property that makes the history build a
