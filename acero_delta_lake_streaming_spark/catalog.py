@@ -15,6 +15,8 @@ import functools
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from acero_delta_lake_streaming_spark.schemas import FIXTURE_SCHEMAS
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -48,7 +50,14 @@ def _events_ts_unit(path: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy DataFrame for one fixture table.
+    """Lazy DataFrame for one fixture table, read with its declared schema.
+
+    Every table is read with ``schemas.FIXTURE_SCHEMAS[name]``, so
+    building the DataFrame launches no Spark job: without a schema the
+    parquet source runs one footer-inference job per read, which every
+    query would pay once per table it loads. The declared schemas equal
+    the footers (``tests/test_catalog.py`` pins them), so plans,
+    pushdown, column order and types are those of an inferring read.
 
     ``events.ts`` is a parquet timestamp with int64 physical encoding
     (MICROS in the current fixtures; earlier rounds shipped NANOS). It
@@ -63,22 +72,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (the ``nanosAsLong`` legacy conf this loader once relied on is
     silently ignored by the current reader).
     """
-    if name == "events":
-        from acero_delta_lake_streaming_spark.schemas import FIXTURE_SCHEMAS
-
-        path = f"{sf_dir}/{name}.parquet"
-        unit = _events_ts_unit(path)
-        df = spark.read.schema(FIXTURE_SCHEMAS["events"]).parquet(path)
-        if unit == "us":
-            df = df.withColumn(
-                "ts_ns", (F.col("ts") * F.lit(1000)).cast("bigint")
-            ).withColumn("ts", F.expr("timestamp_micros(ts)"))
-        else:  # raw int64 nanoseconds
-            df = df.withColumn("ts_ns", F.col("ts")).withColumn(
-                "ts", F.expr("timestamp_micros(ts DIV 1000)")
-            )
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(path)
+    if name != "events":
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if _events_ts_unit(path) == "us":
+        return df.withColumn(
+            "ts_ns", (F.col("ts") * F.lit(1000)).cast("bigint")
+        ).withColumn("ts", F.expr("timestamp_micros(ts)"))
+    # raw int64 nanoseconds
+    return df.withColumn("ts_ns", F.col("ts")).withColumn(
+        "ts", F.expr("timestamp_micros(ts DIV 1000)")
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

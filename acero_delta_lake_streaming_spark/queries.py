@@ -17,6 +17,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 import importlib
 import importlib.util
+import re
 
 from acero_delta_lake_streaming_spark.operators import (  # noqa: E402
     relational,
@@ -216,4 +217,23 @@ def all_oracles() -> dict[str, str]:
     out: dict[str, str] = {}
     for mod in _MODULES:
         out.update(getattr(mod, "ORACLES", {}))
-    return _ordered(out)
+    return _ordered({name: materialize_ctes(sql) for name, sql in out.items()})
+
+
+#: a CTE head ``name [(cols)] AS (`` led by WITH [RECURSIVE] or by the
+#: comma between CTEs. CAST's ``AS type`` and ``WINDOW w AS (`` do not
+#: match; a second, comma-led entry of a WINDOW list would, and no oracle
+#: has one (``tests/test_oracle_parity.py`` pins what the rewrite touches).
+_CTE_HEAD = re.compile(
+    r"((?:\bWITH(?:\s+RECURSIVE)?|,)\s*\w+\s*(?:\([^()]*\))?\s+AS)(\s*\()",
+    re.IGNORECASE,
+)
+
+
+def materialize_ctes(sql: str) -> str:
+    """``sql`` with every CTE head ``name AS (`` written ``name AS
+    MATERIALIZED (``. DuckDB inlines an unmarked CTE at each reference,
+    so an oracle that reads one CTE from several later ones recomputes
+    it each time; the materialized form evaluates it once and returns
+    the same rows."""
+    return _CTE_HEAD.sub(r"\1 MATERIALIZED\2", sql)

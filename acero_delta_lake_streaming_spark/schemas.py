@@ -107,8 +107,11 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 # --- Driver fixture schemas (FIXTURES.md §B) --------------------------------
-# Parquet footers carry these; we pin them for documentation and for
-# streaming readers (readStream requires an explicit schema).
+# The loader's read schemas: ``catalog.load_table`` reads every fixture
+# table with its entry here (no footer-inference job per load), and the
+# streaming readers use them too (readStream requires an explicit schema).
+# They equal the parquet footers, in order; ``tests/test_catalog.py`` pins
+# that, so a new table or column needs its entry edited here.
 
 FIXTURE_SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(

@@ -3692,16 +3692,15 @@ def set_table_properties(table: str, properties: dict[str, str]) -> int:
             )
     cfg = dict(snap.get("configuration") or {})
     cfg.update({str(k): str(v) for k, v in properties.items()})
-    p = snap.get("protocol") or {}
     actions: list[dict] = []
     wants_cdf = (
         str(properties.get("delta.enableChangeDataFeed", "")).lower()
         == "true"
     )
-    has_cdf = p.get("minWriterVersion", 2) >= 4 or "changeDataFeed" in set(
-        p.get("writerFeatures") or []
-    )
-    if wants_cdf and not has_cdf:
+    # what the protocol grants, in table-features form: at writer 7
+    # only the listed features count, below it the legacy version's
+    granted = _protocol_with(snap)["protocol"]["writerFeatures"]
+    if wants_cdf and "changeDataFeed" not in granted:
         actions.append(_protocol_with(snap, writer={"changeDataFeed"}))
     now_ms = int(time.time() * 1000)
     actions.append(_metadata_action(snap, now_ms, configuration=cfg))
@@ -6231,6 +6230,12 @@ def clone_delta(table: str, target: str) -> int:
         stats = snap["file_stats"].get(f)
         if stats:
             add["stats"] = stats
+        rm = snap["file_row_meta"].get(f)
+        if rm:
+            # the same bytes under a new table id: their row ids (and
+            # row commit versions) come with them, never re-assigned
+            add["baseRowId"] = rm["baseRowId"]
+            add["defaultRowCommitVersion"] = rm["defaultRowCommitVersion"]
         dv = dvs_abs.get(abs_f)
         if dv:
             rel = dvcodec.dv_relative_path(dv)
@@ -6246,6 +6251,19 @@ def clone_delta(table: str, target: str) -> int:
                     pathOrInlineDv=os.path.abspath(os.path.join(table, rel)),
                 )
         actions.append({"add": add})
+    # live domains describe the carried files and features (the
+    # row-id high-water mark keeps the carried ids reserved, the
+    # clustering columns keep OPTIMIZE reclustering), so they come too
+    for domain, conf in sorted(snap["domain_metadata"].items()):
+        actions.append(
+            {
+                "domainMetadata": {
+                    "domain": domain,
+                    "configuration": conf,
+                    "removed": False,
+                }
+            }
+        )
     return _commit(
         target, 0, actions, "CLONE", {"source": os.path.abspath(table)},
         now_ms, ict=ict,

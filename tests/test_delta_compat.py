@@ -2139,6 +2139,45 @@ def test_shallow_clone_isolation_and_vacuum_safety(spark, tmp_path):
     assert dc.read_delta(spark, dst).count() == 15
 
 
+def test_shallow_clone_carries_row_tracking_and_clustering(spark, tmp_path):
+    """A clone of a rowTracking table references the same files, so it
+    keeps their row ids: each add carries the source's ``baseRowId`` /
+    ``defaultRowCommitVersion``, the high-water mark comes along, and
+    the clone's own appends assign ids past it. The clustering columns
+    (the other live domain) come along with the ``clustering`` feature."""
+    import pyspark.sql.functions as F
+
+    src = str(tmp_path / "rt_src")
+    cl = str(tmp_path / "rt_cl")
+    dc.append_delta(
+        spark.range(5).coalesce(1).select(F.col("id").alias("k")), src
+    )
+    dc.enable_row_tracking(src, enabled=True)
+    dc.enable_clustering(src, ["k"])
+    dc.append_delta(
+        spark.range(5, 8).coalesce(1).select(F.col("id").alias("k")), src
+    )
+    dc.clone_delta(src, cl)
+
+    def ids(t):
+        return sorted(
+            (r["k"], r["_row_id"], r["_row_commit_version"])
+            for r in dc.read_delta_row_ids(spark, t).collect()
+        )
+
+    src_ids = ids(src)
+    assert ids(cl) == src_ids
+    assert all(rid is not None for _, rid, _ in src_ids)
+    hwm = dc.row_id_high_water_mark(dc.snapshot(src))
+    assert dc.row_id_high_water_mark(dc.snapshot(cl)) == hwm == 7
+    assert dc._clustering_columns(dc.snapshot(cl)) == ["k"]
+    dc.append_delta(
+        spark.range(8, 10).coalesce(1).select(F.col("id").alias("k")), cl
+    )
+    new_ids = [rid for k, rid, _ in ids(cl) if k >= 8]
+    assert sorted(new_ids) == [hwm + 1, hwm + 2]
+
+
 def test_shallow_clone_carries_deletion_vectors(spark, tmp_path):
     """Cloning a DV table: descriptors convert to absolute-path ("p")
     storage so the clone's log resolves the source's DV files; the
@@ -7285,6 +7324,24 @@ def test_set_table_properties_cdf_lifecycle(spark, tmp_path):
     # non-delta bookkeeping properties just merge into configuration
     dc.set_table_properties(table, {"team.owner": "pipeline"})
     assert dc.snapshot(table)["configuration"]["team.owner"] == "pipeline"
+
+
+def test_set_table_properties_cdf_on_writer_features_table(spark, tmp_path):
+    """At writer version 7 only listed features count: enabling CDF on
+    a table that row tracking moved to table features must list
+    ``changeDataFeed``, or the configuration promises a change feed the
+    protocol does not declare."""
+    import pyspark.sql.functions as F
+
+    table = str(tmp_path / "cdf_w7")
+    dc.append_delta(
+        spark.range(3).coalesce(1).select(F.col("id").alias("k")), table
+    )
+    dc.enable_row_tracking(table, enabled=True)
+    assert dc.snapshot(table)["protocol"]["minWriterVersion"] == 7
+    dc.set_table_properties(table, {"delta.enableChangeDataFeed": "true"})
+    features = set(dc.snapshot(table)["protocol"]["writerFeatures"])
+    assert {"changeDataFeed", "rowTracking", "domainMetadata"} <= features
 
 
 # --------------------------------------------------------------------------

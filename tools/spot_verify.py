@@ -1,12 +1,13 @@
-"""Driver-style oracle spot-verify (vanilla session, strict compare).
+"""Oracle spot-verify (strict compare).
 
 Usage:
     python tools/spot_verify.py [--sf 0.01] name [name ...]
 
-Runs each named query with a VANILLA SparkSession (the external driver
-does not use the engine's tuned get_spark) and compares the sorted
-stringified tuples against the DuckDB oracle at the given SF. Exits
-non-zero on any mismatch.
+Runs each named query through the driver contract (``__spark_entry__``)
+on the engine's session (``session.get_spark``, UI off; the master
+follows ``SPARK_GRAFT_CPUS``) and compares the sorted stringified tuples
+against the DuckDB oracle at the given SF. Exits non-zero on any
+mismatch.
 """
 
 from __future__ import annotations
@@ -26,13 +27,10 @@ def main() -> int:
     names = args
     sf_dir = f"/root/testdata/sf{sf}"
 
-    from pyspark.sql import SparkSession
+    from acero_delta_lake_streaming_spark.catalog import TABLE_NAMES
+    from acero_delta_lake_streaming_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     import duckdb
@@ -41,10 +39,7 @@ def main() -> int:
 
     qs, osql = ep.queries(), ep.oracle_sql()
     con = duckdb.connect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
