@@ -21,8 +21,12 @@ and its README admits the loop needs an external orchestrator
 * **ST3 empty batches** — a no-op micro-batch commits nothing and
   crashes nothing (the reference raises EOFError, collector.py:91-93).
 * **ST6 per-epoch semantics** — one ``foreachBatch`` epoch writes the
-  raw/curated/actors fan-out (collector.py:228-245) from the same batch
-  DataFrame; Acero's per-stage ``to_table()`` barriers disappear.
+  raw/curated/quarantine/actors fan-out (collector.py:228-245) from one
+  materialization of the batch: the dedup state runs once, the
+  extraction runs once, and the four sink commits run concurrently,
+  each its own idempotent ``txn`` commit, as right-sized files rather
+  than one file per state partition. Acero's per-stage ``to_table()``
+  barriers disappear.
 * **ST4/ST5** — event-time tumbling windows with a watermark; late rows
   beyond the watermark are dropped (tests pin the policy).
 
@@ -36,8 +40,10 @@ rows in the tables.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -60,6 +66,21 @@ DOC_BATCH_SCHEMA = T.StructType(
 )
 
 
+def _materialize(df: DataFrame) -> tuple[int, int]:
+    """Persist ``df`` and run its plan once. Returns its row count and
+    the file count a sink of it writes: the cached bytes over the
+    session's ``spark.sql.files.maxPartitionBytes``, rounded up, at
+    least 1. ``coalesce`` never adds partitions, so only the slivers of
+    a small epoch merge; a big one keeps its own partitioning."""
+    df.persist()
+    rows = df.count()
+    jss = df.sparkSession._jsparkSession
+    cached = jss.sharedState().cacheManager().lookupCachedData(df._jdf).get()
+    size = cached.cachedRepresentation().stats().sizeInBytes()
+    cap = jss.sessionState().conf().filesMaxPartitionBytes()
+    return rows, max(1, -(-size // cap))
+
+
 def medallion_writer(
     base_dir: str,
     app_id: str = "medallion-ingest",
@@ -68,61 +89,93 @@ def medallion_writer(
     id_col: str = "doc_id",
     text_col: str = "text",
 ):
-    """foreachBatch function: one epoch → raw + curated (+ actors) commits.
+    """foreachBatch function: one epoch → raw + curated + quarantine
+    (+ actors) commits.
 
-    Each table commit is idempotent on (app_id-table, epoch): if the epoch
-    is replayed after a crash, already-committed tables no-op and missing
-    ones complete — per-table exactly-once without cross-table 2PC (the
+    The batch is persisted and counted once: that one run of the dedup
+    state is also the ST3 empty check. ``raw`` is submitted at once;
+    the extraction is materialized once on the calling thread, then
+    ``curated``, ``quarantine`` and ``actors`` are submitted together.
+    The pool is sized by the sink count, and every task inherits the
+    epoch's local properties. Each sink writes ``coalesce(k)`` files, k
+    from :func:`_materialize`, so a small epoch adds one file per
+    commit.
+
+    Each table commit is idempotent on (app_id-table, epoch), so the
+    sinks need no order: if one fails, the others still commit, the
+    epoch waits for every sink and then raises the first error in sink
+    order; the replayed epoch no-ops the committed tables and completes
+    the rest — per-table exactly-once without cross-table 2PC (the
     'hard part' called out in SURVEY §7). Commits go through the
     ``delta_compat.append_delta`` module attribute, so a tracer that
     wraps it sees every medallion write."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():  # ST3: empty micro-batch is a clean no-op
-            return
-        batch_df.persist()
+        extracted = None
+        futures = []
         try:
-            delta_compat.append_delta(
-                batch_df,
-                os.path.join(base_dir, "raw"),
-                txn=(f"{app_id}-raw", epoch_id),
-            )
-            extracted = extract_events(
-                batch_df, id_col=id_col, text_col=text_col, provider=provider
-            )
-            extracted.persist()
-            try:
-                curated = extracted.filter(F.col("event").isNotNull()).select(
-                    id_col, F.col("event.category").alias("category")
+            rows, files = _materialize(batch_df)
+            if rows == 0:  # ST3: empty micro-batch is a clean no-op
+                return
+            with ThreadPoolExecutor(max_workers=4 if with_actors else 3) as pool:
+
+                def submit(table: str, df: DataFrame, files: int) -> None:
+                    task = inheritable_thread_target(batch_df.sparkSession)(
+                        delta_compat.append_delta
+                    )
+                    futures.append(pool.submit(
+                        task,
+                        df.coalesce(files),
+                        os.path.join(base_dir, table),
+                        txn=(f"{app_id}-{table}", epoch_id),
+                    ))
+
+                submit("raw", batch_df, files)
+                extracted = extract_events(
+                    batch_df, id_col=id_col, text_col=text_col, provider=provider
                 )
-                delta_compat.append_delta(
-                    curated,
-                    os.path.join(base_dir, "curated"),
-                    txn=(f"{app_id}-curated", epoch_id),
+                _, files = _materialize(extracted)
+                submit(
+                    "curated",
+                    extracted.filter(F.col("event").isNotNull()).select(
+                        id_col, F.col("event.category").alias("category")
+                    ),
+                    files,
                 )
                 # UD3: failed extractions are routed, not dropped — the
                 # quarantine table keeps (id, raw payload) for replay or
                 # audit once the provider/schema issue is fixed.
-                quarantined = extracted.filter(F.col("event").isNull()).select(
-                    id_col, "raw_response"
-                )
-                delta_compat.append_delta(
-                    quarantined,
-                    os.path.join(base_dir, "quarantine"),
-                    txn=(f"{app_id}-quarantine", epoch_id),
+                submit(
+                    "quarantine",
+                    extracted.filter(F.col("event").isNull()).select(
+                        id_col, "raw_response"
+                    ),
+                    files,
                 )
                 if with_actors:
-                    delta_compat.append_delta(
-                        flatten_actors(extracted, id_col=id_col),
-                        os.path.join(base_dir, "actors"),
-                        txn=(f"{app_id}-actors", epoch_id),
-                    )
-            finally:
-                extracted.unpersist()
+                    submit("actors", flatten_actors(extracted, id_col=id_col), files)
+            for f in futures:  # every sink has finished: raise the first error
+                f.result()
         finally:
+            if extracted is not None:
+                extracted.unpersist()
             batch_df.unpersist()
 
     return write_batch
+
+
+def _drain(stream: DataFrame, sink, checkpoint_dir: str, mode: str = "append") -> None:
+    """Run ``stream`` through the foreachBatch ``sink`` until every file
+    available at start is consumed (``availableNow``), checkpointed at
+    ``checkpoint_dir``; a re-run resumes after the consumed files."""
+    (
+        stream.writeStream.foreachBatch(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def run_ingest(
@@ -146,17 +199,13 @@ def run_ingest(
         .parquet(os.path.join(drop_dir, "*.parquet"))
         .dropDuplicates([id_col])  # ST2 state, checkpoint-backed
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            medallion_writer(base_dir, app_id=app_id, provider=provider,
-                             with_actors=with_actors, id_col=id_col,
-                             text_col=text_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream,
+        medallion_writer(base_dir, app_id=app_id, provider=provider,
+                         with_actors=with_actors, id_col=id_col,
+                         text_col=text_col),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def _keyed_epoch_sink(table: str, app_id: str, write):
@@ -213,16 +262,12 @@ def run_news_ingest(
         .dropDuplicates(["id"])
         .withColumn("text", F.concat_ws("\n", "title", "description"))
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            medallion_writer(base_dir, app_id="news-ingest",
-                             provider=provider, id_col="id")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream,
+        medallion_writer(base_dir, app_id="news-ingest", provider=provider,
+                         id_col="id"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 # --------------------------------------------------------------------------
@@ -287,15 +332,8 @@ def run_windowed_stream(
     events = spark.readStream.schema(EVENT_BATCH_SCHEMA).parquet(
         os.path.join(drop_dir, "*.parquet")
     )
-    q = (
-        windowed_event_counts(events, watermark)
-        .writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(windowed_event_counts(events, watermark), write_batch,
+           checkpoint_dir, mode="complete")
 
 
 def sessionized_events(
@@ -351,21 +389,15 @@ def run_session_stream(
     Delta append commit; at 100 TB state holds only open sessions
     inside the watermark horizon."""
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta_compat.append_delta(batch_df, out_table,
-                                  txn=(app_id, epoch_id))
-
+    write_batch = _keyed_epoch_sink(
+        out_table,
+        app_id,
+        lambda batch_df, txn: delta_compat.append_delta(
+            batch_df, out_table, txn=txn
+        ),
+    )
     events = spark.readStream.schema(EVENT_BATCH_SCHEMA).parquet(
         os.path.join(drop_dir, "*.parquet")
     )
-    q = (
-        sessionized_events(events, gap, watermark)
-        .writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(sessionized_events(events, gap, watermark), write_batch,
+           checkpoint_dir)

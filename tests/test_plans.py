@@ -224,6 +224,26 @@ def test_commit_layout_has_one_builder():
     assert {o for w, o in found if w == "_publish_commit"} == {"_commit"}
 
 
+def test_streaming_appends_through_the_module_attribute():
+    """Static guard: streaming modules call ``delta_compat.append_delta``
+    through the module attribute. ``from ...delta_compat import
+    append_delta`` binds the function at import time, so a tracer or a
+    test that wraps the attribute silently misses those writes."""
+    import ast
+    import pathlib
+
+    from acero_delta_lake_streaming_spark import streaming
+
+    bad = []
+    for path in sorted(pathlib.Path(streaming.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom) and any(
+                alias.name == "append_delta" for alias in node.names
+            ):
+                bad.append(f"{path.name}:{node.lineno}")
+    assert not bad, f"append_delta imported by name: {bad}"
+
+
 def test_scd2_single_exchange(spark, sf_dir):
     """w7's three windows and the island group-by must all reuse ONE
     user_id exchange — the property that makes the history build a

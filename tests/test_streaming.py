@@ -9,8 +9,12 @@ import datetime as dt
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from acero_delta_lake_streaming_spark.catalog import load_table
+from acero_delta_lake_streaming_spark.functions.extract import (
+    MockExtractionProvider,
+)
 from acero_delta_lake_streaming_spark.storage import delta_compat
 from acero_delta_lake_streaming_spark.streaming.ingest import (
     EVENT_BATCH_SCHEMA,
@@ -94,6 +98,101 @@ def test_partial_epoch_completes_without_duplicates(spark, sf_dir, tmp_path):
     assert delta_compat.read_delta(spark, os.path.join(base, "raw")).count() == n_raw
     assert delta_compat.is_delta_table(os.path.join(base, "curated"))
     assert delta_compat.is_delta_table(os.path.join(base, "actors"))
+
+
+MEDALLION = ("raw", "curated", "quarantine", "actors")
+
+
+def _table_rows(spark, base):
+    return {
+        t: sorted(map(tuple, delta_compat.read_delta(
+            spark, os.path.join(base, t)).collect()))
+        for t in MEDALLION
+    }
+
+
+def _data_files(table):
+    return [n for n in os.listdir(table) if n.endswith(".parquet")]
+
+
+def test_failing_sink_does_not_stop_the_others(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """The four sinks commit concurrently and independently: when
+    curated fails in epoch 0, the epoch still waits for raw, quarantine
+    and actors to commit and then raises; the replay commits only
+    curated, and every table holds the epoch exactly once."""
+    batch = _docs(spark, sf_dir).limit(50)
+    ref = str(tmp_path / "ref")
+    medallion_writer(ref, app_id="m3")(batch, 0)
+
+    base = str(tmp_path / "tables")
+    real = delta_compat.append_delta
+    failed = []
+
+    def flaky(df, table, *args, **kwargs):
+        if os.path.basename(table) == "curated" and kwargs["txn"][1] == 0 \
+                and not failed:
+            failed.append(table)
+            raise RuntimeError("curated sink down")
+        return real(df, table, *args, **kwargs)
+
+    monkeypatch.setattr(delta_compat, "append_delta", flaky)
+    writer = medallion_writer(base, app_id="m3")
+    with pytest.raises(RuntimeError, match="curated sink down"):
+        writer(batch, 0)
+    others = [os.path.join(base, t) for t in ("raw", "quarantine", "actors")]
+    assert [delta_compat._list_commit_versions(t) for t in others] == [[0]] * 3
+    assert not delta_compat.is_delta_table(os.path.join(base, "curated"))
+
+    writer(batch, 0)  # the replayed epoch
+    assert [delta_compat._list_commit_versions(t) for t in others] == [[0]] * 3
+    assert delta_compat._list_commit_versions(
+        os.path.join(base, "curated")) == [0]
+    assert _table_rows(spark, base) == _table_rows(spark, ref)
+
+
+def test_medallion_epoch_extracts_each_row_once(spark, sf_dir, tmp_path):
+    """The extraction is materialized once per epoch, before its three
+    sinks run: a provider counting through an accumulator sees every
+    row of the epoch exactly once."""
+    seen = spark.sparkContext.accumulator(0)
+
+    class CountingProvider:  # local: ships to the workers by value
+        def extract_batch(self, texts):
+            seen.add(len(texts))
+            return MockExtractionProvider().extract_batch(texts)
+
+    docs = _docs(spark, sf_dir)
+    writer = medallion_writer(str(tmp_path / "tables"), app_id="m4",
+                              provider=CountingProvider())
+    writer(docs.limit(40).repartition(4), 0)
+    assert seen.value == 40
+    writer(docs.filter(F.col("doc_id") % 3 == 0).limit(25).repartition(4), 1)
+    assert seen.value == 65
+
+
+def test_medallion_sinks_write_right_sized_files(spark, sf_dir, tmp_path):
+    """A small epoch spread over many partitions (one sliver per dedup
+    state partition) adds one file per sink commit; with
+    ``spark.sql.files.maxPartitionBytes`` below the epoch's size each
+    sink splits into several files holding the same rows."""
+    batch = _docs(spark, sf_dir).limit(60).repartition(8)
+    one = str(tmp_path / "one")
+    medallion_writer(one, app_id="m5")(batch, 0)
+    for t in MEDALLION:
+        assert len(_data_files(os.path.join(one, t))) == 1, t
+
+    cap = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(cap)
+    spark.conf.set(cap, "1024")
+    try:
+        many = str(tmp_path / "many")
+        medallion_writer(many, app_id="m5")(batch, 0)
+    finally:
+        spark.conf.set(cap, old)
+    for t in ("raw", "curated", "actors"):
+        assert len(_data_files(os.path.join(many, t))) >= 2, t
+    assert _table_rows(spark, many) == _table_rows(spark, one)
 
 
 def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
