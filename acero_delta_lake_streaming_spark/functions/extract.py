@@ -56,9 +56,27 @@ class ExtractionProvider(Protocol):
     """One batched LLM round-trip: texts in, raw model payloads out.
 
     Implementations must be picklable (they ship to executors) and must
-    return one string per input — never raise for a bad row (UD3)."""
+    return one string per input — never raise for a bad row (UD3).
+
+    A provider whose calls wait on a remote service declares
+    ``max_concurrency``, the requests one call keeps in flight
+    (:class:`HttpExtractionProvider`); one without it computes
+    in-process. See :func:`request_concurrency`."""
 
     def extract_batch(self, texts: pd.Series) -> list[str]: ...
+
+
+def request_concurrency(provider: ExtractionProvider | None) -> int | None:
+    """The requests one ``extract_batch`` call of ``provider`` keeps in
+    flight, or None when it computes in-process. A wrapper
+    (:class:`RetryingProvider`, :class:`TransientFlakyProvider`)
+    reports the provider it holds in ``inner``."""
+    while provider is not None:
+        concurrency = getattr(provider, "max_concurrency", None)
+        if concurrency is not None:
+            return concurrency
+        provider = getattr(provider, "inner", None)
+    return None
 
 
 class MockExtractionProvider:

@@ -22,11 +22,16 @@ and its README admits the loop needs an external orchestrator
   crashes nothing (the reference raises EOFError, collector.py:91-93).
 * **ST6 per-epoch semantics** — one ``foreachBatch`` epoch writes the
   raw/curated/quarantine/actors fan-out (collector.py:228-245) from one
-  materialization of the batch: the dedup state runs once, the
-  extraction runs once, and the four sink commits run concurrently,
-  each its own idempotent ``txn`` commit, as right-sized files rather
-  than one file per state partition. Acero's per-stage ``to_table()``
-  barriers disappear.
+  materialization of the batch: the dedup state runs once, and its
+  count is the epoch's empty check. The extraction runs once. An
+  in-process provider's Python stage runs on the epoch's k partitions
+  (k = cached bytes over ``maxPartitionBytes``, at least 1), so a small
+  epoch is one Python task rather than one per state partition; a
+  provider that waits on a remote service keeps the batch's partitions
+  whenever the epoch holds more rows than one call keeps in flight.
+  The extraction's three sinks share it through the cache. All four
+  sink commits run concurrently, each its own idempotent ``txn`` commit
+  of k files. Acero's per-stage ``to_table()`` barriers disappear.
 * **ST4/ST5** — event-time tumbling windows with a watermark; late rows
   beyond the watermark are dropped (tests pin the policy).
 
@@ -51,6 +56,7 @@ from acero_delta_lake_streaming_spark.functions.extract import (
     ExtractionProvider,
     extract_events,
     flatten_actors,
+    request_concurrency,
 )
 from acero_delta_lake_streaming_spark.storage import delta_compat
 
@@ -81,6 +87,13 @@ def _materialize(df: DataFrame) -> tuple[int, int]:
     return rows, max(1, -(-size // cap))
 
 
+def _one_executor(spark: SparkSession) -> bool:
+    """Whether every task runs in one executor (a ``local`` master).
+    Only there does one block lock serialize concurrent jobs that reach
+    the same uncached partition of a persisted DataFrame."""
+    return spark.sparkContext._jsc.sc().isLocal()
+
+
 def medallion_writer(
     base_dir: str,
     app_id: str = "medallion-ingest",
@@ -93,13 +106,31 @@ def medallion_writer(
     (+ actors) commits.
 
     The batch is persisted and counted once: that one run of the dedup
-    state is also the ST3 empty check. ``raw`` is submitted at once;
-    the extraction is materialized once on the calling thread, then
-    ``curated``, ``quarantine`` and ``actors`` are submitted together.
+    state is also the ST3 empty check, and it gives k, the file count
+    of :func:`_materialize`. ``raw`` is submitted at once. The
+    extraction is persisted, and how it runs depends on the provider
+    and the cluster:
+
+    * An in-process provider reads ``batch.coalesce(k)``, so a small
+      epoch is one Python task. The extraction is not counted:
+      ``curated``, ``quarantine`` and ``actors`` are submitted straight
+      away, and their planning overlaps the Python stage. On one
+      executor the first task to reach a cached partition computes it
+      and the other sinks' tasks wait for the block, so the provider
+      sees each row once.
+    * Across executors nothing makes those tasks wait
+      (:func:`_one_executor`), so the extraction is counted before its
+      sinks start.
+    * A provider that waits on a remote service
+      (:func:`request_concurrency`), given more rows than one of its
+      calls keeps in flight, reads the batch's own partitions, so the
+      requests in flight scale with the tasks. It is counted before its
+      sinks start: a sink's ``coalesce(k)`` over the uncached
+      extraction could fold those partitions into one task.
+
     The pool is sized by the sink count, and every task inherits the
-    epoch's local properties. Each sink writes ``coalesce(k)`` files, k
-    from :func:`_materialize`, so a small epoch adds one file per
-    commit.
+    epoch's local properties. Each sink writes ``coalesce(k)`` files,
+    so a small epoch adds one file per commit.
 
     Each table commit is idempotent on (app_id-table, epoch), so the
     sinks need no order: if one fails, the others still commit, the
@@ -119,7 +150,7 @@ def medallion_writer(
                 return
             with ThreadPoolExecutor(max_workers=4 if with_actors else 3) as pool:
 
-                def submit(table: str, df: DataFrame, files: int) -> None:
+                def submit(table: str, df: DataFrame) -> None:
                     task = inheritable_thread_target(batch_df.sparkSession)(
                         delta_compat.append_delta
                     )
@@ -130,17 +161,20 @@ def medallion_writer(
                         txn=(f"{app_id}-{table}", epoch_id),
                     ))
 
-                submit("raw", batch_df, files)
+                submit("raw", batch_df)
+                concurrency = request_concurrency(provider)
+                spread = concurrency is not None and rows > concurrency
                 extracted = extract_events(
-                    batch_df, id_col=id_col, text_col=text_col, provider=provider
-                )
-                _, files = _materialize(extracted)
+                    batch_df if spread else batch_df.coalesce(files),
+                    id_col=id_col, text_col=text_col, provider=provider,
+                ).persist()
+                if spread or not _one_executor(batch_df.sparkSession):
+                    extracted.count()
                 submit(
                     "curated",
                     extracted.filter(F.col("event").isNotNull()).select(
                         id_col, F.col("event.category").alias("category")
                     ),
-                    files,
                 )
                 # UD3: failed extractions are routed, not dropped — the
                 # quarantine table keeps (id, raw payload) for replay or
@@ -150,10 +184,9 @@ def medallion_writer(
                     extracted.filter(F.col("event").isNull()).select(
                         id_col, "raw_response"
                     ),
-                    files,
                 )
                 if with_actors:
-                    submit("actors", flatten_actors(extracted, id_col=id_col), files)
+                    submit("actors", flatten_actors(extracted, id_col=id_col))
             for f in futures:  # every sink has finished: raise the first error
                 f.result()
         finally:

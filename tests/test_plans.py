@@ -244,6 +244,38 @@ def test_streaming_appends_through_the_module_attribute():
     assert not bad, f"append_delta imported by name: {bad}"
 
 
+def test_medallion_epoch_counts_through_materialize_once():
+    """Static guard on ``streaming/ingest.py::medallion_writer``: the
+    epoch's empty check is the count in ``_materialize``, never an
+    ``isEmpty()`` job that runs the dedup state a second time, and
+    ``_materialize`` is called once. A second call (say, sizing the
+    extraction) puts a count job in front of the sinks that share it
+    on every host, not only across executors."""
+    import ast
+    import pathlib
+
+    from acero_delta_lake_streaming_spark.streaming import ingest
+
+    tree = ast.parse(pathlib.Path(ingest.__file__).read_text())
+    (writer,) = [
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef) and node.name == "medallion_writer"
+    ]
+    calls = [node for node in ast.walk(writer) if isinstance(node, ast.Call)]
+    empty_checks = [
+        node.lineno for node in calls
+        if isinstance(node.func, ast.Attribute) and node.func.attr == "isEmpty"
+    ]
+    assert not empty_checks, f"isEmpty() in medallion_writer at {empty_checks}"
+    materializes = [
+        node.lineno for node in calls
+        if isinstance(node.func, ast.Name) and node.func.id == "_materialize"
+    ]
+    assert len(materializes) == 1, (
+        f"medallion_writer calls _materialize at lines {materializes}"
+    )
+
+
 def test_scd2_single_exchange(spark, sf_dir):
     """w7's three windows and the island group-by must all reuse ONE
     user_id exchange — the property that makes the history build a

@@ -5,17 +5,22 @@ watermark policy — the behaviors no SQL oracle can check.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark import TaskContext
+from pyspark.accumulators import AccumulatorParam
 
 from acero_delta_lake_streaming_spark.catalog import load_table
 from acero_delta_lake_streaming_spark.functions.extract import (
     MockExtractionProvider,
+    RetryingProvider,
 )
 from acero_delta_lake_streaming_spark.storage import delta_compat
+from acero_delta_lake_streaming_spark.streaming import ingest
 from acero_delta_lake_streaming_spark.streaming.ingest import (
     EVENT_BATCH_SCHEMA,
     medallion_writer,
@@ -151,24 +156,131 @@ def test_failing_sink_does_not_stop_the_others(spark, sf_dir, tmp_path,
     assert _table_rows(spark, base) == _table_rows(spark, ref)
 
 
-def test_medallion_epoch_extracts_each_row_once(spark, sf_dir, tmp_path):
-    """The extraction is materialized once per epoch, before its three
-    sinks run: a provider counting through an accumulator sees every
-    row of the epoch exactly once."""
+def _counting_provider(spark, max_concurrency=None):
+    """A mock provider that records, through two accumulators, the task
+    attempt of each ``extract_batch`` call and the rows the calls carry.
+    Given ``max_concurrency`` it declares itself a provider that waits on
+    a remote service."""
+
+    class Concat(AccumulatorParam):  # local: ships to the workers by value
+        def zero(self, value):
+            return []
+
+        def addInPlace(self, a, b):
+            return a + b
+
+    calls = spark.sparkContext.accumulator([], Concat())
     seen = spark.sparkContext.accumulator(0)
 
     class CountingProvider:  # local: ships to the workers by value
         def extract_batch(self, texts):
+            calls.add([TaskContext.get().taskAttemptId()])
             seen.add(len(texts))
             return MockExtractionProvider().extract_batch(texts)
 
+    provider = CountingProvider()
+    if max_concurrency is not None:
+        provider.max_concurrency = max_concurrency
+    return provider, calls, seen
+
+
+@contextlib.contextmanager
+def _files_cap(spark, value):
+    """Set ``spark.sql.files.maxPartitionBytes`` for the block."""
+    cap = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(cap)
+    spark.conf.set(cap, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(cap, old)
+
+
+def test_medallion_epoch_extracts_each_row_once(spark, sf_dir, tmp_path):
+    """The extraction is persisted, and its three sinks start together
+    and share it: a provider counting through an accumulator sees every
+    row of the epoch exactly once, also when the sinks contend for
+    several cached partitions."""
+    provider, _, seen = _counting_provider(spark)
     docs = _docs(spark, sf_dir)
     writer = medallion_writer(str(tmp_path / "tables"), app_id="m4",
-                              provider=CountingProvider())
+                              provider=provider)
     writer(docs.limit(40).repartition(4), 0)
     assert seen.value == 40
     writer(docs.filter(F.col("doc_id") % 3 == 0).limit(25).repartition(4), 1)
     assert seen.value == 65
+    with _files_cap(spark, "1024"):
+        writer(docs.filter(F.col("doc_id") % 3 == 1).limit(40).repartition(4), 2)
+    assert seen.value == 105
+
+
+def test_medallion_extraction_task_count_follows_the_provider(
+        spark, sf_dir, tmp_path):
+    """An in-process provider's Python stage runs on the epoch's k
+    partitions: a 40-row epoch over 4 partitions makes one provider
+    call, and a cap below the epoch's size splits it into several calls
+    that still see each row once. A provider that waits on a remote
+    service keeps one task per batch partition once the epoch holds more
+    rows than one call keeps in flight, also behind a retry wrapper, so
+    its requests in flight still scale with the tasks; a smaller epoch
+    is one call. The batch is checkpointed, so no adaptive plan runs
+    the cached extraction as a stage of its own: a sink's
+    ``coalesce(k)`` would fold an uncounted extraction into one task."""
+    batch = _docs(spark, sf_dir).limit(40).repartition(4).localCheckpoint()
+
+    def run(name, provider, calls, seen):
+        """(calls, tasks that made them, rows) of one epoch."""
+        medallion_writer(str(tmp_path / name), app_id="m6",
+                         provider=provider)(batch, 0)
+        return len(calls.value), len(set(calls.value)), seen.value
+
+    assert run("one", *_counting_provider(spark)) == (1, 1, 40)
+    with _files_cap(spark, "1024"):
+        calls, _, rows = run("many", *_counting_provider(spark))
+    assert calls >= 2 and rows == 40
+
+    assert run("remote", *_counting_provider(spark, 8)) == (4, 4, 40)
+    provider, calls, seen = _counting_provider(spark, 8)
+    assert run("retrying", RetryingProvider(provider), calls, seen) == (4, 4, 40)
+    assert run("wide", *_counting_provider(spark, 40)) == (1, 1, 40)
+
+
+def _epoch_jobs(spark, writer, batch, group: str) -> int:
+    """The Spark jobs one ``writer(batch, 0)`` epoch launches, counted
+    under the job group ``group`` (a fresh name per call)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count of one epoch")
+    try:
+        writer(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events post async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_medallion_epoch_job_count(spark, sf_dir, tmp_path, monkeypatch):
+    """On one executor a non-empty epoch launches 7 Spark jobs: the
+    batch count (3 jobs under AQE) and the four sink writes. The
+    extraction has no count of its own; with one (persist + count
+    before its sinks) the epoch launched 10. Across executors the
+    extraction is counted before its sinks again, and the provider
+    still sees each row once."""
+    provider, _, seen = _counting_provider(spark)
+    batch = _docs(spark, sf_dir).limit(40).repartition(4).localCheckpoint()
+    local = _epoch_jobs(spark, medallion_writer(
+        str(tmp_path / "local"), app_id="m7", provider=provider), batch,
+        "medallion-epoch-local")
+    assert local <= 7
+
+    monkeypatch.setattr(ingest, "_one_executor", lambda spark: False)
+    across = _epoch_jobs(spark, medallion_writer(
+        str(tmp_path / "across"), app_id="m7", provider=provider), batch,
+        "medallion-epoch-across")
+    assert across > local
+    assert seen.value == 80
+    assert _table_rows(spark, str(tmp_path / "across")) == _table_rows(
+        spark, str(tmp_path / "local"))
 
 
 def test_medallion_sinks_write_right_sized_files(spark, sf_dir, tmp_path):
