@@ -18,6 +18,11 @@ Arrow-batched ``mapInPandas`` stage:
   ``is_main_actor`` discriminator — the exact shape of
   collector.py:168-206's Python loops, minus the loops.
 
+A batch already collected on the driver (a small streaming epoch,
+``streaming/ingest.py``) skips the Python worker: ``extract_local``
+makes the one provider call in the driver process and parses with the
+same ``parse_events`` over a local relation.
+
 Providers:
 * ``MockExtractionProvider`` — deterministic, hermetic: actors come from
   the first words of the text, the category from an md5 digit, and a 1/16
@@ -42,6 +47,7 @@ from collections.abc import Iterator
 from typing import Protocol
 
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,8 +61,10 @@ from acero_delta_lake_streaming_spark.schemas import (
 class ExtractionProvider(Protocol):
     """One batched LLM round-trip: texts in, raw model payloads out.
 
-    Implementations must be picklable (they ship to executors) and must
-    return one string per input — never raise for a bad row (UD3).
+    Implementations must be picklable: :func:`extract_events` ships
+    them to the executors' Python workers, while :func:`extract_local`
+    calls them in the driver process. Either way they must return one
+    string per input — never raise for a bad row (UD3).
 
     A provider whose calls wait on a remote service declares
     ``max_concurrency``, the requests one call keeps in flight
@@ -488,9 +496,19 @@ def extract_events_with_retry(
             )
 
     narrow = df.select(id_col, text_col)
-    extracted = narrow.mapInPandas(run, schema=out_schema)
+    return parse_events(narrow.mapInPandas(run, schema=out_schema))
+
+
+def parse_events(responses: DataFrame) -> DataFrame:
+    """UD1's parse, JVM-side: append the ``event`` struct
+    (EVENT_RESPONSE_SCHEMA) parsed from ``raw_response``. NULL ``event``
+    == quarantined row (UD3). Shared by the executor extraction
+    (:func:`extract_events`) and the driver one (:func:`extract_local`),
+    so both parse every payload the same way."""
     parsed = F.from_json("raw_response", EVENT_RESPONSE_SCHEMA)
-    return extracted.withColumn(
+    # PERMISSIVE from_json yields an all-null struct for non-JSON input;
+    # normalize that to a true NULL so "event IS NULL" == quarantined.
+    return responses.withColumn(
         "event",
         F.when(
             parsed.getField("category").isNull()
@@ -523,38 +541,55 @@ def extract_events(
             )
 
     narrow = df.select(id_col, text_col)
-    extracted = narrow.mapInPandas(run, schema=out_schema)
-    parsed = F.from_json("raw_response", EVENT_RESPONSE_SCHEMA)
-    # PERMISSIVE from_json yields an all-null struct for non-JSON input;
-    # normalize that to a true NULL so "event IS NULL" == quarantined.
-    return extracted.withColumn(
-        "event",
-        F.when(
-            parsed.getField("category").isNull()
-            & parsed.getField("main_actors").isNull()
-            & parsed.getField("other_actors").isNull(),
-            F.lit(None).cast(EVENT_RESPONSE_SCHEMA),
-        ).otherwise(parsed),
+    return parse_events(narrow.mapInPandas(run, schema=out_schema))
+
+
+def extract_local(
+    spark: SparkSession,
+    batch: pa.Table,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    provider: ExtractionProvider | None = None,
+) -> DataFrame:
+    """UD1 on the driver, for a batch already collected there: ONE
+    ``extract_batch`` call in this process, parsed by
+    :func:`parse_events` over a local relation. The rows and the
+    schema equal :func:`extract_events` over the same batch; no Python
+    worker starts."""
+    provider = provider or MockExtractionProvider()
+    raw = provider.extract_batch(batch.column(text_col).to_pandas())
+    responses = pa.table(
+        [batch.column(id_col), pa.array(raw, pa.string())],
+        # nullable, as the executor stage's declared output schema is
+        schema=pa.schema([
+            pa.field(id_col, batch.schema.field(id_col).type),
+            pa.field("raw_response", pa.string()),
+        ]),
     )
+    return parse_events(spark.createDataFrame(responses))
+
+
+#: UD2's actors of one extracted row, in order: main then other, each a
+#: (name, role, is_main) struct; empty for a quarantined (NULL) event.
+ACTORS_EXPR = (
+    "concat("
+    "transform(coalesce(event.main_actors, array()), "
+    "  a -> struct(a.name AS name, a.role AS role, true AS is_main)), "
+    "transform(coalesce(event.other_actors, array()), "
+    "  a -> struct(a.name AS name, a.role AS role, false AS is_main)))"
+)
 
 
 def flatten_actors(extracted: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """UD2: one row per (doc, actor): explode main+other with an
     is_main_actor flag; quarantined rows (NULL event) drop out — exactly
     collector.py:190-201's loop semantics."""
-    actor = (
-        "concat("
-        "transform(coalesce(event.main_actors, array()), "
-        "  a -> struct(a.name AS name, a.role AS role, true AS is_main)), "
-        "transform(coalesce(event.other_actors, array()), "
-        "  a -> struct(a.name AS name, a.role AS role, false AS is_main)))"
-    )
     return (
         extracted.filter(F.col("event").isNotNull())
         .select(
             F.col(id_col).alias("news_id"),
             F.col("event.category").alias("category"),
-            F.explode(F.expr(actor)).alias("a"),
+            F.explode(F.expr(ACTORS_EXPR)).alias("a"),
         )
         .select(
             "news_id",

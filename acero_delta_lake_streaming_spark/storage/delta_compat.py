@@ -66,10 +66,14 @@ import os
 import re
 import time
 import uuid
+from typing import TYPE_CHECKING
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 _LOG_DIR = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -1798,8 +1802,46 @@ def _txn_actions(
     ]
 
 
+def _spark_schema(data: DataFrame | pa.Table) -> T.StructType:
+    """The Spark schema of a DataFrame, or of a ``pyarrow.Table``."""
+    if isinstance(data, DataFrame):
+        return data.schema
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(data.schema)
+
+
+def _appends_as_written(
+    snap: dict | None,
+    schema: T.StructType,
+    partition_by: list[str] | None,
+    identity: dict | None,
+    cluster_by: list[str] | None,
+) -> bool:
+    """Whether a batch of ``schema`` lands in ``snap``'s table exactly as
+    it is, with no row transformed or checked on the way in: no
+    partitioning, identity minting, clustering, column mapping, CHECK
+    constraint, invariant or generated column, and the table's own
+    column names and types (so no defaults filled, no schema evolved,
+    nothing refused)."""
+    if partition_by or identity is not None or cluster_by is not None:
+        return False
+    if snap is None:
+        return True
+    table_schema = T.StructType.fromJson(json.loads(snap["schema"]))
+    return (
+        not snap["partition_cols"]
+        and _mapping_mode(snap) == "none"
+        and not table_identity_columns(snap["schema"])
+        and not _row_write_checks(snap)
+        and not table_generated_columns(snap)
+        and {f.name: f.dataType for f in table_schema.fields}
+        == {f.name: f.dataType for f in schema.fields}
+    )
+
+
 def append_delta(
-    df: DataFrame,
+    df: DataFrame | pa.Table,
     table: str,
     txn: tuple[str, int] | None = None,
     partition_by: list[str] | None = None,
@@ -1811,6 +1853,12 @@ def append_delta(
     driver-side JSON commit (protocol + metaData on create, adds
     always). Publishes via atomic link-claim; returns the committed
     version.
+
+    ``df`` is a DataFrame, or a ``pyarrow.Table`` already on the
+    driver (a small streaming epoch). An Arrow batch that lands as it
+    is (:func:`_appends_as_written`) is written by pyarrow as ONE file,
+    with no Spark job, into the same staged layout, stats and commit; any
+    other becomes a DataFrame first and takes the path below.
 
     ``partition_by`` writes the hive layout delta-spark produces
     (``col=value/`` dirs, URL-encoded paths, raw values in each add's
@@ -1866,6 +1914,10 @@ def append_delta(
     txn_actions = _txn_actions(snap0, txn)
     if txn_actions is None:
         return -1
+    if not isinstance(df, DataFrame) and not _appends_as_written(
+        snap0, _spark_schema(df), partition_by, identity, cluster_by
+    ):
+        df = SparkSession.active().createDataFrame(df)
     partition_by = list(partition_by or [])
     os.makedirs(_log_dir(table), exist_ok=True)
     version = 0 if snap0 is None else snap0["version"] + 1
@@ -1924,6 +1976,8 @@ def append_delta(
     mapped_schema_json: str | None = None
     if version > 0:
         _check_writer_protocol(snap0, "append", identity_ok=True)
+    # an Arrow batch still here needs none of these checks or rewrites
+    if version > 0 and isinstance(df, DataFrame):
         evolved_config = dict(snap0.get("configuration") or {})
         mapping_mode = _mapping_mode(snap0)
         if mapping_mode not in ("none", "name", "id"):
@@ -2090,7 +2144,7 @@ def append_delta(
     now_ms = int(time.time() * 1000)
     actions: list[dict] = []
     if version == 0:
-        create_schema = df.schema.json()
+        create_schema = _spark_schema(df).json()
         proto_w = 2
         if created_identity is not None:
             _icol, _istart, _istep, _iallow, _ihwm = created_identity
@@ -2820,19 +2874,34 @@ def _physical_for(
 
 
 def _write_staged(
-    table: str, df: DataFrame, version: int, partition_by: list[str]
+    table: str, df: DataFrame | pa.Table, version: int, partition_by: list[str]
 ) -> list[dict]:
     """Write ``df`` (already in physical names) to a private staging
     directory, hive-partitioned by ``partition_by``, move the files
     into the table root and return their ``add`` actions (each
     carrying footer ``stats`` for data skipping, ``dataChange:true``).
     Hive dir segments under staging carry the partition values; the
-    staging dir is removed."""
+    staging dir is removed.
+
+    A ``pyarrow.Table`` (unpartitioned) is written by pyarrow as one
+    file with Spark's physical types: timestamps as INT96, Spark's
+    default ``outputTimestampType``, which carries no footer min/max,
+    so the stats keys match a Spark-written file's. The footer skips
+    pyarrow's serialized Arrow schema: the log schema drives reads."""
     staging = os.path.join(table, f"_staging_{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    if isinstance(df, DataFrame):
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+    else:
+        import pyarrow.parquet as pq
+
+        os.makedirs(staging)
+        pq.write_table(
+            df, os.path.join(staging, "part-00000.parquet"),
+            use_deprecated_int96_timestamps=True, store_schema=False,
+        )
     adds = []
     for dirpath, _dirs, names in sorted(os.walk(staging)):
         rel_dir = os.path.relpath(dirpath, staging)

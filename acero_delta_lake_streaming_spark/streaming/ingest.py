@@ -10,7 +10,10 @@ and its README admits the loop needs an external orchestrator
 * **ST1 incremental ingestion** — a file-drop ``readStream`` stands in
   for the RSS poll (the fetcher is decoupled: it drops fetched batches
   as files; SURVEY §7 step 5). The checkpoint tracks consumed files, so
-  a re-run processes only unseen batches.
+  a re-run processes only unseen batches. Streams read the drop
+  DIRECTORY with a ``pathGlobFilter``: a ``dir/*.parquet`` path globs
+  to one root path per file, and past 32 of them every poll lists them
+  in two parallel Spark jobs.
 * **ST2 exactly-once dedup** — ``dropDuplicates("doc_id")`` holds the
   seen-id state inside the checkpointed query (watermark-bounded in
   production), and the sink write is an **idempotent Delta commit
@@ -22,16 +25,23 @@ and its README admits the loop needs an external orchestrator
   crashes nothing (the reference raises EOFError, collector.py:91-93).
 * **ST6 per-epoch semantics** — one ``foreachBatch`` epoch writes the
   raw/curated/quarantine/actors fan-out (collector.py:228-245) from one
-  materialization of the batch: the dedup state runs once, and its
-  count is the epoch's empty check. The extraction runs once. An
-  in-process provider's Python stage runs on the epoch's k partitions
-  (k = cached bytes over ``maxPartitionBytes``, at least 1), so a small
-  epoch is one Python task rather than one per state partition; a
-  provider that waits on a remote service keeps the batch's partitions
-  whenever the epoch holds more rows than one call keeps in flight.
-  The extraction's three sinks share it through the cache. All four
-  sink commits run concurrently, each its own idempotent ``txn`` commit
-  of k files. Acero's per-stage ``to_table()`` barriers disappear.
+  run of the dedup state, which is also the epoch's empty check, and
+  one extraction. An epoch of an in-process provider that fits one
+  file split finishes on the driver, like the reference's in-process
+  Arrow writes (collector.py:219-226): it is collected once as Arrow,
+  the provider runs in this process, the three extraction sinks are
+  parsed over a local relation in one more job, and each table
+  commits one pyarrow-written file — two Spark jobs, no Python
+  worker, no Spark write job. Any other epoch is materialized once
+  and runs on the executors: an in-process provider's Python stage on
+  the epoch's k partitions (k = cached bytes over
+  ``maxPartitionBytes``, at least 1); a provider that waits on a
+  remote service on the batch's partitions whenever the epoch holds
+  more rows than one call keeps in flight. There the extraction's
+  three sinks share it through the cache, each writing k files. On
+  both routes the four sink commits run concurrently, each its own
+  idempotent ``txn`` commit. Acero's per-stage ``to_table()`` barriers
+  disappear.
 * **ST4/ST5** — event-time tumbling windows with a watermark; late rows
   beyond the watermark are dropped (tests pin the policy).
 
@@ -47,14 +57,17 @@ from __future__ import annotations
 import os
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from acero_delta_lake_streaming_spark.functions.extract import (
+    ACTORS_EXPR,
     ExtractionProvider,
     extract_events,
+    extract_local,
     flatten_actors,
     request_concurrency,
 )
@@ -87,6 +100,53 @@ def _materialize(df: DataFrame) -> tuple[int, int]:
     return rows, max(1, -(-size // cap))
 
 
+def _fits_one_split(df: DataFrame) -> bool:
+    """Whether ``df``'s plan estimates its output at no more than one
+    file split (the typed ``filesMaxPartitionBytes``, the cap of
+    :func:`_materialize`'s k). Reading the estimate runs no job. The
+    estimate is in Spark's file-split unit, on-disk parquet bytes scaled
+    by the projection, while k counts cached in-memory bytes: on news
+    epochs the cached size is 3.4–6× the estimate, so an epoch that the
+    executor route would write as a few files per sink still fits."""
+    jss = df.sparkSession._jsparkSession
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return size <= jss.sessionState().conf().filesMaxPartitionBytes()
+
+
+def _local_tables(
+    extracted: DataFrame, id_col: str, with_actors: bool
+) -> dict[str, pa.Table]:
+    """The sinks of a local extraction as Arrow tables, from ONE Spark
+    job of one task: one select carries, for each extracted row, its
+    rows of every sink as an array (the rows the executor route's
+    filters and :func:`flatten_actors` emit for it), and the driver
+    flattens each array column into its table. Each table keeps its
+    Spark schema's types and nullability."""
+    ok = F.col("event").isNotNull()
+    sinks = {
+        "curated": F.when(ok, F.array(F.struct(
+            id_col, F.col("event.category").alias("category")
+        ))),
+        # UD3: failed extractions are routed, not dropped
+        "quarantine": F.when(~ok, F.array(F.struct(id_col, "raw_response"))),
+    }
+    if with_actors:
+        sinks["actors"] = F.transform(F.expr(ACTORS_EXPR), lambda a: F.struct(
+            F.col(id_col).alias("news_id"),
+            a["name"].alias("actor_name"),
+            a["role"].alias("actor_role"),
+            a["is_main"].alias("is_main_actor"),
+            F.col("event.category").alias("category"),
+        ))
+    got = extracted.select(
+        *(rows.alias(table) for table, rows in sinks.items())
+    ).coalesce(1).toArrow()  # ONE SPLIT: the epoch's parse
+    return {
+        table: pa.Table.from_struct_array(got[table].combine_chunks().flatten())
+        for table in sinks
+    }
+
+
 def _one_executor(spark: SparkSession) -> bool:
     """Whether every task runs in one executor (a ``local`` master).
     Only there does one block lock serialize concurrent jobs that reach
@@ -105,88 +165,120 @@ def medallion_writer(
     """foreachBatch function: one epoch → raw + curated + quarantine
     (+ actors) commits.
 
-    The batch is persisted and counted once: that one run of the dedup
-    state is also the ST3 empty check, and it gives k, the file count
-    of :func:`_materialize`. ``raw`` is submitted at once. The
-    extraction is persisted, and how it runs depends on the provider
-    and the cluster:
+    The epoch runs the dedup state once, and that one run is also the
+    ST3 empty check. Where the rest runs depends on the provider and
+    on the epoch's size:
 
-    * An in-process provider reads ``batch.coalesce(k)``, so a small
-      epoch is one Python task. The extraction is not counted:
-      ``curated``, ``quarantine`` and ``actors`` are submitted straight
-      away, and their planning overlaps the Python stage. On one
-      executor the first task to reach a cached partition computes it
-      and the other sinks' tasks wait for the block, so the provider
-      sees each row once.
-    * Across executors nothing makes those tasks wait
-      (:func:`_one_executor`), so the extraction is counted before its
-      sinks start.
-    * A provider that waits on a remote service
-      (:func:`request_concurrency`), given more rows than one of its
-      calls keeps in flight, reads the batch's own partitions, so the
-      requests in flight scale with the tasks. It is counted before its
-      sinks start: a sink's ``coalesce(k)`` over the uncached
-      extraction could fold those partitions into one task.
+    * **Driver route.** An in-process provider (no
+      :func:`request_concurrency`) whose epoch the plan estimates at
+      one file split or less (:func:`_fits_one_split`). The batch is
+      collected once as Arrow, and ``raw`` is submitted at once. The
+      provider is called once in this process
+      (:func:`extract_local`), and one select over that local relation
+      yields the three sinks' rows in one more job
+      (:func:`_local_tables`).
+      Each table commits one pyarrow-written file. No Python worker
+      starts and no Spark write job runs: two Spark jobs per epoch.
+    * **Executor route**, every other epoch. The batch is persisted and
+      counted (:func:`_materialize`, which gives k, the file count of
+      each sink) and ``raw`` is submitted at once. The extraction is
+      persisted:
+
+      * An in-process provider reads ``batch.coalesce(k)``, so an epoch
+        is k Python tasks. The extraction is not counted: ``curated``,
+        ``quarantine`` and ``actors`` are submitted straight away, and
+        their planning overlaps the Python stage. On one executor the
+        first task to reach a cached partition computes it and the
+        other sinks' tasks wait for the block, so the provider sees
+        each row once. Across executors nothing makes those tasks wait
+        (:func:`_one_executor`), so the extraction is counted before
+        its sinks start.
+      * A provider that waits on a remote service, given more rows than
+        one of its calls keeps in flight, reads the batch's own
+        partitions, so the requests in flight scale with the tasks. It
+        is counted before its sinks start: a sink's ``coalesce(k)``
+        over the uncached extraction could fold those partitions into
+        one task.
+
+      Each sink writes ``coalesce(k)`` files, so a small epoch adds one
+      file per commit.
 
     The pool is sized by the sink count, and every task inherits the
-    epoch's local properties. Each sink writes ``coalesce(k)`` files,
-    so a small epoch adds one file per commit.
-
-    Each table commit is idempotent on (app_id-table, epoch), so the
-    sinks need no order: if one fails, the others still commit, the
-    epoch waits for every sink and then raises the first error in sink
-    order; the replayed epoch no-ops the committed tables and completes
-    the rest — per-table exactly-once without cross-table 2PC (the
-    'hard part' called out in SURVEY §7). Commits go through the
-    ``delta_compat.append_delta`` module attribute, so a tracer that
-    wraps it sees every medallion write."""
+    epoch's local properties. Each table commit is idempotent on
+    (app_id-table, epoch), so the sinks need no order: if one fails,
+    the others still commit, the epoch waits for every sink and then
+    raises the first error in sink order; the replayed epoch no-ops
+    the committed tables and completes the rest — per-table
+    exactly-once without cross-table 2PC (the 'hard part' called out
+    in SURVEY §7). Commits go through the ``delta_compat.append_delta``
+    module attribute, so a tracer that wraps it sees every medallion
+    write."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         extracted = None
         futures = []
         try:
-            rows, files = _materialize(batch_df)
+            concurrency = request_concurrency(provider)
+            on_driver = concurrency is None and _fits_one_split(batch_df)
+            if on_driver:
+                batch = batch_df.toArrow()  # ONE SPLIT, by the plan's estimate
+                rows = batch.num_rows
+            else:
+                rows, files = _materialize(batch_df)
             if rows == 0:  # ST3: empty micro-batch is a clean no-op
                 return
             with ThreadPoolExecutor(max_workers=4 if with_actors else 3) as pool:
 
-                def submit(table: str, df: DataFrame) -> None:
+                def submit(table: str, data: DataFrame | pa.Table) -> None:
                     task = inheritable_thread_target(batch_df.sparkSession)(
                         delta_compat.append_delta
                     )
                     futures.append(pool.submit(
                         task,
-                        df.coalesce(files),
+                        data,
                         os.path.join(base_dir, table),
                         txn=(f"{app_id}-{table}", epoch_id),
                     ))
 
-                submit("raw", batch_df)
-                concurrency = request_concurrency(provider)
-                spread = concurrency is not None and rows > concurrency
-                extracted = extract_events(
-                    batch_df if spread else batch_df.coalesce(files),
-                    id_col=id_col, text_col=text_col, provider=provider,
-                ).persist()
-                if spread or not _one_executor(batch_df.sparkSession):
-                    extracted.count()
-                submit(
-                    "curated",
-                    extracted.filter(F.col("event").isNotNull()).select(
-                        id_col, F.col("event.category").alias("category")
-                    ),
-                )
-                # UD3: failed extractions are routed, not dropped — the
-                # quarantine table keeps (id, raw payload) for replay or
-                # audit once the provider/schema issue is fixed.
-                submit(
-                    "quarantine",
-                    extracted.filter(F.col("event").isNull()).select(
-                        id_col, "raw_response"
-                    ),
-                )
-                if with_actors:
-                    submit("actors", flatten_actors(extracted, id_col=id_col))
+                if on_driver:
+                    submit("raw", batch)
+                    local = extract_local(
+                        batch_df.sparkSession, batch, id_col=id_col,
+                        text_col=text_col, provider=provider,
+                    )
+                    for table, data in _local_tables(
+                        local, id_col, with_actors
+                    ).items():
+                        submit(table, data)
+                else:
+                    submit("raw", batch_df.coalesce(files))
+                    spread = concurrency is not None and rows > concurrency
+                    extracted = extract_events(
+                        batch_df if spread else batch_df.coalesce(files),
+                        id_col=id_col, text_col=text_col, provider=provider,
+                    ).persist()
+                    if spread or not _one_executor(batch_df.sparkSession):
+                        extracted.count()
+                    submit(
+                        "curated",
+                        extracted.filter(F.col("event").isNotNull()).select(
+                            id_col, F.col("event.category").alias("category")
+                        ).coalesce(files),
+                    )
+                    # UD3: failed extractions are routed, not dropped — the
+                    # quarantine table keeps (id, raw payload) for replay or
+                    # audit once the provider/schema issue is fixed.
+                    submit(
+                        "quarantine",
+                        extracted.filter(F.col("event").isNull()).select(
+                            id_col, "raw_response"
+                        ).coalesce(files),
+                    )
+                    if with_actors:
+                        submit(
+                            "actors",
+                            flatten_actors(extracted, id_col=id_col).coalesce(files),
+                        )
             for f in futures:  # every sink has finished: raise the first error
                 f.result()
         finally:
@@ -229,7 +321,7 @@ def run_ingest(
     ones)."""
     stream = (
         spark.readStream.schema(schema)
-        .parquet(os.path.join(drop_dir, "*.parquet"))
+        .option("pathGlobFilter", "*.parquet").parquet(drop_dir)
         .dropDuplicates([id_col])  # ST2 state, checkpoint-backed
     )
     _drain(
@@ -291,7 +383,7 @@ def run_news_ingest(
 
     stream = (
         spark.readStream.schema(NEWS_SCHEMA)
-        .parquet(os.path.join(drop_dir, "*.parquet"))
+        .option("pathGlobFilter", "*.parquet").parquet(drop_dir)
         .dropDuplicates(["id"])
         .withColumn("text", F.concat_ws("\n", "title", "description"))
     )
@@ -362,8 +454,9 @@ def run_windowed_stream(
             batch_df.sparkSession, batch_df, out_table, txn=txn
         ),
     )
-    events = spark.readStream.schema(EVENT_BATCH_SCHEMA).parquet(
-        os.path.join(drop_dir, "*.parquet")
+    events = (
+        spark.readStream.schema(EVENT_BATCH_SCHEMA)
+        .option("pathGlobFilter", "*.parquet").parquet(drop_dir)
     )
     _drain(windowed_event_counts(events, watermark), write_batch,
            checkpoint_dir, mode="complete")
@@ -429,8 +522,9 @@ def run_session_stream(
             batch_df, out_table, txn=txn
         ),
     )
-    events = spark.readStream.schema(EVENT_BATCH_SCHEMA).parquet(
-        os.path.join(drop_dir, "*.parquet")
+    events = (
+        spark.readStream.schema(EVENT_BATCH_SCHEMA)
+        .option("pathGlobFilter", "*.parquet").parquet(drop_dir)
     )
     _drain(sessionized_events(events, gap, watermark), write_batch,
            checkpoint_dir)

@@ -29,8 +29,13 @@ from acero_delta_lake_streaming_spark.streaming.ingest import (
 
 
 def write_single_parquet(df: DataFrame, dest_file: str) -> None:
-    """Materialize ``df`` as exactly one parquet file (a 'dropped batch')."""
-    staging = dest_file + ".staging"
+    """Materialize ``df`` as exactly one parquet file (a 'dropped batch').
+    Spark writes it under a hidden staging directory next to
+    ``dest_file`` (the leading ``.`` keeps it out of a file source that
+    lists the drop directory, whose listing recurses into visible
+    subdirectories), and the one part file is renamed into place."""
+    head, name = os.path.split(dest_file)
+    staging = os.path.join(head, f".{name}.staging")
     shutil.rmtree(staging, ignore_errors=True)
     df.coalesce(1).write.parquet(staging)
     part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]

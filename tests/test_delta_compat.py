@@ -416,6 +416,47 @@ def test_txn_makes_epoch_replay_idempotent(spark, tmp_path):
     assert dc.append_delta(df, table, txn=("other", 0)) == 2
 
 
+def test_arrow_append_lands_as_written(spark, tmp_path):
+    """A ``pyarrow.Table`` batch that lands as it is appends with no
+    Spark job: one pyarrow file per commit, the txn handshake, and the
+    log schema a DataFrame append of the same rows writes. A batch the
+    table must check on the way in (a CHECK constraint here) goes
+    through a DataFrame and is enforced, and a batch whose columns
+    differ from the table's is refused as a DataFrame's would be."""
+    table, df_table = str(tmp_path / "arrow"), str(tmp_path / "df")
+    batch = pa.table({"id": pa.array([1, 2], pa.int64()), "s": ["a", None]})
+    dc.append_delta(
+        spark.createDataFrame(batch.to_pandas(), "id long, s string"), df_table
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("arrow-append", "arrow append")
+    try:
+        assert dc.append_delta(batch, table, txn=("app", 0)) == 0
+        assert dc.append_delta(batch, table, txn=("app", 0)) == -1
+        assert dc.append_delta(batch, table, txn=("app", 1)) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("arrow-append")) == []
+    assert dc.snapshot(table)["schema"] == dc.snapshot(df_table)["schema"]
+    assert len(dc.snapshot(table)["files"]) == 2
+    assert sorted(map(tuple, dc.read_delta(spark, table).collect()),
+                  key=str) == [(1, "a"), (1, "a"), (2, None), (2, None)]
+
+    dc.add_constraint(spark, table, "pos", "id > 0")
+    with pytest.raises(dc.DeltaConstraintViolation):
+        dc.append_delta(
+            pa.table({"id": pa.array([-1], pa.int64()), "s": ["x"]}), table
+        )
+    assert dc.append_delta(
+        pa.table({"id": pa.array([3], pa.int64()), "s": ["c"]}), table
+    ) == 3
+    with pytest.raises(dc.DeltaProtocolError, match="does not match"):
+        dc.append_delta(pa.table({"id": pa.array([4], pa.int64())}), table)
+    assert dc.read_delta(spark, table).count() == 5
+
+
 def test_partitioned_append_round_trip(spark, tmp_path):
     """Partitioned writes produce the delta-spark layout (hive dirs,
     partitionValues in each add, partition cols excluded from data

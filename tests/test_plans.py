@@ -141,7 +141,10 @@ def test_no_collect_in_query_paths():
     one row per data file, what any Delta client's commit planner
     does — and those are allowlisted line-by-line: every
     ``.collect()`` there must carry a METADATA marker comment; any new
-    unmarked collect fails the guard."""
+    unmarked collect fails the guard. The medallion's driver route
+    (``streaming/ingest.py``) collects an epoch its plan sizes at one
+    file split at most, as Arrow: each ``.toArrow()`` line must carry a
+    ONE SPLIT marker comment."""
     import inspect
 
     from acero_delta_lake_streaming_spark.functions import extract
@@ -173,6 +176,9 @@ def test_no_collect_in_query_paths():
         src = inspect.getsource(mod)
         assert ".collect()" not in src, mod.__name__
         assert ".toPandas()" not in src, mod.__name__
+        for ln, line in enumerate(src.splitlines(), 1):
+            if ".toArrow()" in line:
+                assert "ONE SPLIT" in line, f"{mod.__name__}:{ln}: {line}"
 
     from acero_delta_lake_streaming_spark.storage import delta_compat
 
@@ -246,9 +252,10 @@ def test_streaming_appends_through_the_module_attribute():
 
 def test_medallion_epoch_counts_through_materialize_once():
     """Static guard on ``streaming/ingest.py::medallion_writer``: the
-    epoch's empty check is the count in ``_materialize``, never an
-    ``isEmpty()`` job that runs the dedup state a second time, and
-    ``_materialize`` is called once. A second call (say, sizing the
+    epoch's empty check is the row count of the one run of the dedup
+    state (the driver route's Arrow collect, the executor route's count
+    in ``_materialize``), never an ``isEmpty()`` job that runs the
+    dedup state a second time, and ``_materialize`` is called once. A second call (say, sizing the
     extraction) puts a count job in front of the sinks that share it
     on every host, not only across executors."""
     import ast

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime as dt
+import json
 import os
 
 import pyspark.sql.functions as F
@@ -71,38 +72,67 @@ def test_incremental_ingest_dedup_and_empty_runs(spark, sf_dir, tmp_path):
     assert ok_docs.count() + quarantined.count() == raw.count()
 
 
-def test_epoch_replay_is_exactly_once(spark, sf_dir, tmp_path):
+#: a medallion epoch's two routes (``medallion_writer``): the small test
+#: batches take the driver route unless the executor route is forced
+ROUTES = ("driver", "executor")
+
+
+@contextlib.contextmanager
+def _route(monkeypatch, route):
+    """Run the block's medallion epochs on ``route``: "executor" treats
+    every epoch as larger than one file split."""
+    with monkeypatch.context() as m:
+        if route == "executor":
+            m.setattr(ingest, "_fits_one_split", lambda df: False)
+        yield
+
+
+def test_epoch_replay_is_exactly_once(spark, sf_dir, tmp_path, monkeypatch):
     """A foreachBatch retry (same epoch) after a crash must not duplicate
-    rows — the fix for the reference's ledger-before-write loss."""
-    base = str(tmp_path / "tables")
+    rows — the fix for the reference's ledger-before-write loss — on
+    either route of the epoch."""
     batch = _docs(spark, sf_dir).limit(50)
-    writer = medallion_writer(base, app_id="m1")
-    writer(batch, 0)
-    counts = {
-        t: delta_compat.read_delta(spark, os.path.join(base, t)).count()
-        for t in ("raw", "curated", "actors")
-    }
-    writer(batch, 0)  # replayed epoch
-    for t, n in counts.items():
-        assert delta_compat.read_delta(spark, os.path.join(base, t)).count() == n, t
-    writer(batch.limit(10), 1)  # a genuinely new epoch still lands
-    assert delta_compat.read_delta(spark, os.path.join(base, "raw")).count() == counts["raw"] + 10
+    for route in ROUTES:
+        base = str(tmp_path / route)
+        with _route(monkeypatch, route):
+            writer = medallion_writer(base, app_id="m1")
+            writer(batch, 0)
+            counts = {
+                t: delta_compat.read_delta(spark, os.path.join(base, t)).count()
+                for t in ("raw", "curated", "actors")
+            }
+            writer(batch, 0)  # replayed epoch
+            for t, n in counts.items():
+                assert delta_compat.read_delta(
+                    spark, os.path.join(base, t)).count() == n, (route, t)
+                assert delta_compat._list_commit_versions(
+                    os.path.join(base, t)) == [0], (route, t)
+            writer(batch.limit(10), 1)  # a genuinely new epoch still lands
+        assert delta_compat.read_delta(
+            spark, os.path.join(base, "raw")).count() == counts["raw"] + 10
 
 
-def test_partial_epoch_completes_without_duplicates(spark, sf_dir, tmp_path):
+def test_partial_epoch_completes_without_duplicates(spark, sf_dir, tmp_path,
+                                                     monkeypatch):
     """Crash mid-fan-out (raw committed, curated/actors not): the retry
-    must skip raw and complete the rest — per-table exactly-once."""
-    base = str(tmp_path / "tables")
+    must skip raw and complete the rest — per-table exactly-once, on
+    either route of the epoch."""
     batch = _docs(spark, sf_dir).limit(40)
-    # simulate the partial epoch: only the raw commit landed
-    delta_compat.append_delta(
-        batch, os.path.join(base, "raw"), txn=("m2-raw", 0)
-    )
-    n_raw = delta_compat.read_delta(spark, os.path.join(base, "raw")).count()
-    medallion_writer(base, app_id="m2")(batch, 0)  # the retry
-    assert delta_compat.read_delta(spark, os.path.join(base, "raw")).count() == n_raw
-    assert delta_compat.is_delta_table(os.path.join(base, "curated"))
-    assert delta_compat.is_delta_table(os.path.join(base, "actors"))
+    for route in ROUTES:
+        base = str(tmp_path / route)
+        # simulate the partial epoch: only the raw commit landed
+        delta_compat.append_delta(
+            batch, os.path.join(base, "raw"), txn=("m2-raw", 0)
+        )
+        n_raw = delta_compat.read_delta(spark, os.path.join(base, "raw")).count()
+        with _route(monkeypatch, route):
+            medallion_writer(base, app_id="m2")(batch, 0)  # the retry
+        assert delta_compat.read_delta(
+            spark, os.path.join(base, "raw")).count() == n_raw
+        assert delta_compat._list_commit_versions(
+            os.path.join(base, "raw")) == [0]
+        assert delta_compat.is_delta_table(os.path.join(base, "curated"))
+        assert delta_compat.is_delta_table(os.path.join(base, "actors"))
 
 
 MEDALLION = ("raw", "curated", "quarantine", "actors")
@@ -122,15 +152,15 @@ def _data_files(table):
 
 def test_failing_sink_does_not_stop_the_others(spark, sf_dir, tmp_path,
                                                 monkeypatch):
-    """The four sinks commit concurrently and independently: when
-    curated fails in epoch 0, the epoch still waits for raw, quarantine
-    and actors to commit and then raises; the replay commits only
-    curated, and every table holds the epoch exactly once."""
+    """The four sinks commit concurrently and independently, on either
+    route of the epoch: when curated fails in epoch 0, the epoch still
+    waits for raw, quarantine and actors to commit and then raises; the
+    replay commits only curated, and every table holds the epoch exactly
+    once."""
     batch = _docs(spark, sf_dir).limit(50)
     ref = str(tmp_path / "ref")
     medallion_writer(ref, app_id="m3")(batch, 0)
 
-    base = str(tmp_path / "tables")
     real = delta_compat.append_delta
     failed = []
 
@@ -142,23 +172,30 @@ def test_failing_sink_does_not_stop_the_others(spark, sf_dir, tmp_path,
         return real(df, table, *args, **kwargs)
 
     monkeypatch.setattr(delta_compat, "append_delta", flaky)
-    writer = medallion_writer(base, app_id="m3")
-    with pytest.raises(RuntimeError, match="curated sink down"):
-        writer(batch, 0)
-    others = [os.path.join(base, t) for t in ("raw", "quarantine", "actors")]
-    assert [delta_compat._list_commit_versions(t) for t in others] == [[0]] * 3
-    assert not delta_compat.is_delta_table(os.path.join(base, "curated"))
+    for route in ROUTES:
+        failed.clear()
+        base = str(tmp_path / route)
+        others = [os.path.join(base, t) for t in ("raw", "quarantine", "actors")]
+        with _route(monkeypatch, route):
+            writer = medallion_writer(base, app_id="m3")
+            with pytest.raises(RuntimeError, match="curated sink down"):
+                writer(batch, 0)
+            assert [delta_compat._list_commit_versions(t) for t in others] \
+                == [[0]] * 3, route
+            assert not delta_compat.is_delta_table(os.path.join(base, "curated"))
 
-    writer(batch, 0)  # the replayed epoch
-    assert [delta_compat._list_commit_versions(t) for t in others] == [[0]] * 3
-    assert delta_compat._list_commit_versions(
-        os.path.join(base, "curated")) == [0]
-    assert _table_rows(spark, base) == _table_rows(spark, ref)
+            writer(batch, 0)  # the replayed epoch
+        assert [delta_compat._list_commit_versions(t) for t in others] \
+            == [[0]] * 3, route
+        assert delta_compat._list_commit_versions(
+            os.path.join(base, "curated")) == [0]
+        assert _table_rows(spark, base) == _table_rows(spark, ref), route
 
 
 def _counting_provider(spark, max_concurrency=None):
     """A mock provider that records, through two accumulators, the task
-    attempt of each ``extract_batch`` call and the rows the calls carry.
+    attempt of each ``extract_batch`` call (None for a call made in the
+    driver process) and the rows the calls carry.
     Given ``max_concurrency`` it declares itself a provider that waits on
     a remote service."""
 
@@ -174,7 +211,8 @@ def _counting_provider(spark, max_concurrency=None):
 
     class CountingProvider:  # local: ships to the workers by value
         def extract_batch(self, texts):
-            calls.add([TaskContext.get().taskAttemptId()])
+            task = TaskContext.get()  # None in the driver process
+            calls.add([None if task is None else task.taskAttemptId()])
             seen.add(len(texts))
             return MockExtractionProvider().extract_batch(texts)
 
@@ -197,11 +235,12 @@ def _files_cap(spark, value):
 
 
 def test_medallion_epoch_extracts_each_row_once(spark, sf_dir, tmp_path):
-    """The extraction is persisted, and its three sinks start together
-    and share it: a provider counting through an accumulator sees every
-    row of the epoch exactly once, also when the sinks contend for
-    several cached partitions."""
-    provider, _, seen = _counting_provider(spark)
+    """A provider counting through an accumulator sees every row of the
+    epoch exactly once: from the driver on a small epoch, and from the
+    tasks of the persisted extraction that the three sinks start
+    together and share when the epoch is over the split cap, also when
+    they contend for several cached partitions."""
+    provider, calls, seen = _counting_provider(spark)
     docs = _docs(spark, sf_dir)
     writer = medallion_writer(str(tmp_path / "tables"), app_id="m4",
                               provider=provider)
@@ -209,22 +248,26 @@ def test_medallion_epoch_extracts_each_row_once(spark, sf_dir, tmp_path):
     assert seen.value == 40
     writer(docs.filter(F.col("doc_id") % 3 == 0).limit(25).repartition(4), 1)
     assert seen.value == 65
+    assert calls.value == [None, None]
     with _files_cap(spark, "1024"):
         writer(docs.filter(F.col("doc_id") % 3 == 1).limit(40).repartition(4), 2)
     assert seen.value == 105
+    assert None not in calls.value[2:]
 
 
 def test_medallion_extraction_task_count_follows_the_provider(
-        spark, sf_dir, tmp_path):
-    """An in-process provider's Python stage runs on the epoch's k
-    partitions: a 40-row epoch over 4 partitions makes one provider
-    call, and a cap below the epoch's size splits it into several calls
-    that still see each row once. A provider that waits on a remote
-    service keeps one task per batch partition once the epoch holds more
-    rows than one call keeps in flight, also behind a retry wrapper, so
-    its requests in flight still scale with the tasks; a smaller epoch
-    is one call. The batch is checkpointed, so no adaptive plan runs
-    the cached extraction as a stage of its own: a sink's
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A small epoch of an in-process provider makes one provider call
+    in the driver process. On the executor route, an in-process
+    provider's Python stage runs on the epoch's k partitions: a 40-row
+    epoch over 4 partitions makes one provider call, and a cap below
+    the epoch's size splits it into several calls that still see each
+    row once. A provider that waits on a remote service never takes the
+    driver route: it keeps one task per batch partition once the epoch
+    holds more rows than one call keeps in flight, also behind a retry
+    wrapper, so its requests in flight still scale with the tasks; a
+    smaller epoch is one call. The batch is checkpointed, so no adaptive
+    plan runs the cached extraction as a stage of its own: a sink's
     ``coalesce(k)`` would fold an uncounted extraction into one task."""
     batch = _docs(spark, sf_dir).limit(40).repartition(4).localCheckpoint()
 
@@ -234,7 +277,14 @@ def test_medallion_extraction_task_count_follows_the_provider(
                          provider=provider)(batch, 0)
         return len(calls.value), len(set(calls.value)), seen.value
 
-    assert run("one", *_counting_provider(spark)) == (1, 1, 40)
+    provider, calls, seen = _counting_provider(spark)
+    assert run("driver", provider, calls, seen) == (1, 1, 40)
+    assert calls.value == [None]
+
+    with _route(monkeypatch, "executor"):
+        provider, calls, seen = _counting_provider(spark)
+        assert run("one", provider, calls, seen) == (1, 1, 40)
+        assert calls.value != [None]
     with _files_cap(spark, "1024"):
         calls, _, rows = run("many", *_counting_provider(spark))
     assert calls >= 2 and rows == 40
@@ -245,9 +295,9 @@ def test_medallion_extraction_task_count_follows_the_provider(
     assert run("wide", *_counting_provider(spark, 40)) == (1, 1, 40)
 
 
-def _epoch_jobs(spark, writer, batch, group: str) -> int:
-    """The Spark jobs one ``writer(batch, 0)`` epoch launches, counted
-    under the job group ``group`` (a fresh name per call)."""
+def _epoch_jobs(spark, writer, batch, group: str) -> list:
+    """The ids of the Spark jobs one ``writer(batch, 0)`` epoch launches,
+    read under the job group ``group`` (a fresh name per call)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, "job count of one epoch")
     try:
@@ -256,38 +306,283 @@ def _epoch_jobs(spark, writer, batch, group: str) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events post async
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _python_stages(spark, job_ids) -> list[int]:
+    """The stages of ``job_ids`` whose operator graph holds a
+    ``MapInPandas`` node (a Python-worker stage)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    graph = sc._gateway.jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    out = []
+    for jid in job_ids:
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            dot = graph.makeDotFile(store.operationGraphForStage(sid))
+            if 'label="MapInPandas"' in dot:
+                out.append(sid)
+    return out
 
 
 def test_medallion_epoch_job_count(spark, sf_dir, tmp_path, monkeypatch):
-    """On one executor a non-empty epoch launches 7 Spark jobs: the
-    batch count (3 jobs under AQE) and the four sink writes. The
-    extraction has no count of its own; with one (persist + count
-    before its sinks) the epoch launched 10. Across executors the
-    extraction is counted before its sinks again, and the provider
-    still sees each row once."""
+    """On the executor route, on one executor, a non-empty epoch
+    launches 7 Spark jobs: the batch count (3 jobs under AQE) and the
+    four sink writes. The extraction has no count of its own; with one
+    (persist + count before its sinks) the epoch launched 10. Across
+    executors the extraction is counted before its sinks again, and
+    the provider still sees each row once."""
     provider, _, seen = _counting_provider(spark)
     batch = _docs(spark, sf_dir).limit(40).repartition(4).localCheckpoint()
-    local = _epoch_jobs(spark, medallion_writer(
+    monkeypatch.setattr(ingest, "_fits_one_split", lambda df: False)
+    local = len(_epoch_jobs(spark, medallion_writer(
         str(tmp_path / "local"), app_id="m7", provider=provider), batch,
-        "medallion-epoch-local")
+        "medallion-epoch-local"))
     assert local <= 7
 
     monkeypatch.setattr(ingest, "_one_executor", lambda spark: False)
-    across = _epoch_jobs(spark, medallion_writer(
+    across = len(_epoch_jobs(spark, medallion_writer(
         str(tmp_path / "across"), app_id="m7", provider=provider), batch,
-        "medallion-epoch-across")
+        "medallion-epoch-across"))
     assert across > local
     assert seen.value == 80
     assert _table_rows(spark, str(tmp_path / "across")) == _table_rows(
         spark, str(tmp_path / "local"))
 
 
+def test_medallion_driver_route_epoch(spark, sf_dir, tmp_path):
+    """A small epoch of an in-process provider finishes on the driver:
+    at most two Spark jobs (the batch collect and the parse of the three
+    extraction sinks), no Python-worker stage, one provider call made in
+    the driver process, and one file per table commit. An empty epoch
+    commits nothing, and a replayed epoch commits no table again."""
+    provider, calls, seen = _counting_provider(spark)
+    batch = _docs(spark, sf_dir).limit(40).repartition(4).localCheckpoint()
+    base = str(tmp_path / "tables")
+    writer = medallion_writer(base, app_id="m8", provider=provider)
+
+    jobs = _epoch_jobs(spark, writer, batch, "medallion-driver-epoch")
+    assert len(jobs) <= 2
+    assert _python_stages(spark, jobs) == []
+    assert calls.value == [None] and seen.value == 40
+    for t in MEDALLION:
+        assert len(_data_files(os.path.join(base, t))) == 1, t
+
+    empty = str(tmp_path / "empty")
+    medallion_writer(empty, app_id="m8", provider=provider)(batch.limit(0), 0)
+    assert not os.path.exists(empty)
+    assert seen.value == 40
+
+    rows = _table_rows(spark, base)
+    writer(batch, 0)  # replayed epoch
+    assert [delta_compat._list_commit_versions(os.path.join(base, t))
+            for t in MEDALLION] == [[0]] * 4
+    assert _table_rows(spark, base) == rows
+
+
+def _news_items(n: int) -> list[dict]:
+    """``n`` RSS items with distinct guids and pubDates; the first is
+    one the mock provider quarantines."""
+    import hashlib
+
+    items = []
+    i = 0
+    while len(items) < n:
+        title, desc = f"item {i} of the feed", f"story number {i} today"
+        quarantined = hashlib.md5(
+            f"{title}\n{desc}".encode()).hexdigest()[0] == "f"
+        if quarantined == (not items):
+            items.append({
+                "title": title, "description": desc, "guid": f"g{i}",
+                "link": f"http://x/{i}", "thumbnail": f"http://x/{i}.jpg",
+                "pubDate": f"Mon, 04 Mar 2024 10:{i % 60:02d}:00 GMT",
+            })
+        i += 1
+    return items
+
+
+def _log_adds(table: str) -> list[dict]:
+    log = os.path.join(table, "_delta_log")
+    return [
+        json.loads(line)["add"]
+        for name in sorted(os.listdir(log)) if name.endswith(".json")
+        for line in open(os.path.join(log, name))
+        if line.startswith('{"add"')
+    ]
+
+
+def _stats_shape(table: str) -> list:
+    """Per add of ``table``'s log: its stats keys with each value's
+    type, as (numRecords, minValues, maxValues, nullCount) shapes."""
+    out = []
+    for add in _log_adds(table):
+        st = json.loads(add["stats"])
+        out.append((
+            type(st["numRecords"]).__name__,
+            *({k: type(v).__name__ for k, v in st[part].items()}
+              for part in ("minValues", "maxValues", "nullCount")),
+        ))
+    return out
+
+
+def test_medallion_routes_write_the_same_tables(spark, tmp_path, monkeypatch):
+    """The driver route and the executor route commit the same tables
+    for the same news epoch: the same rows, the same log schema, and
+    data files whose ``add.stats`` carry the same keys in the same
+    formats. ``published_time`` is INT96 on both routes (Spark's default
+    output type), so neither records footer min/max for it."""
+    from acero_delta_lake_streaming_spark.streaming.feeds import drop_feed_batch
+    from acero_delta_lake_streaming_spark.streaming.ingest import run_news_ingest
+
+    drop = str(tmp_path / "drop")
+    items = _news_items(12)
+    drop_feed_batch(spark, [("news", _rss(items))], drop, "poll_0")
+    for route in ROUTES:
+        with _route(monkeypatch, route):
+            run_news_ingest(spark, drop, str(tmp_path / route),
+                            str(tmp_path / f"cp-{route}"))
+    driver, executor = (str(tmp_path / route) for route in ROUTES)
+    assert _table_rows(spark, driver) == _table_rows(spark, executor)
+    rows = _table_rows(spark, driver)
+    assert (len(rows["raw"]), len(rows["quarantine"])) == (12, 1)
+    for t in MEDALLION:
+        d, e = os.path.join(driver, t), os.path.join(executor, t)
+        assert delta_compat.snapshot(d)["schema"] == \
+            delta_compat.snapshot(e)["schema"], t
+        assert _stats_shape(d) == _stats_shape(e), t
+    raw_stats = json.loads(_log_adds(os.path.join(driver, "raw"))[0]["stats"])
+    assert "published_time" not in raw_stats["minValues"]
+    assert raw_stats["minValues"]["id"] == min(it["guid"] for it in items)
+
+
+def _listing_jobs_since(spark, last_job: int) -> list[int]:
+    """Spark's parallel file-listing jobs started after job ``last_job``."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # job events post async
+    out, it = [], jsc.statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        job = it.next()
+        desc = job.description()
+        if job.jobId() > last_job and desc.isDefined() and desc.get(
+        ).startswith("Listing leaf files and directories"):
+            out.append(job.jobId())
+    return out
+
+
+def _last_job(spark) -> int:
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    ids, it = [-1], jsc.statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        ids.append(it.next().jobId())
+    return max(ids)
+
+
+def test_drop_dir_stream_lists_files_without_a_job(spark, tmp_path):
+    """The drop-dir streams read the directory with a ``pathGlobFilter``:
+    once the drop dir holds 34 files (past the 32-path parallel-listing
+    threshold), a poll that finds two new ones launches no parallel
+    file-listing job. (A ``drop/*.parquet`` path globbed to 34 paths and
+    listed them in two such jobs per poll.)"""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    drop, tables, cp = (str(tmp_path / d) for d in ("drop", "tables", "cp"))
+    os.makedirs(drop)
+
+    def drop_files(ids):
+        for i in ids:
+            pq.write_table(pa.table({
+                "doc_id": pa.array([i], pa.int64()), "text": [f"doc {i} text"],
+                "lang": ["en"], "source": ["s"],
+            }), os.path.join(drop, f"b{i:02d}.parquet"))
+
+    drop_files(range(32))  # one batch of 32 files: at the threshold
+    run_ingest(spark, drop, tables, cp, with_actors=False)
+    drop_files(range(32, 34))
+    last = _last_job(spark)
+    run_ingest(spark, drop, tables, cp, with_actors=False)
+    assert _listing_jobs_since(spark, last) == []
+    assert delta_compat.read_delta(
+        spark, os.path.join(tables, "raw")).count() == 34
+
+
+def test_drop_dir_stream_resumes_a_glob_checkpoint(spark, sf_dir, tmp_path):
+    """A checkpoint written by a stream over ``drop/*.parquet`` (the path
+    form the drop-dir streams read before) resumes under the directory
+    form: the next batch reads only the file dropped since, and every
+    row lands once."""
+    drop, tables, cp = (str(tmp_path / d) for d in ("drop", "tables", "cp"))
+    os.makedirs(drop)
+    docs = _docs(spark, sf_dir)
+    write_single_parquet(docs.filter(F.col("doc_id") % 2 == 0).limit(20),
+                         os.path.join(drop, "b0.parquet"))
+    glob = (
+        spark.readStream.schema(ingest.DOC_BATCH_SCHEMA)
+        .parquet(os.path.join(drop, "*.parquet"))
+        .dropDuplicates(["doc_id"])
+    )
+    ingest._drain(glob, medallion_writer(tables, with_actors=False), cp)
+
+    write_single_parquet(docs.filter(F.col("doc_id") % 2 == 1).limit(20),
+                         os.path.join(drop, "b1.parquet"))
+    run_ingest(spark, drop, tables, cp, with_actors=False)
+    sources = os.path.join(cp, "sources", "0")
+    read = {
+        name: [os.path.basename(json.loads(line)["path"])
+               for line in open(os.path.join(sources, name)).read().splitlines()[1:]]
+        for name in os.listdir(sources) if name.isdigit()
+    }
+    assert read == {"0": ["b0.parquet"], "1": ["b1.parquet"]}
+    assert delta_compat.read_delta(
+        spark, os.path.join(tables, "raw")).count() == 40
+
+
+def test_drop_dir_stream_reads_only_top_level_files(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A drop-dir stream reads the ``*.parquet`` files at the top of the
+    directory only: not those in a visible subdirectory, nor the part
+    file a ``write_single_parquet`` crash leaves in its staging
+    directory, which it names hidden. ``run_ingest`` (deduplicated) and
+    ``run_windowed_stream`` (no dedup) both see each dropped row once."""
+    from acero_delta_lake_streaming_spark.streaming import queries
+
+    def crash(src, dst):
+        raise OSError("crash between the write and the rename")
+
+    def drop_into(drop, df):
+        os.makedirs(os.path.join(drop, "sub"))
+        write_single_parquet(df.limit(2), os.path.join(drop, "b0.parquet"))
+        write_single_parquet(df, os.path.join(drop, "sub", "b1.parquet"))
+        with monkeypatch.context() as m:
+            m.setattr(queries.os, "replace", crash)
+            with pytest.raises(OSError, match="crash"):
+                write_single_parquet(df, os.path.join(drop, "b2.parquet"))
+        assert sorted(os.listdir(drop)) == [
+            ".b2.parquet.staging", "b0.parquet", "sub"
+        ]
+
+    docs, tables = str(tmp_path / "docs"), str(tmp_path / "tables")
+    drop_into(docs, _docs(spark, sf_dir).orderBy("doc_id").limit(5))
+    run_ingest(spark, docs, tables, str(tmp_path / "cp0"), with_actors=False)
+    assert delta_compat.read_delta(
+        spark, os.path.join(tables, "raw")).count() == 2
+
+    events, out = str(tmp_path / "events"), str(tmp_path / "windows")
+    day = _ts_ns(2024, 1, 5)
+    drop_into(events, spark.createDataFrame(
+        [(i, day + i, 7, "click", 1.0) for i in range(5)], EVENT_BATCH_SCHEMA
+    ).orderBy("event_id"))
+    ingest.run_windowed_stream(spark, events, out, str(tmp_path / "cp1"))
+    assert [r.n for r in delta_compat.read_delta(spark, out).collect()] == [2]
+
+
 def test_medallion_sinks_write_right_sized_files(spark, sf_dir, tmp_path):
     """A small epoch spread over many partitions (one sliver per dedup
     state partition) adds one file per sink commit; with
-    ``spark.sql.files.maxPartitionBytes`` below the epoch's size each
-    sink splits into several files holding the same rows."""
+    ``spark.sql.files.maxPartitionBytes`` below the epoch's size the
+    epoch takes the executor route and each sink splits into several
+    files holding the same rows."""
     batch = _docs(spark, sf_dir).limit(60).repartition(8)
     one = str(tmp_path / "one")
     medallion_writer(one, app_id="m5")(batch, 0)
