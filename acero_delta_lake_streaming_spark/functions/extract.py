@@ -10,7 +10,8 @@ Arrow-batched ``mapInPandas`` stage:
   provider call per batch (a real provider would fan the batch out
   async — the seam is ``ExtractionProvider.extract_batch``);
 * the worker returns only ``(doc_id, raw_response)`` strings — schema
-  parsing happens JVM-side with ``from_json(EVENT_RESPONSE_SCHEMA)``, so
+  parsing on the executors happens JVM-side with
+  ``from_json(EVENT_RESPONSE_SCHEMA)`` (:func:`parse_events`), so
   malformed model output degrades to a NULL struct instead of a Python
   exception (UD3: quarantine, never crash the stream —
   collector.py:186-187 skips failed rows the same way);
@@ -20,8 +21,12 @@ Arrow-batched ``mapInPandas`` stage:
 
 A batch already collected on the driver (a small streaming epoch,
 ``streaming/ingest.py``) skips the Python worker: ``extract_local``
-makes the one provider call in the driver process and parses with the
-same ``parse_events`` over a local relation.
+makes the one provider call in the driver process. When every payload
+is *plain* (:func:`parse_plain`), the driver parses them in Python, as
+the reference parses in-process (processor.py); any other payload
+sends the batch through ``parse_events`` over a local relation, because
+``from_json`` is lenient where Python's ``json`` is not (single quotes,
+trailing junk, numbers read as strings, partial structs).
 
 Providers:
 * ``MockExtractionProvider`` — deterministic, hermetic: actors come from
@@ -53,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from acero_delta_lake_streaming_spark.catalog import load_table
 from acero_delta_lake_streaming_spark.schemas import (
+    ACTOR_STRUCT,
     EVENT_CATEGORIES,
     EVENT_RESPONSE_SCHEMA,
 )
@@ -502,9 +508,10 @@ def extract_events_with_retry(
 def parse_events(responses: DataFrame) -> DataFrame:
     """UD1's parse, JVM-side: append the ``event`` struct
     (EVENT_RESPONSE_SCHEMA) parsed from ``raw_response``. NULL ``event``
-    == quarantined row (UD3). Shared by the executor extraction
-    (:func:`extract_events`) and the driver one (:func:`extract_local`),
-    so both parse every payload the same way."""
+    == quarantined row (UD3). The executor extraction's parser
+    (:func:`extract_events`), the driver route's for a batch that is
+    not all plain, and the reference :func:`parse_plain` is tested
+    against."""
     parsed = F.from_json("raw_response", EVENT_RESPONSE_SCHEMA)
     # PERMISSIVE from_json yields an all-null struct for non-JSON input;
     # normalize that to a true NULL so "event IS NULL" == quarantined.
@@ -545,20 +552,19 @@ def extract_events(
 
 
 def extract_local(
-    spark: SparkSession,
     batch: pa.Table,
     id_col: str = "doc_id",
     text_col: str = "text",
     provider: ExtractionProvider | None = None,
-) -> DataFrame:
-    """UD1 on the driver, for a batch already collected there: ONE
-    ``extract_batch`` call in this process, parsed by
-    :func:`parse_events` over a local relation. The rows and the
-    schema equal :func:`extract_events` over the same batch; no Python
-    worker starts."""
+) -> pa.Table:
+    """UD1's provider call on the driver, for a batch already collected
+    there: ONE ``extract_batch`` call in this process, returned as the
+    ``(id_col, raw_response)`` responses the executor stage yields
+    (same types, nullable). No Python worker starts; parse them with
+    :func:`parse_plain` or, over a local relation, :func:`parse_events`."""
     provider = provider or MockExtractionProvider()
     raw = provider.extract_batch(batch.column(text_col).to_pandas())
-    responses = pa.table(
+    return pa.table(
         [batch.column(id_col), pa.array(raw, pa.string())],
         # nullable, as the executor stage's declared output schema is
         schema=pa.schema([
@@ -566,7 +572,88 @@ def extract_local(
             pa.field("raw_response", pa.string()),
         ]),
     )
-    return parse_events(spark.createDataFrame(responses))
+
+
+_EVENT_KEYS = frozenset(EVENT_RESPONSE_SCHEMA.fieldNames())
+_ACTOR_KEYS = frozenset(ACTOR_STRUCT.fieldNames())
+
+
+class _NotPlain(Exception):
+    """A payload whose parse by ``from_json`` Python does not reproduce."""
+
+
+def _unique_keys(pairs: list) -> dict:
+    obj = dict(pairs)
+    if len(obj) != len(pairs):
+        raise _NotPlain  # from_json's duplicate-key rule is its own
+    return obj
+
+
+def _plain_str(value) -> str | None:
+    if value is None:
+        return None
+    if not isinstance(value, str):
+        raise _NotPlain  # from_json reads a number or object as a string
+    value.encode("utf-8")  # a lone surrogate escape: Spark writes '?'
+    return value
+
+
+def _plain_actors(value) -> list | None:
+    if value is None:
+        return None
+    if not isinstance(value, list):
+        raise _NotPlain  # from_json keeps a partial struct
+    out = []
+    for actor in value:
+        if not isinstance(actor, dict) or not actor.keys() <= _ACTOR_KEYS:
+            raise _NotPlain
+        out.append((_plain_str(actor.get("name")), _plain_str(actor.get("role"))))
+    return out
+
+
+def _plain_event(payload: str | None) -> tuple | None:
+    """:func:`parse_events`' event of one payload as (main_actors,
+    other_actors, category), or None for a quarantined row; raises
+    :class:`_NotPlain` when Python cannot tell what ``from_json`` reads."""
+    if payload is None or payload.lstrip(" \t\n\r")[:1] not in ("{", "["):
+        return None  # no JSON object or array: from_json yields NULL
+    try:
+        obj = json.loads(payload, object_pairs_hook=_unique_keys)
+    except (ValueError, RecursionError) as exc:  # JSONDecodeError included
+        raise _NotPlain from exc
+    if not isinstance(obj, dict) or not obj.keys() <= _EVENT_KEYS:
+        # a root array, or keys from_json would skip: Jackson's stream
+        # limits (1000 digits a number, 1000 nesting levels) turn a
+        # skipped value Python reads fine into a NULL event
+        raise _NotPlain
+    event = (
+        _plain_actors(obj.get("main_actors")),
+        _plain_actors(obj.get("other_actors")),
+        _plain_str(obj.get("category")),
+    )
+    return None if event == (None, None, None) else event
+
+
+def parse_plain(raw: list) -> list[tuple | None] | None:
+    """:func:`parse_events` in Python, for payloads whose parse by
+    ``from_json`` Python reproduces exactly; None when any payload is
+    not such a *plain* one. Per payload, (main_actors, other_actors,
+    category) with each actor a (name, role) pair, or None for a
+    quarantined row (the all-null rule).
+
+    A payload is plain when it is None or does not start, after JSON
+    whitespace, with ``{`` or ``[`` (``from_json`` yields NULL), or when
+    ``json.loads`` reads it as an object holding only the event's keys
+    (no key twice): ``category`` absent, null or a string, and each actor
+    list absent, null, or a list of objects holding only ``name`` /
+    ``role``, each absent, null or a string; every string encodes as
+    UTF-8. Anything else is Spark's to parse (``from_json`` reads
+    ``{'category':'A'}`` and ``{"category":"A"} junk`` as ``A`` and
+    ``{"category":5}`` as ``'5'``)."""
+    try:
+        return [_plain_event(payload) for payload in raw]
+    except (_NotPlain, UnicodeEncodeError):
+        return None
 
 
 #: UD2's actors of one extracted row, in order: main then other, each a

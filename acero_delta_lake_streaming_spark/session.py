@@ -16,6 +16,19 @@ unchanged:
   timestamp decoding never depends on session-level reader settings.
 * Arrow everywhere — any pandas interchange (mapInPandas operators,
   toPandas in tests) goes through Arrow batches, never row pickling.
+* Streaming checkpoints rename through the ``FileSystem`` API
+  (``spark.sql.streaming.checkpointFileManagerClass`` =
+  ``FileSystemBasedCheckpointFileManager``, the class Spark itself falls
+  back to when ``FileContext`` is unsupported). Spark's default
+  ``FileContext`` manager renames through ``getFileLinkStatus``, and
+  Hadoop's local filesystem without libhadoop answers that by forking
+  ``readlink`` (which fails on a ``file:`` path) per offset, commit and
+  state file: ~90 forked processes per micro-batch trigger. Spark
+  documents the FileSystem manager as correct wherever
+  ``FileSystem.rename`` is atomic: a POSIX rename on a local disk, and
+  HDFS. On a local disk both managers check the destination and then
+  rename; on S3A neither is atomic. The key is internal, but has kept
+  its name and meaning since Spark 2.4.
 """
 
 from __future__ import annotations
@@ -35,6 +48,12 @@ def _cpus_or_default(default: int = 32) -> int:
 
 DEFAULT_SHUFFLE_PARTITIONS = _cpus_or_default()
 
+#: the streaming checkpoint's file manager (see the module docstring)
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def _builder_conf() -> dict[str, str]:
     return {
@@ -52,6 +71,7 @@ def _builder_conf() -> dict[str, str]:
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FILE_MANAGER,
     }
 
 

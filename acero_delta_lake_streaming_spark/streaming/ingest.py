@@ -29,19 +29,19 @@ and its README admits the loop needs an external orchestrator
   one extraction. An epoch of an in-process provider that fits one
   file split finishes on the driver, like the reference's in-process
   Arrow writes (collector.py:219-226): it is collected once as Arrow,
-  the provider runs in this process, the three extraction sinks are
-  parsed over a local relation in one more job, and each table
-  commits one pyarrow-written file — two Spark jobs, no Python
-  worker, no Spark write job. Any other epoch is materialized once
-  and runs on the executors: an in-process provider's Python stage on
-  the epoch's k partitions (k = cached bytes over
-  ``maxPartitionBytes``, at least 1); a provider that waits on a
-  remote service on the batch's partitions whenever the epoch holds
-  more rows than one call keeps in flight. There the extraction's
-  three sinks share it through the cache, each writing k files. On
-  both routes the four sink commits run concurrently, each its own
-  idempotent ``txn`` commit. Acero's per-stage ``to_table()`` barriers
-  disappear.
+  the provider runs in this process, its payloads are parsed in Python
+  when all are plain (else by Spark over a local relation, one more
+  job), and each table commits one pyarrow-written file — one Spark
+  job, no Python worker, no Spark write job. Any other epoch is
+  materialized once and runs on the executors: an in-process
+  provider's Python stage on the epoch's k partitions (k = cached
+  bytes over ``maxPartitionBytes``, at least 1); a provider that
+  waits on a remote service on the batch's partitions whenever the
+  epoch holds more rows than one call keeps in flight. There the
+  extraction's three sinks share it through the cache, each writing k
+  files. On both routes the four sink commits run concurrently, each
+  its own idempotent ``txn`` commit. Acero's per-stage ``to_table()``
+  barriers disappear.
 * **ST4/ST5** — event-time tumbling windows with a watermark; late rows
   beyond the watermark are dropped (tests pin the policy).
 
@@ -58,6 +58,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +70,8 @@ from acero_delta_lake_streaming_spark.functions.extract import (
     extract_events,
     extract_local,
     flatten_actors,
+    parse_events,
+    parse_plain,
     request_concurrency,
 )
 from acero_delta_lake_streaming_spark.storage import delta_compat
@@ -92,7 +95,10 @@ def _materialize(df: DataFrame) -> tuple[int, int]:
     least 1. ``coalesce`` never adds partitions, so only the slivers of
     a small epoch merge; a big one keeps its own partitioning."""
     df.persist()
-    rows = df.count()
+    # A fresh plan (``df``'s own may be optimized already, before the
+    # cache existed) counted as an RDD: one job that builds the cache,
+    # where ``df.count()`` is three under AQE.
+    rows = df.select("*")._jdf.queryExecution().toRdd().count()
     jss = df.sparkSession._jsparkSession
     cached = jss.sharedState().cacheManager().lookupCachedData(df._jdf).get()
     size = cached.cachedRepresentation().stats().sizeInBytes()
@@ -113,15 +119,15 @@ def _fits_one_split(df: DataFrame) -> bool:
     return size <= jss.sessionState().conf().filesMaxPartitionBytes()
 
 
-def _local_tables(
+def _parsed_tables(
     extracted: DataFrame, id_col: str, with_actors: bool
 ) -> dict[str, pa.Table]:
-    """The sinks of a local extraction as Arrow tables, from ONE Spark
-    job of one task: one select carries, for each extracted row, its
-    rows of every sink as an array (the rows the executor route's
-    filters and :func:`flatten_actors` emit for it), and the driver
-    flattens each array column into its table. Each table keeps its
-    Spark schema's types and nullability."""
+    """The sinks of a local extraction parsed by Spark, as Arrow tables,
+    from ONE Spark job of one task: one select carries, for each
+    extracted row, its rows of every sink as an array (the rows the
+    executor route's filters and :func:`flatten_actors` emit for it),
+    and the driver flattens each array column into its table. Each
+    table keeps its Spark schema's types and nullability."""
     ok = F.col("event").isNotNull()
     sinks = {
         "curated": F.when(ok, F.array(F.struct(
@@ -145,6 +151,68 @@ def _local_tables(
         table: pa.Table.from_struct_array(got[table].combine_chunks().flatten())
         for table in sinks
     }
+
+
+def _plain_tables(
+    responses: pa.Table, id_col: str, with_actors: bool
+) -> dict[str, pa.Table] | None:
+    """:func:`_parsed_tables` built in Python with no Spark job, or None
+    when a payload is not plain (:func:`parse_plain`). Same rows in the
+    same order, same Arrow schemas."""
+    events = parse_plain(responses.column("raw_response").to_pylist())
+    if events is None:
+        return None
+    ids = responses.column(id_col)
+    ok = pa.array([e is not None for e in events])
+    category = pa.field("category", pa.string())
+    tables = {
+        "curated": pa.table(
+            [ids.filter(ok),
+             pa.array([e[2] for e in events if e is not None], pa.string())],
+            schema=pa.schema([pa.field(id_col, ids.type), category]),
+        ),
+        "quarantine": responses.filter(pc.invert(ok)),
+    }
+    if with_actors:
+        rows, names, roles, main, categories = [], [], [], [], []
+        for i, event in enumerate(events):
+            if event is None:
+                continue
+            for actors, is_main in zip(event[:2], (True, False)):
+                for name, role in actors or ():
+                    rows.append(i)
+                    names.append(name)
+                    roles.append(role)
+                    main.append(is_main)
+                    categories.append(event[2])
+        tables["actors"] = pa.table(
+            [ids.take(pa.array(rows, pa.int64())), pa.array(names, pa.string()),
+             pa.array(roles, pa.string()), pa.array(main, pa.bool_()),
+             pa.array(categories, pa.string())],
+            schema=pa.schema([
+                pa.field("news_id", ids.type),
+                pa.field("actor_name", pa.string()),
+                pa.field("actor_role", pa.string()),
+                pa.field("is_main_actor", pa.bool_(), nullable=False),
+                category,
+            ]),
+        )
+    return tables
+
+
+def _local_tables(
+    spark: SparkSession, responses: pa.Table, id_col: str, with_actors: bool
+) -> dict[str, pa.Table]:
+    """The sinks of the driver route's extraction as Arrow tables: built
+    in Python when every payload is plain (:func:`_plain_tables`, no
+    Spark job), else parsed by Spark over a local relation
+    (:func:`_parsed_tables`, one job)."""
+    tables = _plain_tables(responses, id_col, with_actors)
+    if tables is None:
+        tables = _parsed_tables(
+            parse_events(spark.createDataFrame(responses)), id_col, with_actors
+        )
+    return tables
 
 
 def _one_executor(spark: SparkSession) -> bool:
@@ -173,16 +241,18 @@ def medallion_writer(
       :func:`request_concurrency`) whose epoch the plan estimates at
       one file split or less (:func:`_fits_one_split`). The batch is
       collected once as Arrow, and ``raw`` is submitted at once. The
-      provider is called once in this process
-      (:func:`extract_local`), and one select over that local relation
-      yields the three sinks' rows in one more job
-      (:func:`_local_tables`).
-      Each table commits one pyarrow-written file. No Python worker
-      starts and no Spark write job runs: two Spark jobs per epoch.
+      provider is called once in this process (:func:`extract_local`).
+      When every payload is plain (:func:`parse_plain`), Python builds
+      the three sinks' tables; otherwise one select over the responses
+      as a local relation yields them in one more job
+      (:func:`_local_tables`). Each table commits one pyarrow-written
+      file. No Python worker starts and no Spark write job runs: one
+      Spark job per epoch, the dedup collect (two for an epoch that
+      holds a payload only Spark's ``from_json`` reads).
     * **Executor route**, every other epoch. The batch is persisted and
-      counted (:func:`_materialize`, which gives k, the file count of
-      each sink) and ``raw`` is submitted at once. The extraction is
-      persisted:
+      counted in one job (:func:`_materialize`, which gives k, the file
+      count of each sink) and ``raw`` is submitted at once. The
+      extraction is persisted:
 
       * An in-process provider reads ``batch.coalesce(k)``, so an epoch
         is k Python tasks. The extraction is not counted: ``curated``,
@@ -242,12 +312,12 @@ def medallion_writer(
 
                 if on_driver:
                     submit("raw", batch)
-                    local = extract_local(
-                        batch_df.sparkSession, batch, id_col=id_col,
-                        text_col=text_col, provider=provider,
+                    responses = extract_local(
+                        batch, id_col=id_col, text_col=text_col,
+                        provider=provider,
                     )
                     for table, data in _local_tables(
-                        local, id_col, with_actors
+                        batch_df.sparkSession, responses, id_col, with_actors
                     ).items():
                         submit(table, data)
                 else:

@@ -326,9 +326,10 @@ def _python_stages(spark, job_ids) -> list[int]:
 
 def test_medallion_epoch_job_count(spark, sf_dir, tmp_path, monkeypatch):
     """On the executor route, on one executor, a non-empty epoch
-    launches 7 Spark jobs: the batch count (3 jobs under AQE) and the
-    four sink writes. The extraction has no count of its own; with one
-    (persist + count before its sinks) the epoch launched 10. Across
+    launches 5 Spark jobs: the batch count (one job, counted as an RDD;
+    ``df.count()`` was 3 under AQE) and the four sink writes. The
+    extraction has no count of its own (persist + count before its
+    sinks added 3 more jobs). Across
     executors the extraction is counted before its sinks again, and
     the provider still sees each row once."""
     provider, _, seen = _counting_provider(spark)
@@ -337,7 +338,7 @@ def test_medallion_epoch_job_count(spark, sf_dir, tmp_path, monkeypatch):
     local = len(_epoch_jobs(spark, medallion_writer(
         str(tmp_path / "local"), app_id="m7", provider=provider), batch,
         "medallion-epoch-local"))
-    assert local <= 7
+    assert local <= 5
 
     monkeypatch.setattr(ingest, "_one_executor", lambda spark: False)
     across = len(_epoch_jobs(spark, medallion_writer(
@@ -351,17 +352,17 @@ def test_medallion_epoch_job_count(spark, sf_dir, tmp_path, monkeypatch):
 
 def test_medallion_driver_route_epoch(spark, sf_dir, tmp_path):
     """A small epoch of an in-process provider finishes on the driver:
-    at most two Spark jobs (the batch collect and the parse of the three
-    extraction sinks), no Python-worker stage, one provider call made in
-    the driver process, and one file per table commit. An empty epoch
-    commits nothing, and a replayed epoch commits no table again."""
+    one Spark job (the batch collect; the mock's payloads are plain, so
+    the driver parses them), no Python-worker stage, one provider call
+    made in the driver process, and one file per table commit. An empty
+    epoch commits nothing, and a replayed epoch commits no table again."""
     provider, calls, seen = _counting_provider(spark)
     batch = _docs(spark, sf_dir).limit(40).repartition(4).localCheckpoint()
     base = str(tmp_path / "tables")
     writer = medallion_writer(base, app_id="m8", provider=provider)
 
     jobs = _epoch_jobs(spark, writer, batch, "medallion-driver-epoch")
-    assert len(jobs) <= 2
+    assert len(jobs) == 1
     assert _python_stages(spark, jobs) == []
     assert calls.value == [None] and seen.value == 40
     for t in MEDALLION:
@@ -377,6 +378,104 @@ def test_medallion_driver_route_epoch(spark, sf_dir, tmp_path):
     assert [delta_compat._list_commit_versions(os.path.join(base, t))
             for t in MEDALLION] == [[0]] * 4
     assert _table_rows(spark, base) == rows
+
+
+#: payloads whose ``from_json`` parse Python reproduces (beside the mock's)
+PLAIN = [
+    None, "", "   ", "{}", "null", '"str"', "123", "\ufeff{}", "\x0b{}",
+    '  {"category":"A"}', '\t\n\r{"category":"A"}\n',
+    '{"category":""}', '{"category":null,"main_actors":null}',
+    '{"main_actors":[],"other_actors":[]}', '{"main_actors":[{}]}',
+    '{"main_actors":[{"name":"a","role":null}],"category":"\\u00e9\\ud83d\\ude00"}',
+    '{"other_actors":[{"role":"mention"}],"category":"A\\u0000"}',
+]
+#: payloads Spark's parser reads differently from Python, or that Python
+#: cannot tell apart: the fast path must decline them
+NOT_PLAIN = [
+    '{"category":"A","category":"B"}', '{"main_actors":[{"name":"x","name":"y"}]}',
+    '{"category":"A","x":NaN}', '{"main_actors":[null]}', "{'category':'A'}",
+    '{"category":"A"} junk', '{"category":5}', '{"main_actors":"Bob","category":"A"}',
+    '[{"category":"A"}]', '{"category":"\\ud800"}', '{"Category":"A"}',
+    '{"category":"A","x":1}',
+    '{"category":"A","x":' + "1" * 1001 + "}",
+    '{"category":"A","x":' + "[" * 1000 + "]" * 1000 + "}",
+    '{"main_actors":[{"name":"x","x":1}]}', '{"main_actors":{"name":"x"}}',
+]
+
+
+def test_plain_parse_matches_spark(spark):
+    """The driver's Python parse (``ingest._plain_tables``) either
+    returns the tables Spark's ``parse_events`` gives over the same
+    responses, or declines: per payload over a corpus of the mock's
+    payloads and edge cases, and over all the plain ones at once."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from acero_delta_lake_streaming_spark.functions.extract import parse_events
+
+    texts = [f"word{i} other{i} third{i} more" for i in range(40)]
+    mock = MockExtractionProvider().extract_batch(pd.Series(texts))
+    assert any(not p.startswith("{") for p in mock)  # a refusal is in
+    corpus = mock + PLAIN + NOT_PLAIN
+
+    def responses(payloads, first=0):
+        return pa.table({
+            "id": pa.array([f"n{first + i}" for i in range(len(payloads))]),
+            "raw_response": pa.array(payloads, pa.string()),
+        })
+
+    def spark_tables(payloads):
+        return ingest._parsed_tables(parse_events(
+            spark.createDataFrame(responses(payloads))), "id", True)
+
+    ref = spark_tables(corpus)
+    plain = []
+    for i, payload in enumerate(corpus):
+        fast = ingest._plain_tables(responses([payload], i), "id", True)
+        if fast is None:
+            continue
+        plain.append(payload)
+        for table, got in fast.items():
+            key = "news_id" if table == "actors" else "id"
+            want = ref[table].filter(pc.equal(ref[table][key], f"n{i}"))
+            assert got.equals(want), (payload, table)
+    assert plain == mock + PLAIN
+    assert ingest._plain_tables(responses(plain), "id", True) == \
+        spark_tables(plain)
+    assert ingest._plain_tables(responses(corpus), "id", True) is None
+
+
+def test_driver_route_epoch_with_a_non_plain_payload(spark, sf_dir, tmp_path,
+                                                     monkeypatch):
+    """An epoch holding a payload only Spark reads (trailing junk after
+    the object) takes Spark's parse on the driver route, one more job
+    over the local relation, and writes the same tables as the executor
+    route."""
+    class Junk:  # local: ships to the workers by value
+        def extract_batch(self, texts):
+            import hashlib
+
+            out = MockExtractionProvider().extract_batch(texts)
+            return [
+                p + " junk" if hashlib.md5(t.encode()).hexdigest()[1] in "01"
+                else p
+                for t, p in zip(texts, out)
+            ]
+
+    batch = _docs(spark, sf_dir).limit(40).localCheckpoint()
+    raw = Junk().extract_batch(batch.toPandas()["text"])
+    assert any(p.endswith(" junk") and p.startswith("{") for p in raw)
+    jobs = _epoch_jobs(spark, medallion_writer(
+        str(tmp_path / "driver"), app_id="m9", provider=Junk()), batch,
+        "medallion-non-plain-epoch")
+    assert len(jobs) == 2
+    with _route(monkeypatch, "executor"):
+        medallion_writer(str(tmp_path / "executor"), app_id="m9",
+                         provider=Junk())(batch, 0)
+    driver = _table_rows(spark, str(tmp_path / "driver"))
+    assert driver == _table_rows(spark, str(tmp_path / "executor"))
+    assert len(driver["curated"]) == sum(p.startswith("{") for p in raw)
 
 
 def _news_items(n: int) -> list[dict]:
@@ -535,6 +634,57 @@ def test_drop_dir_stream_resumes_a_glob_checkpoint(spark, sf_dir, tmp_path):
     assert read == {"0": ["b0.parquet"], "1": ["b1.parquet"]}
     assert delta_compat.read_delta(
         spark, os.path.join(tables, "raw")).count() == 40
+
+
+def test_sessions_rename_checkpoints_through_the_filesystem(spark, tmp_path):
+    """``get_spark`` sessions write streaming checkpoints through Spark's
+    FileSystem-based manager: the one the engine creates for a
+    checkpoint path under the session's Hadoop conf."""
+    from acero_delta_lake_streaming_spark import session
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == session.CHECKPOINT_FILE_MANAGER
+    jvm = spark.sparkContext._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf())
+    assert manager.getClass().getName() == session.CHECKPOINT_FILE_MANAGER
+
+
+def test_file_context_checkpoint_resumes(spark, sf_dir, tmp_path):
+    """A drop-dir checkpoint written under Spark's default FileContext
+    manager resumes under the FileSystem one: the next run commits only
+    the new file's epoch, with no row replayed or lost, and the first
+    epoch's commits stay as they were."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    drop, tables, cp = (str(tmp_path / d) for d in ("drop", "tables", "cp"))
+    os.makedirs(drop)
+    docs = _docs(spark, sf_dir)
+    write_single_parquet(docs.filter(F.col("doc_id") % 2 == 0),
+                         os.path.join(drop, "b0.parquet"))
+    default = spark.conf.get(key)
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming."
+                        "checkpointing.FileContextBasedCheckpointFileManager")
+    try:
+        run_ingest(spark, drop, tables, cp, with_actors=False)
+    finally:
+        spark.conf.set(key, default)
+    first = {t: delta_compat._list_commit_versions(os.path.join(tables, t))
+             for t in ("raw", "curated", "quarantine")}
+    write_single_parquet(docs.filter(F.col("doc_id") % 4 != 0),
+                         os.path.join(drop, "b1.parquet"))
+    run_ingest(spark, drop, tables, cp, with_actors=False)
+
+    assert sorted(n for n in os.listdir(os.path.join(cp, "commits"))
+                  if not n.startswith(".")) == ["0", "1"]
+    raw = delta_compat.read_delta(spark, os.path.join(tables, "raw"))
+    assert sorted(r.doc_id for r in raw.select("doc_id").collect()) == \
+        sorted(r.doc_id for r in docs.select("doc_id").collect())
+    assert delta_compat._list_commit_versions(os.path.join(tables, "raw")) \
+        == first["raw"] + [1]
+    assert delta_compat.last_txn_version(
+        os.path.join(tables, "raw"), "medallion-ingest-raw") == 1
 
 
 def test_drop_dir_stream_reads_only_top_level_files(

@@ -13,6 +13,11 @@ and refresh seconds, the Spark jobs each launched, and how many of
 those were Spark's parallel file-listing jobs ("Listing leaf files and
 directories ...", launched once a listing covers more than
 ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths).
+Each ingest line also gives the poll's ``addBatch``, ``walCommit``,
+``commitOffsets`` and ``latestOffset`` milliseconds, summed over its
+micro-batches' ``StreamingQueryProgress.durationMs`` (read through a
+Python ``StreamingQueryListener``), so a change to the poll shows which
+part of the trigger moved.
 
 The session is the engine's ``session.get_spark`` on ``local[nproc]``
 with the UI off and, as in newsbench, one dedup state partition per
@@ -43,6 +48,9 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 
 _LISTING = "Listing leaf files and directories"
 
+#: the trigger phases printed per poll, from ``durationMs``
+PHASES = ("addBatch", "walCommit", "commitOffsets", "latestOffset")
+
 
 class JobCounter:
     """Spark jobs started since the last ``take()``, read from the
@@ -72,6 +80,31 @@ class JobCounter:
         return jobs, listing
 
 
+def phase_listener():
+    """A ``StreamingQueryListener`` summing each :data:`PHASES` entry of
+    every progress event into its ``ms`` dict (read, then clear it)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Phases(StreamingQueryListener):
+        def __init__(self):
+            self.ms = dict.fromkeys(PHASES, 0)
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            for phase in PHASES:
+                self.ms[phase] += event.progress.durationMs.get(phase, 0)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    return Phases()
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--polls", type=int, default=36)
@@ -97,8 +130,11 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     feed_gen = gen.FeedGenerator(args.seed, 30, 10)
     counter = JobCounter(spark)
+    phases = phase_listener()
+    spark.streams.addListener(phases)
     print("poll files ingest_s ingest_jobs ingest_listing "
-          "refresh_s refresh_jobs refresh_listing")
+          "refresh_s refresh_jobs refresh_listing "
+          + " ".join(f"{p}_ms" for p in PHASES))
     try:
         for poll in range(args.polls):
             docs = feed_gen.next_cycle()
@@ -108,7 +144,9 @@ def main() -> int:
             t0 = time.perf_counter()
             ingest.run_news_ingest(spark, drop, tables, cp)
             t1 = time.perf_counter()
-            ingest_jobs = counter.take()
+            ingest_jobs = counter.take()  # also flushes the progress events
+            ms = " ".join(f"{phases.ms[p]:{len(p) + 3}d}" for p in PHASES)
+            phases.ms = dict.fromkeys(PHASES, 0)
             t2 = time.perf_counter()
             delta_compat.read_delta(
                 spark, os.path.join(tables, "curated")
@@ -117,7 +155,7 @@ def main() -> int:
             refresh_jobs = counter.take()
             print(f"{poll:4d} {n_files:5d} {t1 - t0:8.3f} {ingest_jobs[0]:11d} "
                   f"{ingest_jobs[1]:14d} {t3 - t2:9.3f} {refresh_jobs[0]:12d} "
-                  f"{refresh_jobs[1]:15d}", flush=True)
+                  f"{refresh_jobs[1]:15d} {ms}", flush=True)
     finally:
         spark.stop()
         if not args.work:
